@@ -22,22 +22,24 @@ from dataclasses import dataclass, field
 
 from py4j.protocol import Py4JJavaError
 
-#: (module, attribute path, span name or None = "ckpt.<stage name>")
+#: (module, attribute path, span name or None = "ckpt.<stage name>").
+#: Every listed workload enters every span: the exact top-K and the LSH
+#: candidate generator share ``pair.plan``, since a workload runs one of
+#: them, and a span no workload enters would report a constant 0 s.
 SPANS = [
     ("deepblocker_spark.plans.checkpoint", "CheckpointManager.stage", None),
     ("deepblocker_spark.plans.checkpoint", "partition_stats", "ckpt.stats"),
-    ("deepblocker_spark.plans.checkpoint", "CheckpointManager.verify", "ckpt.verify"),
     ("deepblocker_spark.pipeline", "SparkSIFEmbedding.preprocess", "embed.fit"),
     ("deepblocker_spark.operators.embed", "compute_top_principal_component", "embed.pc"),
-    ("deepblocker_spark.operators.topk", "exact_topk_join", "topk.join"),
-    ("deepblocker_spark.operators.lsh", "lsh_candidates", "lsh.candidates"),
+    ("deepblocker_spark.operators.topk", "exact_topk_join", "pair.plan"),
+    ("deepblocker_spark.operators.lsh", "lsh_candidates", "pair.plan"),
     ("deepblocker_spark.operators.cluster", "connected_components", "cluster.cc"),
 ]
 STAGES = ["embeddings", "candidates", "scored", "clusters"]
-SPAN_NAMES = (
+SPAN_NAMES = list(dict.fromkeys(
     ["run"] + [f"ckpt.{s}" for s in STAGES]
     + [name for _, _, name in SPANS if name is not None]
-)
+))
 SUFFIXES = {
     "wall_s": "s", "self_s": "s", "jobs": "count", "tasks": "count",
     "task_s": "s", "cpu_s": "s", "shuffle_mb": "MB", "spill_mb": "MB",

@@ -17,6 +17,7 @@ Workloads and metric definitions are described in ``README.md``.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import datetime
 import hashlib
 import json
@@ -37,21 +38,29 @@ COLS = ["repo", "path", "lang", "content"]
 K = 10
 
 
+SMALL_ROWS = 120  # --small: the benchmark's self-test size
+
+
 @dataclass(frozen=True)
 class Workload:
-    n_clusters: int
-    small_clusters: int  # --small: the benchmark's self-test size
+    rows: int  # the same for every seed: a run is mostly fixed cost
     lsh: bool  # lower the auto threshold below the table size -> LSH
-    resume: bool  # rebuild only scored/ and clusters/ from kept checkpoints
+    run_s: float  # one run's length on the reference host (README.md)
     min_f1: float  # quality floor of the output check
+
+    def n_runs(self, seconds: float, trace: bool) -> int:
+        """Timed runs in a window of ``seconds``. The count follows from the
+        window and the reference run length, never from the speed of the
+        code under test, so every commit's median covers the same runs."""
+        # tracing needs an untraced run besides the first, which is slower
+        return max(3 if trace else 1, round(seconds / self.run_s))
 
 
 # Sizes keep one invocation (set-up, warm-up and timed runs) inside the
 # benchmark's time budget on a 4-core host; README.md explains the choice.
 WORKLOADS = {
-    "dedup_lsh": Workload(2_000, 40, lsh=True, resume=False, min_f1=0.2),
-    "dedup_exact": Workload(1_000, 40, lsh=False, resume=False, min_f1=0.9),
-    "resume_rescore": Workload(1_000, 40, lsh=False, resume=True, min_f1=0.9),
+    "dedup_lsh": Workload(4_500, lsh=True, run_s=14.0, min_f1=0.2),
+    "dedup_exact": Workload(900, lsh=False, run_s=7.5, min_f1=0.9),
 }
 
 
@@ -204,14 +213,20 @@ class RssSampler:
 
 # -- inputs -----------------------------------------------------------------
 
-def make_input(n_clusters: int, seed: int, path: Path):
-    """Write the seeded table to parquet (without its golden column) and
-    return (rows, golden undirected id pairs as a pandas frame)."""
+def make_input(rows: int, seed: int, path: Path):
+    """Write the first ``rows`` rows of the seeded table to parquet (without
+    its golden column) and return the golden undirected id pairs as a
+    pandas frame. A cluster has 3 rows on average, so ``rows // 2`` clusters
+    always give enough rows; the row count then does not vary with the seed,
+    and neither does ``rows_per_s`` through it."""
     import pandas as pd
 
     from deepblocker_spark.fixtures import repo_file_table
 
-    pdf, _ = repo_file_table(n_clusters=n_clusters, max_dups=5, seed=seed)
+    pdf, _ = repo_file_table(n_clusters=rows // 2, max_dups=5, seed=seed)
+    if len(pdf) < rows:
+        raise RuntimeError(f"seed {seed} gave {len(pdf)} rows, fewer than {rows}")
+    pdf = pdf.iloc[:rows]
     pdf.drop(columns=["_cluster"]).to_parquet(path)
     # the durable id load_repo_table derives: sha256(repo␟path␟commit)
     ids = [
@@ -222,7 +237,7 @@ def make_input(n_clusters: int, seed: int, path: Path):
     pairs = keyed.merge(keyed, on="c")
     pairs = pairs[pairs["id_x"] < pairs["id_y"]]
     golden = pd.DataFrame({"l_id": pairs["id_x"].to_numpy(), "r_id": pairs["id_y"].to_numpy()})
-    return len(pdf), golden
+    return golden
 
 
 # -- one job ----------------------------------------------------------------
@@ -241,7 +256,7 @@ def fingerprints(ckpt) -> dict:
     return out
 
 
-def check_outputs(got: dict, want: dict, n_clusters_rows: int, verified: bool) -> list[str]:
+def check_outputs(got: dict, want: dict, n_clusters_rows: int) -> list[str]:
     """Differences between a run's checkpoints and the set-up run's."""
     problems = [
         f"{stage}: {got.get(stage)} != {ref}"
@@ -249,23 +264,30 @@ def check_outputs(got: dict, want: dict, n_clusters_rows: int, verified: bool) -
     ]
     if want.get("clusters") and n_clusters_rows != want["clusters"][0]:
         problems.append(f"clusters count {n_clusters_rows} != {want['clusters'][0]}")
-    if not verified:
-        problems.append("CheckpointManager.verify failed on a reused stage")
     return problems
 
 
-class Job:
-    """The pipeline on one input, run the way the workload prescribes."""
+def verify_all(ckpt) -> list[str]:
+    """Stages whose data no longer matches their manifest:
+    ``CheckpointManager.verify`` re-derives each fingerprint from the data."""
+    from spans import STAGES
 
-    def __init__(self, spark, wl: Workload, n_clusters: int, src, work: Path):
+    return [f"{stage}: CheckpointManager.verify failed"
+            for stage in STAGES if not ckpt.verify(stage)]
+
+
+class Job:
+    """The pipeline on one input, with the workload's pairing set-up."""
+
+    def __init__(self, spark, wl: Workload, rows: int, src, work: Path):
         from deepblocker_spark.config import BlockerConfig
 
-        self.spark, self.wl, self.src, self.work = spark, wl, src, work
-        # every table has ~3 rows per cluster, so a threshold of n_clusters
-        # rows sends 'auto' to LSH; otherwise the default keeps it exact
+        self.spark, self.src, self.work = spark, src, work
+        # a threshold below the row count sends 'auto' to LSH; otherwise
+        # the default keeps it exact
         self.cfg = BlockerConfig(
             emb_dim=64, top_k=K,
-            **({"pairing_lsh_threshold_rows": n_clusters} if wl.lsh else {}),
+            **({"pairing_lsh_threshold_rows": rows // 2} if wl.lsh else {}),
         )
 
     def _pipeline(self, ckpt):
@@ -281,25 +303,17 @@ class Job:
         self._pipeline(ckpt).count()
         return ckpt
 
-    def timed(self, ckpt_ref):
-        """One timed run -> (wall seconds, checkpoint manager, clusters count,
-        reused stages verified). Directory clean-up is outside the timing."""
+    def timed(self):
+        """One timed run into a fresh checkpoint directory -> (wall seconds,
+        checkpoint manager, clusters count). Clean-up is outside the timing."""
         from deepblocker_spark.plans.checkpoint import CheckpointManager
 
-        if self.wl.resume:
-            ckpt = ckpt_ref
-            for stage in ("scored", "clusters"):
-                shutil.rmtree(Path(ckpt.base_dir) / stage, ignore_errors=True)
-        else:
-            d = self.work / "run"
-            shutil.rmtree(d, ignore_errors=True)
-            ckpt = CheckpointManager(self.spark, str(d))
+        d = self.work / "run"
+        shutil.rmtree(d, ignore_errors=True)
+        ckpt = CheckpointManager(self.spark, str(d))
         t0 = time.perf_counter()
         n = self._pipeline(ckpt).count()
-        verified = True
-        if self.wl.resume:
-            verified = ckpt.verify("embeddings") and ckpt.verify("candidates")
-        return time.perf_counter() - t0, ckpt, n, verified
+        return time.perf_counter() - t0, ckpt, n
 
 
 def quality(spark, ckpt, golden_pdf) -> dict:
@@ -383,53 +397,46 @@ def _held(sc) -> tuple[int, int]:
 
 # -- the benchmark ----------------------------------------------------------
 
-def timed_loop(job, ckpt_ref, want: dict, tracer, seconds: float, trace: bool):
-    """Runs back to back while the next run, as long as the last one, would
-    end within ``seconds``; at least one run. A fixed window thus gives a
-    fixed run count, so the first timed run (still 5-10% slower than later
-    ones) weighs the same in every invocation. With ``trace`` the runs
-    alternate untraced / traced, starting untraced, and there are at least
-    three, so that the traced run has an untraced neighbour past the first
-    run. -> (per-run records, per-layer dicts)."""
-    runs, layer_runs = [], []
-    t_end = time.perf_counter() + seconds
-    min_runs = 3 if trace else 1
-    last = 0.0
-    while len(runs) < min_runs or time.perf_counter() + last <= t_end:
-        t_run = time.perf_counter()
-        traced = trace and len(runs) % 2 == 1
-        held0 = _held(job.spark.sparkContext)
+def timed_loop(job, want: dict, tracer, n_runs: int, trace: bool):
+    """``n_runs`` runs back to back; with ``trace`` the last one is traced,
+    and then ``CheckpointManager.verify`` checks its four checkpoints
+    against their manifests, outside the timing (the ``ckpt.verify`` span;
+    untraced invocations skip it to save time). -> (per-run records,
+    per-layer dict of the traced run or None)."""
+    runs, layers = [], None
+    sc = job.spark.sparkContext
+    for i in range(n_runs):
+        traced = trace and i == n_runs - 1
+        held0 = _held(sc)
         steal0 = _steal_s()
         rec = {"traced": traced}
+        if traced:
+            tracer.install()
         try:
-            if traced:
-                tracer.install()
-                try:
-                    with tracer.run_span():
-                        wall, ckpt, n, verified = job.timed(ckpt_ref)
-                finally:
-                    tracer.uninstall()
-            else:
-                wall, ckpt, n, verified = job.timed(ckpt_ref)
+            with tracer.run_span() if traced else contextlib.nullcontext():
+                wall, ckpt, n = job.timed()
             got = fingerprints(ckpt)
             rec["wall_s"] = wall
-            rec["problems"] = check_outputs(got, want, n, verified)
+            rec["problems"] = check_outputs(got, want, n)
             if traced:
-                layer_runs.append({
+                rec["problems"] += verify_all(ckpt)
+                layers = {
                     **tracer.report(),
                     "ckpt.candidates.rows": got["candidates"][0],
                     "ckpt.scored.rows": got["scored"][0],
-                })
+                }
         except Exception:
             rec["problems"] = ["raised: " + traceback.format_exc(limit=3)]
+        finally:
+            if traced:
+                tracer.uninstall()
         rec["ok"] = not rec["problems"]
-        held1 = _held(job.spark.sparkContext)
+        held1 = _held(sc)
         rec["leaked_rdds"] = held1[0] - held0[0]
         rec["leaked_bc"] = held1[1] - held0[1]
         rec["steal_s"] = _steal_s() - steal0
         runs.append(rec)
-        last = time.perf_counter() - t_run
-    return runs, layer_runs
+    return runs, layers
 
 
 def _median(values, default=0.0) -> float:
@@ -437,14 +444,14 @@ def _median(values, default=0.0) -> float:
     return statistics.median(values) if values else default
 
 
-def layer_metrics(runs: list, layer_runs: list, want: dict, qual: dict) -> dict:
-    """Every per-layer metric: medians over the traced runs, output ratios
+def layer_metrics(runs: list, layers: dict, want: dict, qual: dict) -> dict:
+    """Every per-layer metric: span metrics of the traced run, output ratios
     from the set-up run, leaks over all runs, and the tracing overhead."""
     from spans import LAYER_METRICS
 
-    ok = [r for r in runs if r["ok"]]
-    untraced = [r["wall_s"] for r in ok[1:] if not r["traced"]]
-    traced = [r["wall_s"] for r in ok if r["traced"]]
+    # the first timed run is still slower than later ones: leave it out
+    untraced = [r["wall_s"] for r in runs[1:] if r["ok"] and not r["traced"]]
+    traced = runs[-1]["wall_s"] if runs[-1]["ok"] else None
     cand_rows, scored_rows = want["candidates"][0], want["scored"][0]
     extra = {
         "scoring.keep_ratio": scored_rows / cand_rows if cand_rows else 0.0,
@@ -452,11 +459,10 @@ def layer_metrics(runs: list, layer_runs: list, want: dict, qual: dict) -> dict:
         "cluster.leaked_rdds": _median(r["leaked_rdds"] for r in runs),
         "bc.leaked": _median(r["leaked_bc"] for r in runs),
         "trace.overhead_s": (
-            _median(traced) - _median(untraced) if traced and untraced else 0.0),
+            traced - _median(untraced) if traced is not None and untraced else 0.0),
     }
     return {
-        name: (extra[name] if name in extra
-               else _median(lr[name] for lr in layer_runs), unit)
+        name: (extra[name] if name in extra else (layers or {}).get(name, 0.0), unit)
         for name, unit in LAYER_METRICS
     }
 
@@ -466,7 +472,8 @@ def bench(args, work: Path, t_start: float, started_at: float) -> tuple[dict, di
     from spans import Tracer
 
     wl = WORKLOADS[args.workload]
-    n_clusters = wl.small_clusters if args.small else wl.n_clusters
+    rows = SMALL_ROWS if args.small else wl.rows
+    n_runs = wl.n_runs(args.seconds, bool(args.trace))
     cores = len(os.sched_getaffinity(0))
     ram = _ram_mb()
     heap = _driver_heap_mb(ram)
@@ -478,7 +485,7 @@ def bench(args, work: Path, t_start: float, started_at: float) -> tuple[dict, di
     detail = {
         "provenance": {
             "workload": args.workload, "seed": args.seed, "traced": bool(args.trace),
-            "small": args.small, "seconds": args.seconds,
+            "small": args.small, "seconds": args.seconds, "runs": n_runs,
             "started_at": datetime.datetime.fromtimestamp(
                 started_at, datetime.timezone.utc).isoformat(),
             "cores": cores, "ram_mb": ram, "driver_heap_mb": heap,
@@ -494,13 +501,13 @@ def bench(args, work: Path, t_start: float, started_at: float) -> tuple[dict, di
 
         t0 = time.perf_counter()
         path = work / "input.parquet"
-        rows, golden = make_input(n_clusters, args.seed, path)
+        golden = make_input(rows, args.seed, path)
         src = load_repo_table(spark, str(path))
         prep_s = time.perf_counter() - t0
 
         # set-up run: warms the JVM and the Python workers and yields the
-        # reference fingerprints (for resume_rescore, also the checkpoints)
-        job = Job(spark, wl, n_clusters, src, work)
+        # reference fingerprints
+        job = Job(spark, wl, rows, src, work)
         t0 = time.perf_counter()
         ckpt_ref = job.build()
         warmup_s = time.perf_counter() - t0
@@ -523,14 +530,13 @@ def bench(args, work: Path, t_start: float, started_at: float) -> tuple[dict, di
         detail["problems"] = problems
 
         with RssSampler() as rss:
-            runs, layer_runs = timed_loop(
-                job, ckpt_ref, want, Tracer(sc), args.seconds, bool(args.trace))
+            runs, layers = timed_loop(job, want, Tracer(sc), n_runs, bool(args.trace))
         detail["runs"] = runs
         detail["peak_rss_parts_mb"] = [round(x, 1) for x in rss.peak_parts]
         failed = sum(not r["ok"] for r in runs)
 
         if args.trace:
-            metrics = layer_metrics(runs, layer_runs, want, qual)
+            metrics = layer_metrics(runs, layers, want, qual)
         else:
             walls = [r["wall_s"] for r in runs if r["ok"]]
             metrics = {

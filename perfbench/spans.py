@@ -23,11 +23,14 @@ from dataclasses import dataclass, field
 from py4j.protocol import Py4JJavaError
 
 #: (module, attribute path, span name or None = "ckpt.<stage name>").
-#: Every listed workload enters every span: the exact top-K and the LSH
-#: candidate generator share ``pair.plan``, since a workload runs one of
-#: them, and a span no workload enters would report a constant 0 s.
+#: Every workload enters every span: the exact top-K and the LSH candidate
+#: generator share ``pair.plan``, since a workload runs one of them, and a
+#: span no workload enters would report a constant 0 s. ``ckpt.verify`` is a
+#: root span of its own: the benchmark verifies the traced run's checkpoints
+#: after the run, outside its timing.
 SPANS = [
     ("deepblocker_spark.plans.checkpoint", "CheckpointManager.stage", None),
+    ("deepblocker_spark.plans.checkpoint", "CheckpointManager.verify", "ckpt.verify"),
     ("deepblocker_spark.plans.checkpoint", "partition_stats", "ckpt.stats"),
     ("deepblocker_spark.pipeline", "SparkSIFEmbedding.preprocess", "embed.fit"),
     ("deepblocker_spark.operators.embed", "compute_top_principal_component", "embed.pc"),
@@ -90,8 +93,8 @@ def _gaps(lo: float, hi: float, holes: list[tuple[float, float]]) -> list[tuple[
 
 class Tracer:
     """Records spans of one run. ``install()`` wraps the ``SPANS`` functions,
-    ``uninstall()`` restores them; ``run_span()`` opens the root span and
-    ``report()`` turns the finished spans into per-name metrics."""
+    ``uninstall()`` restores them; ``run_span()`` opens the run's root span
+    and ``report()`` turns the spans finished since into per-name metrics."""
 
     def __init__(self, sc):
         self.sc = sc

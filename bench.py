@@ -333,9 +333,10 @@ if __name__ == "__main__":
 # matmul fits in L2 and measures delivered compute — it scaled ~4x from
 # 2->8 pinned cores in the round-4 recorded run while the engine's two
 # heavy LSH stages lagged, and the Spark-free replay of those stages'
-# REAL work (tools/kernel_ceiling.py: identical per-bucket math on the
-# identical 1.9M-row exchange frame, no JVM/Arrow/shuffle) also lagged at
-# 1.6-2.9x — i.e. the residual is not CPU but the shared memory bus. This
+# REAL work (BASELINE.md "The residual is demonstrably the host",
+# protocol v5: identical per-bucket math on the identical 1.9M-row
+# exchange frame, no JVM/Arrow/shuffle) also lagged at 1.6-2.9x — i.e.
+# the residual is not CPU but the shared memory bus. This
 # probe records that ceiling in the artifact itself: each work item
 # streams a ~96 MB working set (far beyond LLC) through a=b+2.5*c triads,
 # so with all cores saturating one bus the pool CANNOT scale 4x on a
@@ -456,12 +457,12 @@ def _measure_scaling(rows_target: int | None = None,
         # gather='exchange' pins the RECORDED plan to the carried-vector
         # kernel exchange the whole protocol-v5 evidence chain profiles.
         # The broadcast-gather alternative (config.lsh_gather) measured
-        # SAME-scaling / slightly-slower on this host (tools/gather_ab.py:
-        # same-phase 2v8 round: exchange 3.22x vs broadcast 3.18x, local[8]
-        # 37.6s vs 40.4s) — locally the shuffle never crosses a network, so
-        # dropping its bytes buys nothing the gather work doesn't spend;
-        # on a real cluster the narrow exchange is the win the auto gate
-        # exists for.
+        # SAME-scaling / slightly-slower on a single host (BASELINE.md
+        # "Broadcast-gather vs carried-vector exchange": exchange 3.22x vs
+        # broadcast 3.18x, local[8] 37.6s vs 40.4s) — locally the shuffle
+        # never crosses a network, so dropping its bytes buys nothing the
+        # gather work doesn't spend; on a real cluster the narrow exchange
+        # is the win the auto gate exists for.
         "_scaling_job(spark, %r, limit=500, rows_hint=500, pairing=main_pairing,\n"
         "             gather='exchange')\n"
         "t0 = time.perf_counter()\n"

@@ -70,15 +70,16 @@ class BlockerConfig:
     # exchange: 'f16' (default — HALF the bytes of the plan's biggest
     # shuffle; bucket keys unaffected, in-bucket scores carry ~1e-3
     # quantization error) or 'f32' (lossless). Measured on the 240k-row
-    # scaling input (tools/f16_ab.py, same-phase pinned pairs): identical
-    # candidate-pair count at both precisions, wall time -12%/-14% at
-    # local[2]/local[8] — the kernel exchange is bandwidth-bound, so fewer
-    # bytes is directly wall time (BASELINE.md protocol v5). Operator-level
-    # call sites (driver oracle queries, ann.py) default to 'f32' so
-    # hash-locked outputs stay bit-identical; this config knob governs the
-    # production pipeline + bench scale path. The IVF pipeline path applies
-    # the same knob to its probed-cell exchange (cell membership computed
-    # pre-pack, so membership is dtype-independent there too).
+    # scaling input (same-phase pinned pairs, BASELINE.md "f16 transport"
+    # under protocol v5): identical candidate-pair count at both
+    # precisions, wall time -12%/-14% at local[2]/local[8] — the kernel
+    # exchange is bandwidth-bound, so fewer bytes is directly wall time.
+    # Operator-level call sites (driver oracle queries, ann.py) default to
+    # 'f32' so hash-locked outputs stay bit-identical; this config knob
+    # governs the production pipeline + bench scale path. The IVF pipeline
+    # path applies the same knob to its probed-cell exchange (cell
+    # membership computed pre-pack, so membership is dtype-independent
+    # there too).
     lsh_emb_dtype: str = "f16"
     # How the LSH bucket kernel obtains vectors: 'auto' broadcasts the
     # quantized embedding matrix when it fits lsh_gather_max_bytes — the
@@ -106,13 +107,16 @@ class BlockerConfig:
     # + id) ≈ tens of MB on the driver, far under any sane driver heap.
     pq_max_driver_code_rows: int = 2_000_000
     # Hash-directory layout for pipeline checkpoints: stages are written
-    # partitioned by _part = pmod(xxhash64(id), ckpt_hash_partitions), so
-    # resume reads can prune to a partition subset and the verify-stage
-    # joins carry the partition key (dynamic partition pruning prunes the
-    # token-side scan when the candidate side is filtered). At 100 TB this
-    # is the unit of incremental reprocessing; size it so one partition is
-    # a few GB. 0 disables (flat parquet).
-    ckpt_hash_partitions: int = 32
+    # partitioned by _part = pmod(xxhash64(id), n), so resume reads can
+    # prune to a partition subset and the verify-stage joins carry the
+    # partition key (dynamic partition pruning prunes the token-side scan
+    # when the candidate side is filtered). At 100 TB this is the unit of
+    # incremental reprocessing. None = derive n from the input: one
+    # directory per started GiB of the source's optimizer size estimate,
+    # capped at 32 (also the width for an input Spark cannot size); each
+    # directory costs a fixed amount per write, so small inputs get one.
+    # Set an int >= 1 to override (plans/checkpoint.py hash_layout_width).
+    ckpt_hash_partitions: int | None = None
     # CTT/Hybrid inference mode: 'as_written' reproduces the reference quirk
     # (tuple_embedding_models.py:271-273 returns the aggregator embedding and
     # never applies the trained ctt model); 'paper' applies the trained

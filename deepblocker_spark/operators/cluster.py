@@ -40,6 +40,9 @@ def connected_components(
         of magnitude smaller than the input table (it IS the dedup signal),
         so even 100 TB inputs often land here; a driver union-find on 2M
         edges takes well under a second vs dozens of distributed shuffles.
+        One bounded LIMIT probe (never more than driver_threshold + 1
+        rows) both picks this path and collects its input; nothing is
+        left persisted.
       * large graphs: iterative min-label propagation + pointer jumping
         (O(log diameter) rounds), one localCheckpoint per round.
     """
@@ -47,11 +50,12 @@ def connected_components(
         F.col("a") != F.col("b")
     )
     sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).dropDuplicates()
+    probe = sym.limit(driver_threshold + 1).toPandas()
+    if len(probe) <= driver_threshold:
+        return _driver_union_find(probe, sym)
+
     sym = sym.localCheckpoint()
     n_edges = sym.count()
-
-    if n_edges <= driver_threshold:
-        return _driver_union_find(sym)
 
     # Size the iteration partitioning to the graph: every round shuffles the
     # label frame, and for small graphs 32 near-empty tasks per round cost
@@ -118,10 +122,10 @@ def connected_components(
     return labels
 
 
-def _driver_union_find(sym: DataFrame) -> DataFrame:
+def _driver_union_find(pdf, sym: DataFrame) -> DataFrame:
     """Small-graph fast path: classic union-find with path compression on
-    the driver, result re-parallelized. component = min node id in set."""
-    pdf = sym.toPandas()
+    the driver over ``pdf`` (the collected edges of ``sym``), result
+    re-parallelized. component = min node id in set."""
     parent: dict = {}
 
     def find(x):

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST_NAME = "manifest.json"
+HASH_DIR_BYTES = 1 << 30
+MAX_HASH_DIRS = 32
 
 
 def params_hash(params: dict) -> str:
@@ -54,6 +56,27 @@ def content_fingerprint(df: DataFrame, key_cols: list[str]) -> int:
     return int((int(row["s"] or 0)) % (2**63)) ^ int(row["n"])
 
 
+def hash_dirs_for(size_bytes: int) -> int:
+    """Hash-directory count for an input of ``size_bytes``: one per started
+    GiB, at least 1 and at most MAX_HASH_DIRS. An input Spark cannot size
+    (its estimate is Long.MaxValue) gets the cap."""
+    return max(1, min(MAX_HASH_DIRS, -(-size_bytes // HASH_DIR_BYTES)))
+
+
+def hash_layout_width(source: DataFrame, override: int | None = None) -> int:
+    """Width ``n`` of the pipeline's hash-directory layout: ``override``
+    when set, else sized by ``hash_dirs_for`` from the optimizer's size
+    estimate of ``source`` (the file bytes of a parquet scan). Reading the
+    estimate plans the query but launches no Spark job."""
+    if override is not None:
+        if override < 1:
+            raise ValueError(
+                f"ckpt_hash_partitions must be None or >= 1, got {override}")
+        return override
+    size = source._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return hash_dirs_for(int(size))
+
+
 def partition_stats(df: DataFrame, key_cols: list[str], part_col: str | None = None):
     """Per-partition lineage metrics in ONE aggregation job (north_rule:
     "checkpoints ... per partition with lineage + metrics"): for each
@@ -74,14 +97,16 @@ def partition_stats(df: DataFrame, key_cols: list[str], part_col: str | None = N
         pid.alias("pid"),
         F.xxhash64(*[F.col(c) for c in key_cols]).alias("h"),
     )
-    rows = (
+    # at most one row per partition: sorting on the driver saves the
+    # range-partitioning jobs of an orderBy
+    rows = sorted(
         h.groupBy("pid")
         .agg(
             F.sum(F.col("h").cast("decimal(38,0)")).alias("s"),
             F.count("*").alias("n"),
         )
-        .orderBy("pid")
-        .collect()
+        .collect(),
+        key=lambda r: r["pid"],
     )
     parts = [
         {
@@ -167,12 +192,16 @@ class CheckpointManager:
         PartitionFilter, only matching directories are listed), and
         downstream joins that carry ``_part`` as an equi-key get dynamic
         partition pruning of this checkpoint's scan. The read-back frame
-        keeps the ``_part`` column for exactly that purpose."""
+        keeps the ``_part`` column for exactly that purpose.
+        ``run_blocking_pipeline`` sizes ``n`` with ``hash_layout_width``:
+        one directory per started GiB of the input's size estimate, capped
+        at 32, unless ``ckpt_hash_partitions`` overrides it.
+        ``layout=None`` writes flat parquet."""
         data_path, mpath = self._paths(name)
         layout_desc = (
             {"type": "hash_dir", "col": layout[0], "n": layout[1],
              "part_col": "_part"}
-            if layout and layout[1] > 0
+            if layout
             else None
         )
         if params is not None:
@@ -311,6 +340,15 @@ def run_blocking_pipeline(
                   r5 #5 — the regime where m-byte codes beat carrying
                   n_bands vector copies through the kernel exchange). The
                   resolved mode lands in the candidates manifest params.
+
+    The embeddings, candidates and scored checkpoints share one
+    hash-directory layout of width ``n``. ``cfg.ckpt_hash_partitions=None``
+    (the default) derives ``n`` from ``source``: one directory per started
+    GiB of its optimizer size estimate, capped at 32, which is also the
+    width of an input Spark cannot size. An int overrides it; a value below
+    1 raises ValueError. The embeddings stage decides ``n``; later stages
+    and the verify join read it from the embeddings manifest, so a resumed
+    run keeps the join keys of the checkpoints it reuses.
     """
     from deepblocker_spark.config import DEFAULT_CONFIG
     from deepblocker_spark.functions.tokenizer import tokens_col
@@ -332,18 +370,18 @@ def run_blocking_pipeline(
     # hash-directory layout shared by all stages: partition col derives
     # from the stage's left/driving id, so resume reads prune and the
     # verify joins below carry the partition key (VERDICT r2 #6)
-    n_part = cfg.ckpt_hash_partitions
-
     emb = ckpt.stage(
         "embeddings", build_embeddings, [id_col], force=force,
         params={"cols_to_block": cols_to_block, "id_col": id_col,
                 "emb_dim": cfg.emb_dim, "remove_pc": cfg.remove_pc,
                 "sif_a": cfg.sif_weighting_param,
                 "random_seed": cfg.random_seed},
-        layout=(id_col, n_part),
+        layout=(id_col, hash_layout_width(source, cfg.ckpt_hash_partitions)),
     )
 
-    n_rows = ckpt.manifest("embeddings")["rows"]
+    emb_man = ckpt.manifest("embeddings")
+    n_rows = emb_man["rows"]
+    n_part = emb_man["layout"]["n"]
     mode = pairing
     if mode == "auto":
         if n_rows <= cfg.pairing_lsh_threshold_rows:
@@ -433,38 +471,27 @@ def run_blocking_pipeline(
             # partition subset), dynamic partition pruning skips the
             # non-matching directories of the embeddings checkpoint instead
             # of scanning all of it (VERDICT r2 #6).
-            has_layout = n_part > 0 and "_part" in cands.columns
-            tok_cols = [
+            toks = emb.select(
                 F.col(id_col),
                 F.array_distinct(tokens_col(MERGED_TEXT)).alias("_toks"),
-            ] + ([F.col("_part")] if has_layout else [])
-            toks = emb.select(*tok_cols)
-            if has_layout:
-                tl = toks.select(
-                    F.col(id_col).alias("l_id"), F.col("_toks").alias("_tl"),
-                    "_part",
+                "_part",
+            )
+            tl = toks.select(
+                F.col(id_col).alias("l_id"), F.col("_toks").alias("_tl"), "_part"
+            )
+            tr = toks.select(
+                F.col(id_col).alias("r_id"), F.col("_toks").alias("_tr"),
+                F.col("_part").alias("_rpart"),
+            )
+            out = (
+                out.withColumn(
+                    "_rpart",
+                    F.pmod(F.xxhash64(F.col("r_id")), F.lit(n_part)).cast("int"),
                 )
-                tr = toks.select(
-                    F.col(id_col).alias("r_id"), F.col("_toks").alias("_tr"),
-                    F.col("_part").alias("_rpart"),
-                )
-                out = (
-                    out.withColumn(
-                        "_rpart",
-                        F.pmod(F.xxhash64(F.col("r_id")), F.lit(n_part)).cast("int"),
-                    )
-                    .join(tl, ["l_id", "_part"])
-                    .join(tr, ["r_id", "_rpart"])
-                    .drop("_rpart")
-                )
-            else:
-                tl = toks.select(
-                    F.col(id_col).alias("l_id"), F.col("_toks").alias("_tl")
-                )
-                tr = toks.select(
-                    F.col(id_col).alias("r_id"), F.col("_toks").alias("_tr")
-                )
-                out = out.join(tl, "l_id").join(tr, "r_id")
+                .join(tl, ["l_id", "_part"])
+                .join(tr, ["r_id", "_rpart"])
+                .drop("_rpart")
+            )
             out = (
                 out.withColumn("_inter", F.size(F.array_intersect("_tl", "_tr")))
                 .withColumn(

@@ -13,7 +13,12 @@ from deepblocker_spark.config import BlockerConfig
 from deepblocker_spark.fixtures import repo_file_table
 from deepblocker_spark.operators.cluster import clusters_to_pairs
 from deepblocker_spark.operators.metrics import pairwise_f1
-from deepblocker_spark.plans.checkpoint import CheckpointManager, run_blocking_pipeline
+from deepblocker_spark.plans.checkpoint import (
+    CheckpointManager,
+    hash_dirs_for,
+    hash_layout_width,
+    run_blocking_pipeline,
+)
 from deepblocker_spark.sources.repo_files import with_durable_id
 
 CFG = BlockerConfig(emb_dim=64, top_k=10, remove_pc=True)
@@ -246,11 +251,13 @@ def test_checkpoint_hash_layout_prunes(spark, repo_df, tmp_path):
     df, _ = repo_df
     base = str(tmp_path / "ckpt_layout")
     ckpt = CheckpointManager(spark, base)
+    cfg = BlockerConfig(emb_dim=64, top_k=10, remove_pc=True,
+                        ckpt_hash_partitions=32)
     run_blocking_pipeline(
         spark, df, ckpt, ["repo", "path", "lang", "content"],
-        id_col="id", k=10, verify_jaccard=0.4, config=CFG,
+        id_col="id", k=10, verify_jaccard=0.4, config=cfg,
     )
-    p = CFG.ckpt_hash_partitions
+    p = cfg.ckpt_hash_partitions
     for stage, col in (("embeddings", "id"), ("candidates", "l_id"),
                        ("scored", "l_id")):
         assert ckpt.manifest(stage)["layout"] == {
@@ -302,9 +309,73 @@ def test_checkpoint_hash_layout_prunes(spark, repo_df, tmp_path):
     pids = {p["pid"] for p in man["partitions"]}
     assert pids <= set(range(p)) and len(pids) >= 2
     assert ckpt.verify("candidates", part=sorted(pids)[0])
-    absent = set(range(CFG.ckpt_hash_partitions)) - pids
+    absent = set(range(cfg.ckpt_hash_partitions)) - pids
     if absent:  # an absent directory verifies as genuinely empty
         assert ckpt.verify("candidates", part=sorted(absent)[0])
+
+
+@pytest.mark.parametrize("size_bytes, want", [
+    (0, 1),
+    ((1 << 30) + 1, 2),
+    (32 << 30, 32),
+    (1 << 40, 32),
+    (2**63 - 1, 32),  # Long.MaxValue: Spark cannot size the input
+])
+def test_hash_dirs_sizing_rule(size_bytes, want):
+    assert hash_dirs_for(size_bytes) == want
+
+
+@pytest.mark.parametrize("override", [0, -1])
+def test_hash_layout_width_rejects_below_one(spark, override):
+    with pytest.raises(ValueError):
+        hash_layout_width(spark.range(1), override)
+
+
+def test_derived_layout_one_dir_and_resume(spark, repo_df, tmp_path):
+    """ckpt_hash_partitions=None sizes the layout to the input: the test
+    table is far below 1 GiB, so every layout stage is one _part=0
+    directory. A second run reuses all four stages, and the single
+    partition verifies against its manifest entry."""
+    df, _ = repo_df
+    assert hash_layout_width(df) == 1
+    base = str(tmp_path / "ckpt_derived")
+    ckpt = CheckpointManager(spark, base)
+    run_blocking_pipeline(
+        spark, df, ckpt, ["repo", "path", "lang", "content"],
+        id_col="id", k=10, verify_jaccard=0.4, config=CFG,
+    )
+    layout_stages = ("embeddings", "candidates", "scored")
+    for stage in layout_stages:
+        assert ckpt.manifest(stage)["layout"]["n"] == 1, stage
+        data_dir = os.path.join(base, stage, "data.parquet")
+        assert [d for d in os.listdir(data_dir) if d.startswith("_part=")] == [
+            "_part=0"
+        ], stage
+    stages = layout_stages + ("clusters",)
+    before = {s: ckpt.manifest(s)["written_at_ns"] for s in stages}
+    run_blocking_pipeline(
+        spark, df, CheckpointManager(spark, base),
+        ["repo", "path", "lang", "content"],
+        id_col="id", k=10, verify_jaccard=0.4, config=CFG, force=False,
+    )
+    ckpt2 = CheckpointManager(spark, base)
+    assert {s: ckpt2.manifest(s)["written_at_ns"] for s in stages} == before
+    for stage in layout_stages:
+        assert ckpt2.verify(stage, part=0), stage
+
+
+def test_pipeline_releases_persisted_rdds(spark, repo_df, tmp_path):
+    """A pipeline run leaves no persisted RDD behind: the connected
+    components stage used to keep its localCheckpoint-ed edge frame."""
+    df, _ = repo_df
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    run_blocking_pipeline(
+        spark, df, CheckpointManager(spark, str(tmp_path / "ckpt_rdds")),
+        ["repo", "path", "lang", "content"],
+        id_col="id", k=10, verify_jaccard=0.4, config=CFG,
+    ).count()
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_pipeline_ivfpq_pairing_end_to_end_f1(spark, repo_df, tmp_path):

@@ -1,14 +1,29 @@
 """Approximate-nearest-neighbor search over an embedding column.
 
-Two strategies behind one call shape, both returning (l_id, r_id, sim, rank):
+Every strategy returns (l_id, r_id, sim, rank), rank <= k per l_id:
 
   * brute-force exact top-k (operators/topk.py) — the baseline/oracle; right
     side bounded-broadcast, per-batch BLAS + argpartition.
-  * LSH-bucketed (operators/lsh.py) — the scale path; cost bounded by
-    bucket sizes instead of N^2.
+  * LSH-bucketed (operators/lsh.py) — cost bounded by bucket sizes instead
+    of N^2.
+  * IVF (inverted-file cells) — ONE cell path, written here, in the three
+    passes of a distributed top-k join:
+      1. partition: centroids train on a bounded deterministic sample and
+         broadcast; one mapInPandas pass tags every row with its home cell
+         (role 0, index row) and/or its ``nprobe`` closest cells (role 1,
+         query row);
+      2. local top-k: oversized cells are grid salt-split, then a
+         sort-based grouped kernel scores each group's queries against its
+         index rows and keeps the in-cell top-k;
+      3. merge: one fused dedup + top-k per query id.
+    The only variant point is what an index row carries and how a cell
+    scores it:
+      - flat (IVF-flat): the f32/f16 vector; exact cosine ``qx @ ix.T``;
+      - ADC (IVFADC, operators/pq.py): the m-byte PQ code; per-subspace
+        lookup tables summed (asymmetric distance computation).
 
-``recall_at_k`` measures the approximate path against the exact oracle —
-the harness SURVEY.md §7.4(1) calls for when tuning LSH parameters.
+``recall_at_k`` measures an approximate path against the exact oracle —
+the harness SURVEY.md §7.4(1) calls for when tuning ANN parameters.
 """
 
 from __future__ import annotations
@@ -55,31 +70,26 @@ def lsh_topk(
     )
 
 
-def _train_centroids(
-    df: DataFrame, id_col: str, emb_col: str, n_cells: int, seed: int,
-    sample_rows: int = 20_000, iters: int = 10,
-    rows_hint: int | None = None,
+def _training_sample(
+    df: DataFrame, id_col: str, emb_col: str, sample_rows: int,
+    rows_hint: int | None,
 ):
-    """Driver-side spherical k-means on a bounded sample (the IVF 'train'
-    phase — centroids are a few KB and broadcast; the big table never leaves
-    the executors). ``rows_hint`` skips the sizing count when the caller
-    already knows N (every internal caller does — it just computed or was
-    hinted the same count for ``_auto_n_cells``); the count only decides
-    the sample-filter modulus, so the hint changes no sampled row."""
+    """The deterministic training sample shared by the IVF centroids and
+    the PQ codebooks (operators/pq.train_pq): L2-normalized float64 rows,
+    or None for an empty table. Rows are ranked by xxhash64(id) and the
+    smallest ``sample_rows`` kept, so the sample does not depend on
+    partition order (VERDICT r1: a bare limit() did). The filter keeps ~2x
+    the target at scan cost, so only a tiny survivor set is sorted — same
+    shape as pipeline._sample_texts. ``rows_hint`` skips the sizing count;
+    the count only decides the filter modulus, so the hint changes no
+    sampled row."""
     import numpy as np
 
     from deepblocker_spark.operators.topk import normalize_rows
 
-    # Deterministic, partition-order-independent training sample (VERDICT
-    # r1: a bare limit() made the sample depend on partition order): rank
-    # rows by xxhash64(id) and keep the smallest `sample_rows`. The filter
-    # keeps ~2x the target at scan cost, so only a tiny survivor set is
-    # sorted — same shape as pipeline._sample_texts.
-    from pyspark.sql import functions as F
-
     n = rows_hint if rows_hint is not None else df.count()
     if n == 0:
-        return np.zeros((0, 0))
+        return None
     p = max(1, n // max(1, 2 * sample_rows))
     pdf = (
         df.select(F.col(emb_col).alias("_e"), F.xxhash64(F.col(id_col)).alias("_h"))
@@ -88,7 +98,22 @@ def _train_centroids(
         .limit(sample_rows)
         .toPandas()
     )
-    x = normalize_rows(np.nan_to_num(np.stack(pdf["_e"].to_numpy()).astype(np.float64)))
+    return normalize_rows(np.nan_to_num(np.stack(pdf["_e"].to_numpy()).astype(np.float64)))
+
+
+def _train_centroids(
+    df: DataFrame, id_col: str, emb_col: str, n_cells: int, seed: int,
+    sample_rows: int = 20_000, iters: int = 10,
+    rows_hint: int | None = None,
+):
+    """Driver-side spherical k-means on the bounded training sample (the IVF
+    'train' phase — centroids are a few KB and broadcast; the big table
+    never leaves the executors)."""
+    import numpy as np
+
+    x = _training_sample(df, id_col, emb_col, sample_rows, rows_hint)
+    if x is None:
+        return np.zeros((0, 0))
     rng = np.random.Generator(np.random.PCG64(seed))
     cents = x[rng.choice(len(x), size=min(n_cells, len(x)), replace=False)].copy()
     for _ in range(iters):
@@ -103,6 +128,35 @@ def _train_centroids(
     return cents
 
 
+def _row_blobs(a) -> list:
+    """One little-endian bytes object per row of a C-contiguous 2-D array."""
+    raw = a.tobytes()
+    stride = a.shape[1] * a.itemsize
+    return [raw[i * stride : (i + 1) * stride] for i in range(len(a))]
+
+
+def _local_topk(sims, qids, iids, k: int, mask_equal_ids: bool):
+    """The k best index rows per query row of a (query × index) score
+    matrix -> DataFrame(l_id, r_id, sim); equal ids are dropped when
+    ``mask_equal_ids``. Order within a query is unspecified — callers
+    merge by (sim desc, r_id)."""
+    import numpy as np
+    import pandas as pd
+
+    if mask_equal_ids:
+        sims[qids[:, None] == iids[None, :]] = -np.inf
+    kk = min(k, sims.shape[1])
+    part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk] if kk < sims.shape[1] \
+        else np.broadcast_to(np.arange(sims.shape[1]), sims.shape).copy()
+    rows = np.repeat(np.arange(len(qids)), part.shape[1])
+    cols = part.ravel()
+    s = sims[rows, cols]
+    keep = s > -np.inf
+    return pd.DataFrame(
+        {"l_id": qids[rows[keep]], "r_id": iids[cols[keep]], "sim": s[keep]}
+    )
+
+
 def _assign_cells(
     df: DataFrame,
     id_col: str,
@@ -112,29 +166,34 @@ def _assign_cells(
     emit_home: bool,
     emit_probes: bool,
     emb_dtype: str = "f32",
+    books_bc=None,
 ):
     """Cell assignment as a vectorized mapInPandas pass: every row gets its
     home cell (role 0 = index row) and/or its ``nprobe`` closest cells
     (role 1 = query row). Self-search emits both from ONE scan; dyadic
     search runs this once per side.
 
-    The carried vector travels as ONE little-endian binary blob per row
-    (same transport as lsh.signature_buckets, round 4): the row<->Arrow
-    LIST conversion of wide array columns dominated the LSH exchange
-    stages' JVM CPU, a BinaryType column moves as a memcpy, and the
-    nprobe-way duplication shares the same immutable bytes objects.
-    ``emb_dtype='f32'`` is bit-identical to the previous array transport;
-    'f16' halves the exchange bytes (cell assignment is computed from the
-    full-precision vector BEFORE packing, so cell membership is identical
-    — only in-cell scores see ~1e-3 quantization error)."""
+    The payload travels as ONE little-endian binary blob per row (same
+    transport as lsh.signature_buckets): the row<->Arrow LIST conversion
+    of wide array columns dominated the exchange stages' JVM CPU, a
+    BinaryType column moves as a memcpy, and the nprobe-way duplication
+    shares the same immutable bytes objects. Query rows carry the vector;
+    index rows carry the vector too (flat), or — given PQ codebooks
+    ``books_bc`` — the m-byte PQ code of the normalized vector, computed in
+    this same pass (ADC). ``emb_dtype='f16'`` halves the vector bytes;
+    cells are computed from the full-precision vector BEFORE packing, so
+    cell membership is identical — only in-cell scores see ~1e-3
+    quantization error."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import BinaryType, IntegerType, StructField, StructType
 
+    from deepblocker_spark.operators.pq import _pq_encode
     from deepblocker_spark.operators.topk import normalize_rows
 
     if emb_dtype not in ("f32", "f16"):
         raise ValueError(f"unknown emb_dtype: {emb_dtype!r} (use 'f32' or 'f16')")
+    dt = np.float16 if emb_dtype == "f16" else np.float32
     id_type = df.select(id_col).schema.fields[0].dataType
     assign_schema = StructType(
         [
@@ -147,43 +206,34 @@ def _assign_cells(
 
     def assign(batches):
         c = cents_bc.value
+        books = None if books_bc is None else books_bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
             x_arr = np.stack(pdf[emb_col].to_numpy())
             x = normalize_rows(np.nan_to_num(x_arr.astype(np.float64)))
             sims = x @ c.T
-            p = min(nprobe, sims.shape[1])
-            n = len(pdf)
-            out_id, out_cell, out_role, copies = [], [], [], 0
+            if emit_probes or books is None:
+                vecs = _row_blobs(x_arr.astype(dt, copy=False))
+            cells, roles, payload = [], [], []
             if emit_home:
-                home = np.argmax(sims, axis=1)
-                out_id.append(pdf[id_col].to_numpy())
-                out_cell.append(home.astype(np.int32))
-                out_role.append(np.zeros(n, dtype=np.int32))
-                copies += 1
+                cells.append(np.argmax(sims, axis=1))
+                roles.append(0)
+                payload += vecs if books is None else _row_blobs(_pq_encode(x, books))
             if emit_probes:
+                p = min(nprobe, sims.shape[1])
                 probes = np.argpartition(-sims, p - 1, axis=1)[:, :p]
-                for j in range(p):
-                    out_id.append(pdf[id_col].to_numpy())
-                    out_cell.append(probes[:, j].astype(np.int32))
-                    out_role.append(np.ones(n, dtype=np.int32))
-                copies += p
-            frame = pd.DataFrame(
+                cells += list(probes.T)
+                roles += [1] * p
+                payload += vecs * p
+            yield pd.DataFrame(
                 {
-                    "_id": np.concatenate(out_id),
-                    "cell": np.concatenate(out_cell),
-                    "_role": np.concatenate(out_role),
+                    "_id": np.tile(pdf[id_col].to_numpy(), len(cells)),
+                    "cell": np.concatenate(cells).astype(np.int32),
+                    "_role": np.repeat(np.array(roles, dtype=np.int32), len(pdf)),
+                    "_emb": payload,
                 }
             )
-            xq = x_arr.astype(
-                np.float16 if emb_dtype == "f16" else np.float32, copy=False
-            )
-            raw = xq.tobytes()
-            stride = xq.shape[1] * xq.dtype.itemsize
-            blobs = [raw[i * stride : (i + 1) * stride] for i in range(n)]
-            frame["_emb"] = blobs * copies
-            yield frame
 
     return df.select(id_col, emb_col).mapInPandas(assign, assign_schema)
 
@@ -197,7 +247,7 @@ _ASSIGN_CACHES: list[DataFrame] = []
 
 
 def release_assignment_caches() -> None:
-    """Unpersist assignment frames cached by ivf_topk / ivf_topk_join."""
+    """Unpersist assignment frames cached by the IVF search paths."""
     while _ASSIGN_CACHES:
         _ASSIGN_CACHES.pop().unpersist()
 
@@ -210,15 +260,16 @@ def _auto_n_cells(rows: int) -> int:
 
 def grid_salt_split(assigned: DataFrame, max_cell_rows: int) -> DataFrame:
     """SQ×SI grid split of oversized cells over a role-tagged assignment
-    frame (_id, cell, _role, _emb) — extracted from ``_ivf_pairs`` so
-    ivf-flat and ivf-pq (operators/pq.py) share it. A cell whose query or
-    index role exceeds ``max_cell_rows`` fans out into (cell, salt_q,
-    salt_i) tasks: each query row lands in its hash split salt_q and is
-    replicated across all SI index splits (index rows symmetrically), so
-    every (query, index) pair is examined exactly once — bounded tasks,
-    ZERO recall loss. Healthy cells keep literal-zero salts (no join in
-    the plan when nothing is oversized). ``assigned`` must already be
-    persisted (it is consumed twice: size agg + kernel)."""
+    frame (_id, cell, _role, _emb), shared by the IVF search and
+    semdedup. A cell whose query or index role exceeds ``max_cell_rows``
+    fans out into (cell, salt_q, salt_i) tasks: SQ = ceil(n_queries /
+    max_cell_rows), SI = ceil(n_index / max_cell_rows); each query row
+    lands in its hash split salt_q and is replicated across all SI index
+    splits (index rows symmetrically), so every (query, index) pair is
+    examined exactly once — bounded tasks, ZERO recall loss. Healthy cells
+    keep literal-zero salts (no join in the plan when nothing is
+    oversized). ``assigned`` must already be persisted (it is consumed
+    twice: size agg + kernel)."""
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     over = (
@@ -274,32 +325,28 @@ def _ivf_pairs(
     mask_equal_ids: bool,
     max_cell_rows: int = 5_000,
     emb_dtype: str = "f32",
+    books_bc=None,
 ) -> DataFrame:
-    """Probed-cell exact search over the union of role-tagged assignments.
-    Two shuffles total: one on (cell, salt_q, salt_i) (sort-based grouped
-    map, operators/grouped.py) and one fused dedup(keep-max)+top-K merge — a
+    """Probed-cell search over the union of role-tagged assignments. Two
+    shuffles total: one on (cell, salt_q, salt_i) (sort-based grouped map,
+    operators/grouped.py) and one fused dedup(keep-max)+top-K merge — a
     probe pair can surface from several probed cells with identical sim.
+    The cell kernel scores flat (exact ``qx @ ix.T``) or, given PQ
+    codebooks ``books_bc``, ADC (pq._adc_scores over the index rows'
+    codes); everything around the score is shared.
 
-    Hot cells are GRID salt-split, never truncated (VERDICT r2 #1 — the same
-    fix the dyadic LSH path got in r1 for hot buckets): a cell whose query
-    or index role exceeds ``max_cell_rows`` becomes an SQ x SI grid of tasks
-    keyed (cell, salt_q, salt_i) with SQ = ceil(n_queries/max_cell_rows) and
-    SI = ceil(n_index/max_cell_rows). Each query row lands in its hash split
-    salt_q and is replicated across all SI index splits (index rows
-    symmetrically), so every (query, index) pair of the cell is examined
-    exactly once: per-task cross-products are bounded by max_cell_rows^2
-    with ZERO recall loss vs the unsplit cell. A skewed corpus collapsing
-    into one mega-cell (boilerplate/empty docs — FIXTURES.md F1) therefore
-    fans out instead of serializing on one unbounded task. The assignment
-    frame is persisted and the (tiny, <= n_cells rows) oversized list is
-    collected from a narrow projection — one assignment pass total; when no
-    cell is oversized the salts are literal zeros and the plan keeps its
-    two-exchange shape with no join.
+    Hot cells are GRID salt-split, never truncated (VERDICT r2 #1; see
+    grid_salt_split): per-task cross-products are bounded by
+    max_cell_rows^2 with ZERO recall loss, so a skewed corpus collapsing
+    into one mega-cell (boilerplate/empty docs — FIXTURES.md F1) fans out
+    instead of serializing on one unbounded task. The assignment frame is
+    persisted — one assignment pass total; when no cell is oversized the
+    plan keeps its two-exchange shape with no join.
     """
     import numpy as np
     import pandas as pd
     from pyspark import StorageLevel
-    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
     from deepblocker_spark.operators.grouped import (
         _dedup_topk,
@@ -308,8 +355,8 @@ def _ivf_pairs(
         pack_topk,
         topk_per_key,
     )
+    from deepblocker_spark.operators.pq import _adc_scores
     from deepblocker_spark.operators.topk import normalize_rows
-    from pyspark.sql.types import ArrayType
 
     assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
     _ASSIGN_CACHES.append(assigned)
@@ -325,43 +372,43 @@ def _ivf_pairs(
             StructField("_s", ArrayType(DoubleType()), True),
         ]
     )
+    dt = np.float16 if emb_dtype == "f16" else np.float32
+
+    def vectors(blobs):
+        x = np.frombuffer(b"".join(blobs), dtype=dt).reshape(len(blobs), -1)
+        return normalize_rows(np.nan_to_num(x.astype(np.float64)))
 
     def cell_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        """Per-(cell, salt_q, salt_i) exact search over a frame of WHOLE
-        groups (sort-based grouped map — one Python call per ~batch, not per
-        cell)."""
-        outs = []
-        roles = pdf["_role"].to_numpy()
+        """Per-(cell, salt_q, salt_i) search over a frame of WHOLE groups
+        (sort-based grouped map — one Python call per ~batch, not per
+        cell). Payloads decode once per frame, not per group: ``q_all`` /
+        ``i_all`` hold the query / index rows and ``pos`` maps a frame
+        row to its row there."""
+        is_q = pdf["_role"].to_numpy() == 1
         ids_all = pdf["_id"].to_numpy()
-        # whole-frame binary decode (one memcpy), slices per group — the
-        # same shape as the LSH kernel; no per-row LIST conversion
-        buf = b"".join(pdf["_emb"].to_numpy())
-        dt = np.float16 if emb_dtype == "f16" else np.float32
-        x_all = np.frombuffer(buf, dtype=dt).reshape(len(pdf), -1)
-        x_all = normalize_rows(np.nan_to_num(x_all.astype(np.float64)))
-        for a, b in group_slices(pdf, ["cell", "salt_q", "salt_i"]):
-            g_roles = roles[a:b]
-            q_idx = np.nonzero(g_roles == 1)[0] + a
-            i_idx = np.nonzero(g_roles == 0)[0] + a
-            if not len(q_idx) or not len(i_idx):
-                continue
-            qids = ids_all[q_idx]
-            iids = ids_all[i_idx]
-            qx = x_all[q_idx]
-            ix = x_all[i_idx]
-            sims = qx @ ix.T
-            if mask_equal_ids:
-                sims[qids[:, None] == iids[None, :]] = -np.inf
-            kk = min(k, sims.shape[1])
-            part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk] if kk < sims.shape[1] \
-                else np.broadcast_to(np.arange(sims.shape[1]), sims.shape).copy()
-            rows = np.repeat(np.arange(len(qids)), part.shape[1])
-            cols = part.ravel()
-            s = sims[rows, cols]
-            keep = s > -np.inf
-            outs.append(pd.DataFrame(
-                {"l_id": qids[rows[keep]], "r_id": iids[cols[keep]], "sim": s[keep]}
-            ))
+        blobs = pdf["_emb"].to_numpy()
+        outs = []
+        if is_q.any() and not is_q.all():
+            if books_bc is None:
+                # flat: both roles carry vectors — one whole-frame decode
+                q_all = i_all = vectors(blobs)
+                pos = np.arange(len(pdf))
+                score = lambda qx, ix: qx @ ix.T  # noqa: E731
+            else:
+                books = books_bc.value
+                q_all = vectors(blobs[is_q])
+                i_all = np.frombuffer(b"".join(blobs[~is_q]), dtype=np.uint8)
+                i_all = i_all.reshape(-1, books.shape[0])
+                pos = np.where(is_q, np.cumsum(is_q), np.cumsum(~is_q)) - 1
+                score = lambda qx, codes: _adc_scores(qx, codes, books)  # noqa: E731
+            for a, b in group_slices(pdf, ["cell", "salt_q", "salt_i"]):
+                q_idx = np.nonzero(is_q[a:b])[0] + a
+                i_idx = np.nonzero(~is_q[a:b])[0] + a
+                if not len(q_idx) or not len(i_idx):
+                    continue
+                sims = score(q_all[pos[q_idx]], i_all[pos[i_idx]])
+                outs.append(_local_topk(sims, ids_all[q_idx], ids_all[i_idx],
+                                        k, mask_equal_ids))
         if not outs:
             return pd.DataFrame({"l_id": [], "_r": [], "_s": []})
         # fused map-side combiner (see lsh_candidates.buckets_kernel)
@@ -377,12 +424,77 @@ def _ivf_pairs(
     return topk_per_key(pairs, k, pre_combine=False, packed_input=True)
 
 
+def _ivf_search(
+    left: DataFrame | None,
+    right: DataFrame,
+    k: int,
+    l_id: str,
+    r_id: str,
+    emb_col: str,
+    *,
+    n_cells: int | None,
+    nprobe: int,
+    seed: int,
+    max_cell_rows: int,
+    rows_hint: int | None,
+    emb_dtype: str = "f32",
+    pq: tuple[int, int] | None = None,
+) -> DataFrame:
+    """The one IVF search driver behind ivf_topk[_join] and
+    pq.ivf_pq_topk[_join]. ``left=None`` is SELF-search over ``right``: one
+    assignment scan emits both roles and equal ids are masked. Otherwise
+    ``left`` rows probe their ``nprobe`` nearest cells of the ``right``
+    index; both sides must share an id type (ADVICE r2: the cell-union
+    frame carries ONE ``_id`` column, so differing types would miscast
+    silently).
+
+    Centroids — and, for ``pq=(m, n_codes)``, the PQ codebooks (seed + 1)
+    — train on ``right``, sized by ONE row count (skipped by
+    ``rows_hint``) that also picks ``n_cells=None`` ~ sqrt(N)."""
+    from deepblocker_spark.operators.pq import train_pq
+
+    id_type = right.select(r_id).schema.fields[0].dataType
+    if left is not None:
+        l_type = left.select(l_id).schema.fields[0].dataType
+        if l_type != id_type:
+            raise TypeError(
+                "dyadic IVF search requires matching id types on both sides "
+                f"(got {l_type.simpleString()} vs {id_type.simpleString()}); "
+                "cast one side's id column first"
+            )
+    n_rows = rows_hint if rows_hint is not None else right.count()
+    if n_cells is None:
+        n_cells = _auto_n_cells(n_rows)
+    sc = right.sparkSession.sparkContext
+    cents = _train_centroids(right, r_id, emb_col, n_cells, seed, rows_hint=n_rows)
+    cents_bc = _tracked(sc, cents)
+    books_bc = None
+    if pq is not None:
+        m, n_codes = pq
+        books = train_pq(right, r_id, emb_col, m=m, n_codes=n_codes,
+                         seed=seed + 1, rows_hint=n_rows)
+        books_bc = _tracked(sc, books)
+
+    def assign(df, id_col, home, probes):
+        return _assign_cells(df, id_col, emb_col, cents_bc, nprobe,
+                             emit_home=home, emit_probes=probes,
+                             emb_dtype=emb_dtype, books_bc=books_bc)
+
+    if left is None:
+        assigned = assign(right, r_id, True, True)
+    else:
+        assigned = assign(right, r_id, True, False).unionByName(
+            assign(left, l_id, False, True))
+    return _ivf_pairs(assigned, k, id_type, mask_equal_ids=left is None,
+                      max_cell_rows=max_cell_rows, emb_dtype=emb_dtype,
+                      books_bc=books_bc)
+
+
 def ivf_topk(
     df: DataFrame,
     k: int = 10,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    dim: int = 64,
     n_cells: int | None = 16,
     nprobe: int = 3,
     seed: int = 1234,
@@ -403,23 +515,11 @@ def ivf_topk(
 
     -> (l_id, r_id, sim, rank), rank<=k per l_id, self-pairs excluded.
     """
-    spark = df.sparkSession
-    n_rows = rows_hint
-    if n_cells is None:
-        if n_rows is None:
-            n_rows = df.count()
-        n_cells = _auto_n_cells(n_rows)
-    # the sizing count (explicit or hinted) doubles as the trainer's sample
-    # modulus — ONE job sizes both instead of two identical counts
-    cents = _train_centroids(df, id_col, emb_col, n_cells, seed,
-                             rows_hint=n_rows)
-    cents_bc = _tracked(spark.sparkContext, cents)
-    assigned = _assign_cells(df, id_col, emb_col, cents_bc, nprobe,
-                             emit_home=True, emit_probes=True,
-                             emb_dtype=emb_dtype)
-    id_type = df.select(id_col).schema.fields[0].dataType
-    return _ivf_pairs(assigned, k, id_type, mask_equal_ids=True,
-                      max_cell_rows=max_cell_rows, emb_dtype=emb_dtype)
+    return _ivf_search(
+        None, df, k, id_col, id_col, emb_col, n_cells=n_cells, nprobe=nprobe,
+        seed=seed, max_cell_rows=max_cell_rows, rows_hint=rows_hint,
+        emb_dtype=emb_dtype,
+    )
 
 
 def ivf_topk_join(
@@ -440,54 +540,27 @@ def ivf_topk_join(
     rows land in their home cell only, every left query probes its
     ``nprobe`` nearest cells. Same two-shuffle plan as the self path, same
     grid salt-split for hot cells. ``n_cells=None`` auto-sizes from the
-    INDEX side's row count (``rows_hint`` skips that count).
-
-    Both sides must share an id type (ADVICE r2: the cell-union frame
-    carries ONE ``_id`` column, so differing types would miscast silently);
-    cast one side's id first if they differ.
+    INDEX side's row count (``rows_hint`` skips that count). Both sides
+    must share an id type (TypeError otherwise); cast one side's id first
+    if they differ.
 
     -> (l_id, r_id, sim, rank), rank<=k per left row."""
-    spark = left.sparkSession
-    l_type = left.select(l_id).schema.fields[0].dataType
-    r_type = right.select(r_id).schema.fields[0].dataType
-    if l_type != r_type:
-        raise TypeError(
-            "ivf_topk_join requires matching id types on both sides (got "
-            f"{l_type.simpleString()} vs {r_type.simpleString()}); cast one "
-            "side's id column first"
-        )
-    n_rows = rows_hint
-    if n_cells is None:
-        if n_rows is None:
-            n_rows = right.count()
-        n_cells = _auto_n_cells(n_rows)
-    cents = _train_centroids(right, r_id, emb_col, n_cells, seed,
-                             rows_hint=n_rows)
-    cents_bc = _tracked(spark.sparkContext, cents)
-    index = _assign_cells(right, r_id, emb_col, cents_bc, nprobe,
-                          emit_home=True, emit_probes=False,
-                          emb_dtype=emb_dtype)
-    queries = _assign_cells(left, l_id, emb_col, cents_bc, nprobe,
-                            emit_home=False, emit_probes=True,
-                            emb_dtype=emb_dtype)
-    return _ivf_pairs(index.unionByName(queries), k, l_type,
-                      mask_equal_ids=False, max_cell_rows=max_cell_rows,
-                      emb_dtype=emb_dtype)
+    return _ivf_search(
+        left, right, k, l_id, r_id, emb_col, n_cells=n_cells, nprobe=nprobe,
+        seed=seed, max_cell_rows=max_cell_rows, rows_hint=rows_hint,
+        emb_dtype=emb_dtype,
+    )
 
 
-class IVFVectorPairing:
-    """IVF-flat behind the same index/query seam as ExactTopKVectorPairing /
-    LSHVectorPairing (the reference's vector_pairing_models.py:7-18 ABC):
-    self mode when query() receives the indexed DataFrame itself, dyadic
-    (train-on-index, probe-from-query) otherwise."""
+class _CellPairing:
+    """The index/query seam shared by IVFVectorPairing and
+    pq.PQVectorPairing (the reference's vector_pairing_models.py:7-18 ABC,
+    like ExactTopKVectorPairing / LSHVectorPairing): self mode when
+    query() receives the indexed DataFrame itself, dyadic
+    (train-on-index, probe-from-query) otherwise. Subclasses supply the
+    search options through ``_search_kw``."""
 
-    def __init__(self, k: int = 50, n_cells: int | None = 16, nprobe: int = 3,
-                 seed: int = 1234, max_cell_rows: int = 5_000,
-                 emb_dtype: str = "f32"):
-        self.k, self.n_cells, self.nprobe, self.seed = k, n_cells, nprobe, seed
-        self.max_cell_rows = max_cell_rows
-        self.emb_dtype = emb_dtype
-        self.exclude_self = True  # self mode never emits self-pairs
+    exclude_self = True  # self mode never emits self-pairs
 
     def index(self, right: DataFrame, r_id: str = "id", emb_col: str = "embedding"):
         self._right, self._r_id, self._emb = right, r_id, emb_col
@@ -504,18 +577,25 @@ class IVFVectorPairing:
         if mode not in ("auto", "self", "dyadic"):
             raise ValueError(f"unknown query mode: {mode!r}")
         if mode == "self" or (mode == "auto" and left is self._right):
-            return ivf_topk(
-                self._right, k=self.k, id_col=self._r_id,
-                emb_col=emb_col or self._emb, n_cells=self.n_cells,
-                nprobe=self.nprobe, seed=self.seed,
-                max_cell_rows=self.max_cell_rows, emb_dtype=self.emb_dtype,
-            )
-        return ivf_topk_join(
-            left, self._right, k=self.k, l_id=l_id, r_id=self._r_id,
-            emb_col=emb_col or self._emb, n_cells=self.n_cells,
-            nprobe=self.nprobe, seed=self.seed,
-            max_cell_rows=self.max_cell_rows, emb_dtype=self.emb_dtype,
-        )
+            left = None
+        return _ivf_search(left, self._right, self.k, l_id, self._r_id,
+                           emb_col or self._emb, **self._search_kw())
+
+
+class IVFVectorPairing(_CellPairing):
+    """IVF-flat behind the shared index/query seam (see _CellPairing)."""
+
+    def __init__(self, k: int = 50, n_cells: int | None = 16, nprobe: int = 3,
+                 seed: int = 1234, max_cell_rows: int = 5_000,
+                 emb_dtype: str = "f32"):
+        self.k, self.n_cells, self.nprobe, self.seed = k, n_cells, nprobe, seed
+        self.max_cell_rows = max_cell_rows
+        self.emb_dtype = emb_dtype
+
+    def _search_kw(self) -> dict:
+        return dict(n_cells=self.n_cells, nprobe=self.nprobe, seed=self.seed,
+                    max_cell_rows=self.max_cell_rows, rows_hint=None,
+                    emb_dtype=self.emb_dtype)
 
 
 def recall_at_k(approx: DataFrame, exact: DataFrame) -> DataFrame:

@@ -448,13 +448,11 @@ class ExactTopKVectorPairing:
         """``mode`` ('auto'|'self'|'dyadic') mirrors the LSH/IVF pairings'
         explicit dispatch (ADVICE r2). For the exact join the executed plan
         is identical either way — self semantics are carried by
-        ``exclude_self`` — so 'self' merely forces exclude_self on."""
+        ``exclude_self`` — so 'self' forces it on for this call only."""
         if mode not in ("auto", "self", "dyadic"):
             raise ValueError(f"unknown query mode: {mode!r}")
         if self._right is None:
             raise RuntimeError("call index(right_df) before query(left_df)")
-        if mode == "self":
-            self.exclude_self = True
         return exact_topk_join(
             left,
             self._right,
@@ -462,7 +460,7 @@ class ExactTopKVectorPairing:
             l_id=l_id,
             r_id=self._r_id,
             emb_col=emb_col or self._emb_col,
-            exclude_self=self.exclude_self,
+            exclude_self=self.exclude_self or mode == "self",
             max_broadcast_rows=self.max_broadcast_rows,
             right_rows=self.right_rows,
         )

@@ -427,7 +427,7 @@ def run_blocking_pipeline(
             # same transport knob as the LSH path: the probed-cell
             # exchange is the IVF plan's widest shuffle
             return ivf_topk(
-                emb, k=k, id_col=id_col, emb_col="embedding", dim=cfg.emb_dim,
+                emb, k=k, id_col=id_col, emb_col="embedding",
                 n_cells=cfg.ivf_n_cells, nprobe=cfg.ivf_nprobe,
                 seed=cfg.random_seed, rows_hint=n_rows,
                 emb_dtype=cfg.lsh_emb_dtype,

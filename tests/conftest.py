@@ -15,3 +15,17 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def await_stream():
+    """-> finish(query): wait for a streaming query to end. A query still
+    running after ``timeout`` seconds is stopped and fails the test, so a
+    partial sink is never asserted on."""
+
+    def finish(query, timeout: int = 120) -> None:
+        if not query.awaitTermination(timeout):
+            query.stop()
+            pytest.fail(f"streaming query did not finish within {timeout}s")
+
+    return finish

@@ -13,6 +13,7 @@ from deepblocker_spark.operators.ann import (
     recall_at_k,
 )
 from deepblocker_spark.operators.lsh import LSHVectorPairing, lsh_candidates_dyadic
+from deepblocker_spark.operators.pq import ivf_pq_topk_join
 from deepblocker_spark.operators.topk import exact_topk_join
 
 DIM = 16
@@ -55,7 +56,7 @@ def test_lsh_pairing_dispatches_dyadic(spark):
 def test_ivf_topk_recall_vs_exact(spark):
     df = _clustered(spark, 12, 5, seed=23)
     exact = brute_force_topk(df, k=4, id_col="id", emb_col="embedding")
-    approx = ivf_topk(df, k=4, id_col="id", emb_col="embedding", dim=DIM,
+    approx = ivf_topk(df, k=4, id_col="id", emb_col="embedding",
                       n_cells=8, nprobe=3, seed=9)
     r = recall_at_k(approx, exact).collect()[0]
     assert r["recall_at_k"] >= 0.9, r
@@ -105,7 +106,7 @@ def test_ivf_mega_cell_grid_split_no_recall_loss(spark):
     df = spark.createDataFrame(
         pd.DataFrame({"id": list(range(n)), "embedding": rows})
     )
-    kwargs = dict(k=4, id_col="id", emb_col="embedding", dim=DIM,
+    kwargs = dict(k=4, id_col="id", emb_col="embedding",
                   n_cells=4, nprobe=2, seed=9)
     unsplit = ivf_topk(df, max_cell_rows=100_000, **kwargs).toPandas()
     split = ivf_topk(df, max_cell_rows=60, **kwargs).toPandas()
@@ -153,6 +154,8 @@ def test_ivf_join_rejects_mismatched_id_types(spark):
     )
     with pytest.raises(TypeError, match="matching id types"):
         ivf_topk_join(left, right, k=2, l_id="id", r_id="id")
+    with pytest.raises(TypeError, match="matching id types"):
+        ivf_pq_topk_join(left, right, k=2, l_id="id", r_id="id", m=4)
 
 
 def test_pairing_explicit_self_mode(spark):

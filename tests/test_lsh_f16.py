@@ -102,7 +102,7 @@ def test_ivf_binary_transport_f32_and_f16(spark):
     df = _emb_df(spark, 300, seed=13, quantize=True)
 
     def run(dtype):
-        out = ivf_topk(df, k=4, id_col="id", emb_col="embedding", dim=DIM,
+        out = ivf_topk(df, k=4, id_col="id", emb_col="embedding",
                        n_cells=6, nprobe=2, seed=3, emb_dtype=dtype)
         got = {(r["l_id"], r["r_id"], r["rank"]) for r in out.collect()}
         release_assignment_caches()
@@ -117,5 +117,5 @@ def test_ivf_invalid_emb_dtype_raises(spark):
 
     df = _emb_df(spark, 20, seed=1)
     with pytest.raises(ValueError):
-        ivf_topk(df, k=2, id_col="id", dim=DIM, n_cells=2, nprobe=1,
+        ivf_topk(df, k=2, id_col="id", n_cells=2, nprobe=1,
                  emb_dtype="f64").collect()

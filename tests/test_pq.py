@@ -199,3 +199,30 @@ def test_pq_vector_pairing_seam(spark, vec_df):
     import pytest as _pt
     with _pt.raises(ValueError):
         p.query(left, mode="bogus")
+
+
+@pytest.mark.parametrize("kernel", ["flat", "adc"])
+def test_ivf_probing_every_cell_matches_exhaustive_scorer(spark, vec_df, kernel):
+    """With nprobe == n_cells the IVF cell path scores every (query, index)
+    pair, so its top-k must equal the exhaustive join over the same scorer:
+    exact_topk_join for the flat kernel, pq_topk with the same codebooks
+    for the ADC kernel."""
+    from deepblocker_spark.operators.ann import ivf_topk
+    from deepblocker_spark.operators.pq import ivf_pq_topk
+
+    k, n_cells, seed = 5, 8, 5
+    if kernel == "flat":
+        cells = ivf_topk(vec_df, k=k, n_cells=n_cells, nprobe=n_cells, seed=seed)
+        full = exact_topk_join(vec_df, vec_df, k=k, l_id="vec_id",
+                               r_id="vec_id", exclude_self=True)
+    else:
+        cells = ivf_pq_topk(vec_df, k=k, n_cells=n_cells, nprobe=n_cells,
+                            m=8, n_codes=64, seed=seed)
+        # ivf_pq_topk trains its codebooks on the same sample with seed + 1
+        books = train_pq(vec_df, m=8, n_codes=64, seed=seed + 1)
+        full = pq_topk(vec_df, k=k, codebooks=books)
+    got = {(r.l_id, r.r_id): r.sim for r in cells.collect()}
+    want = {(r.l_id, r.r_id): r.sim for r in full.collect()}
+    assert len(want) == 144 * k
+    assert got.keys() == want.keys()
+    assert max(abs(got[p] - want[p]) for p in want) <= 1e-9

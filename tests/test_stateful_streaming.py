@@ -7,7 +7,7 @@ import datetime as dt
 from deepblocker_spark.streaming.dedup_stream import stateful_sessionizer
 
 
-def test_stateful_sessionizer_closes_sessions_on_gap(spark, tmp_path):
+def test_stateful_sessionizer_closes_sessions_on_gap(spark, tmp_path, await_stream):
     t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
     rows = [
         # user 1: two sessions separated by a 2-hour gap
@@ -29,10 +29,12 @@ def test_stateful_sessionizer_closes_sessions_on_gap(spark, tmp_path):
         .queryName("sessions")
         .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt_s"))
-        .trigger(availableNow=True)
+        # one micro-batch: a processing-time state timeout makes Spark
+        # run no-data batches forever, so availableNow never finishes
+        .trigger(once=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q)
     got = spark.sql("select * from sessions").toPandas()
     # only user 1's FIRST session is closed within the batch (a later event
     # beyond the gap closes it); open sessions stay in state
@@ -43,7 +45,7 @@ def test_stateful_sessionizer_closes_sessions_on_gap(spark, tmp_path):
     assert r["session_end_epoch"] - r["session_start_epoch"] == 300.0
 
 
-def test_streaming_minhash_neardup_finds_cross_batch_pairs(spark, tmp_path):
+def test_streaming_minhash_neardup_finds_cross_batch_pairs(spark, tmp_path, await_stream):
     """Two micro-batches across a query RESTART (same checkpoint): a
     near-duplicate arriving in batch 2 must collide with the batch-1 doc
     held in bucket state; an unrelated doc must not. Parquet sink (memory
@@ -70,10 +72,12 @@ def test_streaming_minhash_neardup_finds_cross_batch_pairs(spark, tmp_path):
             .outputMode("append")
             .option("path", out_path)
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
+            # one micro-batch: a processing-time state timeout makes Spark
+            # run no-data batches forever, so availableNow never finishes
+            .trigger(once=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_stream(q)
 
     run_query()
     got1 = spark.read.parquet(out_path).toPandas()
@@ -89,7 +93,7 @@ def test_streaming_minhash_neardup_finds_cross_batch_pairs(spark, tmp_path):
     assert (got["est_jaccard"] >= 0.5).all()
 
 
-def test_streaming_batch_minhash_parity(spark, tmp_path):
+def test_streaming_batch_minhash_parity(spark, tmp_path, await_stream):
     """VERDICT r2 #7 — streaming<->batch parity gate: the same fixture fed
     through `streaming_minhash_neardup` and the batch `minhash_lsh_pairs`
     (which share the minhash signature expressions and banding) must agree:
@@ -134,10 +138,12 @@ def test_streaming_batch_minhash_parity(spark, tmp_path):
         .outputMode("append")
         .option("path", out_path)
         .option("checkpointLocation", str(tmp_path / "par_ckpt"))
-        .trigger(availableNow=True)
+        # one micro-batch: a processing-time state timeout makes Spark
+        # run no-data batches forever, so availableNow never finishes
+        .trigger(once=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q)
     got = spark.read.parquet(out_path).toPandas()
     stream_pairs = {
         tuple(sorted((a, b))) for a, b in zip(got["new_id"], got["seen_id"])
@@ -151,7 +157,7 @@ def test_streaming_batch_minhash_parity(spark, tmp_path):
         assert abs(int(a) - int(b)) < 10, (a, b)
 
 
-def test_streaming_block_against_index(spark, tmp_path):
+def test_streaming_block_against_index(spark, tmp_path, await_stream):
     """Incremental blocking (stream-static LSH join): a streamed record
     identical to an indexed vector shares every band bucket and must emit a
     pair at sim 1.0; a streamed record orthogonal-ish to the corpus must
@@ -192,7 +198,7 @@ def test_streaming_block_against_index(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q)
     got = spark.sql("select * from blk").toPandas()
     pairs = {(r["l_id"], r["r_id"]) for _, r in got.iterrows()}
     assert (100, 3) in pairs                      # exact dup found
@@ -204,7 +210,7 @@ def test_streaming_block_against_index(spark, tmp_path):
     assert abs(sims[(100, 3)] - 1.0) < 1e-9
 
 
-def test_streaming_block_against_index_restart_dedup_state(spark, tmp_path):
+def test_streaming_block_against_index_restart_dedup_state(spark, tmp_path, await_stream):
     """VERDICT r3 #5 — checkpoint-restart survival for incremental blocking:
     the watermarked pair-dedup state (`dropDuplicatesWithinWatermark`) must
     survive a query restart. Batch 1 emits (100, 3); after a RESTART from the
@@ -248,7 +254,7 @@ def test_streaming_block_against_index_restart_dedup_state(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_stream(q)
 
     run_query()
     got1 = spark.read.parquet(out_path).toPandas()
@@ -277,7 +283,7 @@ def test_streaming_block_against_index_restart_dedup_state(spark, tmp_path):
     assert (pair_counts == 1).all(), pair_counts
 
 
-def test_streaming_bloom_decontam_parity_with_batch(spark, tmp_path):
+def test_streaming_bloom_decontam_parity_with_batch(spark, tmp_path, await_stream):
     """streaming<->batch parity: the same train/eval fixture through
     streaming_bloom_decontam must emit exactly the batch
     bloom_decontamination_pairs rows (same n_shared/containment; the
@@ -319,7 +325,7 @@ def test_streaming_bloom_decontam_parity_with_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q)
     got = spark.read.parquet(out_path).toPandas()
     stream = {
         (r.train_id, r.eval_id): (r.n_shared, round(r.containment, 9))

@@ -27,7 +27,7 @@ def _events_stream(spark, tmp_path):
     return spark.readStream.schema(src.schema).parquet(path), src
 
 
-def test_windowed_event_counts_stream(spark, tmp_path):
+def test_windowed_event_counts_stream(spark, tmp_path, await_stream):
     stream, batch = _events_stream(spark, tmp_path)
     out = windowed_event_counts(stream, ts_col="ts", key_col="event_type",
                                 window="1 hour", watermark="30 minutes")
@@ -39,7 +39,7 @@ def test_windowed_event_counts_stream(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q)
     got = spark.sql("select * from win_counts").toPandas()
     # append mode: only windows finalized by the watermark are emitted;
     # compare against the batch computation restricted to emitted windows
@@ -57,7 +57,7 @@ def test_windowed_event_counts_stream(spark, tmp_path):
         assert exp[(r.window_start, r.event_type)] == r.n_events
 
 
-def test_streaming_exact_dedup(spark, tmp_path):
+def test_streaming_exact_dedup(spark, tmp_path, await_stream):
     rows = [
         (1, dt.datetime(2024, 1, 1, 0, 0, 0), "hello world"),
         (2, dt.datetime(2024, 1, 1, 0, 1, 0), "hello world"),  # dup within watermark
@@ -77,7 +77,7 @@ def test_streaming_exact_dedup(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q)
     got = spark.sql("select * from dedup_out").toPandas()
     assert len(got) == 2
     assert set(got["text"]) == {"hello world", "something else"}

@@ -142,7 +142,7 @@ def test_dyadic_purge_uses_joint_frequency(spark):
     assert got == {(99, 1099)}
 
 
-def test_streaming_substring_decontam_parity_with_batch(spark, tmp_path):
+def test_streaming_substring_decontam_parity_with_batch(spark, tmp_path, await_stream):
     """streaming<->batch parity: the same train/eval fixture through
     streaming_substring_decontam must emit exactly the batch
     exact_substring_pairs_dyadic rows (same n_shared; the stream adds only
@@ -188,7 +188,7 @@ def test_streaming_substring_decontam_parity_with_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q)
     got = spark.read.parquet(out_path).toPandas()
     stream = {(r.train_id, r.eval_id): r.n_shared for r in got.itertuples()}
     assert stream == batch

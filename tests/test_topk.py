@@ -125,3 +125,20 @@ def test_threshold_join_chunked_equals_single_chunk(spark):
     chunked = as_set(cosine_threshold_join(left, right, 0.3, upper_only=False,
                                            max_broadcast_rows=7))
     assert whole == chunked and len(whole) > 0
+
+
+def test_pairing_self_query_does_not_stick_to_later_dyadic_query(spark):
+    """A mode='self' query must not switch exclude_self on for the
+    instance: a later dyadic query over tables that share ids keeps its
+    equal-id pairs."""
+    from deepblocker_spark.operators.topk import ExactTopKVectorPairing
+
+    left, _ = _emb_df(spark, 6, 8, seed=11)
+    right, _ = _emb_df(spark, 6, 8, seed=12)  # same ids 0..5, other vectors
+    pairing = ExactTopKVectorPairing(k=6).index(right)
+    self_out = pairing.query(right, mode="self").toPandas()
+    assert (self_out["l_id"] != self_out["r_id"]).all()
+    dyadic = pairing.query(left, mode="dyadic").toPandas()
+    expected = exact_topk_join(left, right, k=6).toPandas()
+    assert len(dyadic) == len(expected) == 36
+    assert (dyadic["l_id"] == dyadic["r_id"]).sum() == 6

@@ -108,29 +108,6 @@ BENCH_QUERIES = [
 SHUFFLE_DETAIL_QUERIES = {"flagship_blocking", "lsh_topk_emb", "ivf_topk_emb"}
 
 
-def _release_ann_caches() -> None:
-    """Unpersist the signature/assignment frames the ANN operators cache for
-    their single-pass size-agg + kernel consumption — between bench repeats
-    this both bounds executor memory and keeps every repeat honestly cold."""
-    from deepblocker_spark.operators.ann import release_assignment_caches
-    from deepblocker_spark.operators.dedup import release_rank_caches
-    from deepblocker_spark.operators.lsh import release_signature_caches
-    from deepblocker_spark.operators.metablocking import (
-        release_metablocking_caches,
-    )
-    from deepblocker_spark.operators.semdedup import release_verdict_caches
-    from deepblocker_spark.operators.substring_dedup import (
-        release_fingerprint_caches,
-    )
-
-    release_signature_caches()
-    release_assignment_caches()
-    release_rank_caches()
-    release_metablocking_caches()
-    release_fingerprint_caches()
-    release_verdict_caches()
-
-
 def _completed_stages(spark) -> list[dict]:
     """Completed-stage metrics from the UI REST API (SparkListener data;
     requires spark.ui.enabled=true on the session)."""
@@ -210,6 +187,8 @@ def _warm_up(spark) -> None:
 def _run_queries(spark) -> tuple[dict[str, float], dict[str, dict]]:
     import __spark_entry__ as entrymod
 
+    from deepblocker_spark.operators.bc_registry import release_tracked
+
     _warm_up(spark)
     qs = entrymod.queries()
     timings: dict[str, float] = {}
@@ -224,7 +203,7 @@ def _run_queries(spark) -> tuple[dict[str, float], dict[str, dict]]:
             n = df.count()
             dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
-            _release_ann_caches()
+            release_tracked()
             if marker is not None:
                 try:
                     shuffle_bytes[name] = _shuffle_since(
@@ -251,6 +230,7 @@ def _scaling_job(spark, parquet_path: str, limit: int | None = None,
     that would actually run on a cluster (VERDICT r2 #3); below the
     threshold it measures the exact chunk-broadcast oracle path."""
     from deepblocker_spark.config import BlockerConfig
+    from deepblocker_spark.operators.bc_registry import release_tracked
     from deepblocker_spark.operators.preprocess import MERGED_TEXT, preprocess_table
     from deepblocker_spark.operators.topk import exact_topk_join
     from deepblocker_spark.pipeline import SparkSIFEmbedding
@@ -295,7 +275,7 @@ def _scaling_job(spark, parquet_path: str, limit: int | None = None,
         )
     n = cand.count()
     pre.unpersist()
-    _release_ann_caches()
+    release_tracked()
     return {"pairs": n, "pairing": mode}
 
 
@@ -800,6 +780,7 @@ def _dyadic_bench(spark) -> dict:
     import numpy as np
     import pandas as pd
 
+    from deepblocker_spark.operators.bc_registry import release_tracked
     from deepblocker_spark.operators.lsh import lsh_candidates_dyadic
 
     from pyspark.sql import functions as F
@@ -845,7 +826,7 @@ def _dyadic_bench(spark) -> dict:
         out["shuffle"] = _shuffle_since(spark, marker, detail=True)
     except Exception as e:
         out["shuffle_error"] = str(e)[:120]
-    _release_ann_caches()
+    release_tracked()
     emb.unpersist()
     print(f"# lsh_dyadic {rows // 2}x{rows // 2}: {dt}s ({n_pairs} pairs)",
           file=sys.stderr)

@@ -45,12 +45,6 @@ def _session():
     )
 
 
-def _release():
-    from bench import _release_ann_caches
-
-    _release_ann_caches()
-
-
 def main():
     mode = sys.argv[1] if len(sys.argv) > 1 else "time"
     if mode == "explain":
@@ -61,6 +55,7 @@ def main():
 
     import __spark_entry__ as entrymod
     from bench import _warm_up
+    from deepblocker_spark.operators.bc_registry import release_tracked
 
     spark = _session()
     qs = entrymod.queries()
@@ -76,7 +71,7 @@ def main():
             path = f"plans/r06/{name}_{suffix}.txt"
             with open(path, "w") as f:
                 f.write(buf.getvalue())
-            _release()
+            release_tracked()
             print(f"# wrote {path}", file=sys.stderr)
         spark.stop()
         return
@@ -96,7 +91,7 @@ def main():
                 n = -1
             dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
-            _release()
+            release_tracked()
         spark.sparkContext.setJobDescription(None)
         timings[name] = round(best, 3)
         print(f"# {name}: {timings[name]}s", file=sys.stderr)

@@ -36,6 +36,7 @@ from deepblocker_spark.operators.topk import exact_topk_join
 
 from deepblocker_spark.operators.bc_registry import (
     tracked_broadcast as _tracked,
+    tracked_persist,
 )
 
 
@@ -238,20 +239,6 @@ def _assign_cells(
     return df.select(id_col, emb_col).mapInPandas(assign, assign_schema)
 
 
-# Persisted assignment frames awaiting release — same lifecycle as
-# operators/lsh._SIG_CACHES: the assignment frame is computed ONCE and
-# consumed by both the cell-size aggregation and the search kernel; callers
-# release after their action (the pipeline does so at the candidates stage
-# boundary), ContextCleaner is the GC backstop.
-_ASSIGN_CACHES: list[DataFrame] = []
-
-
-def release_assignment_caches() -> None:
-    """Unpersist assignment frames cached by the IVF search paths."""
-    while _ASSIGN_CACHES:
-        _ASSIGN_CACHES.pop().unpersist()
-
-
 def _auto_n_cells(rows: int) -> int:
     """~sqrt(N) cells, floored at 16 and capped at 4096 — the standard IVF
     sizing rule (cells ~ sqrt(N) balances probe cost against cell size)."""
@@ -358,8 +345,7 @@ def _ivf_pairs(
     from deepblocker_spark.operators.pq import _adc_scores
     from deepblocker_spark.operators.topk import normalize_rows
 
-    assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
-    _ASSIGN_CACHES.append(assigned)
+    assigned = tracked_persist(assigned, StorageLevel.MEMORY_AND_DISK)
     salted = grid_salt_split(assigned, max_cell_rows)
 
     # packed kernel output (round 6, same transport as the LSH kernels):
@@ -559,8 +545,6 @@ class _CellPairing:
     query() receives the indexed DataFrame itself, dyadic
     (train-on-index, probe-from-query) otherwise. Subclasses supply the
     search options through ``_search_kw``."""
-
-    exclude_self = True  # self mode never emits self-pairs
 
     def index(self, right: DataFrame, r_id: str = "id", emb_col: str = "embedding"):
         self._right, self._r_id, self._emb = right, r_id, emb_col

@@ -1,60 +1,65 @@
-"""Deterministic lifecycle for driver-created Python broadcasts.
+"""The one owner of every persisted frame and driver-created broadcast the
+engine releases later.
 
-Root-cause hardening for the round-5 driver-bench failure (VERDICT r5 #2):
-the bench tail showed the classic ``BlockInfoManager``/``TorrentBroadcast``
-race ("Cannot invoke Set.add(...) because ... ConcurrentHashMap.get(Object)
-is null" at task completion) — broadcast/RDD blocks being removed while a
-task still holds their read locks. The engine's Python ``Broadcast``
-objects (chunked right-side matrices, codebooks, centroids, SIF weight
-maps, PC vectors) were previously kept alive only by the query plan that
-referenced them: the moment the caller dropped the DataFrame, driver-JVM
-GC could hand the broadcast to ContextCleaner at an arbitrary later point
-— including while a subsequent job's tasks run in the same (local-mode)
-block manager. In local mode executor and driver share one
-``BlockInfoManager``, so asynchronous GC-driven cleaning is exactly the
-concurrent-removal window the race needs.
+Operators persist a frame when its plan consumes it more than once (a
+sizing aggregate plus a kernel, both sides of a self-join, a stream-static
+join that re-reads its static side every micro-batch), and broadcast
+driver-built values (chunked right-side matrices, codebooks, centroids,
+SIF weight maps, PC vectors). The plan handed back to the caller still
+reads them lazily, so the operator cannot release them itself. Instead:
 
-This registry makes the lifecycle explicit and quiet:
+  * ``tracked_persist(df)`` persists a frame and registers it here;
+    ``tracked_broadcast(sc, value)`` broadcasts a value and registers it.
+    The strong reference also keeps GC-triggered ContextCleaner from
+    removing the blocks at a nondeterministic time — in local mode
+    executor and driver share one ``BlockInfoManager``, and GC-timed
+    removal while a later job's tasks hold read locks is the
+    ``TorrentBroadcast`` race behind VERDICT r5 #2.
+  * ``release_tracked()`` is the single release point. Callers (the
+    checkpoint plan's candidates-stage boundary, each bench repeat, each
+    test) call it strictly AFTER the consuming action. It unpersists every
+    registered frame and calls ``Broadcast.unpersist(blocking=False)`` on
+    every broadcast: executor copies are dropped but the driver-side
+    value stays.
 
-  * every operator-created broadcast is ``track()``-ed — the strong
-    reference here prevents GC-triggered ContextCleaner destruction at a
-    nondeterministic time;
-  * ``release_tracked()`` runs at the documented release points (the
-    bench's per-repeat ``_release_ann_caches`` via
-    ``lsh.release_signature_caches``, the pipeline's stage boundaries) —
-    i.e. strictly AFTER the consuming action — and calls
-    ``Broadcast.unpersist(blocking=False)``: executor copies are dropped,
-    but the driver-side value stays, so a stale plan that is re-executed
-    later re-broadcasts instead of failing (the same contract as the
-    persisted-frame caches).
-
-The registry is bounded by the release cadence; if a caller never
-releases, ContextCleaner remains the backstop once the registry entry is
-popped (never before).
+Contract: a release can only cause a recompute, never a wrong answer. A
+stale plan executed after the release re-reads its lineage and
+re-broadcasts from the driver-held value.
 """
 
 from __future__ import annotations
 
 from typing import Any
 
-_TRACKED: list[Any] = []
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame
 
-
-def track(bc):
-    """Register a Python Broadcast for deterministic release; returns it."""
-    _TRACKED.append(bc)
-    return bc
+_TRACKED: list[Any] = []  # broadcasts
+_FRAMES: list[DataFrame] = []  # persisted frames
 
 
 def tracked_broadcast(sc, value):
     """``sc.broadcast(value)``, registered for deterministic release."""
-    return track(sc.broadcast(value))
+    bc = sc.broadcast(value)
+    _TRACKED.append(bc)
+    return bc
+
+
+def tracked_persist(
+    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER
+) -> DataFrame:
+    """``df.persist(level)`` (the default is ``DataFrame.persist``'s),
+    registered for deterministic release; returns the persisted frame."""
+    _FRAMES.append(df.persist(level))
+    return df
 
 
 def release_tracked() -> None:
-    """Unpersist (non-blocking) every tracked broadcast. Safe to call at
-    any time after the consuming job finished; a subsequent action on an
-    old plan re-broadcasts from the driver-held value rather than fail."""
+    """Unpersist every registered frame and (non-blocking) every tracked
+    broadcast. Safe at any time after the consuming job finished; a later
+    action on an old plan recomputes and re-broadcasts rather than fail."""
+    while _FRAMES:
+        _FRAMES.pop().unpersist()
     while _TRACKED:
         bc = _TRACKED.pop()
         try:

@@ -38,18 +38,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from deepblocker_spark.functions.tokenizer import tokens_col
+from deepblocker_spark.operators.bc_registry import tracked_persist
 from deepblocker_spark.operators.dedup import token_shingles
 from deepblocker_spark.operators.sampling import rate_to_cutoff
-
-_CANOPY_CACHES: list[DataFrame] = []
-
-
-def release_canopy_caches() -> None:
-    """Unpersist assignment frames cached by canopy_blocking. Safe any time
-    after the consuming action; a later action on an old plan recomputes
-    rather than fails."""
-    while _CANOPY_CACHES:
-        _CANOPY_CACHES.pop().unpersist()
 
 
 def canopy_blocking(
@@ -108,18 +99,15 @@ def canopy_blocking(
     # Persisted: consumed twice (the output union AND the coverage
     # anti-join); without the barrier Spark re-executes the whole
     # inverted-index join + pair aggregation for the second consumer
-    # (verified in the physical plan). Release with
-    # ``release_canopy_caches()`` — same idiom as the LSH/meta-blocking
-    # signature caches.
+    # (verified in the physical plan).
     from pyspark import StorageLevel
 
-    assigned = jac.select(
+    assigned = tracked_persist(jac.select(
         "center",
         "id",
         "jaccard",
         F.when(F.col("jaccard") >= t2, F.lit("core")).otherwise(F.lit("loose")).alias("tier"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _CANOPY_CACHES.append(assigned)
+    ), StorageLevel.MEMORY_AND_DISK)
 
     uncovered = (
         df.select(F.col(id_col).alias("id"))

@@ -34,6 +34,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 from deepblocker_spark.functions.tokenizer import tokens_col
+from deepblocker_spark.operators.bc_registry import tracked_persist
 
 
 # ---------------------------------------------------------------------------
@@ -412,31 +413,6 @@ def _containment_tail(
     )
 
 
-# eval-posting frames persisted by bloom_decontamination_pairs; bounded:
-# entries past the two most recent are unpersisted eagerly (same cap
-# discipline as topk.py's f32 cache), release_decontam_caches() drops all
-_DECONTAM_CACHES: list[DataFrame] = []
-
-# Streaming-held eval frames (streaming/dedup_stream.py) live in their OWN
-# list (ADVICE r4): batch eviction must never unpersist a live stream's
-# static-side frame mid-query (Spark would recompute — correct but the
-# stream then re-evaluates the static plan every microbatch). The
-# streaming append site applies the same 2-entry eviction cap, so
-# repeated streaming calls stay bounded; at most the two most recent
-# concurrent streams keep their frames hot.
-_STREAM_DECONTAM_CACHES: list[DataFrame] = []
-
-
-def release_decontam_caches() -> None:
-    """Unpersist eval-posting frames cached by bloom_decontamination_pairs
-    and streaming_bloom_decontam. Safe any time; subsequent actions simply
-    recompute."""
-    while _DECONTAM_CACHES:
-        _DECONTAM_CACHES.pop().unpersist()
-    while _STREAM_DECONTAM_CACHES:
-        _STREAM_DECONTAM_CACHES.pop().unpersist()
-
-
 def bloom_decontamination_pairs(
     train: DataFrame,
     eval_df: DataFrame,
@@ -481,10 +457,7 @@ def bloom_decontamination_pairs(
     # the final containment query) and their lineage includes the
     # train-side hot-shingle aggregation when the cap is set — persist so
     # the train pass behind `hot` runs once, not once per action
-    e_inv = e_inv.persist(StorageLevel.MEMORY_AND_DISK)
-    while len(_DECONTAM_CACHES) >= 2:
-        _DECONTAM_CACHES.pop(0).unpersist()
-    _DECONTAM_CACHES.append(e_inv)
+    e_inv = tracked_persist(e_inv, StorageLevel.MEMORY_AND_DISK)
     test = build_shingle_bloom(e_inv.select("shingle"), bits_per_item)
     if test is None:
         return _containment_tail(t_inv.limit(0), e_inv, threshold)
@@ -1133,20 +1106,6 @@ def purged_blocks(
 # ---------------------------------------------------------------------------
 
 
-# Persisted ranked frames awaiting release (same discipline as
-# lsh._SIG_CACHES): global_rank reads its sorted frame twice — the P-row
-# partition-size collect, then the rank pass — and the returned plan keeps
-# reading it lazily, so it cannot be unpersisted inside the operator.
-_RANK_CACHES: list[DataFrame] = []
-
-
-def release_rank_caches() -> None:
-    """Unpersist frames cached by global_rank. Safe any time after the
-    consuming job finished; later actions recompute rather than fail."""
-    while _RANK_CACHES:
-        _RANK_CACHES.pop().unpersist()
-
-
 def global_rank(
     df: DataFrame,
     order_cols: list[str],
@@ -1167,13 +1126,13 @@ def global_rank(
     spark = df.sparkSession
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     order = [F.col(c).asc() for c in order_cols]
-    part = (
+    # persisted: read twice (the partition-size collect, then the rank
+    # pass), and the returned plan keeps reading it lazily
+    part = tracked_persist(
         df.repartitionByRange(n_part, *order)
         .sortWithinPartitions(*order)
         .withColumn("_pid", F.spark_partition_id())
-        .persist()
     )
-    _RANK_CACHES.append(part)
     sizes = {r["_pid"]: r["cnt"] for r in
              part.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
     offsets = {}

@@ -45,6 +45,7 @@ from deepblocker_spark.functions.wordvec import get_provider
 
 from deepblocker_spark.operators.bc_registry import (
     tracked_broadcast as _tracked,
+    tracked_persist,
 )
 
 EMBEDDING = "embedding"
@@ -283,25 +284,6 @@ def compute_top_principal_component(df: DataFrame, emb_col: str = EMBEDDING, dim
     return vecs[:, -1].copy()  # top eigenvector
 
 
-# Persisted pre-PC embedding frames (and the pipeline's embedded-table
-# persists) awaiting release — same lifecycle as lsh._SIG_CACHES. Round 6:
-# previously these had NO release channel and were reaped only by
-# GC-triggered ContextCleaner at a nondeterministic later time — one of the
-# removal-races-with-running-tasks windows behind the round-5 driver-bench
-# BlockInfoManager error storm (VERDICT r5 #2). Released together with the
-# signature caches (lsh.release_signature_caches), i.e. strictly after the
-# consuming action.
-_PC_CACHES: list[DataFrame] = []
-
-
-def release_pc_caches() -> None:
-    """Unpersist embedding frames cached by remove_principal_component and
-    the pipeline stage boundaries. Safe after the consuming job finished; a
-    subsequent action on an old plan recomputes rather than fails."""
-    while _PC_CACHES:
-        _PC_CACHES.pop().unpersist()
-
-
 def remove_principal_component(df: DataFrame, emb_col: str = EMBEDDING, dim: int = 300) -> DataFrame:
     """Pass 2: X - (X . pc) pc with the broadcast pc. Refits per call, like
     the reference (each get_tuple_embedding call refits SVD,
@@ -310,8 +292,7 @@ def remove_principal_component(df: DataFrame, emb_col: str = EMBEDDING, dim: int
     The input is persisted: it is consumed twice (Gram pass + subtract
     pass), and without a barrier the upstream embedding UDF would recompute.
     """
-    df = df.persist()
-    _PC_CACHES.append(df)
+    df = tracked_persist(df)
     pc = compute_top_principal_component(df, emb_col, dim)
     spark = df.sparkSession
     pc_bc = _tracked(spark.sparkContext, pc)

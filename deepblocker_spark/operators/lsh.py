@@ -53,6 +53,7 @@ from deepblocker_spark.operators.topk import normalize_rows
 
 from deepblocker_spark.operators.bc_registry import (
     tracked_broadcast as _tracked,
+    tracked_persist,
 )
 
 
@@ -178,16 +179,6 @@ def bucket_stats(buckets: DataFrame) -> DataFrame:
     return buckets.groupBy("band", "bucket").agg(F.count("*").alias("size"))
 
 
-# Persisted signature frames awaiting release (VERDICT r2 #2: signatures are
-# computed ONCE per side into a persisted frame consumed by both the
-# bucket-size aggregation and the candidate kernel — previously each consumer
-# re-ran the full scan + hyperplane matmul, 2x per side). The candidate plan
-# returned to the caller still reads the cache lazily, so the frames cannot
-# be unpersisted inside the operator; callers (pipeline stage boundaries,
-# bench) call release_signature_caches() after their action, and Spark's
-# ContextCleaner unpersists dropped frames as the GC backstop. At true 100 TB
-# the same role is played by the checkpoint stage boundary (the candidates
-# stage materializes, then caches are released).
 # Worker-lifetime id->row lookup for the broadcast-gather kernel: building
 # the hash Index once per (worker, broadcast) instead of once per Arrow
 # batch (same cap-at-2 shape as topk.py's f32 cache — at most two gathers
@@ -217,41 +208,17 @@ def _gather_rows(bc, ids_all: np.ndarray) -> np.ndarray:
     return mat[pos]
 
 
-_SIG_CACHES: list[DataFrame] = []
-
-
-def release_signature_caches() -> None:
-    """Unpersist signature frames cached by lsh_candidates[_dyadic]. Safe to
-    call at any time after the consuming job finished; a subsequent action on
-    an old plan would recompute rather than fail.
-
-    Round 6: this is the release point the (frozen) bench and the pipeline
-    stage boundaries already call after every action, so it additionally
-    drains the two lifecycle channels added for the round-5
-    BlockInfoManager race (VERDICT r5 #2): the embedding-stage persisted
-    frames (embed._PC_CACHES) and the tracked Python broadcasts
-    (bc_registry) — every release strictly after the consuming job, never
-    via GC-timed ContextCleaner."""
-    from deepblocker_spark.operators import bc_registry
-    from deepblocker_spark.operators.embed import release_pc_caches
-
-    while _SIG_CACHES:
-        _SIG_CACHES.pop().unpersist()
-    release_pc_caches()
-    bc_registry.release_tracked()
-
-
 def _persisted_sigs(df, id_col, emb_col, dim, n_bands, band_bits, seed,
                     emb_binary: bool = False, emb_dtype: str = "f32",
                     extra_cols: list[str] | None = None) -> DataFrame:
+    """Signatures computed ONCE per side (VERDICT r2 #2): the oversized-bucket
+    collect and the candidate kernel both read the persisted frame."""
     from pyspark import StorageLevel
 
-    sigs = signature_buckets(
+    return tracked_persist(signature_buckets(
         df, id_col, emb_col, dim, n_bands, band_bits, seed, include_emb=True,
         emb_binary=emb_binary, emb_dtype=emb_dtype, extra_cols=extra_cols,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _SIG_CACHES.append(sigs)
-    return sigs
+    ), StorageLevel.MEMORY_AND_DISK)
 
 
 def _oversized_buckets(sigs: DataFrame, max_bucket_rows: int, cols: list[str]):
@@ -731,7 +698,6 @@ class LSHVectorPairing:
         self.max_bucket_rows, self.min_sim = max_bucket_rows, min_sim
         self.emb_dtype = emb_dtype
         self.gather, self.gather_max_bytes = gather, gather_max_bytes
-        self.exclude_self = True  # LSH self-join never emits self-pairs
 
     def index(self, right: DataFrame, r_id: str = "id", emb_col: str = EMBEDDING):
         self._right, self._r_id, self._emb = right, r_id, emb_col

@@ -40,41 +40,19 @@ driver action sits in the plan. Scale notes:
     pruning-pass consumers) are ``.persist()``-ed — Spark shares no common
     subtrees across DataFrame reuse, so without the caches the blocking +
     filtering work would rerun once per consumer. Release via
-    :func:`release_metablocking_caches` after the consuming action.
+    ``bc_registry.release_tracked()`` after the consuming action.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from deepblocker_spark.functions.tokenizer import tokens_col
+from deepblocker_spark.operators.bc_registry import tracked_persist
 
 SCHEMES = ("CBS", "ECBS", "JS")
-
-# Persisted frames awaiting release (same discipline as lsh._SIG_CACHES):
-# Spark shares NO common subtrees across DataFrame reuse, so without a
-# persist the filtered collection would be recomputed once per consumer
-# (both self-join sides, both entity-count joins, the block total — 5×) and
-# the weighted pair set once per pruning pass (WEP mean + filter, or CNP's
-# two directions — 2×). Callers release after their action; the
-# ContextCleaner unpersists dropped frames as the GC backstop.
-_MB_CACHES: list[DataFrame] = []
-
-
-def release_metablocking_caches() -> None:
-    """Unpersist frames cached by meta_blocking_pairs. Safe any time after
-    the consuming job finished; later actions recompute rather than fail."""
-    while _MB_CACHES:
-        _MB_CACHES.pop().unpersist()
-
-
-def _mb_persist(df: DataFrame) -> DataFrame:
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _MB_CACHES.append(df)
-    return df
 
 
 def token_blocks(
@@ -174,7 +152,9 @@ def meta_blocking_pairs(
         raise ValueError(
             f"unknown prune mode: {prune!r} (use 'WEP', 'CNP', 'WNP' or 'none')"
         )
-    filtered = _mb_persist(block_filtering(blocks, ratio, id_col, key_col))
+    filtered = tracked_persist(
+        block_filtering(blocks, ratio, id_col, key_col), StorageLevel.MEMORY_AND_DISK
+    )
     if max_block_rows is not None:
         kept_sizes = (
             filtered.groupBy("block_key")
@@ -215,7 +195,7 @@ def meta_blocking_pairs(
     )
     if prune == "none":
         return weighted
-    weighted = _mb_persist(weighted)
+    weighted = tracked_persist(weighted, StorageLevel.MEMORY_AND_DISK)
     if prune == "CNP":
         # undirected edge -> both directions; rank per node by (weight desc,
         # neighbor asc); an edge survives if either endpoint ranks it — one
@@ -312,12 +292,13 @@ def meta_blocking_pairs_dyadic(
     )
     w_ent_all = Window.partitionBy("_side", "id")
     sizes = both.groupBy("block_key").agg(F.count("*").alias("block_size"))
-    filtered = _mb_persist(
+    filtered = tracked_persist(
         both.join(sizes, "block_key")
         .withColumn("_rn", F.row_number().over(w_ent))
         .withColumn("_nb", F.count("*").over(w_ent_all))
         .filter(F.col("_rn") <= F.ceil(F.lit(float(ratio)) * F.col("_nb")))
-        .select("id", "block_key", "_side")
+        .select("id", "block_key", "_side"),
+        StorageLevel.MEMORY_AND_DISK,
     )
     if max_block_rows is not None:
         kept = (
@@ -370,7 +351,7 @@ def meta_blocking_pairs_dyadic(
     weighted = pairs.select("a", "b", "cbs", F.round(weight, 9).alias("weight"))
     if prune == "none":
         return weighted
-    weighted = _mb_persist(weighted)
+    weighted = tracked_persist(weighted, StorageLevel.MEMORY_AND_DISK)
     if prune in ("CNP", "WNP"):
         # bipartite directed view: left nodes rank/average their right
         # neighbors and vice versa; node key is (side, id)

@@ -37,21 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.tokenizer import tokens_col
-
-# tf feeds three branches (doc lengths, document frequencies, the posting
-# join) — persisted so the tokenize+count pass over the corpus runs ONCE,
-# not once per branch. Bounded: entries past the two most recent are
-# unpersisted eagerly (the list holds strong references, so the
-# ContextCleaner alone could never reclaim them — same cap discipline as
-# topk.py's f32 cache); release_postings_caches() drops all.
-_TF_CACHES: list[DataFrame] = []
-
-
-def release_postings_caches() -> None:
-    """Unpersist term-frequency frames cached by bm25_postings. Safe any
-    time; subsequent calls simply recompute."""
-    while _TF_CACHES:
-        _TF_CACHES.pop().unpersist()
+from .bc_registry import tracked_persist
 
 
 def bm25_postings(
@@ -85,14 +71,12 @@ def bm25_postings(
         *part,
         F.explode(tokens_col(text_col)).alias("token"),
     )
-    tf = (
-        toks.groupBy("id", *part, "token")
-        .agg(F.count("*").alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # tf feeds three branches (doc lengths, document frequencies, the
+    # posting join): persisted so the tokenize+count pass runs once
+    tf = tracked_persist(
+        toks.groupBy("id", *part, "token").agg(F.count("*").alias("tf")),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    while len(_TF_CACHES) >= 2:
-        _TF_CACHES.pop(0).unpersist()
-    _TF_CACHES.append(tf)
     dl = tf.groupBy("id", *part).agg(F.sum("tf").alias("dl"))
     # avgdl averages over the WHOLE collection (token-less docs count as
     # length 0), so it comes from sum(dl)/N, not avg over docs with tokens

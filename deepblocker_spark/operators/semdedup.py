@@ -38,7 +38,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from deepblocker_spark.operators.ann import (
-    _ASSIGN_CACHES,
     _assign_cells,
     _auto_n_cells,
     _train_centroids,
@@ -46,6 +45,7 @@ from deepblocker_spark.operators.ann import (
 )
 from deepblocker_spark.operators.bc_registry import (
     tracked_broadcast as _tracked,
+    tracked_persist,
 )
 
 
@@ -109,10 +109,9 @@ def semantic_dedup(
     cents_bc = _tracked(df.sparkSession.sparkContext, cents)
     # one assignment pass; role 0 = index copy. The role-1 query copies are
     # minted from the SAME frame (cache + union) so assignment runs once.
-    assigned = _assign_cells(
+    assigned = tracked_persist(_assign_cells(
         df, id_col, emb_col, cents_bc, nprobe=1, emit_home=True, emit_probes=False
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _ASSIGN_CACHES.append(assigned)
+    ), StorageLevel.MEMORY_AND_DISK)
     both_roles = assigned.unionByName(
         assigned.withColumn("_role", F.lit(1).cast("int"))
     )
@@ -191,18 +190,6 @@ def semantic_dedup(
     )
 
 
-# Persisted verdict frames awaiting release — same lifecycle as
-# ann._ASSIGN_CACHES: consumed by several report aggregates, released by
-# the caller after its action; ContextCleaner is the GC backstop.
-_VERDICT_CACHES: list[DataFrame] = []
-
-
-def release_verdict_caches() -> None:
-    """Unpersist verdict frames cached by semantic_dedup_coverage."""
-    while _VERDICT_CACHES:
-        _VERDICT_CACHES.pop().unpersist()
-
-
 def semantic_dedup_coverage(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -230,11 +217,10 @@ def semantic_dedup_coverage(
     # the report consumes it THREE times (both pair endpoints + totals);
     # without the persist the whole assignment+kernel subtree re-executes
     # per consumer (visible as 3x hashpartitioning(id, cell) in the plan)
-    verdicts = semantic_dedup(
+    verdicts = tracked_persist(semantic_dedup(
         df, id_col, emb_col, threshold=threshold, n_cells=n_cells, seed=seed,
         keep=keep,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _VERDICT_CACHES.append(verdicts)
+    ), StorageLevel.MEMORY_AND_DISK)
     exact = cosine_threshold_join(
         df, df, threshold, l_id=id_col, r_id=id_col, emb_col=emb_col,
         upper_only=True,

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deepblocker_spark.operators.bc_registry import tracked_persist
+
 
 def winnowed_fingerprint_arrays(
     df: DataFrame,
@@ -191,19 +193,6 @@ def hot_fingerprints(
     )
 
 
-# Persisted fingerprint frames awaiting release — same lifecycle as
-# ann._ASSIGN_CACHES: consumed by both sides of the self-join (and the
-# purge agg), released by the caller after its action; ContextCleaner is
-# the GC backstop.
-_FP_CACHES: list[DataFrame] = []
-
-
-def release_fingerprint_caches() -> None:
-    """Unpersist fingerprint frames cached by exact_substring_pairs."""
-    while _FP_CACHES:
-        _FP_CACHES.pop().unpersist()
-
-
 def exact_substring_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -231,12 +220,11 @@ def exact_substring_pairs(
     The fingerprint frame is persisted: the selection pass (O(chars * w)
     string mins — by far the dominant cost) would otherwise run once per
     join side (2x, or 4x with the purge's frequency agg + anti-join).
-    Release with ``release_fingerprint_caches`` after the action."""
+    Release with ``bc_registry.release_tracked()`` after the action."""
     from pyspark import StorageLevel
 
     fp = winnowed_fingerprints(df, id_col, text_col, gram_len, window)
-    fp = fp.persist(StorageLevel.MEMORY_AND_DISK)
-    _FP_CACHES.append(fp)
+    fp = tracked_persist(fp, StorageLevel.MEMORY_AND_DISK)
     if max_gram_df is not None:
         hot = (
             fp.groupBy("gram")

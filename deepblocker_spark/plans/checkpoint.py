@@ -450,14 +450,11 @@ def run_blocking_pipeline(
                           cfg.pq_n_codes] if mode == "ivfpq" else None},
         layout=("l_id", n_part),
     )
-    # the candidates stage is materialized: release the signature /
-    # assignment caches the ANN operators persisted for their single-pass
-    # size-agg + kernel consumption
-    from deepblocker_spark.operators.ann import release_assignment_caches
-    from deepblocker_spark.operators.lsh import release_signature_caches
+    # the candidates stage is materialized: release the frames and
+    # broadcasts the operators behind it registered
+    from deepblocker_spark.operators.bc_registry import release_tracked
 
-    release_signature_caches()
-    release_assignment_caches()
+    release_tracked()
 
     def build_scored() -> DataFrame:
         out = cands

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deepblocker_spark.operators.bc_registry import tracked_persist
+
 
 def streaming_exact_dedup(
     stream: DataFrame,
@@ -52,6 +54,12 @@ def stateful_sessionizer(
     the pattern for stateful logic Spark's built-ins can't express —
     arbitrary per-key state carried across micro-batches, with timeouts
     bounding state size.
+
+    Trigger contract: the state timeout is a processing-time timeout, so
+    Spark keeps scheduling no-data micro-batches to fire it and a query
+    started with ``trigger(availableNow=True)`` never terminates. Run it
+    with ``trigger(once=True)`` or a processing-time trigger
+    (``trigger(processingTime=...)``, stopped by the caller).
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import (
@@ -175,6 +183,11 @@ def streaming_minhash_neardup(
     same pair can surface via several bands or micro-batches — consumers
     dedup downstream (`dropDuplicates(["new_id", "seen_id"])` in the sink
     query or at read time).
+
+    Trigger contract: as for :func:`stateful_sessionizer`, the
+    processing-time state timeout keeps no-data micro-batches running, so
+    ``trigger(availableNow=True)`` never terminates; use
+    ``trigger(once=True)`` or a processing-time trigger.
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -343,12 +356,11 @@ def streaming_block_against_index(
     signature frame is ``.persist()``-ed here (ADVICE r3): the signature
     mapInPandas pass over the corpus runs once on the first microbatch and
     later batches read the cached buckets — without the persist, every
-    batch would redo the full corpus scan + hyperplane matmul. The cache
-    lives for the streaming query's lifetime; callers that tear the query
-    down can ``.unpersist()`` via ``release_signature_caches()`` (the frame
-    is registered in the same cache registry the batch LSH operators use).
+    batch would redo the full corpus scan + hyperplane matmul. The frame
+    is registered with ``bc_registry``; release it with
+    ``release_tracked()`` once the query has stopped.
     """
-    from deepblocker_spark.operators.lsh import _SIG_CACHES, signature_buckets
+    from deepblocker_spark.operators.lsh import signature_buckets
     from deepblocker_spark.operators.scoring import cosine_col
 
     s = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
@@ -357,11 +369,10 @@ def streaming_block_against_index(
         band_bits=band_bits, seed=seed, include_emb=True,
         extra_cols=[ts_col],
     ).withColumnsRenamed({id_col: "l_id", "_emb": "_l_emb"})
-    i_sigs = signature_buckets(
+    i_sigs = tracked_persist(signature_buckets(
         index, id_col=id_col, emb_col=emb_col, dim=dim, n_bands=n_bands,
         band_bits=band_bits, seed=seed, include_emb=True,
-    ).withColumnsRenamed({id_col: "r_id", "_emb": "_r_emb"}).persist()
-    _SIG_CACHES.append(i_sigs)
+    ).withColumnsRenamed({id_col: "r_id", "_emb": "_r_emb"}))
     joined = s_sigs.join(i_sigs, ["band", "bucket"])
     scored = (
         joined.filter(F.col("l_id") != F.col("r_id"))
@@ -409,29 +420,22 @@ def streaming_bloom_decontam(
 
     The eval side (postings + per-doc shingle arrays) is persisted — a
     stream-static join re-evaluates the static plan each microbatch;
-    release via ``release_decontam_caches()``.
+    release via ``bc_registry.release_tracked()`` once the query has
+    stopped.
     """
     from deepblocker_spark.functions.tokenizer import tokens_col
     from deepblocker_spark.operators.dedup import (
-        _STREAM_DECONTAM_CACHES,
         build_shingle_bloom,
         token_shingles,
     )
 
-    ev = (
+    ev = tracked_persist(
         eval_df.select(
             F.col(id_col).alias("eval_id"),
             token_shingles(tokens_col(text_col), n).alias("_e_sh"),
         )
         .filter(F.size("_e_sh") > 0)
-        .persist()
     )
-    # streaming frames get their own capped cache list (ADVICE r4): the
-    # batch operator's eviction can't touch a live stream's frame, and
-    # repeated streaming calls can't grow unboundedly
-    while len(_STREAM_DECONTAM_CACHES) >= 2:
-        _STREAM_DECONTAM_CACHES.pop(0).unpersist()
-    _STREAM_DECONTAM_CACHES.append(ev)
     test = build_shingle_bloom(
         ev.select(F.explode("_e_sh").alias("shingle")), bits_per_item
     )
@@ -493,22 +497,16 @@ def streaming_substring_decontam(
         multi-fingerprint join duplicates collapse via
         ``dropDuplicatesWithinWatermark`` on the pair key (the only state).
 
-    The eval side is persisted with the streaming cache discipline
-    (capped list, isolated from batch eviction — ADVICE r4); release via
-    ``release_decontam_caches()``."""
-    from deepblocker_spark.operators.dedup import _STREAM_DECONTAM_CACHES
+    The eval side is persisted like streaming_bloom_decontam's; release
+    via ``bc_registry.release_tracked()`` once the query has stopped."""
     from deepblocker_spark.operators.substring_dedup import (
         winnowed_fingerprint_arrays,
     )
 
-    ev = (
+    ev = tracked_persist(
         winnowed_fingerprint_arrays(eval_df, id_col, text_col, gram_len, window)
         .select(F.col("id").alias("eval_id"), F.col("grams").alias("_e_fp"))
-        .persist()
     )
-    while len(_STREAM_DECONTAM_CACHES) >= 2:
-        _STREAM_DECONTAM_CACHES.pop(0).unpersist()
-    _STREAM_DECONTAM_CACHES.append(ev)
     e_post = ev.select("eval_id", "_e_fp", F.explode("_e_fp").alias("gram"))
 
     s = winnowed_fingerprint_arrays(

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import pytest
 
+from deepblocker_spark.operators.bc_registry import release_tracked
 from deepblocker_spark.session import get_spark
 
 
@@ -15,6 +16,14 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture(autouse=True)
+def _release_tracked():
+    """Release every registered frame and broadcast after each test — the
+    suite's one release point, so a long session stays bounded."""
+    yield
+    release_tracked()
 
 
 @pytest.fixture

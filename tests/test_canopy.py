@@ -4,16 +4,7 @@ determinism, self-membership, and the center-side join asymmetry."""
 import pytest
 from pyspark.sql import functions as F
 
-from deepblocker_spark.operators.canopy import (
-    canopy_blocking,
-    release_canopy_caches,
-)
-
-
-@pytest.fixture(autouse=True)
-def _release():
-    yield
-    release_canopy_caches()
+from deepblocker_spark.operators.canopy import canopy_blocking
 
 
 @pytest.fixture()

@@ -124,10 +124,8 @@ def test_lsh_candidates_pre_combine_lock(spark):
     lsh_candidates output through the combiner equals the no-combiner
     output on a clustered embedding fixture — the real bucket geometry."""
     from deepblocker_spark.operators import grouped
-    from deepblocker_spark.operators.lsh import (
-        lsh_candidates,
-        release_signature_caches,
-    )
+    from deepblocker_spark.operators.bc_registry import release_tracked
+    from deepblocker_spark.operators.lsh import lsh_candidates
 
     rng = np.random.default_rng(3)
     dim = 16
@@ -144,7 +142,7 @@ def test_lsh_candidates_pre_combine_lock(spark):
             df, id_col="id", emb_col="embedding", dim=dim, k=5,
             n_bands=6, band_bits=6, seed=7,
         ).toPandas()
-        release_signature_caches()
+        release_tracked()
         return sorted(
             (int(l), int(r), round(float(s), 9), int(rk))
             for l, r, s, rk in out[["l_id", "r_id", "sim", "rank"]].values

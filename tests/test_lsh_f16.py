@@ -9,10 +9,10 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from deepblocker_spark.operators.bc_registry import release_tracked
 from deepblocker_spark.operators.lsh import (
     lsh_candidates,
     lsh_candidates_dyadic,
-    release_signature_caches,
     signature_buckets,
 )
 
@@ -35,7 +35,7 @@ def _emb_df(spark, n, seed, quantize=False, id_start=0):
 def _pairs(df, **kw):
     out = lsh_candidates(df, dim=DIM, k=5, n_bands=6, band_bits=4, seed=3, **kw)
     got = {(r["l_id"], r["r_id"]) for r in out.collect()}
-    release_signature_caches()
+    release_tracked()
     return got
 
 
@@ -69,7 +69,7 @@ def test_f16_dyadic_matches_f32_on_representable_inputs(spark):
             emb_dtype=dtype,
         )
         got = {(r["l_id"], r["r_id"], r["rank"]) for r in out.collect()}
-        release_signature_caches()
+        release_tracked()
         return got
 
     assert run("f32") == run("f16")
@@ -97,7 +97,7 @@ def test_invalid_emb_dtype_raises(spark):
 def test_ivf_binary_transport_f32_and_f16(spark):
     # f32 binary transport must reproduce the (previous) array-transport
     # results; f16 must match f32 exactly on f16-representable inputs
-    from deepblocker_spark.operators.ann import ivf_topk, release_assignment_caches
+    from deepblocker_spark.operators.ann import ivf_topk
 
     df = _emb_df(spark, 300, seed=13, quantize=True)
 
@@ -105,7 +105,7 @@ def test_ivf_binary_transport_f32_and_f16(spark):
         out = ivf_topk(df, k=4, id_col="id", emb_col="embedding",
                        n_cells=6, nprobe=2, seed=3, emb_dtype=dtype)
         got = {(r["l_id"], r["r_id"], r["rank"]) for r in out.collect()}
-        release_assignment_caches()
+        release_tracked()
         return got
 
     a, b = run("f32"), run("f16")

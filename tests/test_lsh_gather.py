@@ -7,10 +7,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from deepblocker_spark.operators.lsh import (
-    lsh_candidates,
-    release_signature_caches,
-)
+from deepblocker_spark.operators.bc_registry import release_tracked
+from deepblocker_spark.operators.lsh import lsh_candidates
 
 
 def _frame(spark, n=2500, dim=24, hot=True, seed=11):
@@ -31,7 +29,7 @@ def _pairs(df, gather, dtype, max_bucket_rows=150, **kw):
         df, id_col="id", dim=24, k=5, n_bands=4, band_bits=6, seed=3,
         max_bucket_rows=max_bucket_rows, emb_dtype=dtype, gather=gather, **kw
     ).collect()
-    release_signature_caches()
+    release_tracked()
     return sorted((r.l_id, r.r_id, r.sim, r.rank) for r in out)
 
 

@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from deepblocker_spark.operators.lsh import lsh_candidates, release_signature_caches
+from deepblocker_spark.operators.lsh import lsh_candidates
 
 DIM = 16
 
@@ -34,51 +34,42 @@ def _pairs(res):
 
 
 def test_no_cross_partition_pairs(spark, df):
-    try:
-        got = lsh_candidates(
-            df, "id", "embedding", dim=DIM, k=5, n_bands=12, band_bits=2,
-            partition_by="part",
-        )
-        part_of = {r.id: r.part for r in df.select("id", "part").collect()}
-        pairs = _pairs(got)
-        assert pairs  # clustered data: plenty of candidates
-        assert all(part_of[a] == part_of[b] for a, b in pairs)
-    finally:
-        release_signature_caches()
+    got = lsh_candidates(
+        df, "id", "embedding", dim=DIM, k=5, n_bands=12, band_bits=2,
+        partition_by="part",
+    )
+    part_of = {r.id: r.part for r in df.select("id", "part").collect()}
+    pairs = _pairs(got)
+    assert pairs  # clustered data: plenty of candidates
+    assert all(part_of[a] == part_of[b] for a, b in pairs)
 
 
 def test_matches_per_partition_runs_exactly(spark, df):
-    try:
-        got = lsh_candidates(
-            df, "id", "embedding", dim=DIM, k=5, n_bands=12, band_bits=2,
-            partition_by="part",
+    got = lsh_candidates(
+        df, "id", "embedding", dim=DIM, k=5, n_bands=12, band_bits=2,
+        partition_by="part",
+    )
+    whole = _pairs(got)
+    per_part = {}
+    for p in ("en", "de", "fr"):
+        sub = lsh_candidates(
+            df.filter(F.col("part") == p), "id", "embedding",
+            dim=DIM, k=5, n_bands=12, band_bits=2,
         )
-        whole = _pairs(got)
-        per_part = {}
-        for p in ("en", "de", "fr"):
-            sub = lsh_candidates(
-                df.filter(F.col("part") == p), "id", "embedding",
-                dim=DIM, k=5, n_bands=12, band_bits=2,
-            )
-            per_part.update(_pairs(sub))
-        assert whole == per_part  # same pairs, bit-identical sims
-    finally:
-        release_signature_caches()
+        per_part.update(_pairs(sub))
+    assert whole == per_part  # same pairs, bit-identical sims
 
 
 def test_default_none_is_global(spark, df):
-    try:
-        g = lsh_candidates(df, "id", "embedding", dim=DIM, k=5, n_bands=12,
-                           band_bits=2)
-        part_of = {r.id: r.part for r in df.select("id", "part").collect()}
-        crossers = [
-            (a, b) for (a, b) in _pairs(g) if part_of[a] != part_of[b]
-        ]
-        # partitions were built from different random bases but LSH at 2
-        # bits/band still buckets some cross-partition rows together —
-        # global mode must be allowed to emit them (sanity that the
-        # partitioned variant is doing real work). If this ever flakes the
-        # band_bits are too selective for the fixture.
-        assert isinstance(crossers, list)
-    finally:
-        release_signature_caches()
+    g = lsh_candidates(df, "id", "embedding", dim=DIM, k=5, n_bands=12,
+                       band_bits=2)
+    part_of = {r.id: r.part for r in df.select("id", "part").collect()}
+    crossers = [
+        (a, b) for (a, b) in _pairs(g) if part_of[a] != part_of[b]
+    ]
+    # partitions were built from different random bases but LSH at 2
+    # bits/band still buckets some cross-partition rows together —
+    # global mode must be allowed to emit them (sanity that the
+    # partitioned variant is doing real work). If this ever flakes the
+    # band_bits are too selective for the fixture.
+    assert isinstance(crossers, list)

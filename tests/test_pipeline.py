@@ -130,6 +130,29 @@ def test_block_self_excludes_self_pairs(spark):
     assert len(rows) == 15 * 3
 
 
+def test_block_self_does_not_stick_to_later_dyadic_blocking(spark):
+    """Self mode is per call: after block_self, block_datasets on the same
+    blocker must keep its (i, i) golden pairs — the recall of a fresh
+    blocker, not the 0.0 of a blocker whose pairing now drops equal ids."""
+    left, right = _dyadic_tables(spark)
+    cols = ["title", "manufacturer", "price"]
+
+    def blocker():
+        return DeepBlocker(
+            SparkSIFEmbedding(TEST_CONFIG), ExactTopKVectorPairing(k=3), TEST_CONFIG
+        )
+
+    def recall(b):
+        cands = b.block_datasets(left, right, cols)
+        return blocking_statistics(cands, _golden(spark), 30, 30).collect()[0]["recall"]
+
+    fresh = recall(blocker())
+    used = blocker()
+    used.block_self(left, cols).count()
+    assert fresh >= 0.95
+    assert recall(used) == fresh
+
+
 def test_pairwise_f1_metric(spark):
     pred = spark.createDataFrame([(1, 2), (2, 3), (4, 5)], ["l_id", "r_id"])
     gold = spark.createDataFrame([(2, 1), (2, 3), (6, 7)], ["l_id", "r_id"])

@@ -3,11 +3,7 @@ checked against a driver-side sort of the same rows."""
 
 from __future__ import annotations
 
-from deepblocker_spark.operators.dedup import (
-    global_rank,
-    release_rank_caches,
-    sorted_neighborhood_pairs,
-)
+from deepblocker_spark.operators.dedup import global_rank, sorted_neighborhood_pairs
 
 
 def _rows(spark, n=97, seed=7):
@@ -25,7 +21,6 @@ def test_global_rank_matches_driver_sort(spark):
     want = {row[0]: i for i, row in
             enumerate(sorted(data, key=lambda t: (t[1], t[2], t[0])))}
     assert got == want
-    release_rank_caches()
 
 
 def test_global_rank_many_partitions_and_empty_ranges(spark):
@@ -36,7 +31,6 @@ def test_global_rank_many_partitions_and_empty_ranges(spark):
     want = {row[0]: i for i, row in
             enumerate(sorted(data, key=lambda t: (t[1], t[0])))}
     assert got == want
-    release_rank_caches()
 
 
 def _python_sn(data, key, window):
@@ -58,7 +52,6 @@ def test_sorted_neighborhood_pairs(spark):
     # exact linear output size: (w-1)*N - C(w-1+1, 2)
     n, w = len(data), 4
     assert len(got) == (w - 1) * n - (w - 1) * w // 2
-    release_rank_caches()
 
 
 def test_sorted_neighborhood_window_2_is_adjacent_pairs(spark):
@@ -68,4 +61,3 @@ def test_sorted_neighborhood_window_2_is_adjacent_pairs(spark):
     ordered = [t[0] for t in sorted(data, key=lambda t: (t[1], t[0]))]
     want = set(zip(ordered, ordered[1:]))
     assert got == want
-    release_rank_caches()

@@ -339,34 +339,36 @@ def test_streaming_bloom_decontam_parity_with_batch(spark, tmp_path, await_strea
     assert len(got) == len(stream)
 
 
-def test_stream_decontam_cache_isolated_from_batch_eviction(spark):
-    """ADVICE r4: streaming-held eval frames live in their own capped
-    cache list — batch bloom_decontamination_pairs eviction must never
-    unpersist them, and release_decontam_caches drops both lists."""
-    from deepblocker_spark.operators.dedup import (
-        _DECONTAM_CACHES,
-        _STREAM_DECONTAM_CACHES,
-        bloom_decontamination_pairs,
-        release_decontam_caches,
-    )
-
-    release_decontam_caches()
-    sentinel = spark.range(3).persist()
-    sentinel.count()
-    _STREAM_DECONTAM_CACHES.append(sentinel)
+def test_stream_decontam_cache_isolated_from_batch_eviction(spark, tmp_path):
+    """ADVICE r4: batch bloom_decontamination_pairs calls must never
+    unpersist a live stream's eval frame; only the one release point
+    (bc_registry.release_tracked) does."""
+    from deepblocker_spark.operators import bc_registry
+    from deepblocker_spark.operators.dedup import bloom_decontamination_pairs
+    from deepblocker_spark.streaming.dedup_stream import streaming_bloom_decontam
 
     train = spark.createDataFrame(
         [(1, "alpha beta gamma delta"), (2, "beta gamma delta epsilon")],
         ["doc_id", "text"],
     )
     ev = spark.createDataFrame([(100, "alpha beta gamma delta")], ["doc_id", "text"])
-    # three batch calls overflow the batch list's 2-entry cap -> eviction
+    sdf = spark.createDataFrame(
+        [(1, "alpha beta gamma delta", "2024-01-01T10:00:00")],
+        ["doc_id", "text", "ts"],
+    )
+    in_path = str(tmp_path / "sd_in")
+    sdf.write.parquet(in_path)
+    held_from = len(bc_registry._FRAMES)
+    streaming_bloom_decontam(
+        spark.readStream.schema(sdf.schema).parquet(in_path), ev, n=3
+    )
+    (sentinel,) = bc_registry._FRAMES[held_from:]
+
     for _ in range(3):
         bloom_decontamination_pairs(train, ev, n=3).count()
-    assert sentinel in _STREAM_DECONTAM_CACHES
-    assert sentinel.is_cached, "batch eviction unpersisted a streaming frame"
-    assert len(_DECONTAM_CACHES) <= 2
+    assert sentinel in bc_registry._FRAMES
+    assert sentinel.is_cached, "a batch call unpersisted a streaming frame"
 
-    release_decontam_caches()
-    assert not _STREAM_DECONTAM_CACHES and not _DECONTAM_CACHES
+    bc_registry.release_tracked()
+    assert not bc_registry._FRAMES
     assert not sentinel.is_cached

@@ -129,35 +129,6 @@ def _train_centroids(
     return cents
 
 
-def _row_blobs(a) -> list:
-    """One little-endian bytes object per row of a C-contiguous 2-D array."""
-    raw = a.tobytes()
-    stride = a.shape[1] * a.itemsize
-    return [raw[i * stride : (i + 1) * stride] for i in range(len(a))]
-
-
-def _local_topk(sims, qids, iids, k: int, mask_equal_ids: bool):
-    """The k best index rows per query row of a (query × index) score
-    matrix -> DataFrame(l_id, r_id, sim); equal ids are dropped when
-    ``mask_equal_ids``. Order within a query is unspecified — callers
-    merge by (sim desc, r_id)."""
-    import numpy as np
-    import pandas as pd
-
-    if mask_equal_ids:
-        sims[qids[:, None] == iids[None, :]] = -np.inf
-    kk = min(k, sims.shape[1])
-    part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk] if kk < sims.shape[1] \
-        else np.broadcast_to(np.arange(sims.shape[1]), sims.shape).copy()
-    rows = np.repeat(np.arange(len(qids)), part.shape[1])
-    cols = part.ravel()
-    s = sims[rows, cols]
-    keep = s > -np.inf
-    return pd.DataFrame(
-        {"l_id": qids[rows[keep]], "r_id": iids[cols[keep]], "sim": s[keep]}
-    )
-
-
 def _assign_cells(
     df: DataFrame,
     id_col: str,
@@ -189,6 +160,7 @@ def _assign_cells(
     import pandas as pd
     from pyspark.sql.types import BinaryType, IntegerType, StructField, StructType
 
+    from deepblocker_spark.operators.grouped import _row_blobs
     from deepblocker_spark.operators.pq import _pq_encode
     from deepblocker_spark.operators.topk import normalize_rows
 
@@ -336,10 +308,10 @@ def _ivf_pairs(
     from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
     from deepblocker_spark.operators.grouped import (
-        _dedup_topk,
+        _local_topk,
         group_slices,
         grouped_map_in_pandas,
-        pack_topk,
+        local_topk_packed,
         topk_per_key,
     )
     from deepblocker_spark.operators.pq import _adc_scores
@@ -395,14 +367,7 @@ def _ivf_pairs(
                 sims = score(q_all[pos[q_idx]], i_all[pos[i_idx]])
                 outs.append(_local_topk(sims, ids_all[q_idx], ids_all[i_idx],
                                         k, mask_equal_ids))
-        if not outs:
-            return pd.DataFrame({"l_id": [], "_r": [], "_s": []})
-        # fused map-side combiner (see lsh_candidates.buckets_kernel)
-        local = _dedup_topk(
-            pd.concat(outs, ignore_index=True),
-            k, "l_id", "r_id", "sim", with_rank=False,
-        )
-        return pack_topk(local, "l_id", "r_id", "sim")
+        return local_topk_packed(outs, k)
 
     pairs = grouped_map_in_pandas(
         salted, ["cell", "salt_q", "salt_i"], cell_kernel, pair_schema

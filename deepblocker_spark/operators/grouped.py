@@ -5,16 +5,19 @@
 function call — at ~32k buckets per LSH job that is tens of seconds of pure
 per-group overhead (measured: the per-bucket stage dominated wall-clock while
 each bucket's matmul was microseconds). Here the same hash shuffle is
-expressed as repartition(key) + sortWithinPartitions(key), and ONE
-mapInPandas kernel receives frames holding MANY complete groups: per-group
-cost collapses to a numpy slice. The kernel contract:
+expressed as a bare repartition(key), and ONE mapInPandas kernel call
+receives a whole partition holding MANY complete groups: per-group cost
+collapses to a numpy slice. The kernel contract:
 
     kernel(pdf) -> pd.DataFrame
 
 where ``pdf`` contains only whole groups (each key's rows contiguous, keys
-sorted). Groups spanning Arrow batch boundaries are stitched by buffering
-the trailing partial group between batches — correctness does not depend on
-Arrow batch sizing.
+sorted). The runner buffers the partition's Arrow batches and lexsorts the
+keys itself — correctness does not depend on Arrow batch sizing.
+
+The search kernels built on it (LSH buckets, IVF cells) share the helpers
+below: ``_local_topk`` scores one group, ``local_topk_packed`` is their
+fused map-side combiner, and ``topk_per_key`` is the merge.
 
 At 100 TB this shape is strictly better than applyInPandas: identical
 shuffle volume, identical skew behavior (same hash partitioning), but the
@@ -36,26 +39,20 @@ def grouped_map_in_pandas(
     kernel,
     out_schema,
     num_partitions: int | None = None,
-    sort_side: str = "python",
 ) -> DataFrame:
-    """``sort_side`` picks where rows are grouped after the hash exchange:
-
-    - ``"python"`` (default): the exchange is a BARE repartition — no JVM
-      ``sortWithinPartitions`` — and the kernel runner buffers its whole
-      partition, orders it with one numpy lexsort on the (int) key columns,
-      and calls the kernel once. Profiling the 240k-row LSH scaling job
-      showed the Tungsten sort dominating the kernel stage's JVM CPU
-      (~150 CPU-s at 8 cores for ~1.9M rows × ~290 B incl. embeddings, and
-      it is exactly this CPU that inflates ~1.7x under 8-core memory-bus
-      contention), while the equivalent numpy lexsort of the same
-      partition's int keys is milliseconds — the JVM was sorting wide rows
-      so Python could slice groups it could have sorted itself. Memory
-      bound: one partition decoded in one worker (~3x the partition's raw
-      bytes); size partitions accordingly (AQE advisory 16m keeps this
-      tens of MB).
-    - ``"jvm"``: previous behavior — Tungsten sorts within partitions and
-      the runner streams Arrow batches, buffering only the trailing
-      partial group. Use when partitions are too large to buffer whole.
+    """Rows are grouped in Python after the hash exchange: the exchange is a
+    BARE repartition — no JVM ``sortWithinPartitions`` — and the kernel
+    runner buffers its whole partition, orders it with one numpy lexsort
+    on the (int) key columns, and calls the kernel once. Profiling the
+    240k-row LSH scaling job showed the Tungsten sort dominating the
+    kernel stage's JVM CPU (~150 CPU-s at 8 cores for ~1.9M rows × ~290 B
+    incl. embeddings, and it is exactly this CPU that inflates ~1.7x under
+    8-core memory-bus contention), while the equivalent numpy lexsort of
+    the same partition's int keys is milliseconds — the JVM was sorting
+    wide rows so Python could slice groups it could have sorted itself.
+    Memory bound: one partition decoded in one worker (~3x the
+    partition's raw bytes); size partitions accordingly (AQE advisory 16m
+    keeps this tens of MB).
     """
     part = (
         df.repartition(*key_cols)
@@ -63,53 +60,20 @@ def grouped_map_in_pandas(
         else df.repartition(num_partitions, *key_cols)
     )
     keys = list(key_cols)
-    if sort_side == "python":
-
-        def runner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            chunks = [pdf for pdf in batches if len(pdf)]
-            if not chunks:
-                return
-            pdf = (
-                chunks[0]
-                if len(chunks) == 1
-                else pd.concat(chunks, ignore_index=True)
-            )
-            del chunks
-            cols = [pdf[k].to_numpy() for k in reversed(keys)]
-            order = np.lexsort(cols)
-            if len(order) and not (np.diff(order) == 1).all():
-                pdf = pdf.take(order).reset_index(drop=True)
-            out = kernel(pdf)
-            if out is not None and len(out):
-                yield out
-
-        return part.mapInPandas(runner, out_schema)
-
-    part = part.sortWithinPartitions(*key_cols)
 
     def runner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buf: pd.DataFrame | None = None
-        for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-            buf = None
-            if not len(pdf):
-                continue
-            # the trailing group may continue in the next batch: hold it back
-            last = pdf[keys].iloc[-1].to_numpy()
-            tail_mask = (pdf[keys].to_numpy() == last).all(axis=1)
-            not_tail = np.nonzero(~tail_mask)[0]
-            cut = (not_tail[-1] + 1) if len(not_tail) else 0
-            buf = pdf.iloc[cut:].reset_index(drop=True)
-            head = pdf.iloc[:cut]
-            if len(head):
-                out = kernel(head)
-                if out is not None and len(out):
-                    yield out
-        if buf is not None and len(buf):
-            out = kernel(buf)
-            if out is not None and len(out):
-                yield out
+        chunks = [pdf for pdf in batches if len(pdf)]
+        if not chunks:
+            return
+        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+        del chunks
+        cols = [pdf[k].to_numpy() for k in reversed(keys)]
+        order = np.lexsort(cols)
+        if len(order) and not (np.diff(order) == 1).all():
+            pdf = pdf.take(order).reset_index(drop=True)
+        out = kernel(pdf)
+        if out is not None and len(out):
+            yield out
 
     return part.mapInPandas(runner, out_schema)
 
@@ -124,6 +88,49 @@ def group_slices(pdf: pd.DataFrame, key_cols: list[str]):
     starts = np.concatenate([[0], np.nonzero(change)[0] + 1, [len(pdf)]])
     for a, b in zip(starts[:-1], starts[1:]):
         yield int(a), int(b)
+
+
+def _row_blobs(a) -> list:
+    """One little-endian bytes object per row of a C-contiguous 2-D array."""
+    raw = a.tobytes()
+    stride = a.shape[1] * a.itemsize
+    return [raw[i * stride : (i + 1) * stride] for i in range(len(a))]
+
+
+def _local_topk(sims, qids, iids, k: int, mask_equal_ids: bool):
+    """The k best index rows per query row of a (query × index) score
+    matrix -> (l_id, r_id, sim) arrays; equal ids are dropped when
+    ``mask_equal_ids``. Order within a query is unspecified — callers
+    merge by (sim desc, r_id)."""
+    if mask_equal_ids:
+        sims[qids[:, None] == iids[None, :]] = -np.inf
+    kk = min(k, sims.shape[1])
+    part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk] if kk < sims.shape[1] \
+        else np.broadcast_to(np.arange(sims.shape[1]), sims.shape).copy()
+    rows = np.repeat(np.arange(len(qids)), part.shape[1])
+    cols = part.ravel()
+    s = sims[rows, cols]
+    keep = s > -np.inf
+    return qids[rows[keep]], iids[cols[keep]], s[keep]
+
+
+def local_topk_packed(parts: list, k: int, min_sim: float | None = None) -> pd.DataFrame:
+    """Map-side combiner FUSED into a search kernel: the ``_local_topk``
+    arrays of every group in the kernel's partition -> dedup + local
+    per-l_id top-k -> ``pack_topk``. The grouped map hands the kernel its
+    whole partition, so this IS the per-partition local top-k, and the
+    pairs never take an extra Python<->JVM round-trip through a chained
+    combiner pass. ``min_sim`` is a pre-merge row filter; it commutes with
+    the merge's dedup + top-k, so filtering before packing is identical to
+    filtering the unpacked exchange rows."""
+    if not parts:
+        return pd.DataFrame({"l_id": [], "_r": [], "_s": []})
+    l, r, s = (np.concatenate(c) for c in zip(*parts))
+    local = _dedup_topk(pd.DataFrame({"l_id": l, "r_id": r, "sim": s}),
+                        k, "l_id", "r_id", "sim", with_rank=False)
+    if min_sim is not None:
+        local = local[local["sim"].to_numpy() >= min_sim]
+    return pack_topk(local, "l_id", "r_id", "sim")
 
 
 def _dedup_topk(

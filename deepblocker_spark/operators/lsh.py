@@ -2,23 +2,39 @@
 similarity join (SURVEY.md §7.2 step 9; BASELINE.json north_star).
 
 No reference counterpart: the reference's ExactTopK materializes the full
-N_l x N_r similarity matrix (/root/reference/vector_pairing_models.py:44),
-an O(N^2) wall. Here:
+N_l x N_r similarity matrix (its vector_pairing_models.py:44), an O(N^2)
+wall. Here ONE path, ``_lsh_search``, runs both public entries:
 
   random-hyperplane signatures (carrying the vector — no join back to the
-  source)  ->  band buckets  ->  shuffle on bucket key  ->  per-bucket exact
-  cosine (sort-based grouped map, operators/grouped.py)  ->  fused
-  dedup + global per-left top-K (one more shuffle, vectorized kernel).
+  source)  ->  band buckets  ->  shuffle on (band, bucket, salt_l, salt_r)
+  ->  per-bucket exact cosine (sort-based grouped map, operators/grouped.py)
+  ->  fused dedup + global per-left top-K (one more shuffle, vectorized
+  kernel).
+
+Two modes of that path:
+  * self (``lsh_candidates``, ``left=None``): a bucket's rows are both the
+    query and the index rows; equal ids are masked.
+  * dyadic (``lsh_candidates_dyadic``): left rows query the right rows of
+    their bucket. Both sides hash with the SAME seeded hyperplanes — bucket
+    keys are only comparable under identical planes.
+
+Hot buckets (boilerplate files, licenses — FIXTURES.md F1 skew note) are
+SALT-SPLIT deterministically, never truncated, bounding every task's
+cross-product at max_bucket_rows^2; ``bucket_stats`` exposes the size
+distribution for monitoring.
+  * Self mode salts on the DIAGONAL: a row's hash split xxhash64(id) %
+    n_splits is its salt on both sides, with no replication. Pairs spanning
+    two splits of one hot bucket are only lost if they also collide in no
+    other band — the standard multi-band recall argument.
+  * Dyadic mode salts on the GRID: a bucket with SL left and SR right
+    splits becomes SL x SR tasks; each row lands in its own hash split and
+    is replicated across the other side's splits, so every (l, r) pair of
+    the bucket meets exactly once — zero recall loss.
 
 Design-for-scale notes:
   * The hyperplane matrix is derived from a seed — every executor
     regenerates it identically; nothing is shipped.
   * Signature computation is one matmul + bitpacking per Arrow batch.
-  * The only shuffle is groupBy(band, bucket, salt*); hot buckets
-    (boilerplate files, licenses — FIXTURES.md F1 skew note) are SALT-SPLIT
-    deterministically in both the self-join and dyadic paths — never
-    truncated — bounding every task's cross-product at max_bucket_rows^2;
-    ``bucket_stats`` exposes the size distribution for monitoring.
   * Exact mode (operators/topk.py) remains the recall oracle; recall@K of
     LSH vs exact is measured in tests and bench.
 """
@@ -26,6 +42,7 @@ Design-for-scale notes:
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -43,10 +60,11 @@ from pyspark.sql.types import (
 
 from deepblocker_spark.operators.embed import EMBEDDING
 from deepblocker_spark.operators.grouped import (
-    _dedup_topk,
+    _local_topk,
+    _row_blobs,
     group_slices,
     grouped_map_in_pandas,
-    pack_topk,
+    local_topk_packed,
     topk_per_key,
 )
 from deepblocker_spark.operators.topk import normalize_rows
@@ -161,10 +179,7 @@ def signature_buckets(
                         np.float16 if emb_dtype == "f16" else np.float32,
                         copy=False,
                     )
-                    raw = xq.tobytes()
-                    stride = xq.shape[1] * xq.dtype.itemsize
-                    blobs = [raw[i * stride : (i + 1) * stride] for i in range(n)]
-                    out["_emb"] = blobs * nb  # list-repeat shares the bytes
+                    out["_emb"] = _row_blobs(xq) * nb  # list-repeat shares the bytes
                 else:
                     out["_emb"] = list(pdf[emb_col]) * nb
             for c in extra_cols:
@@ -179,10 +194,13 @@ def bucket_stats(buckets: DataFrame) -> DataFrame:
     return buckets.groupBy("band", "bucket").agg(F.count("*").alias("size"))
 
 
-# Worker-lifetime id->row lookup for the broadcast-gather kernel: building
-# the hash Index once per (worker, broadcast) instead of once per Arrow
-# batch (same cap-at-2 shape as topk.py's f32 cache — at most two gathers
-# are ever live, e.g. the two sides of a dyadic join).
+# Worker-lifetime id->row lookup for the broadcast-gather kernel: the hash
+# Index is built once per (worker, broadcast) instead of once per Arrow
+# batch. The key is id(ids), which is sound because the cached pd.Index
+# holds ``ids`` itself (pandas 2.2 ``Index(ndarray)`` does not copy): the
+# array stays alive while its entry lives, so its address cannot be reused
+# by another array. At most two gathers are live at once (the two sides of
+# a dyadic search), so the cache clears when a third arrives.
 _GATHER_INDEX_CACHE: dict[int, pd.Index] = {}
 
 
@@ -190,9 +208,8 @@ def _gather_rows(bc, ids_all: np.ndarray) -> np.ndarray:
     """Rows of the broadcast (ids, matrix) pair for ``ids_all``, via a
     cached pandas Index (any hashable id dtype)."""
     ids, mat = bc.value
-    # identity key: Broadcast.value is cached per worker process, so the
-    # unpickled ids array is the same object across batches (the same
-    # identity-key pattern as topk.py's f32 cache)
+    # Broadcast.value is cached per worker process, so the unpickled ids
+    # array is the same object across batches
     key = id(ids)
     idx = _GATHER_INDEX_CACHE.get(key)
     if idx is None:
@@ -209,23 +226,23 @@ def _gather_rows(bc, ids_all: np.ndarray) -> np.ndarray:
 
 
 def _persisted_sigs(df, id_col, emb_col, dim, n_bands, band_bits, seed,
-                    emb_binary: bool = False, emb_dtype: str = "f32",
-                    extra_cols: list[str] | None = None) -> DataFrame:
-    """Signatures computed ONCE per side (VERDICT r2 #2): the oversized-bucket
-    collect and the candidate kernel both read the persisted frame."""
+                    emb_dtype: str, extra_cols: list[str] | None) -> DataFrame:
+    """Signatures computed ONCE per side (VERDICT r2 #2), carrying the
+    binary vector: the oversized-bucket collect and the candidate kernel
+    both read the persisted frame."""
     from pyspark import StorageLevel
 
     return tracked_persist(signature_buckets(
         df, id_col, emb_col, dim, n_bands, band_bits, seed, include_emb=True,
-        emb_binary=emb_binary, emb_dtype=emb_dtype, extra_cols=extra_cols,
+        emb_binary=True, emb_dtype=emb_dtype, extra_cols=extra_cols,
     ), StorageLevel.MEMORY_AND_DISK)
 
 
-def _oversized_buckets(sigs: DataFrame, max_bucket_rows: int, cols: list[str]):
+def _oversized_buckets(sigs: DataFrame, max_bucket_rows: int):
     """Collect the (tiny by construction) oversized-bucket list from a narrow
     projection of the persisted signature frame — this is the action that
     materializes the cache, so the candidate pass reads signatures for free.
-    Returns [(band, bucket, n_splits), ...]."""
+    Returns [(band, bucket, _splits), ...]."""
     return (
         sigs.select("band", "bucket")
         .groupBy("band", "bucket")
@@ -234,9 +251,194 @@ def _oversized_buckets(sigs: DataFrame, max_bucket_rows: int, cols: list[str]):
         .withColumn(
             "_splits", F.ceil(F.col("size") / F.lit(max_bucket_rows)).cast("int")
         )
-        .select(*cols)
+        .select("band", "bucket", "_splits")
         .collect()
     )
+
+
+def _salted(sigs: DataFrame, id_col: str, splits: DataFrame | None,
+            side: int | None) -> DataFrame:
+    """One side's kernel rows (_id, band, bucket, salt_l, salt_r, _emb
+    [, _side]). ``splits`` (band, bucket, _sl, _sr) lists the oversized
+    buckets; None — the healthy case — gives literal-zero salts and a plan
+    with neither a join nor an explode. A row's own salt is its hash split
+    xxhash64(id) % (its side's splits). Self mode (``side=None``) uses it
+    as both salts (the diagonal); a dyadic row is replicated across the
+    other side's splits (the grid)."""
+    if splits is None:
+        mine = other = F.lit(0)
+    else:
+        own_col, other_col = ("_sr", "_sl") if side == 1 else ("_sl", "_sr")
+        sigs = sigs.join(F.broadcast(splits), ["band", "bucket"], "left")
+        mine = F.pmod(
+            F.xxhash64(F.col(id_col)), F.coalesce(F.col(own_col), F.lit(1))
+        ).cast("int")
+        other = mine if side is None else F.explode(
+            F.sequence(F.lit(0), F.coalesce(F.col(other_col), F.lit(1)) - 1)
+        )
+    salt_l, salt_r = (other, mine) if side == 1 else (mine, other)
+    return sigs.select(
+        F.col(id_col).alias("_id"), "band", "bucket",
+        salt_l.alias("salt_l"), salt_r.alias("salt_r"), "_emb",
+        *([] if side is None else [F.lit(side).alias("_side")]),
+    )
+
+
+def _side_matrix(sigs: DataFrame, id_col: str, dim: int, dt) -> tuple:
+    """(ids, quantized matrix) of one side, collected from the band-0 slice
+    of its persisted signature frame — the embed stage is NOT recomputed."""
+    b0 = sigs.filter(F.col("band") == 0).select(id_col, "_emb").toPandas()
+    mat = (
+        np.frombuffer(b"".join(b0["_emb"].to_numpy()), dtype=dt)
+        .reshape(len(b0), -1)
+        if len(b0)
+        else np.zeros((0, dim), dtype=dt)
+    )
+    return b0[id_col].to_numpy(), mat
+
+
+_KEYS = ["band", "bucket", "salt_l", "salt_r"]
+
+
+def _lsh_search(
+    left: DataFrame | None,
+    right: DataFrame,
+    l_id: str,
+    r_id: str,
+    emb_col: str,
+    *,
+    dim: int,
+    k: int,
+    n_bands: int,
+    band_bits: int,
+    seed: int,
+    max_bucket_rows: int,
+    min_sim: float | None,
+    emb_dtype: str,
+    gather: str,
+    gather_max_bytes: int,
+    partition_by: str | None = None,
+) -> DataFrame:
+    """The one LSH driver behind ``lsh_candidates`` (``left=None``: self
+    mode over ``right``) and ``lsh_candidates_dyadic``. Every argument
+    check runs before the first Spark job; both sides must share an id
+    type (the bucket-union frame carries ONE ``_id`` column)."""
+    if gather not in ("auto", "broadcast", "exchange"):
+        raise ValueError(
+            f"unknown gather: {gather!r} (use 'auto', 'broadcast' or 'exchange')"
+        )
+    id_type = right.select(r_id).schema.fields[0].dataType
+    if left is not None:
+        l_type = left.select(l_id).schema.fields[0].dataType
+        if l_type != id_type:
+            raise TypeError(
+                "dyadic LSH search requires matching id types on both sides "
+                f"(got {l_type.simpleString()} vs {id_type.simpleString()}); "
+                "cast one side's id column first"
+            )
+    self_mode = left is None
+    sides = [(right, r_id)] if self_mode else [(left, l_id), (right, r_id)]
+    keys = [key for _, key in sides]
+    spark = right.sparkSession
+    # One emb-carrying signature frame per side (signature_buckets checks
+    # emb_dtype as it is built, before any job), read by its bucket-size
+    # collect and by the kernel: NO join back to the source table.
+    sigs = [
+        _persisted_sigs(df, key, emb_col, dim, n_bands, band_bits, seed,
+                        emb_dtype, [partition_by] if partition_by else None)
+        for df, key in sides
+    ]
+    if partition_by is not None:
+        # scope every bucket to its partition value; downstream is unchanged
+        sigs[0] = sigs[0].withColumn(
+            "bucket", F.xxhash64(F.col(partition_by), F.col("bucket"))
+        ).drop(partition_by)
+    # The oversized lists are tiny by construction; when non-empty they are
+    # re-injected as a broadcast local relation — never a shuffle join
+    # (VERDICT r1 plan-audit note).
+    grid: dict[tuple[int, int], list[int]] = {}
+    for side, side_sigs in enumerate(sigs):
+        for row in _oversized_buckets(side_sigs, max_bucket_rows):
+            grid.setdefault((row["band"], row["bucket"]), [1, 1])[side] = row["_splits"]
+    splits = spark.createDataFrame(
+        [(b, kb, sl, sr) for (b, kb), (sl, sr) in grid.items()],
+        "band int, bucket bigint, _sl int, _sr int",
+    ) if grid else None
+    rows = reduce(DataFrame.unionByName, [
+        _salted(side_sigs, key, splits, None if self_mode else side)
+        for side, (side_sigs, key) in enumerate(zip(sigs, keys))
+    ])
+
+    # Broadcast-gather gate (see lsh_candidates): the signature frames are
+    # persisted and materialized, so n_rows = count / n_bands is one cached
+    # count per side.
+    dt = np.float16 if emb_dtype == "f16" else np.float32
+    use_broadcast = gather == "broadcast" or (gather == "auto" and all(
+        s.count() // max(n_bands, 1) * dim * np.dtype(dt).itemsize
+        <= gather_max_bytes
+        for s in sigs
+    ))
+    bcs = num_partitions = None
+    if use_broadcast:
+        bcs = [_tracked(spark.sparkContext, _side_matrix(s, key, dim, dt))
+               for s, key in zip(sigs, keys)]
+        rows = rows.drop("_emb")
+        # The narrow rows shrink the kernel exchange ~6-25x — enough that
+        # AQE's advisory size would coalesce it to a handful of fat
+        # partitions and starve the kernel stage of parallelism (the
+        # kernel's matmul work per row is UNCHANGED by row width). An
+        # explicit partition count keeps the bare repartition exempt from
+        # AQE coalescing at the session's configured width.
+        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    def bucket_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        """Search over a frame of WHOLE (band, bucket, salt_l, salt_r)
+        groups: vectors decode once per frame, one _local_topk per group."""
+        ids_all = pdf["_id"].to_numpy()
+        is_left = None if self_mode else pdf["_side"].to_numpy() == 0
+        if bcs is None:
+            buf = b"".join(pdf["_emb"].to_numpy())
+            x_all = np.frombuffer(buf, dtype=dt).reshape(len(pdf), -1)
+        else:
+            # per-side gather; the upcast on assign == astype below
+            x_all = np.empty((len(pdf), dim))
+            masks = [slice(None)] if self_mode else [is_left, ~is_left]
+            for bc, m in zip(bcs, masks):
+                x_all[m] = _gather_rows(bc, ids_all[m])
+        x_all = normalize_rows(np.nan_to_num(x_all.astype(np.float64, copy=False)))
+        parts = []
+        for a, b in group_slices(pdf, _KEYS):
+            if self_mode:
+                if b - a < 2:
+                    continue
+                # one operand on both sides: numpy runs x @ x.T as a
+                # symmetric product
+                q = i = slice(a, b)
+            else:
+                q = np.nonzero(is_left[a:b])[0] + a
+                i = np.nonzero(~is_left[a:b])[0] + a
+                if not len(q) or not len(i):
+                    continue
+            parts.append(_local_topk(x_all[q] @ x_all[i].T, ids_all[q],
+                                     ids_all[i], k, self_mode))
+        return local_topk_packed(parts, k, min_sim)
+
+    # PACKED kernel output (grouped.pack_topk): one row per l_id with
+    # parallel (r_id, sim) arrays — the merge exchange carries ~k-fold
+    # fewer rows for the same payload
+    pair_schema = StructType(
+        [
+            StructField("l_id", id_type, True),
+            StructField("_r", ArrayType(id_type), True),
+            StructField("_s", ArrayType(DoubleType()), True),
+        ]
+    )
+    pairs = grouped_map_in_pandas(rows, _KEYS, bucket_kernel, pair_schema,
+                                  num_partitions=num_partitions)
+    # fused dedup + per-left top-K: one shuffle instead of the
+    # dropDuplicates exchange + window exchange; the combiner and min_sim
+    # already ran inside the kernel
+    return topk_per_key(pairs, k, pre_combine=False, packed_input=True)
 
 
 def lsh_candidates(
@@ -271,8 +473,9 @@ def lsh_candidates(
     top-k) or a per-partition driver loop.
 
     Buckets larger than ``max_bucket_rows`` are deterministically salt-split
-    so no task's cross-product exceeds max_bucket_rows^2; use
-    ``bucket_stats`` to monitor the size distribution.
+    (on the diagonal, see the module doc) so no task's cross-product
+    exceeds max_bucket_rows^2; use ``bucket_stats`` to monitor the size
+    distribution.
 
     ``emb_dtype='f16'`` halves the kernel exchange's bytes by quantizing
     the carried vector (see ``signature_buckets``); bucket membership is
@@ -283,7 +486,7 @@ def lsh_candidates(
     - ``'exchange'``: the vector rides every (band, bucket) row through the
       shuffle — n_bands copies of every embedding cross the wire. Always
       correct; the only option when the table is too big to broadcast.
-    - ``'broadcast'``: the kernel exchange ships ONLY (band, bucket, salt,
+    - ``'broadcast'``: the kernel exchange ships ONLY (band, bucket, salts,
       id) — the narrow rows are ~6-25x smaller than with a carried vector —
       and the kernel gathers rows from a one-time broadcast of the
       quantized embedding matrix (collected once from the persisted
@@ -302,168 +505,11 @@ def lsh_candidates(
       broadcast. At 100 TB auto always lands on exchange; per-worker
       memory cost of broadcast is one matrix copy per Python worker.
     """
-    if gather not in ("auto", "broadcast", "exchange"):
-        raise ValueError(
-            f"unknown gather: {gather!r} (use 'auto', 'broadcast' or 'exchange')"
-        )
-    # Skew handling: oversized (hot) buckets are SALT-SPLIT, not truncated —
-    # rows in a bucket bigger than max_bucket_rows get a deterministic
-    # sub-bucket salt (xxhash64(id) % n_splits), bounding every task's
-    # cross-product. Pairs spanning two splits of the same mega-bucket are
-    # only lost if the pair also collides in no other band — the standard
-    # multi-band recall argument applies. Cold buckets keep salt 0.
-    # Signatures are computed ONCE into a persisted frame (VERDICT r2 #2);
-    # the bucket-size pass is a narrow projection of it, collected eagerly
-    # (which materializes the cache), so the candidate pass pays no second
-    # scan + matmul. The oversized list is tiny by construction: when empty
-    # (the common healthy case) the salt is a literal 0 and the plan has NO
-    # join at all; when non-empty it is re-injected as a broadcast local
-    # relation — never a shuffle join (VERDICT r1 plan-audit note). The
-    # embedding rides the signature frame, so there is NO join back to the
-    # source table — the only big shuffle is groupBy(band, bucket, salt).
-    sigs = _persisted_sigs(df, id_col, emb_col, dim, n_bands, band_bits, seed,
-                           emb_binary=True, emb_dtype=emb_dtype,
-                           extra_cols=[partition_by] if partition_by else None)
-    if partition_by is not None:
-        # scope every bucket to its partition value; downstream is unchanged
-        sigs = sigs.withColumn(
-            "bucket", F.xxhash64(F.col(partition_by), F.col("bucket"))
-        ).drop(partition_by)
-    over_rows = _oversized_buckets(
-        sigs, max_bucket_rows, ["band", "bucket", "_splits"]
-    )
-    if over_rows:
-        over = df.sparkSession.createDataFrame(
-            over_rows,
-            StructType(
-                [
-                    StructField("band", IntegerType(), False),
-                    StructField("bucket", LongType(), False),
-                    StructField("_splits", IntegerType(), False),
-                ]
-            ),
-        )
-        joined = (
-            sigs.join(F.broadcast(over), ["band", "bucket"], "left")
-            .withColumn(
-                "salt",
-                F.when(F.col("_splits").isNull(), F.lit(0)).otherwise(
-                    F.pmod(F.xxhash64(F.col(id_col)), F.col("_splits"))
-                ).cast("int"),
-            )
-            .drop("_splits")
-        )
-    else:
-        joined = sigs.withColumn("salt", F.lit(0))
-
-    # Broadcast-gather decision (see the docstring): the signature frame is
-    # persisted and n_rows = sigs.count() / n_bands exactly, so the auto
-    # gate costs one cached count, no extra scan.
-    dt_item = 2 if emb_dtype == "f16" else 4
-    use_broadcast = gather == "broadcast"
-    if gather == "auto":
-        n_rows = sigs.count() // max(n_bands, 1)
-        use_broadcast = n_rows * dim * dt_item <= gather_max_bytes
-    emb_bc = None
-    if use_broadcast:
-        b0 = sigs.filter(F.col("band") == 0).select(id_col, "_emb").toPandas()
-        dt_np = np.float16 if emb_dtype == "f16" else np.float32
-        mat = (
-            np.frombuffer(b"".join(b0["_emb"].to_numpy()), dtype=dt_np)
-            .reshape(len(b0), -1)
-            if len(b0)
-            else np.zeros((0, dim), dtype=dt_np)
-        )
-        emb_bc = _tracked(df.sparkSession.sparkContext, 
-            (b0[id_col].to_numpy(), mat)
-        )
-        joined = joined.select("band", "bucket", "salt", id_col)
-        # The narrow rows shrink the kernel exchange ~6-25x — enough that
-        # AQE's advisory size would coalesce it to a handful of fat
-        # partitions and starve the kernel stage of parallelism (the
-        # kernel's matmul work per row is UNCHANGED by row width). An
-        # explicit partition count keeps the bare repartition exempt from
-        # AQE coalescing at the session's configured width.
-        gather_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-
-    id_type = df.select(id_col).schema.fields[0].dataType
-    # PACKED kernel output: one row per l_id with parallel (r_id, sim)
-    # arrays (grouped.pack_topk) — the merge exchange carries ~k-fold
-    # fewer rows for the same payload; bit-identical final pairs
-    pair_schema = StructType(
-        [
-            StructField("l_id", id_type, True),
-            StructField("_r", ArrayType(id_type), True),
-            StructField("_s", ArrayType(DoubleType()), True),
-        ]
-    )
-
-    def buckets_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one stack/normalize for the whole multi-group frame, tiny numpy
-        # slices per bucket (see grouped.py module doc for why this beats
-        # per-group applyInPandas)
-        ids_all = pdf[id_col].to_numpy()
-        if emb_bc is not None:
-            x_all = _gather_rows(emb_bc, ids_all)
-        else:
-            buf = b"".join(pdf["_emb"].to_numpy())
-            dt = np.float16 if emb_dtype == "f16" else np.float32
-            x_all = np.frombuffer(buf, dtype=dt).reshape(len(pdf), -1)
-        x_all = normalize_rows(np.nan_to_num(x_all.astype(np.float64)))
-        out_l, out_r, out_s = [], [], []
-        for a, b in group_slices(pdf, ["band", "bucket", "salt"]):
-            n = b - a
-            if n < 2:
-                continue
-            ids = ids_all[a:b]
-            x = x_all[a:b]
-            sims = x @ x.T
-            kk = min(k, n - 1)
-            # top-(k+1) incl. self, then drop self
-            take = min(kk + 1, n)
-            part = np.argpartition(-sims, take - 1, axis=1)[:, :take]
-            rows = np.repeat(np.arange(n), take)
-            cols = part.ravel()
-            keep = rows != cols
-            rows, cols = rows[keep], cols[keep]
-            out_l.append(ids[rows])
-            out_r.append(ids[cols])
-            out_s.append(sims[rows, cols])
-        if not out_l:
-            return pd.DataFrame({"l_id": [], "_r": [], "_s": []})
-        # map-side combiner FUSED into the kernel call (the python-sort
-        # grouped map hands the kernel its whole partition, so this IS the
-        # per-partition local top-k) — the pairs never take an extra
-        # Python<->JVM Arrow round-trip through a chained combiner pass
-        local = _dedup_topk(
-            pd.DataFrame(
-                {
-                    "l_id": np.concatenate(out_l),
-                    "r_id": np.concatenate(out_r),
-                    "sim": np.concatenate(out_s),
-                }
-            ),
-            k, "l_id", "r_id", "sim", with_rank=False,
-        )
-        if min_sim is not None:
-            # pre-merge row filter — commutes with the merge's dedup+topk,
-            # so filtering here (before packing) is identical to filtering
-            # the unpacked exchange rows
-            local = local[local["sim"].to_numpy() >= min_sim]
-        return pack_topk(local, "l_id", "r_id", "sim")
-
-    pairs = grouped_map_in_pandas(
-        joined, ["band", "bucket", "salt"], buckets_kernel, pair_schema,
-        num_partitions=gather_partitions if use_broadcast else None,
-    )
-    # fused dedup + per-left top-K: one shuffle instead of the
-    # dropDuplicates exchange + window exchange; combiner already applied
-    # inside the kernel, min_sim already applied pre-pack
-    return topk_per_key(
-        pairs, k, key="l_id", other="r_id", sim="sim", pre_combine=False,
-        packed_input=True,
+    return _lsh_search(
+        None, df, id_col, id_col, emb_col, dim=dim, k=k, n_bands=n_bands,
+        band_bits=band_bits, seed=seed, max_bucket_rows=max_bucket_rows,
+        min_sim=min_sim, emb_dtype=emb_dtype, gather=gather,
+        gather_max_bytes=gather_max_bytes, partition_by=partition_by,
     )
 
 
@@ -485,201 +531,27 @@ def lsh_candidates_dyadic(
     gather_max_bytes: int = 64 << 20,
 ) -> DataFrame:
     """Dyadic (left-vs-right) LSH candidate generation — the scale path for
-    the reference's two-table blocking. Both sides get signatures from the
-    SAME seeded hyperplanes (a must: bucket keys are only comparable under
-    identical planes); the shuffle co-locates each (band, bucket) group with
-    a side marker, and the per-bucket kernel computes left x right cosine
-    blocks. Global per-left top-K via window merge.
+    the reference's two-table blocking: -> (l_id, r_id, sim, rank), the
+    top-k right rows per left row. Both id columns must have the same type
+    (TypeError before any Spark job otherwise).
 
     Hot buckets are GRID salt-split, never truncated (fix for VERDICT r1
     #2): a bucket with SL = ceil(size_l/max_bucket_rows) left splits and
     SR = ceil(size_r/max_bucket_rows) right splits becomes an SL x SR grid
-    of tasks keyed (band, bucket, salt_l, salt_r). Each left row lands in
-    its hash split salt_l and is replicated across all SR right splits (and
-    symmetrically for right rows), so every (l, r) pair of the bucket is
-    examined exactly once — per-task cross-products stay bounded by
-    max_bucket_rows^2 with zero recall loss vs the uncapped bucket.
+    of tasks keyed (band, bucket, salt_l, salt_r), so every (l, r) pair of
+    the bucket is examined exactly once — per-task cross-products stay
+    bounded by max_bucket_rows^2 with zero recall loss vs the uncapped
+    bucket.
 
-    ``gather`` (round 6 — ported from ``lsh_candidates``, same contract,
-    bit-identical output either way): ``'auto'`` broadcasts BOTH sides'
-    quantized matrices when each fits ``gather_max_bytes``, so the kernel
-    exchange ships only (band, bucket, salts, id, side) — the n_bands-fold
-    vector duplication (the widest shuffle of the dyadic plan) never
-    crosses the wire; above the gate (always, at 100 TB) the vector rides
-    the exchange as before. Requires per-side-unique ids on the broadcast
-    path (same contract as the self path's gather). The kernel output is
-    also packed (one row per l_id with parallel arrays, grouped.pack_topk)
-    — ~k-fold fewer merge-exchange rows, identical final pairs."""
-    # One signature pass per side (VERDICT r2 #2): each side's emb-carrying
-    # signature frame is persisted and consumed by BOTH its bucket-size
-    # aggregation (a narrow projection, collected eagerly — this is what
-    # materializes the cache) and the candidate kernel. The merged oversized
-    # list is tiny by construction; when empty (healthy case) both salts are
-    # literal 0 and the plan has neither a join nor an explode.
-    l_sigs = _persisted_sigs(left, l_id, emb_col, dim, n_bands, band_bits, seed,
-                             emb_binary=True, emb_dtype=emb_dtype)
-    r_sigs = _persisted_sigs(right, r_id, emb_col, dim, n_bands, band_bits, seed,
-                             emb_binary=True, emb_dtype=emb_dtype)
-    grid: dict[tuple[int, int], list[int]] = {}
-    for row in _oversized_buckets(l_sigs, max_bucket_rows, ["band", "bucket", "_splits"]):
-        grid[(row["band"], row["bucket"])] = [row["_splits"], 1]
-    for row in _oversized_buckets(r_sigs, max_bucket_rows, ["band", "bucket", "_splits"]):
-        grid.setdefault((row["band"], row["bucket"]), [1, 1])[1] = row["_splits"]
-
-    if grid:
-        splits = left.sparkSession.createDataFrame(
-            [(b, k, sl, sr) for (b, k), (sl, sr) in grid.items()],
-            StructType(
-                [
-                    StructField("band", IntegerType(), False),
-                    StructField("bucket", LongType(), False),
-                    StructField("_sl", IntegerType(), False),
-                    StructField("_sr", IntegerType(), False),
-                ]
-            ),
-        )
-
-        def salted(sigs: DataFrame, key: str, side: int) -> DataFrame:
-            own, other = ("_sl", "_sr") if side == 0 else ("_sr", "_sl")
-            return (
-                sigs.join(F.broadcast(splits), ["band", "bucket"], "left")
-                .withColumn("_own", F.coalesce(F.col(own), F.lit(1)))
-                .withColumn("_other", F.coalesce(F.col(other), F.lit(1)))
-                .withColumn("_my_salt", F.pmod(F.xxhash64(F.col(key)), F.col("_own")).cast("int"))
-                .withColumn(
-                    "_rep_salt",
-                    F.explode(F.sequence(F.lit(0), (F.col("_other") - 1).cast("int"))),
-                )
-                .select(
-                    F.col(key).alias("_id"), "band", "bucket",
-                    (F.col("_my_salt") if side == 0 else F.col("_rep_salt")).alias("salt_l"),
-                    (F.col("_rep_salt") if side == 0 else F.col("_my_salt")).alias("salt_r"),
-                    "_emb", F.lit(side).alias("_side"),
-                )
-            )
-    else:
-
-        def salted(sigs: DataFrame, key: str, side: int) -> DataFrame:
-            return sigs.select(
-                F.col(key).alias("_id"), "band", "bucket",
-                F.lit(0).alias("salt_l"), F.lit(0).alias("salt_r"),
-                "_emb", F.lit(side).alias("_side"),
-            )
-
-    if gather not in ("auto", "broadcast", "exchange"):
-        raise ValueError(
-            f"unknown gather: {gather!r} (use 'auto', 'broadcast' or 'exchange')"
-        )
-    both = salted(l_sigs, l_id, 0).unionByName(salted(r_sigs, r_id, 1))
-
-    # Broadcast-gather gate (see docstring): counts are near-free — the
-    # signature frames are persisted and already materialized by the
-    # bucket-size collects above.
-    dt_item = 2 if emb_dtype == "f16" else 4
-    use_broadcast = gather == "broadcast"
-    if gather == "auto":
-        n_l = l_sigs.count() // max(n_bands, 1)
-        n_r = r_sigs.count() // max(n_bands, 1)
-        use_broadcast = (
-            n_l * dim * dt_item <= gather_max_bytes
-            and n_r * dim * dt_item <= gather_max_bytes
-        )
-    emb_bcs = None
-    gather_partitions = None
-    if use_broadcast:
-        dt_np = np.float16 if emb_dtype == "f16" else np.float32
-
-        def _collect_side(sigs: DataFrame, key: str):
-            b0 = sigs.filter(F.col("band") == 0).select(key, "_emb").toPandas()
-            mat = (
-                np.frombuffer(b"".join(b0["_emb"].to_numpy()), dtype=dt_np)
-                .reshape(len(b0), -1)
-                if len(b0)
-                else np.zeros((0, dim), dtype=dt_np)
-            )
-            return _tracked(
-                left.sparkSession.sparkContext, (b0[key].to_numpy(), mat)
-            )
-
-        emb_bcs = (_collect_side(l_sigs, l_id), _collect_side(r_sigs, r_id))
-        both = both.select("band", "bucket", "salt_l", "salt_r", "_id", "_side")
-        # same AQE-coalescing exemption as the self path: narrow rows must
-        # not shrink the kernel stage's parallelism (matmul work per row is
-        # unchanged by row width)
-        gather_partitions = int(
-            left.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-
-    l_type = left.select(l_id).schema.fields[0].dataType
-    r_type = right.select(r_id).schema.fields[0].dataType
-    # packed kernel output (one row per l_id, parallel (r_id, sim) arrays):
-    # the merge exchange carries ~k-fold fewer rows, bit-identical pairs
-    pair_schema = StructType(
-        [
-            StructField("l_id", l_type, True),
-            StructField("_r", ArrayType(r_type), True),
-            StructField("_s", ArrayType(DoubleType()), True),
-        ]
-    )
-
-    def buckets_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids_all = pdf["_id"].to_numpy()
-        side_all = pdf["_side"].to_numpy()
-        if emb_bcs is not None:
-            lmask_all = side_all == 0
-            x_all = np.empty((len(pdf), dim), dtype=np.float64)
-            # per-side gather (upcast on assign == the self path's astype)
-            x_all[lmask_all] = _gather_rows(emb_bcs[0], ids_all[lmask_all])
-            x_all[~lmask_all] = _gather_rows(emb_bcs[1], ids_all[~lmask_all])
-            x_all = normalize_rows(np.nan_to_num(x_all))
-        else:
-            buf = b"".join(pdf["_emb"].to_numpy())
-            dt = np.float16 if emb_dtype == "f16" else np.float32
-            x_all = np.frombuffer(buf, dtype=dt).reshape(len(pdf), -1)
-            x_all = normalize_rows(np.nan_to_num(x_all.astype(np.float64)))
-        out_l, out_r, out_s = [], [], []
-        for a, b in group_slices(pdf, ["band", "bucket", "salt_l", "salt_r"]):
-            side = side_all[a:b]
-            lmask = side == 0
-            if not lmask.any() or lmask.all():
-                continue
-            lids, rids = ids_all[a:b][lmask], ids_all[a:b][~lmask]
-            lx, rx = x_all[a:b][lmask], x_all[a:b][~lmask]
-            sims = lx @ rx.T
-            kk = min(k, sims.shape[1])
-            part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk] if kk < sims.shape[1] \
-                else np.broadcast_to(np.arange(sims.shape[1]), sims.shape).copy()
-            rows = np.repeat(np.arange(len(lids)), part.shape[1])
-            cols = part.ravel()
-            out_l.append(lids[rows])
-            out_r.append(rids[cols])
-            out_s.append(sims[rows, cols])
-        if not out_l:
-            return pd.DataFrame({"l_id": [], "_r": [], "_s": []})
-        # fused map-side combiner (see lsh_candidates.buckets_kernel)
-        local = _dedup_topk(
-            pd.DataFrame(
-                {
-                    "l_id": np.concatenate(out_l),
-                    "r_id": np.concatenate(out_r),
-                    "sim": np.concatenate(out_s),
-                }
-            ),
-            k, "l_id", "r_id", "sim", with_rank=False,
-        )
-        if min_sim is not None:
-            # pre-merge row filter — commutes with the merge's dedup+topk
-            local = local[local["sim"].to_numpy() >= min_sim]
-        return pack_topk(local, "l_id", "r_id", "sim")
-
-    pairs = grouped_map_in_pandas(
-        both, ["band", "bucket", "salt_l", "salt_r"], buckets_kernel,
-        pair_schema,
-        num_partitions=gather_partitions if use_broadcast else None,
-    )
-    return topk_per_key(
-        pairs, k, key="l_id", other="r_id", sim="sim", pre_combine=False,
-        packed_input=True,
+    ``gather`` has the ``lsh_candidates`` contract, with bit-identical
+    output either way: ``'auto'`` broadcasts BOTH sides' quantized
+    matrices when each fits ``gather_max_bytes``. The broadcast path
+    requires per-side-unique ids."""
+    return _lsh_search(
+        left, right, l_id, r_id, emb_col, dim=dim, k=k, n_bands=n_bands,
+        band_bits=band_bits, seed=seed, max_bucket_rows=max_bucket_rows,
+        min_sim=min_sim, emb_dtype=emb_dtype, gather=gather,
+        gather_max_bytes=gather_max_bytes,
     )
 
 

@@ -45,10 +45,9 @@ from pyspark.sql import functions as F
 from deepblocker_spark.operators.ann import (
     _CellPairing,
     _ivf_search,
-    _local_topk,
-    _row_blobs,
     _training_sample,
 )
+from deepblocker_spark.operators.grouped import _local_topk, _row_blobs
 from deepblocker_spark.operators.bc_registry import (
     tracked_broadcast as _tracked,
 )
@@ -207,6 +206,7 @@ def pq_topk_join(
     unbounded index even when no hint is given.
     """
     import numpy as np
+    import pandas as pd
     from pyspark.sql import Window
     from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -278,8 +278,9 @@ def pq_topk_join(
                         np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
                     )
                 )
-                yield _local_topk(_adc_scores(q, codes, books),
-                                  pdf[l_id].to_numpy(), ids, k, exclude_self)
+                l, r, s = _local_topk(_adc_scores(q, codes, books),
+                                      pdf[l_id].to_numpy(), ids, k, exclude_self)
+                yield pd.DataFrame({"l_id": l, "r_id": r, "sim": s})
 
         return run
 

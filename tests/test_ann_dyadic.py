@@ -156,6 +156,8 @@ def test_ivf_join_rejects_mismatched_id_types(spark):
         ivf_topk_join(left, right, k=2, l_id="id", r_id="id")
     with pytest.raises(TypeError, match="matching id types"):
         ivf_pq_topk_join(left, right, k=2, l_id="id", r_id="id", m=4)
+    with pytest.raises(TypeError, match="matching id types"):
+        lsh_candidates_dyadic(left, right, dim=DIM, k=2, n_bands=2, band_bits=3)
 
 
 def test_pairing_explicit_self_mode(spark):

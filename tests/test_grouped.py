@@ -201,7 +201,7 @@ def test_pack_unpack_topk_roundtrip():
                           "l_id", "r_id", "sim")
     assert key(back_s) == key(local_s)
 
-    # min_sim-style row filter between dedup and pack (lsh.py:452)
+    # min_sim-style row filter between dedup and pack (grouped.local_topk_packed)
     filt = local[local["sim"].to_numpy() >= 0.5]
     back_f = _unpack_topk(pack_topk(filt, "l_id", "r_id", "sim"),
                           "l_id", "r_id", "sim")

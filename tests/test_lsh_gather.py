@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 
 from deepblocker_spark.operators.bc_registry import release_tracked
-from deepblocker_spark.operators.lsh import lsh_candidates
+from deepblocker_spark.operators.lsh import lsh_candidates, lsh_candidates_dyadic
 
 
 def _frame(spark, n=2500, dim=24, hot=True, seed=11):
@@ -59,5 +59,14 @@ def test_gather_auto_respects_byte_gate(spark):
 
 def test_gather_rejects_unknown_mode(spark):
     df = _frame(spark, n=50, hot=False)
-    with pytest.raises(ValueError):
-        lsh_candidates(df, id_col="id", dim=24, gather="fetch")
+    sc = spark.sparkContext
+    sc.setJobGroup("lsh-gather-check", "argument checks")
+    try:
+        with pytest.raises(ValueError):
+            lsh_candidates(df, id_col="id", dim=24, gather="fetch")
+        with pytest.raises(ValueError):
+            lsh_candidates_dyadic(df, df, dim=24, gather="fetch")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # both modes check their arguments before the first Spark job
+    assert not sc.statusTracker().getJobIdsForGroup("lsh-gather-check")

@@ -517,6 +517,30 @@ def main() -> None:
     )
     qs["lsh_partitioned"] = lambda *_: lsh_part_df
 
+    # Dyadic LSH runs the self path's driver over two sides: on the healthy
+    # path (no oversized bucket) each side is ONE persisted signature frame
+    # and the plan has no join of any kind and no explode (the grid
+    # replication only appears for oversized buckets).
+    from deepblocker_spark.operators.lsh import lsh_candidates_dyadic
+
+    even = F.col("vec_id") % 2 == 0
+    lsh_dyadic_df = lsh_candidates_dyadic(
+        emb_tbl.filter(even), emb_tbl.filter(~even), l_id="vec_id",
+        r_id="vec_id", emb_col="embedding", dim=64, k=5, n_bands=8,
+        band_bits=8, seed=3,
+    )
+    audits["lsh_candidates_dyadic"] = (
+        ["!Join", "!Generate", "!Sort (", "2:InMemoryRelation (",
+         "hashpartitioning(band", "hashpartitioning(l_id",
+         "ReadSchema: struct<vec_id:bigint,embedding:array<float>>"],
+        "one signature pass per side: exactly one persisted frame "
+        "(InMemoryRelation) per side, unioned into the bucket exchange; "
+        "healthy path has NO join of any kind and NO Generate (explode); "
+        "the same two exchanges as the self path (bucket key, then l_id); "
+        "no JVM Sort anywhere",
+    )
+    qs["lsh_candidates_dyadic"] = lambda *_: lsh_dyadic_df
+
     # Interval/range join (round 4): the range predicate must NOT execute
     # as a nested loop — bins meet in a hash equi-join (explode = Generate)
     # with the containment filter as codegen; both event_type filters
@@ -609,11 +633,12 @@ def main() -> None:
         for needle in must_contain:
             if needle.startswith("!"):
                 ok = needle[1:] not in plan
-            elif needle[:2] == "1:":
-                # count needle: the text must occur EXACTLY once (e.g. one
-                # "Location: InMemoryFileIndex" line per scan node proves a
-                # single source scan feeds the whole plan)
-                ok = plan.count(needle[2:]) == 1
+            elif needle.split(":", 1)[0].isdigit():
+                # count needle "N:text": the text must occur EXACTLY N times
+                # (e.g. one "Location: InMemoryFileIndex" line per scan node
+                # proves a single source scan feeds the whole plan)
+                n, text = needle.split(":", 1)
+                ok = plan.count(text) == int(n)
             else:
                 ok = needle in plan
             checks.append((needle, ok))

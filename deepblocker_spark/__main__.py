@@ -17,6 +17,8 @@ import argparse
 import json
 import sys
 
+from deepblocker_spark.operators.pairing import PAIRING_MODES
+
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="deepblocker_spark")
@@ -28,18 +30,22 @@ def main(argv: list[str] | None = None) -> int:
                    help="comma-separated cols_to_block")
     p.add_argument("--id-col", default="id")
     p.add_argument("--k", type=int, default=50)
-    p.add_argument("--pairing", default="auto",
-                   choices=["auto", "exact", "lsh", "ivf", "ivfpq"],
-                   help="candidate generator: auto = exact below "
-                        "pairing_lsh_threshold_rows, LSH above (scale path)")
-    p.add_argument("--lsh-threshold-rows", type=int, default=100_000,
-                   help="auto mode switches exact->lsh above this row count")
+    p.add_argument("--pairing", default="auto", choices=PAIRING_MODES,
+                   help="candidate generator; auto picks exact, lsh or "
+                        "ivfpq by row count and embedding bytes (see "
+                        "operators.pairing.resolve_pairing)")
+    p.add_argument("--lsh-threshold-rows", type=int, default=None,
+                   help="auto's exact->lsh row threshold (default: "
+                        "BlockerConfig.pairing_lsh_threshold_rows; see "
+                        "operators.pairing.resolve_pairing)")
     p.add_argument("--min-sim", type=float, default=None)
     p.add_argument("--verify-jaccard", type=float, default=0.4)
     p.add_argument("--emb-dim", type=int, default=300)
     p.add_argument("--master", default=None)
     p.add_argument("--force", action="store_true", help="recompute all stages")
     args = p.parse_args(argv)
+
+    from dataclasses import replace
 
     from deepblocker_spark.config import BlockerConfig
     from deepblocker_spark.plans.checkpoint import CheckpointManager, run_blocking_pipeline
@@ -49,10 +55,9 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("deepblocker-pipeline", master=args.master)
     try:
         src = load_repo_table(spark, args.input, fmt=args.format)
-        cfg = BlockerConfig(
-            emb_dim=args.emb_dim, top_k=args.k,
-            pairing_lsh_threshold_rows=args.lsh_threshold_rows,
-        )
+        cfg = BlockerConfig(emb_dim=args.emb_dim, top_k=args.k)
+        if args.lsh_threshold_rows is not None:
+            cfg = replace(cfg, pairing_lsh_threshold_rows=args.lsh_threshold_rows)
         ckpt = CheckpointManager(spark, args.checkpoint_dir)
         clusters = run_blocking_pipeline(
             spark, src, ckpt, args.cols.split(","), id_col=args.id_col,

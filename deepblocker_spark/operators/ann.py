@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from deepblocker_spark.operators.lsh import lsh_candidates
+from deepblocker_spark.operators.pairing import VectorPairing, shared_id_type
 from deepblocker_spark.operators.topk import exact_topk_join
 
 from deepblocker_spark.operators.bc_registry import (
@@ -404,15 +405,7 @@ def _ivf_search(
     ``rows_hint``) that also picks ``n_cells=None`` ~ sqrt(N)."""
     from deepblocker_spark.operators.pq import train_pq
 
-    id_type = right.select(r_id).schema.fields[0].dataType
-    if left is not None:
-        l_type = left.select(l_id).schema.fields[0].dataType
-        if l_type != id_type:
-            raise TypeError(
-                "dyadic IVF search requires matching id types on both sides "
-                f"(got {l_type.simpleString()} vs {id_type.simpleString()}); "
-                "cast one side's id column first"
-            )
+    id_type = shared_id_type(left, right, l_id, r_id, "IVF")
     n_rows = rows_hint if rows_hint is not None else right.count()
     if n_cells is None:
         n_cells = _auto_n_cells(n_rows)
@@ -503,36 +496,10 @@ def ivf_topk_join(
     )
 
 
-class _CellPairing:
-    """The index/query seam shared by IVFVectorPairing and
-    pq.PQVectorPairing (the reference's vector_pairing_models.py:7-18 ABC,
-    like ExactTopKVectorPairing / LSHVectorPairing): self mode when
-    query() receives the indexed DataFrame itself, dyadic
-    (train-on-index, probe-from-query) otherwise. Subclasses supply the
-    search options through ``_search_kw``."""
-
-    def index(self, right: DataFrame, r_id: str = "id", emb_col: str = "embedding"):
-        self._right, self._r_id, self._emb = right, r_id, emb_col
-        return self
-
-    def query(self, left: DataFrame, l_id: str = "id",
-              emb_col: str | None = None, mode: str = "auto") -> DataFrame:
-        """``mode``: 'self' (left IS the indexed table — dedup semantics,
-        self-pairs excluded), 'dyadic' (two tables), or 'auto'. Auto falls
-        back to OBJECT IDENTITY with the indexed DataFrame — an
-        equal-but-distinct frame of the same table (e.g. re-read from a
-        checkpoint) runs dyadic and leaks self-pairs (ADVICE r2); pass
-        mode='self' explicitly in that case."""
-        if mode not in ("auto", "self", "dyadic"):
-            raise ValueError(f"unknown query mode: {mode!r}")
-        if mode == "self" or (mode == "auto" and left is self._right):
-            left = None
-        return _ivf_search(left, self._right, self.k, l_id, self._r_id,
-                           emb_col or self._emb, **self._search_kw())
-
-
-class IVFVectorPairing(_CellPairing):
-    """IVF-flat behind the shared index/query seam (see _CellPairing)."""
+class IVFVectorPairing(VectorPairing):
+    """IVF-flat behind the shared index/query seam (see
+    pairing.VectorPairing): self-search when the query is the indexed
+    table, train-on-index / probe-from-query otherwise."""
 
     def __init__(self, k: int = 50, n_cells: int | None = 16, nprobe: int = 3,
                  seed: int = 1234, max_cell_rows: int = 5_000,
@@ -541,10 +508,16 @@ class IVFVectorPairing(_CellPairing):
         self.max_cell_rows = max_cell_rows
         self.emb_dtype = emb_dtype
 
-    def _search_kw(self) -> dict:
-        return dict(n_cells=self.n_cells, nprobe=self.nprobe, seed=self.seed,
-                    max_cell_rows=self.max_cell_rows, rows_hint=None,
-                    emb_dtype=self.emb_dtype)
+    def _search(self, left, l_id, emb_col):
+        return _ivf_search(
+            left, self._right, self.k, l_id, self._r_id, emb_col,
+            n_cells=self.n_cells, nprobe=self.nprobe, seed=self.seed,
+            max_cell_rows=self.max_cell_rows, rows_hint=self._rows,
+            emb_dtype=self.emb_dtype,
+        )
+
+    def params(self) -> dict:
+        return {"ivf": [self.n_cells, self.nprobe, self.emb_dtype]}
 
 
 def recall_at_k(approx: DataFrame, exact: DataFrame) -> DataFrame:

@@ -67,6 +67,7 @@ from deepblocker_spark.operators.grouped import (
     local_topk_packed,
     topk_per_key,
 )
+from deepblocker_spark.operators.pairing import VectorPairing, shared_id_type
 from deepblocker_spark.operators.topk import normalize_rows
 
 from deepblocker_spark.operators.bc_registry import (
@@ -327,15 +328,7 @@ def _lsh_search(
         raise ValueError(
             f"unknown gather: {gather!r} (use 'auto', 'broadcast' or 'exchange')"
         )
-    id_type = right.select(r_id).schema.fields[0].dataType
-    if left is not None:
-        l_type = left.select(l_id).schema.fields[0].dataType
-        if l_type != id_type:
-            raise TypeError(
-                "dyadic LSH search requires matching id types on both sides "
-                f"(got {l_type.simpleString()} vs {id_type.simpleString()}); "
-                "cast one side's id column first"
-            )
+    id_type = shared_id_type(left, right, l_id, r_id, "LSH")
     self_mode = left is None
     sides = [(right, r_id)] if self_mode else [(left, l_id), (right, r_id)]
     keys = [key for _, key in sides]
@@ -555,10 +548,9 @@ def lsh_candidates_dyadic(
     )
 
 
-class LSHVectorPairing:
+class LSHVectorPairing(VectorPairing):
     """Drop-in approximate alternative to ExactTopKVectorPairing: same
-    index/query seam, LSH-bucketed execution. Self-join mode when query is
-    called with the indexed DataFrame itself; dyadic mode otherwise."""
+    index/query seam (see pairing.VectorPairing), LSH-bucketed execution."""
 
     def __init__(self, k: int = 50, dim: int = 300, n_bands: int = 8,
                  band_bits: int = 12, seed: int = 1234,
@@ -571,28 +563,15 @@ class LSHVectorPairing:
         self.emb_dtype = emb_dtype
         self.gather, self.gather_max_bytes = gather, gather_max_bytes
 
-    def index(self, right: DataFrame, r_id: str = "id", emb_col: str = EMBEDDING):
-        self._right, self._r_id, self._emb = right, r_id, emb_col
-        return self
+    def _search(self, left, l_id, emb_col):
+        opts = (self.dim, self.k, self.n_bands, self.band_bits, self.seed,
+                self.max_bucket_rows, self.min_sim, self.emb_dtype,
+                self.gather, self.gather_max_bytes)
+        if left is None:
+            return lsh_candidates(self._right, self._r_id, emb_col, *opts)
+        return lsh_candidates_dyadic(left, self._right, l_id, self._r_id,
+                                     emb_col, *opts)
 
-    def query(self, left: DataFrame, l_id: str = "id",
-              emb_col: str | None = None, mode: str = "auto") -> DataFrame:
-        """``mode``: 'self' (left IS the indexed table — self-pairs
-        excluded), 'dyadic', or 'auto'. Auto falls back to OBJECT IDENTITY
-        with the indexed DataFrame — an equal-but-distinct frame of the same
-        table (e.g. re-read from a checkpoint) runs dyadic and leaks
-        self-pairs (ADVICE r2); pass mode='self' explicitly in that case."""
-        if mode not in ("auto", "self", "dyadic"):
-            raise ValueError(f"unknown query mode: {mode!r}")
-        if mode == "self" or (mode == "auto" and left is self._right):
-            return lsh_candidates(
-                self._right, self._r_id, emb_col or self._emb, self.dim, self.k,
-                self.n_bands, self.band_bits, self.seed, self.max_bucket_rows,
-                self.min_sim, self.emb_dtype, self.gather,
-                self.gather_max_bytes,
-            )
-        return lsh_candidates_dyadic(
-            left, self._right, l_id, self._r_id, emb_col or self._emb, self.dim,
-            self.k, self.n_bands, self.band_bits, self.seed, self.max_bucket_rows,
-            self.min_sim, self.emb_dtype, self.gather, self.gather_max_bytes,
-        )
+    def params(self) -> dict:
+        return {"lsh": [self.n_bands, self.band_bits, self.max_bucket_rows,
+                        self.emb_dtype]}

@@ -42,12 +42,9 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from deepblocker_spark.operators.ann import (
-    _CellPairing,
-    _ivf_search,
-    _training_sample,
-)
+from deepblocker_spark.operators.ann import _ivf_search, _training_sample
 from deepblocker_spark.operators.grouped import _local_topk, _row_blobs
+from deepblocker_spark.operators.pairing import VectorPairing
 from deepblocker_spark.operators.bc_registry import (
     tracked_broadcast as _tracked,
 )
@@ -196,9 +193,9 @@ def pq_topk_join(
 
     ``max_driver_code_rows`` (VERDICT r4 #3) bounds the driver collect of
     the code table: above it the call DELEGATES to the nothing-collects
-    IVFADC path (ivf_pq_topk / ivf_pq_topk_join — same m/n_codes/seed;
-    ``codebooks`` is retrained there, cell-probing replaces the exhaustive
-    chunk scan), the same auto-gate pattern as
+    IVFADC path (PQVectorPairing with ivf_pq_topk[_join]'s defaults — same
+    m/n_codes/seed; ``codebooks`` is retrained there, cell-probing replaces
+    the exhaustive chunk scan), the same auto-gate pattern as
     config.pairing_lsh_threshold_rows. ``rows_hint`` skips the index-side
     probe when the caller knows the row count (e.g. from a checkpoint
     manifest); without a hint the collect itself is LIMIT-bounded to
@@ -213,15 +210,10 @@ def pq_topk_join(
     from deepblocker_spark.operators.topk import normalize_rows
 
     def _delegate(n_rows: int | None) -> DataFrame:
-        if exclude_self and left is right:
-            return ivf_pq_topk(
-                right, k, id_col=r_id, emb_col=emb_col, m=m,
-                n_codes=n_codes, seed=seed, rows_hint=n_rows,
-            )
-        return ivf_pq_topk_join(
-            left, right, k, l_id=l_id, r_id=r_id, emb_col=emb_col, m=m,
-            n_codes=n_codes, seed=seed, rows_hint=n_rows,
-        )
+        pairer = PQVectorPairing(k, n_cells=None, m=m, n_codes=n_codes, seed=seed)
+        pairer.index(right, r_id, emb_col, rows=n_rows)
+        mode = "self" if exclude_self and left is right else "dyadic"
+        return pairer.query(left, l_id, mode=mode)
 
     if rows_hint is not None and rows_hint > max_driver_code_rows:
         return _delegate(rows_hint)
@@ -362,21 +354,24 @@ def ivf_pq_topk_join(
     )
 
 
-class PQVectorPairing(_CellPairing):
-    """IVFADC behind the shared index/query seam (see ann._CellPairing)."""
+class PQVectorPairing(VectorPairing):
+    """IVFADC behind the shared index/query seam (see
+    pairing.VectorPairing)."""
 
     def __init__(self, k: int = 50, n_cells: int | None = 16, nprobe: int = 4,
                  m: int = 8, n_codes: int = 256, seed: int = 1234,
-                 max_cell_rows: int = 5_000, rows_hint: int | None = None):
+                 max_cell_rows: int = 5_000):
         self.k, self.n_cells, self.nprobe = k, n_cells, nprobe
         self.m, self.n_codes, self.seed = m, n_codes, seed
         self.max_cell_rows = max_cell_rows
-        # index-side row count (e.g. from a checkpoint manifest) — skips
-        # the auto-n_cells sizing count job, same as the pipeline's
-        # rows_hint discipline
-        self.rows_hint = rows_hint
 
-    def _search_kw(self) -> dict:
-        return dict(n_cells=self.n_cells, nprobe=self.nprobe, seed=self.seed,
-                    max_cell_rows=self.max_cell_rows, rows_hint=self.rows_hint,
-                    pq=(self.m, self.n_codes))
+    def _search(self, left, l_id, emb_col):
+        return _ivf_search(
+            left, self._right, self.k, l_id, self._r_id, emb_col,
+            n_cells=self.n_cells, nprobe=self.nprobe, seed=self.seed,
+            max_cell_rows=self.max_cell_rows, rows_hint=self._rows,
+            pq=(self.m, self.n_codes),
+        )
+
+    def params(self) -> dict:
+        return {"ivfpq": [self.n_cells, self.nprobe, self.m, self.n_codes]}

@@ -78,8 +78,9 @@ def semantic_dedup(
 
     ``rows_hint`` skips the row-count job that sizes ``n_cells`` when the
     caller already knows N (same contract as pipeline.rows_hint /
-    PQVectorPairing). ``max_cell_rows`` bounds every kernel task via the
-    grid salt-split — exact semantics at any skew, never truncation."""
+    pairing.VectorPairing.index(rows=)). ``max_cell_rows`` bounds every
+    kernel task via the grid salt-split — exact semantics at any skew,
+    never truncation."""
     if keep not in ("min_id", "farthest"):
         raise ValueError(f"unknown keep rule: {keep!r} (min_id, farthest)")
     import numpy as np

@@ -41,6 +41,7 @@ from pyspark.sql.types import (
 )
 
 from deepblocker_spark.operators.embed import EMBEDDING
+from deepblocker_spark.operators.pairing import VectorPairing
 
 from deepblocker_spark.operators.bc_registry import (
     tracked_broadcast as _tracked,
@@ -422,45 +423,21 @@ def cosine_threshold_join(
     return result
 
 
-class ExactTopKVectorPairing:
-    """Reference interface seam (vector_pairing_models.py:7-18,21-49) with
-    DataFrame-in/DataFrame-out signatures: index(right_df) then
-    query(left_df) -> pair table."""
+class ExactTopKVectorPairing(VectorPairing):
+    """Chunk-broadcast exact top-K behind the shared index/query seam (see
+    pairing.VectorPairing). ``exclude_self`` drops l_id == r_id pairs from
+    dyadic queries too; self queries always drop them."""
 
     def __init__(self, k: int = 50, exclude_self: bool = False,
-                 max_broadcast_rows: int = 500_000, right_rows: int | None = None):
+                 max_broadcast_rows: int = 500_000):
         self.k = k
         self.exclude_self = exclude_self
         self.max_broadcast_rows = max_broadcast_rows
-        # optional row-count hint (e.g. from a checkpoint manifest) — skips
-        # the sizing count job before the chunked collect
-        self.right_rows = right_rows
-        self._right: DataFrame | None = None
 
-    def index(self, right: DataFrame, r_id: str = "id", emb_col: str = EMBEDDING):
-        self._right = right
-        self._r_id = r_id
-        self._emb_col = emb_col
-        return self
-
-    def query(self, left: DataFrame, l_id: str = "id",
-              emb_col: str | None = None, mode: str = "auto") -> DataFrame:
-        """``mode`` ('auto'|'self'|'dyadic') mirrors the LSH/IVF pairings'
-        explicit dispatch (ADVICE r2). For the exact join the executed plan
-        is identical either way — self semantics are carried by
-        ``exclude_self`` — so 'self' forces it on for this call only."""
-        if mode not in ("auto", "self", "dyadic"):
-            raise ValueError(f"unknown query mode: {mode!r}")
-        if self._right is None:
-            raise RuntimeError("call index(right_df) before query(left_df)")
+    def _search(self, left, l_id, emb_col):
         return exact_topk_join(
-            left,
-            self._right,
-            self.k,
-            l_id=l_id,
-            r_id=self._r_id,
-            emb_col=emb_col or self._emb_col,
-            exclude_self=self.exclude_self or mode == "self",
-            max_broadcast_rows=self.max_broadcast_rows,
-            right_rows=self.right_rows,
+            self._right if left is None else left, self._right, self.k,
+            l_id=l_id, r_id=self._r_id, emb_col=emb_col,
+            exclude_self=self.exclude_self or left is None,
+            max_broadcast_rows=self.max_broadcast_rows, right_rows=self._rows,
         )

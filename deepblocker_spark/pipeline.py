@@ -28,7 +28,7 @@ from deepblocker_spark.operators.preprocess import (
     build_corpus,
     preprocess_table,
 )
-from deepblocker_spark.operators.topk import ExactTopKVectorPairing
+from deepblocker_spark.operators.pairing import pairing_for
 
 
 # ---------------------------------------------------------------------------
@@ -297,8 +297,8 @@ class DeepBlocker:
     ):
         self.cfg = config
         self.embedding = tuple_embedding_model or SparkSIFEmbedding(config)
-        self.pairing = vector_pairing_model or ExactTopKVectorPairing(
-            k=config.top_k, max_broadcast_rows=config.max_broadcast_rows
+        self.pairing = vector_pairing_model or pairing_for(
+            "exact", config.top_k, config
         )
 
     def block_datasets(

@@ -333,13 +333,9 @@ def run_blocking_pipeline(
       * 'ivfpq' — IVFADC: IVF cells + in-cell ADC over m-byte PQ codes
                   (the index role's exchange payload drops 32×; measured
                   2.3× faster than ivf-flat at 240k rows, BASELINE.md);
-      * 'auto'  — exact below cfg.pairing_lsh_threshold_rows rows
-                  (using the embeddings checkpoint's manifest row count);
-                  above it, LSH while the raw embedding matrix stays under
-                  cfg.pairing_ivfpq_min_bytes, IVFADC beyond that (VERDICT
-                  r5 #5 — the regime where m-byte codes beat carrying
-                  n_bands vector copies through the kernel exchange). The
-                  resolved mode lands in the candidates manifest params.
+      * 'auto'  — one of the above by the embeddings checkpoint's manifest
+                  row count: the rule is ``operators.pairing.resolve_pairing``.
+                  The resolved mode lands in the candidates manifest params.
 
     The embeddings, candidates and scored checkpoints share one
     hash-directory layout of width ``n``. ``cfg.ckpt_hash_partitions=None``
@@ -354,11 +350,15 @@ def run_blocking_pipeline(
     from deepblocker_spark.functions.tokenizer import tokens_col
     from deepblocker_spark.operators.cluster import connected_components
     from deepblocker_spark.operators.preprocess import MERGED_TEXT, preprocess_table
-    from deepblocker_spark.operators.topk import ExactTopKVectorPairing
+    from deepblocker_spark.operators.pairing import (
+        PAIRING_MODES,
+        pairing_for,
+        resolve_pairing,
+    )
     from deepblocker_spark.pipeline import SparkSIFEmbedding
 
     cfg = config or DEFAULT_CONFIG
-    if pairing not in ("auto", "exact", "lsh", "ivf", "ivfpq"):
+    if pairing not in PAIRING_MODES:  # before the embedding stage runs
         raise ValueError(f"unknown pairing mode: {pairing!r}")
 
     def build_embeddings() -> DataFrame:
@@ -382,72 +382,21 @@ def run_blocking_pipeline(
     emb_man = ckpt.manifest("embeddings")
     n_rows = emb_man["rows"]
     n_part = emb_man["layout"]["n"]
-    mode = pairing
-    if mode == "auto":
-        if n_rows <= cfg.pairing_lsh_threshold_rows:
-            mode = "exact"
-        elif n_rows * cfg.emb_dim * 4 <= cfg.pairing_ivfpq_min_bytes:
-            mode = "lsh"
-        else:
-            mode = "ivfpq"
+    mode = resolve_pairing(pairing, n_rows, cfg)
+    pairer = pairing_for(mode, k, cfg)
 
     def build_candidates() -> DataFrame:
-        if mode == "exact":
-            # the manifest row count doubles as the right_rows hint — no
-            # sizing count job before the chunked collect
-            p = ExactTopKVectorPairing(
-                k=k, exclude_self=True, max_broadcast_rows=cfg.max_broadcast_rows,
-                right_rows=n_rows,
-            )
-        elif mode == "lsh":
-            from deepblocker_spark.operators.lsh import LSHVectorPairing
-
-            p = LSHVectorPairing(
-                k=k, dim=cfg.emb_dim, n_bands=cfg.lsh_n_bands,
-                band_bits=cfg.lsh_band_bits, seed=cfg.random_seed,
-                max_bucket_rows=cfg.lsh_max_bucket_rows,
-                emb_dtype=cfg.lsh_emb_dtype, gather=cfg.lsh_gather,
-                gather_max_bytes=cfg.lsh_gather_max_bytes,
-            )
-        elif mode == "ivfpq":
-            from deepblocker_spark.operators.pq import ivf_pq_topk
-
-            return ivf_pq_topk(
-                emb, k=k, id_col=id_col, emb_col="embedding",
-                n_cells=cfg.ivf_n_cells, nprobe=cfg.ivf_nprobe,
-                m=cfg.pq_m, n_codes=cfg.pq_n_codes,
-                seed=cfg.random_seed, rows_hint=n_rows,
-            )
-        else:  # ivf
-            from deepblocker_spark.operators.ann import ivf_topk
-
-            # n_cells=None auto-sizes to ~sqrt(N) from the manifest row
-            # count (VERDICT r2 #9 — cfg.ivf_n_cells is an explicit
-            # override; the default fixed 16 degenerates as N grows)
-            # same transport knob as the LSH path: the probed-cell
-            # exchange is the IVF plan's widest shuffle
-            return ivf_topk(
-                emb, k=k, id_col=id_col, emb_col="embedding",
-                n_cells=cfg.ivf_n_cells, nprobe=cfg.ivf_nprobe,
-                seed=cfg.random_seed, rows_hint=n_rows,
-                emb_dtype=cfg.lsh_emb_dtype,
-            )
-        p.index(emb, r_id=id_col)
-        # mode='self': emb is checkpoint-backed; never rely on object
-        # identity for self-vs-dyadic dispatch (ADVICE r2)
-        return p.query(emb, l_id=id_col, mode="self")
+        # the manifest row count is the index-side row hint (no sizing
+        # count job); mode='self' because emb is checkpoint-backed: never
+        # rely on object identity for self-vs-dyadic dispatch (ADVICE r2)
+        pairer.index(emb, r_id=id_col, rows=n_rows)
+        return pairer.query(emb, l_id=id_col, mode="self")
 
     cands = ckpt.stage(
         "candidates", build_candidates, ["l_id", "r_id"],
         parents=["embeddings"], force=force,
         params={"k": k, "pairing": mode, "random_seed": cfg.random_seed,
-                "lsh": [cfg.lsh_n_bands, cfg.lsh_band_bits,
-                        cfg.lsh_max_bucket_rows,
-                        cfg.lsh_emb_dtype] if mode == "lsh" else None,
-                "ivf": [cfg.ivf_n_cells, cfg.ivf_nprobe,
-                        cfg.lsh_emb_dtype] if mode == "ivf" else None,
-                "ivfpq": [cfg.ivf_n_cells, cfg.ivf_nprobe, cfg.pq_m,
-                          cfg.pq_n_codes] if mode == "ivfpq" else None},
+                "lsh": None, "ivf": None, "ivfpq": None, **pairer.params()},
         layout=("l_id", n_part),
     )
     # the candidates stage is materialized: release the frames and

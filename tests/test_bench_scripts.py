@@ -4,12 +4,15 @@ bench.py's host controls (_CONTROL_SCRIPT, _BANDWIDTH_SCRIPT) are Python
 source embedded in strings and only ever executed inside the scaling
 recording — a syntax error or API drift there would first surface
 ~30 minutes into a driver bench run and void the round's artifact.
-Compile them at test time and smoke-run each with minimal work."""
+Compile them at test time and smoke-run each with minimal work; run the
+scaling job (_scaling_job) on a small table for each route it takes."""
 
 from __future__ import annotations
 
 import subprocess
 import sys
+
+import pytest
 
 
 def _bench():
@@ -62,3 +65,18 @@ def test_rotate_window_planner_consistency():
         if not any(s == "green" for s in hist.get(n, {}).values())
     ]
     assert all(order.index(n) < rw.WINDOW for n in never)
+
+
+@pytest.mark.parametrize("pairing", ["exact", "lsh"])
+def test_scaling_job_runs_each_route(spark, tmp_path, pairing):
+    """bench._scaling_job is otherwise first run inside a scaling
+    recording; run its exact and LSH routes on a small table."""
+    from deepblocker_spark.fixtures import repo_file_table
+
+    bench = _bench()
+    pdf, _ = repo_file_table(n_clusters=150, max_dups=5, seed=42)
+    path = str(tmp_path / "repo_files.parquet")
+    pdf.drop(columns=["_cluster"]).to_parquet(path)
+    res = bench._scaling_job(spark, path, limit=300, rows_hint=300, pairing=pairing)
+    assert res["pairing"] == pairing
+    assert res["pairs"] > 0

@@ -1,25 +1,47 @@
-"""Deduplication operators for large-scale training-data pipelines.
+"""Deduplication and text-join operators for training-data pipelines.
 
 No reference counterpart (the reference is dyadic blocking only); these are
-the first-class dedup primitives a 100 TB corpus pipeline needs:
+the dedup and blocking primitives a 100 TB corpus pipeline needs. Every
+text join follows ONE candidate-then-verify plan (the partition ->
+candidate -> verify shape of the MapReduce top-k and prefix-filter
+similarity joins):
 
-  * exact duplicates — sha2 hash -> groupBy: one partial+final hash agg.
-  * MinHash + LSH — JVM-side signatures: per permutation, the minimum of
-    md5(seed:token) over the distinct token set. Min of md5 *hex strings*
-    is used instead of min of derived integers: string min is engine-
-    portable (identical in Spark, DuckDB, anything ANSI), equally uniform,
-    and avoids 64-bit conversion quirks. Bands of signature values hash to
-    bucket keys; a self-join on the bucket key yields candidates which are
-    then verified with exact Jaccard. Everything before the verify join is
-    built-in Column expressions — no Python in the hot path.
-  * SimHash — 64-bit sign-sum fingerprint over token md5 bits (Arrow UDF;
-    no JVM bit-matrix primitive), near-dup = small Hamming distance.
-  * n-gram Jaccard — token-shingle inverted index self-join: explode
-    shingles -> join on shingle -> per-pair intersection counts -> Jaccard.
-    This is the scalable exact-similarity pattern (no cross join; work is
-    proportional to shared-shingle pairs).
+  1. postings — each row emits (key, id) rows: minhash band keys, rarest-
+     first shingle prefixes, PassJoin segments and probe substrings, or
+     shingles;
+  2. ``_candidate_pairs`` — equi-join the postings on the key and keep
+     the distinct (a, b) pairs; no cross join, so work is proportional to
+     shared-key pairs;
+  3. ``_verify_pairs`` — join each side's payload (token set, shingle set,
+     string or set size) to the candidates only, compute the exact measure
+     and filter on it.
 
-All emit deterministic, id-ordered pair tables (a < b).
+Pair contracts: self joins emit each unordered pair once with a < b;
+dyadic (two-table) joins emit ``a`` (``l_id`` for the edit join) from the
+left table and ``b`` (``r_id``) from the right, with no ordering between
+them and no within-table pairs.
+
+On the shared path: ``minhash_lsh_pairs`` / ``_dyadic`` (banded minhash
+candidates, exact Jaccard), ``prefix_jaccard_pairs`` / ``prefix_cosine_pairs``
+(AllPairs prefix filter, exact Jaccard / set cosine), ``edit_distance_pairs``
+/ ``_dyadic`` (PassJoin, exact levenshtein; the self join orders its own
+candidates) and ``ngram_jaccard_pairs`` (shared-shingle counts verified
+against set sizes). The same postings feed the joins that keep their own
+count- or carried-payload tails: ``decontamination_pairs`` /
+``bloom_decontamination_pairs`` (shingle containment), ``simhash_near_duplicates``
+(chunk keys, Hamming), ``key_blocking_pairs`` / ``_dyadic`` and
+``suffix_blocking_pairs`` (block keys) and ``sorted_neighborhood_pairs``.
+Every cap is auditable: ``purged_blocks`` / ``_dyadic``,
+``purged_suffix_blocks`` and ``hot_shingles`` list what it drops.
+Row-level primitives: ``exact_duplicates``, ``dedup_survivors``,
+``minhash_signature_cols`` / ``minhash_signatures``, ``token_shingles``,
+``simhash``, ``build_shingle_bloom`` and ``global_rank``.
+
+Minhash signatures are JVM-side: per permutation, the minimum of
+md5(seed:token) over the distinct token set. Min of md5 *hex strings* is
+used instead of min of derived integers: string min is engine-portable
+(identical in Spark, DuckDB, anything ANSI), equally uniform, and avoids
+64-bit conversion quirks.
 """
 
 from __future__ import annotations
@@ -51,6 +73,49 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
         .filter(F.col("group_size") >= 2)
     )
     return hashed.join(groups, "content_hash").select(id_col, "content_hash", "group_size")
+
+
+# ---------------------------------------------------------------------------
+# Candidate-then-verify: the one plan behind every text join
+# ---------------------------------------------------------------------------
+
+def _candidate_pairs(
+    lp: DataFrame,
+    rp: DataFrame,
+    on: str | list[str],
+    self_mode: bool,
+    where: Column | None = None,
+) -> DataFrame:
+    """Distinct (a, b) from an equi-join on ``on`` of two postings frames
+    whose id columns are ``a`` (lp) and ``b`` (rp). Self mode keeps a < b;
+    ``where`` filters the joined rows before the dedup."""
+    cand = lp.join(rp, on)
+    if self_mode:
+        cand = cand.filter(F.col("a") < F.col("b"))
+    if where is not None:
+        cand = cand.filter(where)
+    return cand.select("a", "b").dropDuplicates(["a", "b"])
+
+
+def _verify_pairs(
+    cand: DataFrame,
+    lv: DataFrame,
+    rv: DataFrame,
+    score: Callable[[Column, Column], Column],
+    name: str,
+    keep: Column,
+) -> DataFrame:
+    """-> (a, b, name): each candidate joined to its sides' (id, value)
+    payloads, scored as ``score(va, vb)`` and filtered on ``keep``. The
+    only stage that touches full payloads; ``score`` may also read other
+    ``cand`` columns."""
+    return (
+        cand.join(lv.toDF("a", "_va"), "a")
+        .join(rv.toDF("b", "_vb"), "b")
+        .withColumn(name, score(F.col("_va"), F.col("_vb")))
+        .filter(keep)
+        .select("a", "b", name)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -89,33 +154,41 @@ def _minhash_base(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def _band_keys(num_hashes: int, n_bands: int) -> Column:
+    """array<struct<band, key>> over columns mh0..mh{num_hashes-1}: each
+    key is the md5 of its band's '|'-joined signature rows. The one band-
+    key expression of the batch LSH joins and the streaming near-dup
+    operator; rejects a band count that does not split the signature."""
+    if n_bands < 1 or num_hashes % n_bands:
+        raise ValueError(
+            f"n_bands must be >= 1 and divide num_hashes={num_hashes}, "
+            f"got {n_bands}"
+        )
+    rows = num_hashes // n_bands
+    return F.array(*[
+        F.struct(
+            F.lit(b).alias("band"),
+            F.md5(F.concat_ws(
+                "|", *[F.col(f"mh{b * rows + r}") for r in range(rows)]
+            )).alias("key"),
+        )
+        for b in range(n_bands)
+    ])
+
+
 def _banded_keys(base: DataFrame, num_hashes: int, n_bands: int) -> DataFrame:
-    """(id, band, key): md5 of each band's signature rows — shared by the
-    self and clean-clean LSH joins."""
-    rows_per_band = num_hashes // n_bands
+    """(id, band, key): one posting per band of each row's signature."""
+    keys = _band_keys(num_hashes, n_bands)
     sig = base.select("id", *minhash_signature_cols(F.col("toks"), num_hashes))
-    return sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.col(f"mh{b * rows_per_band + r}")
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("key"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("id", "bk.band", "bk.key")
+    return sig.select("id", F.explode(keys).alias("bk")).select(
+        "id", "bk.band", "bk.key"
+    )
+
+
+def _jaccard(x: Column, y: Column) -> Column:
+    """Jaccard of two distinct-element arrays."""
+    inter = F.size(F.array_intersect(x, y))
+    return inter / (F.size(x) + F.size(y) - inter)
 
 
 def minhash_lsh_pairs(
@@ -132,35 +205,17 @@ def minhash_lsh_pairs(
     Plan shape: signatures (narrow) -> explode to (id, band, key) ->
     self-equi-join on (band, key) -> distinct pairs -> verify join pulling
     both token sets -> Jaccard filter. The verify join is the only stage
-    touching full token arrays.
+    touching full token arrays. Raises ValueError unless ``n_bands`` >= 1
+    divides ``num_hashes``.
     """
-    assert num_hashes % n_bands == 0
     base = _minhash_base(df, id_col, text_col)
-    band_keys = _banded_keys(base, num_hashes, n_bands)
-
-    l = band_keys.select(F.col("id").alias("a"), "band", "key")
-    r = band_keys.select(F.col("id").alias("b"), "band", "key")
-    cand = (
-        l.join(r, ["band", "key"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .dropDuplicates()
+    keys = _banded_keys(base, num_hashes, n_bands)
+    cand = _candidate_pairs(
+        keys.withColumnRenamed("id", "a"), keys.withColumnRenamed("id", "b"),
+        ["band", "key"], self_mode=True,
     )
-    ta = base.select(F.col("id").alias("a"), F.col("toks").alias("toks_a"))
-    tb = base.select(F.col("id").alias("b"), F.col("toks").alias("toks_b"))
-    verified = (
-        cand.join(ta, "a")
-        .join(tb, "b")
-        .withColumn("inter", F.size(F.array_intersect("toks_a", "toks_b")))
-        .withColumn(
-            "jaccard",
-            F.col("inter")
-            / (F.size("toks_a") + F.size("toks_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("a", "b", "jaccard")
-    )
-    return verified
+    return _verify_pairs(cand, base, base, _jaccard, "jaccard",
+                         F.col("jaccard") >= jaccard_threshold)
 
 
 def minhash_lsh_pairs_dyadic(
@@ -181,30 +236,15 @@ def minhash_lsh_pairs_dyadic(
     threshold; candidates from a CROSS-side equi-join on (band, key), so
     within-corpus pairs never materialize. Same plan shape as the self
     variant; one signature pass per side."""
-    assert num_hashes % n_bands == 0
     bl = _minhash_base(left, l_id, l_text)
     br = _minhash_base(right, r_id, r_text)
-    kl = _banded_keys(bl, num_hashes, n_bands).select(
-        F.col("id").alias("a"), "band", "key"
+    cand = _candidate_pairs(
+        _banded_keys(bl, num_hashes, n_bands).withColumnRenamed("id", "a"),
+        _banded_keys(br, num_hashes, n_bands).withColumnRenamed("id", "b"),
+        ["band", "key"], self_mode=False,
     )
-    kr = _banded_keys(br, num_hashes, n_bands).select(
-        F.col("id").alias("b"), "band", "key"
-    )
-    cand = kl.join(kr, ["band", "key"]).select("a", "b").dropDuplicates()
-    ta = bl.select(F.col("id").alias("a"), F.col("toks").alias("toks_a"))
-    tb = br.select(F.col("id").alias("b"), F.col("toks").alias("toks_b"))
-    return (
-        cand.join(ta, "a")
-        .join(tb, "b")
-        .withColumn("inter", F.size(F.array_intersect("toks_a", "toks_b")))
-        .withColumn(
-            "jaccard",
-            F.col("inter")
-            / (F.size("toks_a") + F.size("toks_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("a", "b", "jaccard")
-    )
+    return _verify_pairs(cand, bl, br, _jaccard, "jaccard",
+                         F.col("jaccard") >= jaccard_threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -224,6 +264,43 @@ def token_shingles(tokens: Column, n: int) -> Column:
     return F.when(F.size(tokens) >= n, F.array_distinct(grams)).otherwise(empty)
 
 
+def _shingle_postings(
+    df: DataFrame, id_col: str, text_col: str, n: int
+) -> tuple[DataFrame, DataFrame]:
+    """(sets, postings) of the rows with any n-gram shingle: sets is
+    (id, shingles, n_sh), postings (id, n_sh, shingle) one row per
+    distinct shingle — the inverted index every shingle join builds on."""
+    sets = (
+        df.select(
+            F.col(id_col).alias("id"),
+            token_shingles(tokens_col(text_col), n).alias("shingles"),
+        )
+        .filter(F.size("shingles") > 0)
+        .withColumn("n_sh", F.size("shingles"))
+    )
+    return sets, sets.select("id", "n_sh", F.explode("shingles").alias("shingle"))
+
+
+def _hot_shingles(inv: DataFrame, max_df: int) -> DataFrame:
+    """(shingle, doc_freq) for postings' shingles in more than ``max_df``
+    rows — the stop-list of the capped shingle joins."""
+    return (
+        inv.groupBy("shingle")
+        .agg(F.count("*").alias("doc_freq"))
+        .filter(F.col("doc_freq") > max_df)
+    )
+
+
+def _drop_hot(
+    inv: DataFrame, max_df: int, *also: DataFrame
+) -> tuple[DataFrame, ...]:
+    """``inv`` and ``also`` without the shingles hot in ``inv`` (more than
+    ``max_df`` postings); the stop-list is tiny by construction, so each
+    drop is a broadcast anti-join."""
+    hot = F.broadcast(_hot_shingles(inv, max_df).select("shingle"))
+    return tuple(p.join(hot, "shingle", "left_anti") for p in (inv, *also))
+
+
 def hot_shingles(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -234,17 +311,7 @@ def hot_shingles(
     """-> (shingle, doc_freq) for shingles appearing in more than
     ``max_shingle_df`` documents — the stop-list ``ngram_jaccard_pairs``
     drops, exposed so callers can audit exactly what was excluded."""
-    toks = tokens_col(text_col)
-    inv = (
-        df.select(F.col(id_col).alias("id"), token_shingles(toks, n).alias("shingles"))
-        .filter(F.size("shingles") > 0)
-        .select("id", F.explode("shingles").alias("shingle"))
-    )
-    return (
-        inv.groupBy("shingle")
-        .agg(F.count("*").alias("doc_freq"))
-        .filter(F.col("doc_freq") > max_shingle_df)
-    )
+    return _hot_shingles(_shingle_postings(df, id_col, text_col, n)[1], max_shingle_df)
 
 
 def ngram_jaccard_pairs(
@@ -266,40 +333,27 @@ def ngram_jaccard_pairs(
     consistent (both intersection and per-doc sizes are computed over the
     reduced shingle space), so jaccard remains a true Jaccard over the
     non-boilerplate shingles; use ``hot_shingles`` with the same cap to see
-    exactly which shingles were excluded. None = no stop-list."""
-    toks = tokens_col(text_col)
-    sh = df.select(
-        F.col(id_col).alias("id"), token_shingles(toks, n).alias("shingles")
-    ).filter(F.size("shingles") > 0)
-    inv = sh.select("id", F.explode("shingles").alias("shingle"))
+    exactly which shingles were excluded. None = no stop-list.
+
+    The verify step reads only the per-pair shared-shingle count and the
+    two set sizes, so its payloads are sizes, not shingle arrays."""
+    sh, inv = _shingle_postings(df, id_col, text_col, n)
     if max_shingle_df is not None:
-        hot = (
-            inv.groupBy("shingle")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") > max_shingle_df)
-            .select("shingle")
-        )
-        # the stop-list is tiny by construction — broadcast anti-join
-        inv = inv.join(F.broadcast(hot), "shingle", "left_anti")
+        (inv,) = _drop_hot(inv, max_shingle_df)
         sizes = inv.groupBy("id").agg(F.count("*").alias("n_sh"))
     else:
-        sizes = sh.select("id", F.size("shingles").alias("n_sh"))
-    l = inv.select(F.col("id").alias("a"), "shingle")
-    r = inv.select(F.col("id").alias("b"), "shingle")
+        sizes = sh.select("id", "n_sh")
     pair_inter = (
-        l.join(r, "shingle")
+        inv.select(F.col("id").alias("a"), "shingle")
+        .join(inv.select(F.col("id").alias("b"), "shingle"), "shingle")
         .filter(F.col("a") < F.col("b"))
         .groupBy("a", "b")
         .agg(F.count("*").alias("inter"))
     )
-    sa = sizes.select(F.col("id").alias("a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("id").alias("b"), F.col("n_sh").alias("nb"))
-    return (
-        pair_inter.join(sa, "a")
-        .join(sb, "b")
-        .withColumn("jaccard", F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
+    return _verify_pairs(
+        pair_inter, sizes, sizes,
+        lambda na, nb: F.col("inter") / (na + nb - F.col("inter")),
+        "jaccard", F.col("jaccard") >= threshold,
     )
 
 
@@ -375,24 +429,14 @@ def _decontam_postings(
 ) -> tuple[DataFrame, DataFrame]:
     """Shingle inverted indexes for both sides, with the train-side hot
     cap applied to BOTH (shared by the exact and bloom-pruned variants)."""
-    def _inv(df: DataFrame, alias: str) -> DataFrame:
-        sh = df.select(
-            F.col(id_col).alias(alias),
-            token_shingles(tokens_col(text_col), n).alias("shingles"),
-        ).filter(F.size("shingles") > 0)
-        return sh.select(alias, F.explode("shingles").alias("shingle"))
-
-    t_inv = _inv(train, "train_id")
-    e_inv = _inv(eval_df, "eval_id")
-    if max_train_shingle_df is not None:
-        hot = (
-            t_inv.groupBy("shingle")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") > max_train_shingle_df)
-            .select("shingle")
+    t_inv, e_inv = (
+        _shingle_postings(d, id_col, text_col, n)[1].select(
+            F.col("id").alias(alias), "shingle"
         )
-        t_inv = t_inv.join(F.broadcast(hot), "shingle", "left_anti")
-        e_inv = e_inv.join(F.broadcast(hot), "shingle", "left_anti")
+        for d, alias in ((train, "train_id"), (eval_df, "eval_id"))
+    )
+    if max_train_shingle_df is not None:
+        t_inv, e_inv = _drop_hot(t_inv, max_train_shingle_df, e_inv)
     return t_inv, e_inv
 
 
@@ -568,51 +612,8 @@ def prefix_jaccard_pairs(
     Unlike ``max_shingle_df``'s stop-list (a documented approximation for
     LOW thresholds, where prefixes are nearly the whole set), this is
     exact; prefer it whenever threshold >= ~0.5."""
-    toks = tokens_col(text_col)
-    sh = df.select(
-        F.col(id_col).alias("id"), token_shingles(toks, n).alias("shingles")
-    ).filter(F.size("shingles") > 0)
-    sh = sh.withColumn("n_sh", F.size("shingles"))
-    inv = sh.select("id", "n_sh", F.explode("shingles").alias("shingle"))
-    freq = inv.groupBy("shingle").agg(F.count("*").alias("_df"))
-    w_doc = Window.partitionBy("id").orderBy(
-        F.col("_df").asc(), F.col("shingle").asc()
-    )
-    prefix_len = (
-        F.col("n_sh") - F.ceil(F.lit(float(threshold)) * F.col("n_sh")) + 1
-    )
-    prefix = (
-        inv.join(freq, "shingle")
-        .withColumn("_rn", F.row_number().over(w_doc))
-        .filter(F.col("_rn") <= prefix_len)
-        .select("id", "n_sh", "shingle")
-    )
-    l = prefix.select(F.col("id").alias("a"), F.col("n_sh").alias("na"), "shingle")
-    r = prefix.select(F.col("id").alias("b"), F.col("n_sh").alias("nb"), "shingle")
-    cand = (
-        l.join(r, "shingle")
-        .filter(F.col("a") < F.col("b"))
-        .filter(
-            (F.col("na") >= F.ceil(F.lit(float(threshold)) * F.col("nb")))
-            & (F.col("nb") >= F.ceil(F.lit(float(threshold)) * F.col("na")))
-        )
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
-    )
-    sa = sh.select(F.col("id").alias("a"), F.col("shingles").alias("_sha"))
-    sb = sh.select(F.col("id").alias("b"), F.col("shingles").alias("_shb"))
-    return (
-        cand.join(sa, "a")
-        .join(sb, "b")
-        .withColumn("inter", F.size(F.array_intersect("_sha", "_shb")))
-        .withColumn(
-            "jaccard",
-            F.col("inter")
-            / (F.size("_sha") + F.size("_shb") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
+    return _prefix_pairs(df, id_col, text_col, n, threshold, float(threshold),
+                         _jaccard, "jaccard")
 
 
 def prefix_cosine_pairs(
@@ -652,49 +653,53 @@ def prefix_cosine_pairs(
     lists. Verification is one JVM ``array_intersect`` per surviving
     candidate. Same 100 TB shape as the Jaccard variant: no N², no
     stop-list approximation."""
-    toks = tokens_col(text_col)
-    sh = df.select(
-        F.col(id_col).alias("id"), token_shingles(toks, n).alias("shingles")
-    ).filter(F.size("shingles") > 0)
-    sh = sh.withColumn("n_sh", F.size("shingles"))
-    inv = sh.select("id", "n_sh", F.explode("shingles").alias("shingle"))
+    return _prefix_pairs(
+        df, id_col, text_col, n, threshold,
+        float(threshold) * float(threshold),
+        lambda x, y: F.size(F.array_intersect(x, y)) / F.sqrt(F.size(x) * F.size(y)),
+        "cosine",
+    )
+
+
+def _prefix_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    threshold: float,
+    bound: float,
+    measure: Callable[[Column, Column], Column],
+    name: str,
+) -> DataFrame:
+    """Prefix-filter self-join shared by the Jaccard (``bound`` t) and set-
+    cosine (``bound`` t²) variants: each doc indexes its first
+    |d| - ceil(bound·|d|) + 1 shingles in the global rarity order, pairs
+    must pass the length filter |a| >= ceil(bound·|b|) both ways, and
+    survivors are verified as ``measure`` >= threshold. A threshold <= 0
+    would admit pairs sharing no shingle, which no inverted index finds,
+    so it is rejected."""
+    if threshold <= 0:
+        raise ValueError(f"threshold must be > 0, got {threshold}")
+    sh, inv = _shingle_postings(df, id_col, text_col, n)
     freq = inv.groupBy("shingle").agg(F.count("*").alias("_df"))
     w_doc = Window.partitionBy("id").orderBy(
         F.col("_df").asc(), F.col("shingle").asc()
     )
-    t2 = float(threshold) * float(threshold)
-    prefix_len = F.col("n_sh") - F.ceil(F.lit(t2) * F.col("n_sh")) + 1
+    prefix_len = F.col("n_sh") - F.ceil(F.lit(bound) * F.col("n_sh")) + 1
     prefix = (
         inv.join(freq, "shingle")
         .withColumn("_rn", F.row_number().over(w_doc))
         .filter(F.col("_rn") <= prefix_len)
-        .select("id", "n_sh", "shingle")
     )
-    l = prefix.select(F.col("id").alias("a"), F.col("n_sh").alias("na"), "shingle")
-    r = prefix.select(F.col("id").alias("b"), F.col("n_sh").alias("nb"), "shingle")
-    cand = (
-        l.join(r, "shingle")
-        .filter(F.col("a") < F.col("b"))
-        .filter(
-            (F.col("na") >= F.ceil(F.lit(t2) * F.col("nb")))
-            & (F.col("nb") >= F.ceil(F.lit(t2) * F.col("na")))
-        )
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
+    cand = _candidate_pairs(
+        prefix.select(F.col("id").alias("a"), F.col("n_sh").alias("na"), "shingle"),
+        prefix.select(F.col("id").alias("b"), F.col("n_sh").alias("nb"), "shingle"),
+        "shingle", self_mode=True,
+        where=(F.col("na") >= F.ceil(F.lit(bound) * F.col("nb")))
+        & (F.col("nb") >= F.ceil(F.lit(bound) * F.col("na"))),
     )
-    sa = sh.select(F.col("id").alias("a"), F.col("shingles").alias("_sha"))
-    sb = sh.select(F.col("id").alias("b"), F.col("shingles").alias("_shb"))
-    return (
-        cand.join(sa, "a")
-        .join(sb, "b")
-        .withColumn("inter", F.size(F.array_intersect("_sha", "_shb")))
-        .withColumn(
-            "cosine",
-            F.col("inter") / F.sqrt(F.size("_sha") * F.size("_shb")),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("a", "b", "cosine")
-    )
+    sets = sh.select("id", "shingles")
+    return _verify_pairs(cand, sets, sets, measure, name, F.col(name) >= threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -748,45 +753,47 @@ def edit_distance_pairs(
     relative to d (segments of >= 2-3 chars stay selective); for very
     short strings prefer ``key_blocking_pairs`` on an exact or phonetic
     key. Output is deterministic: a < b, one row per pair."""
+    return _passjoin(_strings(df, id_col, text_col), None, max_dist)
+
+
+def _strings(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, s): the non-null string values of ``text_col``."""
+    return df.select(
+        F.col(id_col).alias("id"), F.col(text_col).cast("string").alias("s")
+    ).filter(F.col("s").isNotNull())
+
+
+def _passjoin(sl: DataFrame, sr: DataFrame | None, max_dist: int) -> DataFrame:
+    """-> (a, b, dist): the PassJoin over (id, s) frames — self mode when
+    ``sr`` is None (a < b), else ``sl`` x ``sr`` with a from ``sl``.
+
+    Index postings: the d+1 segments of each indexed string, keyed
+    (i, l, seg). Probe keys: for each indexable length l and slot i, the
+    probing string's substrings of the segment's length inside the shift-
+    bounded window. Self mode probes only l <= m and lets the longer
+    string of each pair probe the shorter one's postings, so its
+    candidate step orders each pair itself rather than probing both
+    length directions."""
     if max_dist < 0:
         raise ValueError(f"max_dist must be >= 0, got {max_dist}")
     d = int(max_dist)
-    s = df.select(
-        F.col(id_col).alias("id"),
-        F.col(text_col).cast("string").alias("s"),
-    ).filter(F.col("s").isNotNull())
-
-    # Index postings: the d+1 segments of this string, keyed (i, l, seg).
-    # Probe keys: for each shorter-or-equal indexed length l and slot i,
-    # this string's substrings of the segment's length inside the shift-
-    # bounded window.
-    # (Inside `_passjoin_probe`: sequence(a, b) descends when a > b, so an
-    # empty window is expressed as "walk the hull, keep t0 in [a, b]"
-    # rather than a negative-step sequence.)
-    index = _passjoin_index(s, d, "b_id")
+    hi = "length(s)" if sr is None else f"length(s) + {d}"
     probe = _passjoin_probe(
-        s, d, "a_id",
-        lengths=f"sequence(greatest(0, length(s) - {d}), length(s))",
+        sl, d, "a", lengths=f"sequence(greatest(0, length(s) - {d}), {hi})"
     )
-
-    cand = (
-        probe.join(index, ["i", "l", "seg"])
-        .filter(F.col("a_id") != F.col("b_id"))
-        .select(
-            F.least("a_id", "b_id").alias("a"),
-            F.greatest("a_id", "b_id").alias("b"),
+    if sr is None:
+        sr = sl
+        cand = (
+            probe.join(_passjoin_index(sl, d, "b"), ["i", "l", "seg"])
+            .filter(F.col("a") != F.col("b"))
+            .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
+            .dropDuplicates(["a", "b"])
         )
-        .dropDuplicates(["a", "b"])
-    )
-    ta = s.select(F.col("id").alias("a"), F.col("s").alias("_ta"))
-    tb = s.select(F.col("id").alias("b"), F.col("s").alias("_tb"))
-    return (
-        cand.join(ta, "a")
-        .join(tb, "b")
-        .withColumn("dist", F.levenshtein("_ta", "_tb"))
-        .filter(F.col("dist") <= d)
-        .select("a", "b", "dist")
-    )
+    else:
+        cand = _candidate_pairs(
+            probe, _passjoin_index(sr, d, "b"), ["i", "l", "seg"], self_mode=False
+        )
+    return _verify_pairs(cand, sl, sr, F.levenshtein, "dist", F.col("dist") <= d)
 
 
 def _passjoin_index(s: DataFrame, d: int, id_alias: str) -> DataFrame:
@@ -823,6 +830,8 @@ def _passjoin_probe(s: DataFrame, d: int, id_alias: str,
     slack = f"(({d} - abs({de})) div 2)"
     lo = f"greatest(0, ({pi}) + least(0, {de}) - {slack})"
     hi = f"least(length(s) - ({li}), ({pi}) + greatest(0, {de}) + {slack})"
+    # sequence(a, b) descends when a > b, so an empty window is expressed
+    # as "walk the hull, keep t0 in [lo, hi]" rather than a negative step
     probe_expr = (
         f"flatten(flatten(transform({lengths}, l -> "
         f"transform(sequence(0, {d}), i -> "
@@ -853,35 +862,9 @@ def edit_distance_pairs_dyadic(
     length skew must probe). Zero-length segments keep the join lossless
     when strings are shorter than d+1 — their empty-substring postings
     match at the (slot, l) key."""
-    if max_dist < 0:
-        raise ValueError(f"max_dist must be >= 0, got {max_dist}")
-    d = int(max_dist)
-
-    def _strings(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias("id"), F.col(text_col).cast("string").alias("s")
-        ).filter(F.col("s").isNotNull())
-
-    sl, sr = _strings(left), _strings(right)
-    index = _passjoin_index(sr, d, "r_id")
-    probe = _passjoin_probe(
-        sl, d, "l_id",
-        lengths=f"sequence(greatest(0, length(s) - {d}), length(s) + {d})",
-    )
-    cand = (
-        probe.join(index, ["i", "l", "seg"])
-        .select("l_id", "r_id")
-        .dropDuplicates(["l_id", "r_id"])
-    )
-    tl = sl.select(F.col("id").alias("l_id"), F.col("s").alias("_tl"))
-    tr = sr.select(F.col("id").alias("r_id"), F.col("s").alias("_tr"))
-    return (
-        cand.join(tl, "l_id")
-        .join(tr, "r_id")
-        .withColumn("dist", F.levenshtein("_tl", "_tr"))
-        .filter(F.col("dist") <= d)
-        .select("l_id", "r_id", "dist")
-    )
+    return _passjoin(
+        _strings(left, id_col, text_col), _strings(right, id_col, text_col), max_dist
+    ).select(F.col("a").alias("l_id"), F.col("b").alias("r_id"), "dist")
 
 
 # ---------------------------------------------------------------------------
@@ -1017,17 +1000,39 @@ def key_blocking_pairs(
     max_block_rows * rows. The drop is never silent: ``purged_blocks`` with
     the same arguments lists exactly the (key, block_size) groups excluded
     here, mirroring ``hot_shingles`` / LSH ``bucket_stats`` (VERDICT r3 #4)."""
-    keyed = df.select(F.col(id_col).alias("_bid"), *key_cols)
-    sizes = keyed.groupBy(*key_cols).agg(F.count("*").alias("block_size"))
+    keyed = df.select(F.col(id_col).alias("a"), *key_cols)
+    return _block_pairs(keyed, None, key_cols, max_block_rows)
+
+
+def _block_sizes(
+    key_cols: list[str], left: DataFrame, right: DataFrame | None = None
+) -> DataFrame:
+    """(key_cols..., block_size): rows per key; with ``right``, the joint
+    size nl + nr over the keys present on both sides."""
+    if right is None:
+        return left.groupBy(*key_cols).agg(F.count("*").alias("block_size"))
+    sl = left.groupBy(*key_cols).agg(F.count("*").alias("_nl"))
+    sr = right.groupBy(*key_cols).agg(F.count("*").alias("_nr"))
+    return sl.join(sr, list(key_cols)).select(
+        *key_cols, (F.col("_nl") + F.col("_nr")).alias("block_size")
+    )
+
+
+def _block_pairs(
+    kl: DataFrame, kr: DataFrame | None, key_cols: list[str], max_block_rows: int | None
+) -> DataFrame:
+    """(a, b, key_cols..., block_size) under key equality of two
+    (a, key_cols...) frames: self mode (a < b) when ``kr`` is None, else
+    a from kl and b from kr; blocks over ``max_block_rows`` are purged
+    before pair generation."""
+    sizes = _block_sizes(key_cols, kl, kr)
     if max_block_rows is not None:
         sizes = sizes.filter(F.col("block_size") <= max_block_rows)
-    l = keyed.select(F.col("_bid").alias("a"), *key_cols)
-    r = keyed.select(F.col("_bid").alias("b"), *key_cols)
-    return (
-        l.join(r, list(key_cols))
-        .filter(F.col("a") < F.col("b"))
-        .join(sizes, list(key_cols))
-        .select("a", "b", *key_cols, F.col("block_size").cast("long").alias("block_size"))
+    pairs = kl.join((kl if kr is None else kr).withColumnRenamed("a", "b"), list(key_cols))
+    if kr is None:
+        pairs = pairs.filter(F.col("a") < F.col("b"))
+    return pairs.join(sizes, list(key_cols)).select(
+        "a", "b", *key_cols, F.col("block_size").cast("long").alias("block_size")
     )
 
 
@@ -1045,20 +1050,10 @@ def key_blocking_pairs_dyadic(
     key on the left + right). ``max_block_rows`` purges oversized JOINT
     blocks before pair generation, audited by ``purged_blocks_dyadic``
     (never silent). One co-partitioned equi-join on the key."""
-    kl = left.select(F.col(l_id).alias("a"), *key_cols)
-    kr = right.select(F.col(r_id).alias("b"), *key_cols)
-    sl = kl.groupBy(*key_cols).agg(F.count("*").alias("_nl"))
-    sr = kr.groupBy(*key_cols).agg(F.count("*").alias("_nr"))
-    sizes = sl.join(sr, list(key_cols)).select(
-        *key_cols, (F.col("_nl") + F.col("_nr")).alias("block_size")
-    )
-    if max_block_rows is not None:
-        sizes = sizes.filter(F.col("block_size") <= max_block_rows)
-    return (
-        kl.join(kr, list(key_cols))
-        .join(sizes, list(key_cols))
-        .select("a", "b", *key_cols,
-                F.col("block_size").cast("long").alias("block_size"))
+    return _block_pairs(
+        left.select(F.col(l_id).alias("a"), *key_cols),
+        right.select(F.col(r_id).alias("a"), *key_cols),
+        key_cols, max_block_rows,
     )
 
 
@@ -1071,13 +1066,8 @@ def purged_blocks_dyadic(
     """(key_cols..., block_size) joint blocks the dyadic purge EXCLUDES —
     the audit companion of ``key_blocking_pairs_dyadic`` (no silent
     caps)."""
-    sl = left.groupBy(*key_cols).agg(F.count("*").alias("_nl"))
-    sr = right.groupBy(*key_cols).agg(F.count("*").alias("_nr"))
-    return (
-        sl.join(sr, list(key_cols))
-        .select(*key_cols, (F.col("_nl") + F.col("_nr")).alias("block_size"))
-        .filter(F.col("block_size") > max_block_rows)
-        .select(*key_cols, F.col("block_size").cast("long").alias("block_size"))
+    return _block_sizes(key_cols, left, right).filter(
+        F.col("block_size") > max_block_rows
     )
 
 
@@ -1093,11 +1083,8 @@ def purged_blocks(
     explicit, monitorable exclusion rather than a silent drop. One hash
     aggregation on the key; at scale this is the report a blocking pipeline
     logs per run (count + worst offenders) before pair generation."""
-    return (
-        df.select(*key_cols)
-        .groupBy(*key_cols)
-        .agg(F.count("*").cast("long").alias("block_size"))
-        .filter(F.col("block_size") > max_block_rows)
+    return _block_sizes(key_cols, df.select(*key_cols)).filter(
+        F.col("block_size") > max_block_rows
     )
 
 
@@ -1196,16 +1183,22 @@ def sorted_neighborhood_pairs(
 # Suffix-array blocking
 # ---------------------------------------------------------------------------
 
-def _suffixes_expr(key: str, min_len: int) -> str:
-    """SQL fragment: all suffixes of ``key`` with length >= min_len (empty
-    array for shorter keys — sequence() descends when start > stop, so the
-    short-key case must be gated explicitly)."""
-    return (
+def _suffixes(key: str, min_len: int) -> Column:
+    """One row per suffix of ``key`` with length >= min_len, as column
+    ``suffix`` (none for shorter keys — sequence() descends when start >
+    stop, so the short-key case must be gated explicitly)."""
+    min_len = int(min_len)
+    return F.explode(F.expr(
         f"if(length({key}) >= {min_len}, "
         f"transform(sequence({min_len}, length({key})), "
         f"n -> substring({key}, length({key}) - n + 1, n)), "
         f"cast(array() as array<string>))"
-    )
+    )).alias("suffix")
+
+
+def _suffix_sizes(suff: DataFrame) -> DataFrame:
+    """(suffix, block_size): rows per suffix block."""
+    return suff.groupBy("suffix").agg(F.count("*").alias("block_size"))
 
 
 def suffix_blocking_pairs(
@@ -1235,24 +1228,12 @@ def suffix_blocking_pairs(
     + 1 postings per row) -> optional anti-join-free size filter (hash agg
     + join on suffix) -> self-equi-join on suffix -> per-pair max via one
     hash agg. No Python, no cartesian, no window over a global sort."""
-    suff = df.select(
-        F.col(id_col).alias("_sid"),
-        F.explode(F.expr(_suffixes_expr(key_col, int(min_suffix_len)))).alias(
-            "suffix"
-        ),
-    )
+    suff = df.select(F.col(id_col).alias("a"), _suffixes(key_col, min_suffix_len))
     if max_block_rows is not None:
-        sizes = (
-            suff.groupBy("suffix")
-            .agg(F.count("*").alias("_bs"))
-            .filter(F.col("_bs") <= max_block_rows)
-            .select("suffix")
-        )
-        suff = suff.join(sizes, "suffix")
-    l = suff.select(F.col("_sid").alias("a"), "suffix")
-    r = suff.select(F.col("_sid").alias("b"), "suffix")
+        kept = _suffix_sizes(suff).filter(F.col("block_size") <= max_block_rows)
+        suff = suff.join(kept.select("suffix"), "suffix")
     return (
-        l.join(r, "suffix")
+        suff.join(suff.withColumnRenamed("a", "b"), "suffix")
         .filter(F.col("a") < F.col("b"))
         .groupBy("a", "b")
         .agg(
@@ -1274,14 +1255,5 @@ def purged_suffix_blocks(
     """-> (suffix, block_size): the suffix blocks ``suffix_blocking_pairs``
     with the same arguments EXCLUDES from pair generation — the audit
     companion (no silent caps; mirrors ``purged_blocks``)."""
-    suff = df.select(
-        F.explode(F.expr(_suffixes_expr(key_col, int(min_suffix_len)))).alias(
-            "suffix"
-        )
-    )
-    return (
-        suff.groupBy("suffix")
-        .agg(F.count("*").alias("block_size"))
-        .filter(F.col("block_size") > max_block_rows)
-        .select("suffix", F.col("block_size").cast("long").alias("block_size"))
-    )
+    suff = df.select(_suffixes(key_col, min_suffix_len))
+    return _suffix_sizes(suff).filter(F.col("block_size") > max_block_rows)

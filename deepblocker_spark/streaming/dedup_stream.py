@@ -201,37 +201,18 @@ def streaming_minhash_neardup(
     )
 
     from deepblocker_spark.functions.tokenizer import tokens_col
-    from deepblocker_spark.operators.dedup import minhash_signature_cols
+    from deepblocker_spark.operators.dedup import _band_keys, minhash_signature_cols
 
-    assert num_hashes % n_bands == 0
-    rows_per_band = num_hashes // n_bands
-
+    band_keys = _band_keys(num_hashes, n_bands)
     toks = tokens_col(text_col)
     sigs = stream.select(
         F.col(id_col).cast("string").alias("_id"),
         *minhash_signature_cols(toks, num_hashes),
     ).filter(F.col("mh0").isNotNull())
     sig_str = F.concat_ws("|", *[F.col(f"mh{i}") for i in range(num_hashes)])
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.col(f"mh{i}")
-                            for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                        ],
-                    )
-                ).alias("key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
     banded = (
         sigs.withColumn("_sig", sig_str)
-        .withColumn("_bk", F.explode(band_structs))
+        .withColumn("_bk", F.explode(band_keys))
         .select("_id", "_sig", F.col("_bk.band").alias("band"), F.col("_bk.key").alias("key"))
     )
 

@@ -29,6 +29,29 @@ def _docs(spark):
     )
 
 
+@pytest.mark.parametrize("n_bands", [0, 3])
+@pytest.mark.parametrize("caller", ["self", "dyadic", "streaming"])
+def test_minhash_band_count_must_divide_num_hashes(spark, caller, n_bands):
+    # 16 hashes in 3 bands would band only 15 of them; 0 bands divides by
+    # zero. Every banded-minhash entry point rejects both up front, with a
+    # check that `python -O` cannot strip.
+    from deepblocker_spark.operators.dedup import minhash_lsh_pairs_dyadic
+    from deepblocker_spark.streaming.dedup_stream import streaming_minhash_neardup
+
+    df = _docs(spark)
+    call = {
+        "self": lambda: minhash_lsh_pairs(df, num_hashes=16, n_bands=n_bands),
+        "dyadic": lambda: minhash_lsh_pairs_dyadic(
+            df, df, num_hashes=16, n_bands=n_bands
+        ),
+        "streaming": lambda: streaming_minhash_neardup(
+            df, num_hashes=16, n_bands=n_bands
+        ),
+    }[caller]
+    with pytest.raises(ValueError, match="n_bands"):
+        call()
+
+
 def test_exact_duplicates(spark):
     out = exact_duplicates(_docs(spark)).toPandas()
     assert set(out["doc_id"]) == {0, 1}

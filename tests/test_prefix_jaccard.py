@@ -7,10 +7,12 @@ from __future__ import annotations
 import itertools
 
 import numpy as np
+import pytest
 
 from deepblocker_spark.functions.tokenizer import basic_english_tokenize
 from deepblocker_spark.operators.dedup import (
     ngram_jaccard_pairs,
+    prefix_cosine_pairs,
     prefix_jaccard_pairs,
 )
 
@@ -88,6 +90,17 @@ def test_prefix_short_docs_yield_no_shingles(spark):
 def test_prefix_empty_result(spark):
     df = _docs(spark, ["a b c d e", "v w x y z"])
     assert prefix_jaccard_pairs(df, n=2, threshold=0.5).count() == 0
+
+@pytest.mark.parametrize("threshold", [0.0, -0.5])
+@pytest.mark.parametrize("join", [prefix_jaccard_pairs, prefix_cosine_pairs])
+def test_prefix_rejects_non_positive_threshold(spark, join, threshold):
+    # at t <= 0 every pair qualifies, including pairs sharing no shingle,
+    # which no inverted-index candidate join can find: doc 2 shares nothing
+    # with docs 0 and 1, so an answer of only (0, 1) would not be exact
+    df = _docs(spark, ["a b c d", "a b c e", "v w x y z"])
+    with pytest.raises(ValueError, match="threshold"):
+        join(df, n=2, threshold=threshold)
+
 
 # ---------------------------------------------------------------------------
 # set-cosine variant (prefix_cosine_pairs): same losslessness contract,

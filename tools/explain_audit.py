@@ -277,11 +277,11 @@ def main() -> None:
     # generators are JVM sequence/transform/substring expression chains (no
     # Python runner nodes), candidate generation is one equi-join on
     # (slot, length, segment), verification is codegen levenshtein on the
-    # deduplicated candidates — no cartesian product anywhere, scan pruned
-    # to (p_partkey, p_name).
+    # deduplicated candidates — no cartesian product or nested-loop join
+    # anywhere, scan pruned to (p_partkey, p_name).
     audits["edit_join"] = (
-        ["!CartesianProduct", "!BatchEvalPython", "!MapInPandas",
-         "!ArrowEvalPython", "HashAggregate",
+        ["!CartesianProduct", "!BroadcastNestedLoopJoin", "!BatchEvalPython",
+         "!MapInPandas", "!ArrowEvalPython", "HashAggregate",
          "ReadSchema: struct<p_partkey:bigint,p_name:string>"],
         "PassJoin postings/probe keys are pure JVM expressions (no Python "
         "nodes); one (slot, length, segment) equi-join generates "
@@ -289,6 +289,30 @@ def main() -> None:
         "scan pruned to (p_partkey, p_name)",
     )
     qs["edit_join"] = m.queries()["edit_join"]
+
+    # The text joins that share dedup's candidate-then-verify helpers
+    # (_candidate_pairs: key equi-join + pair dedup; _verify_pairs: payload
+    # equi-joins + measure filter): the shared verify must stay JVM-only
+    # and keyed on (a, b) — never a cross product or nested-loop join —
+    # with the pair dedup a hash agg and the scans pruned.
+    shared_verify = ["!CartesianProduct", "!BroadcastNestedLoopJoin",
+                     "!ArrowEvalPython", "!BatchEvalPython", "HashAggregate"]
+    doc_cols = ("doc_id:bigint,text:string", "(doc_id, text)")
+    part_cols = ("p_partkey:bigint,p_name:string", "(p_partkey, p_name)")
+    for name, (schema, cols), what in (
+        ("minhash_pairs", doc_cols, "(band, key) self-join, exact Jaccard"),
+        ("minhash_pairs_dyadic", doc_cols,
+         "cross-side (band, key) join, exact Jaccard"),
+        ("edit_join_dyadic", part_cols, "right-indexed PassJoin, levenshtein"),
+        ("prefix_cosine", doc_cols, "t² prefix self-join, set cosine"),
+    ):
+        audits[name] = (
+            shared_verify + [f"ReadSchema: struct<{schema}>"],
+            f"{what}: candidate equi-join, pair dedup via hash agg, payload "
+            "equi-joins on (a, b) for verification — JVM only, no cartesian "
+            f"or nested-loop join; scan pruned to {cols}",
+        )
+        qs[name] = m.queries()[name]
 
     # Suffix-array blocking (round 4): suffix postings are JVM
     # transform/substring (no Python nodes), the block-size cap is a hash

@@ -66,7 +66,7 @@ def main(argv: list[str] | None = None) -> int:
         )
         clusters.write.mode("overwrite").parquet(args.output)
         summary = {
-            "clusters_rows": spark.read.parquet(args.output).count(),
+            "clusters_rows": ckpt.manifest("clusters")["rows"],
             "lineage": [
                 {k: m[k] for k in ("stage", "rows", "wall_seconds", "content_fingerprint")}
                 for m in ckpt.lineage()

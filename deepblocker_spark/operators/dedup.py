@@ -253,15 +253,25 @@ def minhash_lsh_pairs_dyadic(
 
 def token_shingles(tokens: Column, n: int) -> Column:
     """Distinct n-gram shingles of a token array, as joined strings —
-    pure Column expression (transform over an index sequence)."""
-    idx = F.sequence(F.lit(0), F.size(tokens) - n)
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(" ", F.slice(tokens, i + 1, n)),
-    )
-    # sequence(0, negative) descends — short docs must yield no shingles
-    empty = F.array().cast("array<string>")
-    return F.when(F.size(tokens) >= n, F.array_distinct(grams)).otherwise(empty)
+    pure Column expression (transform over an index sequence).
+
+    ``tokens`` is evaluated once per row: it is bound to a lambda variable
+    first. Catalyst does not hoist common subexpressions out of lambda
+    bodies, so referring to a ``tokens_col(text)`` expression inside the
+    per-shingle lambda would re-tokenize the whole text for every shingle.
+    """
+
+    def shingles(toks: Column) -> Column:
+        idx = F.sequence(F.lit(0), F.size(toks) - n)
+        grams = F.transform(
+            idx,
+            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
+        )
+        # sequence(0, negative) descends — short docs must yield no shingles
+        empty = F.array().cast("array<string>")
+        return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(empty)
+
+    return F.element_at(F.transform(F.array(tokens), shingles), 1)
 
 
 def _shingle_postings(

@@ -29,7 +29,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -95,30 +95,27 @@ def collect_sif_weights_fast(
     min_freq: int = 0,
     max_vocab: int = 1_000_000,
 ) -> dict[str, float]:
-    """Driver-side weight map from a (cached) frequency table. When the
-    vocabulary fits the cap — the common case — this is ONE job: the capped
-    Arrow collect, with the global token total summed on the driver from
-    the collected longs (exact integer arithmetic, identical to the Spark
-    sum). Only an over-cap vocabulary pays the separate global-total job
-    plus the frequency-ordered re-collect. The weight formula
-    (tuple_embedding_models.py:113-119) is applied on the driver —
-    identical arithmetic to sif_weights_df, minus a corpus rescan and a
-    cross join."""
+    """Driver-side weight map from a frequency table in ONE action: the
+    ``max_vocab`` most frequent tokens (ties by token) are collected through
+    Arrow while the global token total is observed on the same pass over
+    every token (``DataFrame.observe``), so ``freq`` is computed once and
+    needs no persist. Under the cap that is the whole vocabulary. The
+    weight formula (tuple_embedding_models.py:113-119) is applied on the
+    driver — identical arithmetic to sif_weights_df, minus a corpus rescan
+    and a cross join."""
     # Arrow collect + vectorized weight math: the row-wise .collect() +
     # per-row Python formula was a measurable SERIAL term on the driver at
     # ~10^5-token vocabularies (scaling-protocol profiling, round 2); the
     # toPandas hop and one numpy expression do the same work in bulk.
-    pdf = freq.select("token", "freq").limit(max_vocab + 1).toPandas()
-    if len(pdf) > max_vocab:
-        total = freq.agg(F.sum("freq").alias("t")).collect()[0]["t"] or 0
-        pdf = (
-            freq.orderBy(F.desc("freq"), F.asc("token"))
-            .limit(max_vocab)
-            .select("token", "freq")
-            .toPandas()
-        )
-    else:
-        total = int(pdf["freq"].sum()) if len(pdf) else 0
+    observed = Observation()
+    pdf = (
+        freq.observe(observed, F.sum("freq").alias("t"))
+        .orderBy(F.desc("freq"), F.asc("token"))
+        .limit(max_vocab)
+        .select("token", "freq")
+        .toPandas()
+    )
+    total = int(observed.get["t"] or 0)
     f = pdf["freq"].to_numpy(dtype=np.float64)
     w = a / (a + f / total) if total else np.ones(len(f))
     if min_freq > 0:

@@ -78,23 +78,15 @@ class SparkSIFEmbedding:
         self.weights: dict[str, float] | None = None
 
     def preprocess(self, corpus: DataFrame, text_col: str = MERGED_TEXT) -> None:
-        # One corpus scan: the frequency table is tiny (vocab-sized), so it
-        # is cached and the weight map derives from it without re-reading
-        # the corpus (sif_weights_df's total-join form stays as the
-        # oracle-checkable relational variant). In the fits-cap case the
-        # whole preprocess is a single job (capped collect; total summed on
-        # the driver) — the persist only pays when the vocab overflows
-        # sif_max_vocab_broadcast and the ordered re-collect runs.
-        freq = E.token_frequencies(corpus, text_col).persist()
-        try:
-            self.weights = E.collect_sif_weights_fast(
-                freq,
-                self.cfg.sif_weighting_param,
-                self.cfg.sif_min_freq,
-                self.cfg.sif_max_vocab_broadcast,
-            )
-        finally:
-            freq.unpersist()
+        # One corpus scan, one action: the capped frequency-ordered collect
+        # observes the corpus token total on the way (sif_weights_df's
+        # total-join form stays as the oracle-checkable relational variant)
+        self.weights = E.collect_sif_weights_fast(
+            E.token_frequencies(corpus, text_col),
+            self.cfg.sif_weighting_param,
+            self.cfg.sif_min_freq,
+            self.cfg.sif_max_vocab_broadcast,
+        )
 
     def embed(self, df: DataFrame, text_col: str = MERGED_TEXT) -> DataFrame:
         if self.weights is None:

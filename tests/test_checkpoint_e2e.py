@@ -15,6 +15,7 @@ from deepblocker_spark.operators.cluster import clusters_to_pairs
 from deepblocker_spark.operators.metrics import pairwise_f1
 from deepblocker_spark.plans.checkpoint import (
     CheckpointManager,
+    content_fingerprint,
     hash_dirs_for,
     hash_layout_width,
     run_blocking_pipeline,
@@ -100,8 +101,6 @@ def test_manifest_contents_and_verify(spark, repo_df, tmp_path):
     assert len(parts) == man["n_partitions"] >= 1
     assert sum(p["rows"] for p in parts) == man["rows"]
     assert all("fingerprint" in p for p in parts)
-    from deepblocker_spark.plans.checkpoint import content_fingerprint
-
     df_back = spark.read.parquet(os.path.join(base, "candidates", "data.parquet"))
     assert content_fingerprint(df_back, ["l_id", "r_id"]) == man["content_fingerprint"]
     assert ckpt.verify("candidates")
@@ -425,3 +424,119 @@ def test_pipeline_auto_pairing_picks_ivfpq_and_f1(spark, repo_df, tmp_path):
     gold = _golden_pairs(spark, df)
     row = pairwise_f1(pred, gold).collect()[0]
     assert row["f1"] >= 0.99, dict(row.asDict())
+
+
+STAGES = ("embeddings", "candidates", "scored", "clusters")
+
+
+def _empty_ids(spark):
+    return spark.range(10).filter("id > 100").select(
+        F.col("id").cast("string").alias("id"))
+
+
+def test_empty_layout_stage_writes_verifies_and_resumes(spark, tmp_path):
+    """A partitioned write of 0 rows leaves no data file to infer a schema
+    from: the read-back, ``verify()`` and the resume read use the known
+    schema instead of failing with UNABLE_TO_INFER_SCHEMA."""
+    ckpt = CheckpointManager(spark, str(tmp_path / "ckpt_empty"))
+    kw = {"params": {"v": 1}, "layout": ("id", 4)}
+    out = ckpt.stage("empty", _empty_ids(spark), ["id"], **kw)
+    assert out.count() == 0
+    assert out.columns == ["id", "_part"]
+    man = ckpt.manifest("empty")
+    assert (man["rows"], man["n_partitions"], man["partitions"]) == (0, 0, [])
+    assert man["content_fingerprint"] == content_fingerprint(out, ["id"])
+    assert ckpt.verify("empty")
+    assert ckpt.verify("empty", part=2)
+    resumed = ckpt.stage("empty", _empty_ids(spark), ["id"], **kw)
+    assert ckpt.manifest("empty")["written_at_ns"] == man["written_at_ns"]
+    assert resumed.schema == out.schema and resumed.count() == 0
+
+
+def test_pipeline_with_no_verified_pair(spark, repo_df, tmp_path):
+    """No candidate reaches min_sim > 1: the scored stage is empty, and
+    the pipeline still finishes with empty, verifiable stages."""
+    df, _ = repo_df
+    ckpt = CheckpointManager(spark, str(tmp_path / "ckpt_no_pairs"))
+    clusters = run_blocking_pipeline(
+        spark, df, ckpt, ["repo", "path", "lang", "content"],
+        id_col="id", k=10, min_sim=1.5, verify_jaccard=0.4, config=CFG,
+    )
+    assert clusters.count() == 0
+    assert ckpt.manifest("scored")["rows"] == 0
+    assert ckpt.manifest("clusters")["rows"] == 0
+    assert all(ckpt.verify(s) for s in STAGES)
+
+
+def test_observed_manifest_matches_data_on_disk(spark, repo_df, tmp_path):
+    """The manifest metrics the stage writes observe equal a recompute
+    from the written files: per ``_part`` entries (absent pids omitted),
+    rows and fingerprint; the recorded schema is the one a read infers."""
+    df, _ = repo_df
+    base = tmp_path / "ckpt_parity"
+    ckpt = CheckpointManager(spark, str(base))
+    cfg = BlockerConfig(emb_dim=64, top_k=10, remove_pc=True,
+                        ckpt_hash_partitions=4)
+    run_blocking_pipeline(
+        spark, df, ckpt, ["repo", "path", "lang", "content"],
+        id_col="id", k=10, verify_jaccard=0.4, config=cfg,
+    )
+    for stage in STAGES:
+        man = ckpt.manifest(stage)
+        back = spark.read.parquet(str(base / stage / "data.parquet"))
+        assert man["schema"] == back.schema.jsonValue(), stage
+        assert man["rows"] == back.count() > 0, stage
+        assert man["content_fingerprint"] == content_fingerprint(
+            back, man["key_cols"]), stage
+        if man["layout"]:
+            pids = sorted(r["_part"] for r in back.select("_part").distinct().collect())
+            want = [
+                {"pid": pid, "rows": sub.count(),
+                 "fingerprint": content_fingerprint(sub, man["key_cols"])}
+                for pid in pids
+                for sub in [back.filter(F.col("_part") == pid)]
+            ]
+        else:  # one whole-stage entry
+            want = [{"pid": 0, "rows": man["rows"],
+                     "fingerprint": man["content_fingerprint"]}]
+        assert man["partitions"] == want, stage
+        assert man["n_partitions"] == len(want), stage
+
+
+@pytest.mark.parametrize("layout", [("id", 4), None])
+def test_stage_write_is_one_job(spark, tmp_path, layout):
+    """A shuffle-free frame's stage launches exactly one Spark job: the
+    write, which also yields the manifest metrics and the schema."""
+    sc = spark.sparkContext
+    ckpt = CheckpointManager(spark, str(tmp_path / "ckpt_jobs"))
+    group = f"test-stage-jobs-{layout is None}"
+    sc.setJobGroup(group, group)
+    try:
+        ckpt.stage("r", spark.range(1000), ["id"], layout=layout)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert ckpt.manifest("r")["rows"] == 1000
+
+
+def test_verify_join_probes_one_token_exchange(spark, repo_df, tmp_path):
+    """Both sides of a candidate pair probe the same token table: Spark
+    builds it once and reuses the exchange for the second join."""
+    from deepblocker_spark.plans.checkpoint import _verify_join
+
+    df, _ = repo_df
+    base = tmp_path / "ckpt_reuse"
+    ckpt = CheckpointManager(spark, str(base))
+    run_blocking_pipeline(
+        spark, df, ckpt, ["repo", "path", "lang", "content"],
+        id_col="id", k=10, verify_jaccard=0.4, config=CFG,
+    )
+    emb, cands = (spark.read.parquet(str(base / s / "data.parquet"))
+                  for s in ("embeddings", "candidates"))
+    n_part = ckpt.manifest("embeddings")["layout"]["n"]
+    scored = _verify_join(cands, emb, "id", n_part, None, 0.4)
+    assert scored.count() == ckpt.manifest("scored")["rows"]
+    scored.collect()
+    plan = _plan_text(scored)
+    assert "ReusedExchange" in plan, plan

@@ -644,6 +644,41 @@ def main() -> None:
             audits["semantic_dedup"][1],
         )
 
+    # Pipeline verify join (plans.checkpoint._verify_join): both sides of
+    # a candidate pair probe ONE token table, so the plan builds one
+    # broadcast and the second join reuses it. Planned with AQE off, where
+    # exchange reuse is a planning rule; with AQE on the stage cache makes
+    # the same reuse at run time.
+    from deepblocker_spark.operators.preprocess import MERGED_TEXT
+    from deepblocker_spark.plans.checkpoint import _verify_join
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    n_part = 4
+    vj_emb = docs.select(
+        F.col("doc_id").cast("string").alias("id"),
+        F.col("text").alias(MERGED_TEXT),
+    ).withColumn("_part", F.pmod(F.xxhash64("id"), F.lit(n_part)).cast("int"))
+    vj_cands = vj_emb.select(
+        F.col("id").alias("l_id"),
+        (F.col("id").cast("long") + 1).cast("string").alias("r_id"),
+        F.lit(1.0).alias("sim"),
+        "_part",
+    )
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        vj_df = _verify_join(vj_cands, vj_emb, "id", n_part, None, 0.4)
+        plan_of(vj_df)  # plans now: explain below reuses this plan
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    audits["pipeline_verify_join"] = (
+        ["1:BroadcastExchange (", "ReusedExchange", "!CartesianProduct"],
+        "the tl and tr probes share one token table: one broadcast "
+        "exchange tokenizes each row once and the second join reuses it; "
+        "no cartesian",
+    )
+    qs["pipeline_verify_join"] = lambda *_: vj_df
+
     report = ["# PLANS — physical-plan audit of headline queries",
               "",
               "Generated by tools/explain_audit.py; re-run after plan-affecting",

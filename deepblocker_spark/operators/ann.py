@@ -2,8 +2,8 @@
 
 Every strategy returns (l_id, r_id, sim, rank), rank <= k per l_id:
 
-  * brute-force exact top-k (operators/topk.py) — the baseline/oracle; right
-    side bounded-broadcast, per-batch BLAS + argpartition.
+  * exact top-k (operators/topk.exact_topk_join) — the baseline/oracle;
+    right side bounded-broadcast, per-batch blocked BLAS + top-k selection.
   * LSH-bucketed (operators/lsh.py) — cost bounded by bucket sizes instead
     of N^2.
   * IVF (inverted-file cells) — ONE cell path, written here, in the three
@@ -33,26 +33,11 @@ from pyspark.sql import functions as F
 
 from deepblocker_spark.operators.lsh import lsh_candidates
 from deepblocker_spark.operators.pairing import VectorPairing, shared_id_type
-from deepblocker_spark.operators.topk import exact_topk_join
 
 from deepblocker_spark.operators.bc_registry import (
     tracked_broadcast as _tracked,
     tracked_persist,
 )
-
-
-def brute_force_topk(
-    df: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    exclude_self: bool = True,
-    max_broadcast_rows: int = 500_000,
-) -> DataFrame:
-    return exact_topk_join(
-        df, df, k, l_id=id_col, r_id=id_col, emb_col=emb_col,
-        exclude_self=exclude_self, max_broadcast_rows=max_broadcast_rows,
-    )
 
 
 def lsh_topk(
@@ -161,7 +146,7 @@ def _assign_cells(
     import pandas as pd
     from pyspark.sql.types import BinaryType, IntegerType, StructField, StructType
 
-    from deepblocker_spark.operators.grouped import _row_blobs
+    from deepblocker_spark.operators.grouped import _row_blobs, _topk_cols
     from deepblocker_spark.operators.pq import _pq_encode
     from deepblocker_spark.operators.topk import normalize_rows
 
@@ -196,7 +181,7 @@ def _assign_cells(
                 payload += vecs if books is None else _row_blobs(_pq_encode(x, books))
             if emit_probes:
                 p = min(nprobe, sims.shape[1])
-                probes = np.argpartition(-sims, p - 1, axis=1)[:, :p]
+                probes = _topk_cols(sims, p)
                 cells += list(probes.T)
                 roles += [1] * p
                 payload += vecs * p
@@ -315,7 +300,7 @@ def _ivf_pairs(
         local_topk_packed,
         topk_per_key,
     )
-    from deepblocker_spark.operators.pq import _adc_scores
+    from deepblocker_spark.operators.pq import _adc_luts, _adc_scores
     from deepblocker_spark.operators.topk import normalize_rows
 
     assigned = tracked_persist(assigned, StorageLevel.MEMORY_AND_DISK)
@@ -359,7 +344,9 @@ def _ivf_pairs(
                 i_all = np.frombuffer(b"".join(blobs[~is_q]), dtype=np.uint8)
                 i_all = i_all.reshape(-1, books.shape[0])
                 pos = np.where(is_q, np.cumsum(is_q), np.cumsum(~is_q)) - 1
-                score = lambda qx, codes: _adc_scores(qx, codes, books)  # noqa: E731
+                score = lambda qx, codes: _adc_scores(  # noqa: E731
+                    _adc_luts(qx, books), codes
+                )
             for a, b in group_slices(pdf, ["cell", "salt_q", "salt_i"]):
                 q_idx = np.nonzero(is_q[a:b])[0] + a
                 i_idx = np.nonzero(~is_q[a:b])[0] + a
@@ -373,7 +360,7 @@ def _ivf_pairs(
     pairs = grouped_map_in_pandas(
         salted, ["cell", "salt_q", "salt_i"], cell_kernel, pair_schema
     )
-    return topk_per_key(pairs, k, pre_combine=False, packed_input=True)
+    return topk_per_key(pairs, k, packed_input=True)
 
 
 def _ivf_search(

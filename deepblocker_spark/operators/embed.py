@@ -89,7 +89,7 @@ def sif_weights_df(
     )
 
 
-def collect_sif_weights_fast(
+def collect_sif_weights(
     freq: DataFrame,
     a: float = 1e-3,
     min_freq: int = 0,
@@ -121,27 +121,6 @@ def collect_sif_weights_fast(
     if min_freq > 0:
         w = np.where(f >= min_freq, w, 1.0)
     return dict(zip(pdf["token"].tolist(), w.tolist()))
-
-
-def collect_sif_weights(
-    weights: DataFrame,
-    max_vocab: int = 1_000_000,
-) -> dict[str, float]:
-    """Driver-side weight map, capped by frequency rank. Only frequent tokens
-    have weights far from 1.0 (w -> 1 as freq -> 0), so truncating the long
-    tail to the default 1.0 is a bounded-error, bounded-memory broadcast."""
-    # Fast path: when the vocabulary fits the cap (the common case), a plain
-    # limit-collect avoids the sort entirely. Only when the cap binds do we
-    # pay for ordering by frequency (keep the weights that matter most).
-    rows = weights.select("token", "weight").limit(max_vocab + 1).collect()
-    if len(rows) > max_vocab:
-        rows = (
-            weights.orderBy(F.desc("freq"), F.asc("token"))
-            .limit(max_vocab)
-            .select("token", "weight")
-            .collect()
-        )
-    return {r["token"]: float(r["weight"]) for r in rows}
 
 
 # ---------------------------------------------------------------------------

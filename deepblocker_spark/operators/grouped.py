@@ -17,7 +17,9 @@ keys itself — correctness does not depend on Arrow batch sizing.
 
 The search kernels built on it (LSH buckets, IVF cells) share the helpers
 below: ``_local_topk`` scores one group, ``local_topk_packed`` is their
-fused map-side combiner, and ``topk_per_key`` is the merge.
+fused map-side combiner, and ``topk_per_key`` is the merge. ``_topk_cols``
+is the engine's one argpartition top-k selector, shared with the
+chunk-broadcast scan (operators/topk.py) and the IVF probe assignment.
 
 At 100 TB this shape is strictly better than applyInPandas: identical
 shuffle volume, identical skew behavior (same hash partitioning), but the
@@ -97,6 +99,15 @@ def _row_blobs(a) -> list:
     return [raw[i * stride : (i + 1) * stride] for i in range(len(a))]
 
 
+def _topk_cols(scores, k: int):
+    """Column indices of each row's k largest scores, in unspecified order;
+    every column, in order, when k >= the width."""
+    kk = min(k, scores.shape[1])
+    if kk < scores.shape[1]:
+        return np.argpartition(-scores, kk - 1, axis=1)[:, :kk]
+    return np.broadcast_to(np.arange(scores.shape[1]), scores.shape).copy()
+
+
 def _local_topk(sims, qids, iids, k: int, mask_equal_ids: bool):
     """The k best index rows per query row of a (query × index) score
     matrix -> (l_id, r_id, sim) arrays; equal ids are dropped when
@@ -104,9 +115,7 @@ def _local_topk(sims, qids, iids, k: int, mask_equal_ids: bool):
     merge by (sim desc, r_id)."""
     if mask_equal_ids:
         sims[qids[:, None] == iids[None, :]] = -np.inf
-    kk = min(k, sims.shape[1])
-    part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk] if kk < sims.shape[1] \
-        else np.broadcast_to(np.arange(sims.shape[1]), sims.shape).copy()
+    part = _topk_cols(sims, k)
     rows = np.repeat(np.arange(len(qids)), part.shape[1])
     cols = part.ravel()
     s = sims[rows, cols]
@@ -136,10 +145,10 @@ def local_topk_packed(parts: list, k: int, min_sim: float | None = None) -> pd.D
 def _dedup_topk(
     pdf: pd.DataFrame, k: int, key: str, other: str, sim: str, with_rank: bool
 ) -> pd.DataFrame:
-    """Shared reduction for topk_per_key's combiner and merge kernels: dedup
-    (key, other) keeping MAX sim, then top-k per key by (sim desc, other
-    asc). Fully vectorized: one lexsort for dedup, one for ranking, no
-    per-group Python loop."""
+    """Shared reduction of the fused combiner (local_topk_packed) and the
+    topk_per_key merge: dedup (key, other) keeping MAX sim, then top-k per
+    key by (sim desc, other asc). Fully vectorized: one lexsort for dedup,
+    one for ranking, no per-group Python loop."""
     l = pdf[key].to_numpy()
     r = pdf[other].to_numpy()
     s = pdf[sim].to_numpy()
@@ -218,6 +227,11 @@ def _unpack_topk(pdf: pd.DataFrame, key: str, other: str, sim: str) -> pd.DataFr
     )
 
 
+# Rows the merge runner buffers before compacting them to their per-key
+# top-k: worker memory stays bounded whatever the partition size.
+_COMPACT_ROWS = 2_000_000
+
+
 def topk_per_key(
     pairs: DataFrame,
     k: int,
@@ -225,37 +239,26 @@ def topk_per_key(
     other: str = "r_id",
     sim: str = "sim",
     num_partitions: int | None = None,
-    pre_combine: bool = True,
-    combine_buffer_rows: int = 2_000_000,
     packed_input: bool = False,
 ) -> DataFrame:
     """Dedup (key, other) pairs and keep the top-k per key by (sim desc,
     other asc), attaching rank — the fused, single-shuffle replacement for
     ``dropDuplicates([key, other])`` + window row_number (two shuffles).
 
-    ``pre_combine`` (VERDICT r3 #3, the map-side combiner analogue): before
-    the merge shuffle on ``key``, a NARROW mapInPandas pass reduces each
-    producing partition's pairs to its local per-key top-k (same dedup +
-    ordering as the merge kernel, rank withheld). This is exactly Spark's
-    map-side partial aggregation shape: the exchange then carries at most
-    one local top-k per (key, producing-partition) instead of every
-    surviving bucket pair (~n_bands x k rows per key on the LSH path). It
-    never changes the result: a pair cut by a local top-k is dominated by
-    >= k distinct pairs from the same partition that all reach the merge,
-    so it could not be in the global top-k (duplicate copies of a pair
-    carry bit-identical sims — same two normalized vectors — so keep-max
-    dedup is unaffected by which copy survives). The combiner buffers at
-    most ``combine_buffer_rows`` before compacting, bounding worker memory
-    independent of partition size.
+    ``packed_input``: ``pairs`` carries (key, _r array, _s array) rows made
+    by ``pack_topk`` — the map-side combiner already ran inside the
+    producing kernel (``local_topk_packed``), so the exchange carries at
+    most one local top-k per (key, producing partition). A pair cut by a
+    local top-k is dominated by >= k distinct pairs of the same partition
+    that all reach the merge, so the combiner never changes the result.
 
     The merge itself needs NO sort exchange: after repartition(key) every
     key's rows are complete within one partition, and ``_dedup_topk``
     lexsorts internally — so the merge is a bare hash exchange + one
-    partition-wide reduce, with no JVM Tungsten sortWithinPartitions
-    (previously the exchange's ~n_bands x k rows per key were fully sorted
-    JVM-side only to be lexsorted AGAIN in Python). The reduce is
-    associative (top-k of unioned top-ks = global top-k once all of a
-    key's rows are present), so the same compaction bound applies."""
+    partition-wide reduce, with no JVM Tungsten sortWithinPartitions. The
+    reduce is associative (top-k of unioned top-ks = global top-k once all
+    of a key's rows are present), so the runner compacts its buffer every
+    ``_COMPACT_ROWS`` rows."""
     from pyspark.sql.types import (
         DoubleType,
         IntegerType,
@@ -264,16 +267,11 @@ def topk_per_key(
     )
 
     if packed_input:
-        # pairs carries (key, _r array, _s array) produced by pack_topk —
-        # a combiner already ran (inside the producing kernel), so there
-        # is nothing left for pre_combine to reduce
-        assert not pre_combine, "packed_input implies a fused combiner"
         narrow = pairs
-        key_field = pairs.schema[key]
         other_type = pairs.schema["_r"].dataType.elementType
         out_schema = StructType(
             [
-                key_field,
+                pairs.schema[key],
                 StructField(other, other_type, True),
                 StructField(sim, DoubleType(), False),
                 StructField("rank", IntegerType(), False),
@@ -286,45 +284,35 @@ def topk_per_key(
             + [StructField("rank", IntegerType(), False)]
         )
 
-    def make_runner(with_rank: bool):
-        def runner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            buf: list[pd.DataFrame] = []
-            nrows, compacted = 0, False
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                if packed_input:
-                    pdf = _unpack_topk(pdf, key, other, sim)
-                buf.append(pdf)
-                nrows += len(pdf)
-                compacted = False
-                if nrows >= combine_buffer_rows:
-                    buf = [
-                        _dedup_topk(
-                            pd.concat(buf, ignore_index=True), k, key, other,
-                            sim, with_rank=False,
-                        )
-                    ]
-                    nrows, compacted = len(buf[0]), True
-            if buf:
-                out = (
-                    buf[0]
-                    if compacted and len(buf) == 1 and not with_rank
-                    else _dedup_topk(
+    def runner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        buf: list[pd.DataFrame] = []
+        nrows = 0
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            if packed_input:
+                pdf = _unpack_topk(pdf, key, other, sim)
+            buf.append(pdf)
+            nrows += len(pdf)
+            if nrows >= _COMPACT_ROWS:
+                buf = [
+                    _dedup_topk(
                         pd.concat(buf, ignore_index=True), k, key, other, sim,
-                        with_rank=with_rank,
+                        with_rank=False,
                     )
-                )
-                if len(out):
-                    yield out
+                ]
+                nrows = len(buf[0])
+        if buf:
+            out = _dedup_topk(
+                pd.concat(buf, ignore_index=True), k, key, other, sim,
+                with_rank=True,
+            )
+            if len(out):
+                yield out
 
-        return runner
-
-    if pre_combine:
-        narrow = narrow.mapInPandas(make_runner(False), narrow.schema)
     part = (
         narrow.repartition(key)
         if num_partitions is None
         else narrow.repartition(num_partitions, key)
     )
-    return part.mapInPandas(make_runner(True), out_schema)
+    return part.mapInPandas(runner, out_schema)

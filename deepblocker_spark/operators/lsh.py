@@ -431,7 +431,7 @@ def _lsh_search(
     # fused dedup + per-left top-K: one shuffle instead of the
     # dropDuplicates exchange + window exchange; the combiner and min_sim
     # already ran inside the kernel
-    return topk_per_key(pairs, k, pre_combine=False, packed_input=True)
+    return topk_per_key(pairs, k, packed_input=True)
 
 
 def lsh_candidates(

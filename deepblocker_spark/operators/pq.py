@@ -11,39 +11,39 @@ with the ADC scoring kernel: index rows carry PQ codes, queries carry
 vectors.
 
 Scale story: a 64-dim f32 embedding is 256 B; its PQ code at m=8
-subspaces is 8 B (32×). The top-K join's broadcast side ships CODES, not
-vectors — at 100 TB the code table for 1B rows is ~8 GB (chunked
-broadcast, same bounded-memory pattern as topk.exact_topk_join), while
-the raw vectors would be 256 GB. Codebooks are a few hundred KB,
-broadcast once. Queries keep full precision: asymmetric distance
-computation (ADC) quantizes only the database side, so the only error is
-the database rows' quantization.
+subspaces is 8 B (32×). The brute-force ADC join (``pq_topk_join``) is
+the chunk-broadcast scan of topk.exact_topk_join with an ADC scorer: its
+broadcast side ships CODES, not vectors — at 100 TB the code table for
+1B rows is ~8 GB in ``max_broadcast_rows`` chunks, while the raw vectors
+would be 256 GB. Codebooks are a few hundred KB, broadcast once. Queries
+keep full precision: asymmetric distance computation (ADC) quantizes only
+the database side, so the only error is the database rows' quantization.
 
 Cosine similarity on L2-normalized vectors is the inner product, and PQ
 subspaces decompose it exactly: <q, x> = Σ_j <q_j, x_j> ≈ Σ_j <q_j,
 c_{j,code_j(x)}>. Training/encoding use per-subspace L2 assignment (the
 standard PQ quantizer) over normalized vectors; per-query score = m
-table lookups summed, vectorized as one fancy-index gather per subspace.
+table lookups summed: each query batch builds its (batch × n_codes)
+lookup tables once (``_adc_luts``) and ``_adc_scores`` gathers them over
+any slice of codes.
 
 Everything driver-side is bounded relative to the data: training reads
 the same deterministic xxhash64 sample as the IVF centroids
-(ann._training_sample); the code table collects once to the driver (m
-bytes + id per row — the same bounded-broadcast contract as
-topk.exact_topk_join, at 1/32 the bytes) and is broadcast in
-``max_broadcast_rows`` chunks; per-batch kernel memory is O(batch ×
-chunk). For corpora whose code table exceeds driver memory,
-``ivf_pq_topk`` (below) is the fully-distributed path — nothing collects.
+(ann._training_sample); the code table reaches the driver one chunk at a
+time through Arrow (m bytes + id per row, the scan's bounded-broadcast
+contract at 1/32 the bytes); the scan scores each query batch against
+its chunk in cache-sized column blocks, so per-batch kernel memory is
+O(batch × block). For corpora whose code table exceeds
+``max_driver_code_rows``, ``ivf_pq_topk`` (below) is the
+fully-distributed path — nothing collects.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from deepblocker_spark.operators.ann import _ivf_search, _training_sample
-from deepblocker_spark.operators.grouped import _local_topk, _row_blobs
+from deepblocker_spark.operators.grouped import _row_blobs
 from deepblocker_spark.operators.pairing import VectorPairing
 from deepblocker_spark.operators.bc_registry import (
     tracked_broadcast as _tracked,
@@ -108,17 +108,21 @@ def _pq_encode(x, books):
     return codes
 
 
-def _adc_scores(q, codes, books):
-    """(len(q), len(codes)) ADC inner-product estimates of normalized
-    queries ``q`` against PQ ``codes``: one (query × n_codes) lookup-table
-    matmul per subspace plus a gather over the codes — no (query × index ×
+def _adc_luts(q, books):
+    """Per-subspace ADC lookup tables of normalized queries ``q``: one
+    (query × n_codes) matmul per subspace, built once per query batch."""
+    dsub = books.shape[2]
+    return [q[:, j * dsub : (j + 1) * dsub] @ book.T for j, book in enumerate(books)]
+
+
+def _adc_scores(luts, codes):
+    """(queries, len(codes)) ADC inner-product estimates from ``_adc_luts``
+    tables: one gather per subspace over the codes — no (query × index ×
     dim) tensor ever materializes."""
     import numpy as np
 
-    m, _, dsub = books.shape
-    scores = np.zeros((len(q), len(codes)))
-    for j in range(m):
-        lut = q[:, j * dsub : (j + 1) * dsub] @ books[j].T
+    scores = np.zeros((len(luts[0]), len(codes)))
+    for j, lut in enumerate(luts):
         scores += lut[:, codes[:, j]]
     return scores
 
@@ -184,30 +188,35 @@ def pq_topk_join(
     callers needing exact scores re-rank the k survivors with
     scoring.cosine_col, which is k rows per query, not N.
 
-    Right side travels as PQ codes in ``max_broadcast_rows`` chunks (m
-    bytes per row — the 32× transport win over broadcasting vectors);
-    each chunk's local top-k unions into a final per-query window merge,
-    the same bounded-memory shape as topk.exact_topk_join. Kernel per
-    batch: the ADC scorer shared with the IVFADC cell kernel
-    (``_adc_scores``).
+    The chunk-broadcast scan of topk.exact_topk_join with the ADC scorer:
+    the right side travels as PQ codes in ``max_broadcast_rows`` chunks
+    (m bytes per row — the 32× transport win over broadcasting vectors),
+    each query batch builds its lookup tables once and scores the chunk in
+    cache-sized column blocks; several chunks merge through the scan's
+    window.
 
-    ``max_driver_code_rows`` (VERDICT r4 #3) bounds the driver collect of
+    ``max_driver_code_rows`` (VERDICT r4 #3) bounds the driver read of
     the code table: above it the call DELEGATES to the nothing-collects
     IVFADC path (PQVectorPairing with ivf_pq_topk[_join]'s defaults — same
     m/n_codes/seed; ``codebooks`` is retrained there, cell-probing replaces
     the exhaustive chunk scan), the same auto-gate pattern as
     config.pairing_lsh_threshold_rows. ``rows_hint`` skips the index-side
     probe when the caller knows the row count (e.g. from a checkpoint
-    manifest); without a hint the collect itself is LIMIT-bounded to
+    manifest); without a hint the probe pulls at most
     ``max_driver_code_rows + 1`` rows, so the driver never materializes an
     unbounded index even when no hint is given.
     """
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    from deepblocker_spark.operators.topk import normalize_rows
+    from deepblocker_spark.operators.topk import (
+        _broadcast_scan,
+        _iter_right_chunks,
+        _pair_schema,
+        _pull_upto,
+        _ranked,
+        _scored_blocks,
+        _topk_pairs,
+    )
 
     def _delegate(n_rows: int | None) -> DataFrame:
         pairer = PQVectorPairing(k, n_cells=None, m=m, n_codes=n_codes, seed=seed)
@@ -223,68 +232,34 @@ def pq_topk_join(
             right, id_col=r_id, emb_col=emb_col, m=m, n_codes=n_codes, seed=seed
         )
     m = codebooks.shape[0]
-    spark = left.sparkSession
-    books_bc = _tracked(spark.sparkContext, codebooks)
-
     codes_df = encode_pq(right, codebooks, id_col=r_id, emb_col=emb_col)
-    # m bytes + id per row, chunk-bounded below; the LIMIT hard-bounds
-    # driver memory when no rows_hint was given — one extra row proves
-    # overflow, at which point the IVFADC delegate takes over
-    rows = codes_df.limit(max_driver_code_rows + 1).collect()
-    if len(rows) > max_driver_code_rows:
-        return _delegate(None)
-    l_type = left.select(l_id).schema.fields[0].dataType
-    r_type = right.select(r_id).schema.fields[0].dataType
-    out_schema = StructType(
-        [
-            StructField("l_id", l_type, True),
-            StructField("r_id", r_type, True),
-            StructField("sim", DoubleType(), False),
-        ]
+    pulled = None
+    if rows_hint is None:
+        # one extra row proves overflow, at which point the IVFADC
+        # delegate takes over
+        pulled = _pull_upto(codes_df, r_id, max_driver_code_rows)
+        if pulled is None:
+            return _delegate(None)
+        rows_hint = len(pulled)
+    books_bc = _tracked(left.sparkSession.sparkContext, codebooks)
+    drop = np.equal if exclude_self else None
+
+    def decode(pdf):
+        codes = np.frombuffer(b"".join(pdf["code"]), dtype=np.uint8)
+        return np.asarray(pdf[r_id].to_list()), codes.reshape(len(pdf), m)
+
+    def kernel(lids, q, rids, codes):
+        luts = _adc_luts(q, books_bc.value)
+        score = lambda lo, hi: _adc_scores(luts, codes[lo:hi])  # noqa: E731
+        blocks = _scored_blocks(score, lids, rids, drop)
+        rows, cols, s = _topk_pairs(blocks, len(lids), k)
+        return _ranked(lids, rids, rows, cols, s)
+
+    chunks = _iter_right_chunks(
+        codes_df, r_id, max_broadcast_rows, decode, rows_hint, pulled
     )
-
-    if not rows:  # empty index side: no neighbors for anyone
-        return (
-            left.sparkSession.createDataFrame([], out_schema)
-            .withColumn("rank", F.lit(1).cast("int"))
-            .limit(0)
-        )
-    chunks = []
-    for lo in range(0, len(rows), max_broadcast_rows):
-        part = rows[lo : lo + max_broadcast_rows]
-        ids = np.array([r[0] for r in part])
-        codes = np.frombuffer(b"".join(r[1] for r in part), dtype=np.uint8).reshape(
-            len(part), m
-        )
-        chunks.append(_tracked(spark.sparkContext, (ids, codes)))
-
-    def topk_kernel(chunk_bc):
-        def run(batches):
-            books = books_bc.value
-            ids, codes = chunk_bc.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                q = normalize_rows(
-                    np.nan_to_num(
-                        np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
-                    )
-                )
-                l, r, s = _local_topk(_adc_scores(q, codes, books),
-                                      pdf[l_id].to_numpy(), ids, k, exclude_self)
-                yield pd.DataFrame({"l_id": l, "r_id": r, "sim": s})
-
-        return run
-
-    q_side = left.select(F.col(l_id).alias(l_id), emb_col)
-    allc = reduce(DataFrame.unionByName, [
-        q_side.mapInPandas(topk_kernel(chunk_bc), out_schema) for chunk_bc in chunks
-    ])
-    w = Window.partitionBy("l_id").orderBy(F.desc("sim"), F.asc("r_id"))
-    return (
-        allc.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    schema = _pair_schema(left, l_id, right, r_id)
+    return _broadcast_scan(left, chunks, l_id, emb_col, schema, kernel, k)
 
 
 def pq_topk(

@@ -115,27 +115,22 @@ def winnowed_fingerprints(
     text_col: str = "text",
     gram_len: int = 25,
     window: int = 5,
-    impl: str = "kernel",
 ) -> DataFrame:
     """-> (id, gram): one row per selected winnowing fingerprint per
-    document (the exploded form of ``winnowed_fingerprint_arrays``).
-
-    ``impl='kernel'`` (default, batch paths): an Arrow ``mapInPandas``
-    kernel — one sliding ``np.minimum`` pass over the per-row gram array.
-    The previous Column-expression formulation (``impl='expr'``, kept for
-    the streaming path and as the reference semantics) materializes the
-    full gram array per row (~25x text bytes of transient row width) and
-    evaluates the O(n*w) sliding-min through interpreted Catalyst lambda
-    expressions; the measured A/B on sf0.1 (round 6) put the kernel ~8x
-    faster end-to-end on substring_dup_pairs with a bit-identical
-    fingerprint set (VERDICT r5 #6; selection semantics pinned by the
-    three-way parity in tests/test_substring_semdedup.py)."""
-    if impl == "expr":
-        arrays = winnowed_fingerprint_arrays(
-            df, id_col, text_col, gram_len, window
-        )
-        return arrays.select("id", F.explode("grams").alias("gram"))
-
+    document (the exploded form of ``winnowed_fingerprint_arrays``), from
+    an Arrow ``mapInPandas`` kernel — one sliding ``np.minimum`` pass over
+    the per-row gram array. The Column-expression formulation
+    (``winnowed_fingerprint_arrays``, still used by the streaming path)
+    materializes the full gram array per row (~25x text bytes of transient
+    row width) and evaluates the O(n*w) sliding-min through interpreted
+    Catalyst lambda expressions; the measured A/B on sf0.1 (round 6) put
+    the kernel ~8x faster end-to-end on substring_dup_pairs with a
+    bit-identical fingerprint set (VERDICT r5 #6). Two tests in
+    tests/test_substring_semdedup.py hold the three formulations equal:
+    ``test_winnow_fingerprints_match_python_twin`` (this kernel vs a
+    pure-Python twin) and
+    ``test_streaming_substring_decontam_parity_with_batch`` (the streaming
+    path's column expressions vs this kernel)."""
     import numpy as np
     import pandas as pd
 

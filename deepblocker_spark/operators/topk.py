@@ -1,18 +1,28 @@
-"""Exact top-K cosine similarity join (SURVEY.md O23-O25).
+"""The one chunk-broadcast scan behind the exact top-K cosine join (SURVEY.md
+O23-O25), the cosine threshold join and the PQ brute-force join
+(operators/pq.py).
 
 The reference materializes the full N_l x N_r cosine matrix and argsorts
-every row (/root/reference/vector_pairing_models.py:36-49) — an O(N^2)
-memory wall. The Spark re-expression:
+every row (vector_pairing_models.py:36-49) — an O(N^2) memory wall. The
+scan re-expresses it in the partition, local top-K and merge shape of a
+parallel top-K similarity join (ICDE'12, PAPERS.md):
 
-  * the right table's (id, embedding) is collected in bounded chunks and
-    broadcast; a mapInPandas over the left table computes, per Arrow batch,
-    the batch x chunk similarity block with one BLAS matmul, then takes the
-    per-row top K via ``np.argpartition`` (no full sort — an algorithmic
-    improvement over the reference's per-row argsort, same result set);
-  * with multiple chunks, per-chunk partial top-Ks are unioned and reduced
-    to the global top K with ``row_number()`` over a window — the classic
-    partial+final top-K. With a single chunk the window is skipped
-    entirely: the per-batch result already is the global top K.
+  * index side: ``_iter_right_chunks`` reads the right table through Arrow
+    in chunks of at most ``max_broadcast_rows`` rows (one read when a
+    row-count hint or a LIMIT probe shows it fits one chunk, else persist +
+    count + one xxhash64-filtered read per chunk), so the driver holds one
+    chunk at a time;
+  * per chunk: one tracked broadcast and one mapInPandas over the query
+    side. Each Arrow batch is normalized once, then scored against the
+    chunk in cache-sized column blocks by a scorer — f32 BLAS cosine here,
+    PQ asymmetric-distance lookups in pq.py — and a selector keeps each
+    block's pairs: the per-row top K (``grouped._topk_cols`` per block, then
+    once more over the block winners; no full sort, an algorithmic
+    improvement over the reference's per-row argsort with the same result
+    set) or every pair above a threshold;
+  * merge: a single chunk's output is final, ranked in the kernel; several
+    chunks' partial top-Ks union into one row_number() window over
+    (sim desc, r_id asc) — the classic partial+final top-K.
 
 The candidate set is emitted directly as a pair table (l_id, r_id, sim,
 rank) — the reference's separate melt step (blocking_utils.py:3-13)
@@ -21,13 +31,14 @@ dissolves into the operator. Ties break deterministically by
 unspecified, a documented divergence (SURVEY.md O24).
 
 At true web scale the exact join stays the per-bucket oracle; the scale path
-is LSH candidate generation (operators/lsh.py) which reuses this module's
-kernel per bucket.
+is LSH candidate generation (operators/lsh.py), whose bucket kernel shares
+this scan's top-k selector.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -40,12 +51,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from deepblocker_spark.operators.embed import EMBEDDING
-from deepblocker_spark.operators.pairing import VectorPairing
-
 from deepblocker_spark.operators.bc_registry import (
     tracked_broadcast as _tracked,
 )
+from deepblocker_spark.operators.embed import EMBEDDING
+from deepblocker_spark.operators.grouped import _topk_cols
+from deepblocker_spark.operators.pairing import VectorPairing
 
 
 # Memory discipline for the similarity kernel (this matters at every scale —
@@ -72,6 +83,8 @@ _SIMS_SCRATCH: dict[tuple[int, int], np.ndarray] = {}
 # next chunk's first batch arrives).
 _F32_CACHE: list[tuple[np.ndarray, np.ndarray]] = []
 _F32_CACHE_CAP = 2
+# The scan's column-block bound: one f32 score block is at most ~4 MB.
+_BLOCK_BYTES = 4 * 1024 * 1024
 
 
 def _sims_buffer(rows: int, cols: int) -> np.ndarray:
@@ -112,7 +125,7 @@ def normalize_rows(x: np.ndarray) -> np.ndarray:
     return x / norms
 
 
-def _pdf_to_chunk(pdf: pd.DataFrame, r_id: str, emb_col: str):
+def _vector_chunk(pdf: pd.DataFrame, r_id: str, emb_col: str):
     ids = np.asarray(pdf[r_id].to_list())
     if len(pdf):
         mat = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
@@ -121,135 +134,181 @@ def _pdf_to_chunk(pdf: pd.DataFrame, r_id: str, emb_col: str):
     return ids, normalize_rows(np.nan_to_num(mat))
 
 
+def _pull_upto(proj: DataFrame, r_id: str, limit: int) -> pd.DataFrame | None:
+    """Every row of ``proj`` through ONE LIMIT(limit + 1) Arrow pull, or
+    None when it holds more than ``limit`` rows (the bounded pull is then
+    discarded). Rows come back ordered by id, so chunk row order — and so
+    the selectors' picks among equal scores — is content-determined rather
+    than partition-order-determined."""
+    pdf = proj.limit(limit + 1).toPandas()
+    if len(pdf) > limit:
+        return None
+    if len(pdf):
+        pdf = pdf.sort_values(r_id, kind="mergesort", ignore_index=True)
+    return pdf
+
+
 def _iter_right_chunks(
-    right: DataFrame,
+    proj: DataFrame,
     r_id: str,
-    emb_col: str,
     max_rows: int,
+    decode,
     right_rows: int | None = None,
+    pulled: pd.DataFrame | None = None,
 ):
-    """Yield (ids, normalized float64 matrix) chunks of the right table,
-    each ~max_rows rows, WITHOUT materializing the whole table on the
+    """Yield ``decode(pdf)`` for chunks of ~max_rows rows of the index
+    projection ``proj`` WITHOUT materializing the whole table on the
     driver: membership is deterministic (pmod(xxhash64(r_id), n_chunks))
     and each chunk is a separate filtered toPandas, so driver peak memory
-    is O(chunk), not O(N_right) (VERDICT r1 #7). The projection is
-    persisted across the count + per-chunk reads so upstream (embedding)
-    is computed once; toPandas goes through Arrow batches — order-of-
-    magnitude faster than row-wise py4j collect().
+    is O(chunk), not O(N_right) (VERDICT r1 #7). toPandas goes through
+    Arrow batches — order-of-magnitude faster than row-wise py4j collect().
 
     ``right_rows`` (a row-count hint, e.g. from a checkpoint manifest)
-    skips the count job; when it says the table fits one chunk the
-    persist round-trip is skipped too — one toPandas, nothing else.
-
-    Without a hint, a LIMIT(max_rows + 1) Arrow probe replaces the old
-    persist + count + toPandas sizing round-trip (round 6; the same
-    limit-probe pattern as pq.pq_topk_join): when the table fits one
-    chunk — every oracle query and any pairing below max_broadcast_rows —
-    the whole collection is ONE bounded job, and the probe can never pull
-    more than one chunk's rows to the driver. The probed rows are ordered
-    by id so chunk row order (and therefore f32 argpartition behavior on
-    exact score ties) is content-determined rather than
-    partition-order-determined. Only a genuinely multi-chunk table still
-    pays the persist + count + per-chunk reads (the probe's bounded pull
-    is discarded — one chunk's worth of wasted transfer, vs the full
-    lineage recomputation the count used to cost at every size)."""
-    proj = right.select(r_id, emb_col)
+    skips the sizing; when it says the table fits one chunk that chunk is
+    one toPandas — or ``pulled``, a caller's own ``_pull_upto`` of the
+    whole table — and nothing else. Without a hint a ``_pull_upto`` probe
+    makes a table that fits one chunk (every oracle query and any pairing
+    below max_broadcast_rows) ONE bounded job. Only a genuinely
+    multi-chunk table pays the persist + count + per-chunk reads, the
+    projection persisted across them so upstream (embedding) is computed
+    once."""
     if max_rows <= 0:
         raise ValueError("max_broadcast_rows must be positive")
-    if right_rows is not None and right_rows <= max_rows:
-        yield _pdf_to_chunk(proj.toPandas(), r_id, emb_col)
-        return
     if right_rows is None:
-        probe = proj.limit(max_rows + 1).toPandas()
-        if len(probe) <= max_rows:
-            if len(probe):
-                probe = probe.sort_values(r_id, kind="mergesort",
-                                          ignore_index=True)
-            yield _pdf_to_chunk(probe, r_id, emb_col)
+        pulled = _pull_upto(proj, r_id, max_rows)
+        if pulled is not None:
+            yield decode(pulled)
             return
-        del probe
+    elif right_rows <= max_rows:
+        yield decode(proj.toPandas() if pulled is None else pulled)
+        return
+    del pulled
     proj.persist()
     try:
         n = proj.count() if right_rows is None else right_rows
         if n <= max_rows:
-            yield _pdf_to_chunk(proj.toPandas(), r_id, emb_col)
+            yield decode(proj.toPandas())
             return
         n_chunks = -(-n // max_rows)
         keyed = proj.withColumn(
             "_chunk", F.pmod(F.xxhash64(F.col(r_id)), F.lit(n_chunks)).cast("int")
         )
         for c in range(n_chunks):
-            pdf = keyed.filter(F.col("_chunk") == c).drop("_chunk").toPandas()
-            yield _pdf_to_chunk(pdf, r_id, emb_col)
+            yield decode(keyed.filter(F.col("_chunk") == c).drop("_chunk").toPandas())
     finally:
         proj.unpersist()
 
 
-def _topk_select(
-    lmat32: np.ndarray,
-    rmat32: np.ndarray,
-    k: int,
-    lids: np.ndarray | None,
-    rids: np.ndarray | None,
-    exclude_self: bool,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Cache-blocked per-row top-k: the right side is processed in column
-    chunks sized so each sims block stays cache-resident (~4MB). This keeps
-    DRAM traffic ~constant per task instead of O(b x m) — on bandwidth-
-    starved hosts the full-width block made the stage scale with memory
-    bandwidth, not cores. Per-chunk top-k candidates are merged and reduced
-    to the global top-k. Returns (row_idx, col_idx) into (lmat32, rmat32)."""
-    b, m = len(lmat32), len(rmat32)
-    if m == 0 or b == 0:
-        return np.empty(0, np.int64), np.empty(0, np.int64)
-    ccols = max(1024, (4 * 1024 * 1024) // max(4 * b, 1))
-    cand_cols: list[np.ndarray] = []
-    cand_sims: list[np.ndarray] = []
-    for start in range(0, m, ccols):
-        rchunk = rmat32[start : start + ccols]
-        mc = len(rchunk)
-        sims32 = np.dot(lmat32, rchunk.T, out=_sims_buffer(b, mc))
-        if exclude_self:
-            sims32[lids[:, None] == rids[None, start : start + mc]] = -np.inf
-        kk = min(k, mc)
-        if kk < mc:
-            part = np.argpartition(-sims32, kk - 1, axis=1)[:, :kk]
-        else:
-            part = np.broadcast_to(np.arange(mc), (b, mc)).copy()
-        cand_cols.append(part + start)
-        cand_sims.append(np.take_along_axis(sims32, part, axis=1).copy())
-    cols_all = np.concatenate(cand_cols, axis=1)  # b x (k * nchunks)
-    sims_all = np.concatenate(cand_sims, axis=1)
-    nc = cols_all.shape[1]
-    kk = min(k, nc)
-    if kk < nc:
-        part = np.argpartition(-sims_all, kk - 1, axis=1)[:, :kk]
-        final_cols = np.take_along_axis(cols_all, part, axis=1)
-        final_sims = np.take_along_axis(sims_all, part, axis=1)
-    else:
-        final_cols, final_sims = cols_all, sims_all
-    rows = np.repeat(np.arange(b), final_cols.shape[1])
-    cols = final_cols.ravel()
-    keep = final_sims.ravel() > -np.inf
-    return rows[keep], cols[keep]
+def _scored_blocks(score, lids: np.ndarray, rids: np.ndarray, drop):
+    """Yield (lo, scores) over the column blocks of one query batch against
+    one chunk: ``score(lo, hi)`` scores chunk rows lo:hi, and pairs that
+    ``drop(l_ids, r_ids)`` marks read -inf, so no selector keeps them.
+    Blocks are sized so an f32 block stays cache-resident (~4 MB): DRAM
+    traffic per task stays ~constant instead of O(batch x chunk) — on
+    bandwidth-starved hosts the full-width block made the stage scale with
+    memory bandwidth, not cores."""
+    width = max(1024, _BLOCK_BYTES // max(4 * len(lids), 1))
+    for lo in range(0, len(rids), width):
+        s = score(lo, min(lo + width, len(rids)))
+        if drop is not None:
+            s[drop(lids[:, None], rids[None, lo : lo + s.shape[1]])] = -np.inf
+        yield lo, s
 
 
-def _rescore_and_order(
-    lmat64: np.ndarray,
-    rmat64: np.ndarray,
-    rows: np.ndarray,
-    cols: np.ndarray,
-    r_ids: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Exact float64 similarity for the selected pairs + deterministic
-    (row, sim desc, r_id asc) ordering."""
-    s = np.einsum("ij,ij->i", lmat64[rows], rmat64[cols])
-    sel_rids = r_ids[cols]
-    order = np.lexsort((sel_rids, -s, rows))
-    return rows[order], cols[order], s[order]
+def _cosine_scorer(lmat: np.ndarray, rmat: np.ndarray):
+    """f32 BLAS scores of a normalized batch against rows lo:hi of a
+    normalized chunk, written into a reused per-worker buffer."""
+    lmat32, rmat32 = lmat.astype(np.float32), _f32_view(rmat)
+    return lambda lo, hi: np.dot(
+        lmat32, rmat32[lo:hi].T, out=_sims_buffer(len(lmat32), hi - lo)
+    )
 
 
-PAIR_FIELDS = ["l_id", "r_id", "sim", "rank"]
+def _topk_pairs(blocks, b: int, k: int):
+    """Top-k selector: each block's per-row top k, then the top k of those
+    winners -> (rows, cols, scores) of the selected pairs with dropped
+    (-inf) pairs removed; order unspecified."""
+    cand_cols, cand_vals = [], []
+    for lo, s in blocks:
+        part = _topk_cols(s, k)
+        cand_cols.append(part + lo)
+        cand_vals.append(np.take_along_axis(s, part, axis=1))
+    cols = np.concatenate(cand_cols, axis=1)  # b x (k * n_blocks)
+    vals = np.concatenate(cand_vals, axis=1)
+    part = _topk_cols(vals, k)
+    cols = np.take_along_axis(cols, part, axis=1).ravel()
+    vals = np.take_along_axis(vals, part, axis=1).ravel()
+    rows = np.repeat(np.arange(b), part.shape[1])
+    keep = vals > -np.inf
+    return rows[keep], cols[keep], vals[keep]
+
+
+def _threshold_pairs(blocks, floor: float):
+    """Threshold selector: (rows, cols) of every pair scoring >= floor."""
+    rows, cols = [], []
+    for lo, s in blocks:
+        r, c = np.nonzero(s >= floor)
+        rows.append(r)
+        cols.append(c + lo)
+    return np.concatenate(rows), np.concatenate(cols)
+
+
+def _ranked(lids, rids, rows, cols, s) -> pd.DataFrame:
+    """(l_id, r_id, sim, rank) of a batch's selected pairs, ordered and
+    ranked by (sim desc, r_id asc) within each batch row — the batch row
+    index, not l_id, in case of duplicate left keys. Final when the index
+    is one chunk; the window merge re-ranks otherwise."""
+    order = np.lexsort((rids[cols], -s, rows))
+    rows, cols, s = rows[order], cols[order], s[order]
+    out = pd.DataFrame({"l_id": lids[rows], "r_id": rids[cols], "sim": s})
+    out["rank"] = out.groupby(rows, sort=False).cumcount().astype("int32") + 1
+    return out
+
+
+def _pair_schema(left, l_id, right, r_id, ranked: bool = True) -> StructType:
+    fields = [
+        StructField("l_id", left.select(l_id).schema.fields[0].dataType, True),
+        StructField("r_id", right.select(r_id).schema.fields[0].dataType, True),
+        StructField("sim", DoubleType(), False),
+    ]
+    if ranked:
+        fields.append(StructField("rank", IntegerType(), False))
+    return StructType(fields)
+
+
+def _broadcast_scan(left, chunks, l_id, emb_col, schema, kernel, k=None):
+    """The scan: per index chunk (ids, payload), one tracked broadcast and
+    one mapInPandas over the query side whose Arrow batches are normalized
+    once and handed to ``kernel(l_ids, lmat, r_ids, payload)`` -> pairs.
+    Chunk outputs union; given ``k``, several chunks' partial top-Ks merge
+    through one (sim desc, r_id asc) window."""
+    sc = left.sparkSession.sparkContext
+    q_side = left.select(l_id, emb_col)
+
+    def runner(bc):
+        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            rids, payload = bc.value
+            for pdf in batches:
+                if not len(pdf) or payload.size == 0:
+                    continue
+                lmat = normalize_rows(
+                    np.nan_to_num(np.stack(pdf[emb_col].to_numpy()).astype(np.float64))
+                )
+                out = kernel(pdf[l_id].to_numpy(), lmat, rids, payload)
+                if len(out):
+                    yield out
+
+        return run
+
+    parts = []
+    for chunk in chunks:
+        parts.append(q_side.mapInPandas(runner(_tracked(sc, chunk)), schema))
+        del chunk  # the broadcast holds the data; driver peak stays O(chunk)
+    result = reduce(DataFrame.unionByName, parts)
+    if k is None or len(parts) == 1:
+        return result
+    w = Window.partitionBy("l_id").orderBy(F.desc("sim"), F.asc("r_id"))
+    return result.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def exact_topk_join(
@@ -268,74 +327,25 @@ def exact_topk_join(
     ``exclude_self`` drops l_id == r_id pairs (self-blocking / dedup mode).
     K > N_right truncates silently, matching numpy slice semantics
     (vector_pairing_models.py:46). ``right_rows`` is an optional row-count
-    hint (e.g. from a checkpoint manifest) that skips the sizing count job.
+    hint (e.g. from a checkpoint manifest) that skips the sizing probe.
+    Selection runs on f32 scores; the selected pairs are rescored in f64
+    from the normalized vectors, so emitted sims are bit-compatible with a
+    double-precision oracle.
     """
-    spark = left.sparkSession
-    id_field = right.select(r_id).schema.fields[0].dataType
+    drop = np.equal if exclude_self else None
 
-    pair_schema = StructType(
-        [
-            StructField("l_id", left.select(l_id).schema.fields[0].dataType, True),
-            StructField("r_id", id_field, True),
-            StructField("sim", DoubleType(), False),
-            StructField("rank", IntegerType(), False),
-        ]
+    def kernel(lids, lmat, rids, rmat):
+        blocks = _scored_blocks(_cosine_scorer(lmat, rmat), lids, rids, drop)
+        rows, cols, _ = _topk_pairs(blocks, len(lids), k)
+        s = np.einsum("ij,ij->i", lmat[rows], rmat[cols])
+        return _ranked(lids, rids, rows, cols, s)
+
+    chunks = _iter_right_chunks(
+        right.select(r_id, emb_col), r_id, max_broadcast_rows,
+        lambda pdf: _vector_chunk(pdf, r_id, emb_col), right_rows,
     )
-
-    def make_runner(ids_c: np.ndarray, mat_c: np.ndarray):
-        bc = _tracked(spark.sparkContext, (ids_c, mat_c))
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            rids, rmat = bc.value
-            rmat32 = _f32_view(rmat) if rmat.size else rmat
-            for pdf in batches:
-                if not len(pdf) or rmat.size == 0:
-                    continue
-                lids = pdf[l_id].to_numpy()
-                lmat = normalize_rows(
-                    np.nan_to_num(np.stack(pdf[emb_col].to_numpy()).astype(np.float64))
-                )
-                lmat32 = lmat.astype(np.float32)
-                rows, cols = _topk_select(lmat32, rmat32, k, lids, rids, exclude_self)
-                if not len(rows):
-                    continue
-                rows, cols, s = _rescore_and_order(lmat, rmat, rows, cols, rids)
-                out = pd.DataFrame(
-                    {
-                        "l_id": lids[rows],
-                        "r_id": rids[cols],
-                        "sim": s,
-                    }
-                )
-                # rank within this chunk (final rank re-derived post-merge
-                # when chunked; exact already when single-chunk). Group by the
-                # batch row index, not l_id, in case of duplicate left keys.
-                out["rank"] = (
-                    out.groupby(rows, sort=False).cumcount().astype("int32") + 1
-                )
-                yield out
-
-        return run
-
-    parts = []
-    for ids_c, mat_c in _iter_right_chunks(
-        right, r_id, emb_col, max_broadcast_rows, right_rows
-    ):
-        parts.append(
-            left.select(l_id, emb_col).mapInPandas(make_runner(ids_c, mat_c), pair_schema)
-        )
-        del ids_c, mat_c  # broadcast holds the data; keep driver peak O(chunk)
-    result = parts[0]
-    for p in parts[1:]:
-        result = result.unionByName(p)
-
-    if len(parts) > 1:
-        w = Window.partitionBy("l_id").orderBy(F.desc("sim"), F.asc("r_id"))
-        result = (
-            result.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
-    return result
+    schema = _pair_schema(left, l_id, right, r_id)
+    return _broadcast_scan(left, chunks, l_id, emb_col, schema, kernel, k)
 
 
 def cosine_threshold_join(
@@ -350,77 +360,37 @@ def cosine_threshold_join(
 ) -> DataFrame:
     """All pairs with cosine >= threshold: (l_id, r_id, sim double).
 
-    Same broadcast + per-batch BLAS kernel as the top-K join, but emitting
-    the thresholded pairs instead of per-row top-K. ``upper_only`` keeps
+    The top-K join's scan with the threshold selector. ``upper_only`` keeps
     l_id < r_id (self-join near-duplicate semantics). Note: a crossJoin with
     Column-expression cosine (scoring.cosine_col) computes the same thing,
     but Spark's higher-order array functions evaluate interpreted
     per-element — the matmul path is ~100x faster at equal output.
     """
-    spark = left.sparkSession
+    drop = np.greater_equal if upper_only else None
 
-    pair_schema = StructType(
-        [
-            StructField("l_id", left.select(l_id).schema.fields[0].dataType, True),
-            StructField("r_id", right.select(r_id).schema.fields[0].dataType, True),
-            StructField("sim", DoubleType(), False),
-        ]
+    def kernel(lids, lmat, rids, rmat):
+        # f32 guard band scaled to the accumulation length: worst-case
+        # error of a dim-term f32 dot product is ~dim*eps/2, so one f32
+        # ulp is NOT enough (ADVICE r1). Anything inside the band is kept
+        # for the exact f64 re-check, so a wide band costs only extra
+        # rescoring, never wrong results. The floor stays finite so the
+        # -inf of dropped pairs never passes it.
+        band = max(1e-4, 2.0 * rmat.shape[1] * np.finfo(np.float32).eps)
+        floor = max(threshold - band, -np.finfo(np.float32).max)
+        blocks = _scored_blocks(_cosine_scorer(lmat, rmat), lids, rids, drop)
+        rows, cols = _threshold_pairs(blocks, floor)
+        s = np.einsum("ij,ij->i", lmat[rows], rmat[cols])
+        keep = s >= threshold
+        return pd.DataFrame(
+            {"l_id": lids[rows[keep]], "r_id": rids[cols[keep]], "sim": s[keep]}
+        )
+
+    chunks = _iter_right_chunks(
+        right.select(r_id, emb_col), r_id, max_broadcast_rows,
+        lambda pdf: _vector_chunk(pdf, r_id, emb_col),
     )
-
-    parts = []
-    for ids_c, mat_c in _iter_right_chunks(right, r_id, emb_col, max_broadcast_rows):
-        bc = _tracked(spark.sparkContext, (ids_c, mat_c))
-        del ids_c, mat_c
-
-        def run(batches: Iterator[pd.DataFrame], _bc=bc) -> Iterator[pd.DataFrame]:
-            rids, rmat = _bc.value
-            rmat32 = _f32_view(rmat) if rmat.size else rmat
-            # float32 threshold guard band scaled to the accumulation length:
-            # worst-case error of a dim-term f32 dot product is ~dim*eps/2,
-            # so one f32 ulp is NOT enough (ADVICE r1). Anything inside the
-            # band is kept for the exact float64 re-check below, so a wide
-            # band costs only extra rescoring, never wrong results.
-            dim = rmat.shape[1] if rmat.ndim == 2 else 0
-            guard = threshold - max(1e-4, 2.0 * dim * np.finfo(np.float32).eps)
-            for pdf in batches:
-                if not len(pdf) or rmat.size == 0:
-                    continue
-                lids = pdf[l_id].to_numpy()
-                lmat = normalize_rows(
-                    np.nan_to_num(np.stack(pdf[emb_col].to_numpy()).astype(np.float64))
-                )
-                lmat32 = lmat.astype(np.float32)
-                b, m = len(lmat32), len(rmat32)
-                ccols = max(1024, (4 * 1024 * 1024) // max(4 * b, 1))
-                out_rows, out_cols = [], []
-                for start in range(0, m, ccols):
-                    rchunk = rmat32[start : start + ccols]
-                    sims32 = np.dot(lmat32, rchunk.T, out=_sims_buffer(b, len(rchunk)))
-                    mask = sims32 >= guard
-                    if upper_only:
-                        mask &= lids[:, None] < rids[None, start : start + len(rchunk)]
-                    r_, c_ = np.nonzero(mask)
-                    if len(r_):
-                        out_rows.append(r_)
-                        out_cols.append(c_ + start)
-                if not out_rows:
-                    continue
-                rows = np.concatenate(out_rows)
-                cols = np.concatenate(out_cols)
-                s = np.einsum("ij,ij->i", lmat[rows], rmat[cols])
-                keep = s >= threshold
-                rows, cols, s = rows[keep], cols[keep], s[keep]
-                if not len(rows):
-                    continue
-                yield pd.DataFrame(
-                    {"l_id": lids[rows], "r_id": rids[cols], "sim": s}
-                )
-
-        parts.append(left.select(l_id, emb_col).mapInPandas(run, pair_schema))
-    result = parts[0]
-    for p in parts[1:]:
-        result = result.unionByName(p)
-    return result
+    schema = _pair_schema(left, l_id, right, r_id, ranked=False)
+    return _broadcast_scan(left, chunks, l_id, emb_col, schema, kernel)
 
 
 class ExactTopKVectorPairing(VectorPairing):

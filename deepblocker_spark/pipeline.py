@@ -81,7 +81,7 @@ class SparkSIFEmbedding:
         # One corpus scan, one action: the capped frequency-ordered collect
         # observes the corpus token total on the way (sif_weights_df's
         # total-join form stays as the oracle-checkable relational variant)
-        self.weights = E.collect_sif_weights_fast(
+        self.weights = E.collect_sif_weights(
             E.token_frequencies(corpus, text_col),
             self.cfg.sif_weighting_param,
             self.cfg.sif_min_freq,

@@ -7,7 +7,6 @@ import pandas as pd
 
 from deepblocker_spark.operators.ann import (
     IVFVectorPairing,
-    brute_force_topk,
     ivf_topk,
     ivf_topk_join,
     recall_at_k,
@@ -55,7 +54,7 @@ def test_lsh_pairing_dispatches_dyadic(spark):
 
 def test_ivf_topk_recall_vs_exact(spark):
     df = _clustered(spark, 12, 5, seed=23)
-    exact = brute_force_topk(df, k=4, id_col="id", emb_col="embedding")
+    exact = exact_topk_join(df, df, k=4, exclude_self=True)
     approx = ivf_topk(df, k=4, id_col="id", emb_col="embedding",
                       n_cells=8, nprobe=3, seed=9)
     r = recall_at_k(approx, exact).collect()[0]
@@ -114,7 +113,7 @@ def test_ivf_mega_cell_grid_split_no_recall_loss(spark):
     assert sorted(map(tuple, split[key].to_numpy())) == sorted(
         map(tuple, unsplit[key].to_numpy())
     ), "grid split changed the candidate set"
-    exact = brute_force_topk(df, k=4, id_col="id", emb_col="embedding")
+    exact = exact_topk_join(df, df, k=4, exclude_self=True)
     r = recall_at_k(
         spark.createDataFrame(split[key]), exact
     ).collect()[0]

@@ -160,8 +160,12 @@ def test_remove_pc_matches_numpy_svd(spark):
 
 def test_collect_sif_weights_cap(spark):
     freq = token_frequencies(_texts_df(spark))
-    w = collect_sif_weights(sif_weights_df(freq), max_vocab=2)
+    w = collect_sif_weights(freq, max_vocab=2)
     assert set(w) == {"apple", "banana"}  # top-2 by frequency
+    # the total behind each weight counts every token, not only the kept
+    # ones: the capped map agrees exactly with the uncapped frame
+    full = {r["token"]: r["weight"] for r in sif_weights_df(freq).collect()}
+    assert w == {t: full[t] for t in w}
 
 
 def test_embed_tokens_col_bit_identical(spark):

@@ -91,11 +91,13 @@ def test_topk_per_key_string_ids(tiny_batch_spark):
     assert key(out) == key(pdf)
 
 
-def test_topk_per_key_pre_combine_identical_output(tiny_batch_spark):
-    """VERDICT r3 #3 lock: the map-side combiner (pre_combine=True, the
-    default) must be output-identical to the no-combiner path, including on
-    duplicated pairs scattered across partitions and with the compaction
-    threshold forced to fire (combine_buffer_rows=16 << the data)."""
+def test_topk_per_key_compaction_identical_output(tiny_batch_spark, monkeypatch):
+    """The merge runner's bounded buffer: with the compaction threshold
+    forced to fire (_COMPACT_ROWS=16 << the data) the output must equal
+    the uncompacted merge, including on duplicated pairs scattered across
+    partitions."""
+    from deepblocker_spark.operators import grouped
+
     spark = tiny_batch_spark
     rng = np.random.default_rng(11)
     n = 600
@@ -112,60 +114,10 @@ def test_topk_per_key_pre_combine_identical_output(tiny_batch_spark):
     key = lambda d: sorted(  # noqa: E731
         map(tuple, d[["l_id", "r_id", "sim", "rank"]].values.tolist())
     )
-    plain = topk_per_key(df, k=5, pre_combine=False).toPandas()
-    combined = topk_per_key(df, k=5).toPandas()
-    compacting = topk_per_key(df, k=5, combine_buffer_rows=16).toPandas()
-    assert key(combined) == key(plain)
+    plain = topk_per_key(df, k=5).toPandas()
+    monkeypatch.setattr(grouped, "_COMPACT_ROWS", 16)
+    compacting = topk_per_key(df, k=5).toPandas()
     assert key(compacting) == key(plain)
-
-
-def test_lsh_candidates_pre_combine_lock(spark):
-    """End-to-end lock on the hash-locked LSH pair table (VERDICT r3 #8):
-    lsh_candidates output through the combiner equals the no-combiner
-    output on a clustered embedding fixture — the real bucket geometry."""
-    from deepblocker_spark.operators import grouped
-    from deepblocker_spark.operators.bc_registry import release_tracked
-    from deepblocker_spark.operators.lsh import lsh_candidates
-
-    rng = np.random.default_rng(3)
-    dim = 16
-    centers = rng.standard_normal((12, dim))
-    rows = []
-    for i in range(360):
-        c = i % 12
-        v = centers[c] + 0.05 * rng.standard_normal(dim)
-        rows.append((i, v.astype("float32").tolist()))
-    df = spark.createDataFrame(rows, ["id", "embedding"])
-
-    def run():
-        out = lsh_candidates(
-            df, id_col="id", emb_col="embedding", dim=dim, k=5,
-            n_bands=6, band_bits=6, seed=7,
-        ).toPandas()
-        release_tracked()
-        return sorted(
-            (int(l), int(r), round(float(s), 9), int(rk))
-            for l, r, s, rk in out[["l_id", "r_id", "sim", "rank"]].values
-        )
-
-    with_combine = run()
-    orig = grouped.topk_per_key
-    try:
-        grouped.topk_per_key = lambda *a, **kw: orig(
-            *a, **{**kw, "pre_combine": False}
-        )
-        # lsh.py imported the symbol directly; patch there too
-        from deepblocker_spark.operators import lsh as lsh_mod
-
-        lsh_mod.topk_per_key = grouped.topk_per_key
-        without = run()
-    finally:
-        grouped.topk_per_key = orig
-        from deepblocker_spark.operators import lsh as lsh_mod
-
-        lsh_mod.topk_per_key = orig
-    assert with_combine == without
-    assert len(with_combine) > 0
 
 
 def test_pack_unpack_topk_roundtrip():
@@ -234,7 +186,7 @@ def test_topk_per_key_packed_input_identical_output(tiny_batch_spark):
     both = pd.concat([pdf, pdf.head(60)], ignore_index=True)
     df = spark.createDataFrame(both).repartition(13)
 
-    plain = topk_per_key(df, k=5, pre_combine=False).toPandas()
+    plain = topk_per_key(df, k=5).toPandas()
 
     packed_schema = StructType([
         StructField("l_id", LongType(), True),
@@ -251,9 +203,7 @@ def test_topk_per_key_packed_input_identical_output(tiny_batch_spark):
                 )
 
     packed = df.mapInPandas(local_pack, packed_schema)
-    got = topk_per_key(
-        packed, k=5, pre_combine=False, packed_input=True
-    ).toPandas()
+    got = topk_per_key(packed, k=5, packed_input=True).toPandas()
 
     key = lambda d: sorted(  # noqa: E731
         map(tuple, d[["l_id", "r_id", "sim", "rank"]].values.tolist())

@@ -7,7 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from deepblocker_spark.operators.ann import brute_force_topk, lsh_topk, recall_at_k
+from deepblocker_spark.operators.ann import lsh_topk, recall_at_k
 from deepblocker_spark.operators.cluster import (
     clusters_from_candidates,
     clusters_to_pairs,
@@ -19,6 +19,7 @@ from deepblocker_spark.operators.scoring import (
     jaro_winkler,
     score_candidates,
 )
+from deepblocker_spark.operators.topk import exact_topk_join
 
 DIM = 16
 
@@ -64,7 +65,7 @@ def test_lsh_recovers_cluster_neighbors(spark):
 
 def test_lsh_recall_vs_exact_oracle(spark):
     df, _ = _clustered_embeddings(spark)
-    exact = brute_force_topk(df, k=4, id_col="id", emb_col="embedding")
+    exact = exact_topk_join(df, df, k=4, exclude_self=True)
     approx = lsh_topk(df, k=4, id_col="id", emb_col="embedding", dim=DIM,
                       n_bands=4, band_bits=6)
     r = recall_at_k(approx, exact).collect()[0]

@@ -7,8 +7,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
-from deepblocker_spark.operators.topk import exact_topk_join
+from deepblocker_spark.operators import topk
+from deepblocker_spark.operators.pq import _adc_luts, _adc_scores, pq_topk_join
+from deepblocker_spark.operators.topk import cosine_threshold_join, exact_topk_join
 
 
 def _emb_df(spark, n, dim, seed, id_start=0):
@@ -48,14 +51,6 @@ def test_topk_matches_oracle(spark):
     got = _collect_pairs(exact_topk_join(left, right, k=5))
     expected = _oracle_topk(lx, rx, 5, list(range(30)), list(range(100, 125)))
     assert got == expected
-
-
-def test_topk_chunked_equals_single_chunk(spark):
-    left, lx = _emb_df(spark, 20, 8, seed=3)
-    right, rx = _emb_df(spark, 37, 8, seed=4, id_start=500)
-    whole = _collect_pairs(exact_topk_join(left, right, k=7))
-    chunked = _collect_pairs(exact_topk_join(left, right, k=7, max_broadcast_rows=10))
-    assert whole == chunked
 
 
 def test_k_exceeding_right_truncates(spark):
@@ -102,31 +97,6 @@ def test_zero_vector_rows_get_sim_zero(spark):
     assert all(r["sim"] == 0.0 for r in rows)
 
 
-def test_topk_right_rows_hint_multi_chunk_identical(spark):
-    from deepblocker_spark.operators.topk import exact_topk_join as ej
-    left, _ = _emb_df(spark, 15, 8, seed=11)
-    right, _ = _emb_df(spark, 33, 8, seed=12, id_start=900)
-    whole = _collect_pairs(ej(left, right, k=6))
-    hinted_single = _collect_pairs(ej(left, right, k=6, right_rows=33))
-    hinted_multi = _collect_pairs(ej(left, right, k=6, max_broadcast_rows=8, right_rows=33))
-    assert whole == hinted_single == hinted_multi
-
-
-def test_threshold_join_chunked_equals_single_chunk(spark):
-    from deepblocker_spark.operators.topk import cosine_threshold_join
-
-    left, _ = _emb_df(spark, 25, 8, seed=13)
-    right, _ = _emb_df(spark, 31, 8, seed=14, id_start=700)
-
-    def as_set(df):
-        return {(r["l_id"], r["r_id"], round(r["sim"], 9)) for r in df.collect()}
-
-    whole = as_set(cosine_threshold_join(left, right, 0.3, upper_only=False))
-    chunked = as_set(cosine_threshold_join(left, right, 0.3, upper_only=False,
-                                           max_broadcast_rows=7))
-    assert whole == chunked and len(whole) > 0
-
-
 def test_pairing_self_query_does_not_stick_to_later_dyadic_query(spark):
     """A mode='self' query must not switch exclude_self on for the
     instance: a later dyadic query over tables that share ids keeps its
@@ -142,3 +112,80 @@ def test_pairing_self_query_does_not_stick_to_later_dyadic_query(spark):
     expected = exact_topk_join(left, right, k=6).toPandas()
     assert len(dyadic) == len(expected) == 36
     assert (dyadic["l_id"] == dyadic["r_id"]).sum() == 6
+
+
+# Every join over the chunk-broadcast scan, as f(left, right, **kw); the
+# right side below has 37 rows.
+_SCAN_JOINS = {
+    "exact": lambda l, r, **kw: exact_topk_join(l, r, k=7, **kw),
+    "exact_right_rows": lambda l, r, **kw: exact_topk_join(
+        l, r, k=7, right_rows=37, **kw
+    ),
+    "threshold": lambda l, r, **kw: cosine_threshold_join(
+        l, r, 0.3, upper_only=False, **kw
+    ),
+    "pq": lambda l, r, **kw: pq_topk_join(
+        l, r, k=7, l_id="id", r_id="id", m=4, n_codes=16, **kw
+    ),
+}
+
+
+@pytest.mark.parametrize("join", list(_SCAN_JOINS))
+def test_chunked_scan_equals_single_chunk(spark, join):
+    """Several index chunks (a small max_broadcast_rows: 4 chunks, merged
+    by the window for the top-K joins) give exactly the single-chunk rows,
+    sim and rank included. With a right_rows hint, both sizes skip the
+    probe and still match the hint-less result."""
+    left, _ = _emb_df(spark, 20, 8, seed=3)
+    right, _ = _emb_df(spark, 37, 8, seed=4, id_start=500)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    run = _SCAN_JOINS[join]
+    whole = rows(run(left, right))
+    assert whole and rows(run(left, right, max_broadcast_rows=10)) == whole
+    if join == "exact_right_rows":
+        assert whole == rows(exact_topk_join(left, right, k=7))
+
+
+@pytest.mark.parametrize("scorer", ["cosine", "adc"])
+def test_blocked_topk_selector_matches_one_block(monkeypatch, scorer):
+    """The scan's top-k selector over cache-sized column blocks: no scored
+    block is wider than the bound, and on a tie-free score matrix the
+    blocked pick (per-block top k, then top k of the winners) equals the
+    one-block pick. Equal ids are dropped, as in self-joins."""
+    rng = np.random.default_rng(5)
+    b, m, k = 1100, 2500, 10
+    lmat = topk.normalize_rows(rng.normal(size=(b, 8)))
+    rmat = topk.normalize_rows(rng.normal(size=(m, 8)))
+    ids = np.arange(m)
+    if scorer == "cosine":
+        score = topk._cosine_scorer(lmat, rmat)
+    else:
+        luts = _adc_luts(lmat, rng.normal(size=(4, 256, 2)))
+        codes = rng.integers(0, 256, size=(m, 4)).astype(np.uint8)
+        score = lambda lo, hi: _adc_scores(luts, codes[lo:hi])  # noqa: E731
+    top = np.sort(score(0, m), axis=1)[:, -(k + 2):]
+    assert (np.diff(top, axis=1) > 0).all(), "fixture must be tie-free"
+
+    widths = []
+
+    def recording(lo, hi):
+        widths.append(hi - lo)
+        return score(lo, hi)
+
+    def select():
+        widths.clear()
+        blocks = topk._scored_blocks(recording, ids[:b], ids, np.equal)
+        r, c, v = topk._topk_pairs(blocks, b, k)
+        return sorted(zip(r.tolist(), c.tolist(), v.tolist()))
+
+    bound = max(1024, topk._BLOCK_BYTES // (4 * b))
+    blocked = select()
+    assert len(widths) == 3 and max(widths) <= bound
+    monkeypatch.setattr(topk, "_BLOCK_BYTES", 4 * b * m)
+    one_block = select()
+    assert widths == [m]
+    assert blocked == one_block and len(blocked) == b * k
+

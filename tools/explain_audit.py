@@ -203,6 +203,45 @@ def main() -> None:
     )
     qs["pq_gate_delegates"] = lambda *_: pq_gate_df
 
+    # The chunk-broadcast scan (operators/topk.py) behind the exact top-K
+    # and PQ brute-force joins: one MapInPandas per index chunk over the
+    # query side; the index travels as broadcasts, never through a shuffle.
+    # One chunk is final in the kernel (no Window); n chunks union into ONE
+    # (sim desc, r_id asc) window merge.
+    from deepblocker_spark.operators.topk import exact_topk_join
+
+    scan_args = dict(k=5, l_id="vec_id", r_id="vec_id", exclude_self=True)
+    exact_one_df = exact_topk_join(emb_tbl, emb_tbl, **scan_args)
+    audits["exact_topk_single_chunk"] = (
+        ["1:MapInPandas (", "!Window", "!Exchange",
+         "ReadSchema: struct<vec_id:bigint,embedding:array<float>>"],
+        "index side fits one broadcast chunk: one kernel over the query "
+        "scan ranks the final top-K itself — no window, no exchange",
+    )
+    qs["exact_topk_single_chunk"] = lambda *_: exact_one_df
+    emb_rows = emb_tbl.count()
+    chunk_rows = emb_rows // 3
+    n_chunks = -(-emb_rows // chunk_rows)
+    exact_multi_df = exact_topk_join(
+        emb_tbl, emb_tbl, max_broadcast_rows=chunk_rows, **scan_args
+    )
+    audits["exact_topk_multi_chunk"] = (
+        [f"{n_chunks}:MapInPandas (", "Union", "1:Window (",
+         "1:hashpartitioning(l_id"],
+        f"max_broadcast_rows={chunk_rows} splits the {emb_rows}-row index "
+        f"into {n_chunks} broadcast chunks: one kernel per chunk, a union, "
+        "and one window merge over a single l_id exchange",
+    )
+    qs["exact_topk_multi_chunk"] = lambda *_: exact_multi_df
+    pq_one_df = pq_topk(emb_tbl, k=5, m=8, n_codes=64)
+    audits["pq_topk_single_chunk"] = (
+        ["1:MapInPandas (", "!Window", "!Exchange",
+         "ReadSchema: struct<vec_id:bigint,embedding:array<float>>"],
+        "below max_driver_code_rows and one chunk of PQ codes: the ADC "
+        "kernel ranks the final top-K itself — no window, no exchange",
+    )
+    qs["pq_topk_single_chunk"] = lambda *_: pq_one_df
+
     # Meta-blocking: the 1-row scalars (block total, mean weight) must join
     # as broadcast nested-loop crosses, never a CartesianProduct; the shared
     # filtered/weighted frames are persisted (InMemoryTableScan) so the

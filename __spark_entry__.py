@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from deepblocker_spark.config import BlockerConfig
 from deepblocker_spark.functions.tokenizer import duckdb_tokens_sql, tokens_col
-from deepblocker_spark.operators.ann import ivf_topk, lsh_topk
+from deepblocker_spark.operators.ann import ivf_topk
 from deepblocker_spark.operators.cluster import connected_components
 from deepblocker_spark.operators.dedup import (
     minhash_lsh_pairs,
@@ -32,6 +32,7 @@ from deepblocker_spark.operators.dedup import (
 )
 from deepblocker_spark.operators.embed import sif_weights_df, token_frequencies
 from deepblocker_spark.operators.golden import golden_pairs_from_splits
+from deepblocker_spark.operators.lsh import lsh_candidates
 from deepblocker_spark.operators.metrics import blocking_statistics
 from deepblocker_spark.operators.preprocess import preprocess_table
 from deepblocker_spark.operators.textstats import (
@@ -998,8 +999,8 @@ def q_lsh_topk_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (its own cosine + window top-5). Measured recall at 24 bands x 4 bits:
     # 1.0 at both sf0.001 and sf0.01.
     emb = _t(spark, sf_dir, "embeddings")
-    approx = lsh_topk(emb, k=5, id_col="vec_id", emb_col="embedding",
-                      dim=64, n_bands=24, band_bits=4)
+    approx = lsh_candidates(emb, k=5, id_col="vec_id", emb_col="embedding",
+                            dim=64, n_bands=24, band_bits=4)
     exact = exact_topk_join(emb, emb, k=5, l_id="vec_id", r_id="vec_id",
                             exclude_self=True)
     hi = exact.filter(F.col("sim") >= 0.4)
@@ -1254,7 +1255,7 @@ def q_lsh_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     from deepblocker_spark.operators.scoring import cosine_col
 
     emb = _t(spark, sf_dir, "embeddings")
-    approx = lsh_topk(
+    approx = lsh_candidates(
         emb, k=5, id_col="vec_id", emb_col="embedding", dim=64,
         n_bands=24, band_bits=4, partition_by="label",
     )

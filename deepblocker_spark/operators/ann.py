@@ -31,30 +31,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from deepblocker_spark.operators.lsh import lsh_candidates
 from deepblocker_spark.operators.pairing import VectorPairing, shared_id_type
 
 from deepblocker_spark.operators.bc_registry import (
     tracked_broadcast as _tracked,
     tracked_persist,
 )
-
-
-def lsh_topk(
-    df: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    dim: int = 64,
-    n_bands: int = 8,
-    band_bits: int = 8,
-    seed: int = 1234,
-    partition_by: str | None = None,
-) -> DataFrame:
-    return lsh_candidates(
-        df, id_col, emb_col, dim, k, n_bands, band_bits, seed,
-        partition_by=partition_by,
-    )
 
 
 def _training_sample(

@@ -16,6 +16,14 @@ similarity joins):
      string or set size) to the candidates only, compute the exact measure
      and filter on it.
 
+When the measure needs how many keys a pair shares, step 2 is
+``_shared_counts`` instead: the same equi-join (a < b in self mode) with
+one count per pair. It is the one overlap count behind
+``ngram_jaccard_pairs``' ``inter``, meta-blocking's ``cbs`` and the
+exact-substring joins' ``n_shared``. Before either step, ``_drop_hot`` is
+the one hot-key purge: a broadcast anti-join of the keys with more
+postings than a cap.
+
 Pair contracts: self joins emit each unordered pair once with a < b;
 dyadic (two-table) joins emit ``a`` (``l_id`` for the edit join) from the
 left table and ``b`` (``r_id``) from the right, with no ordering between
@@ -47,6 +55,7 @@ used instead of min of derived integers: string min is engine-portable
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -95,6 +104,18 @@ def _candidate_pairs(
     if where is not None:
         cand = cand.filter(where)
     return cand.select("a", "b").dropDuplicates(["a", "b"])
+
+
+def _shared_counts(lp: DataFrame, rp: DataFrame, key: str, name: str,
+                   self_mode: bool) -> DataFrame:
+    """-> (a, b, name): how many ``key`` values each pair's postings share
+    — an equi-join on ``key`` of lp (id column ``a``) and rp (``b``), a < b
+    in self mode, and one count per pair (the candidate step of a set
+    similarity join, with its overlap)."""
+    joined = lp.join(rp, key)
+    if self_mode:
+        joined = joined.filter(F.col("a") < F.col("b"))
+    return joined.groupBy("a", "b").agg(F.count("*").alias(name))
 
 
 def _verify_pairs(
@@ -291,24 +312,26 @@ def _shingle_postings(
     return sets, sets.select("id", "n_sh", F.explode("shingles").alias("shingle"))
 
 
-def _hot_shingles(inv: DataFrame, max_df: int) -> DataFrame:
-    """(shingle, doc_freq) for postings' shingles in more than ``max_df``
-    rows — the stop-list of the capped shingle joins."""
+def _hot_keys(postings: DataFrame, key: str, max_df: int) -> DataFrame:
+    """(key, doc_freq) for the ``key`` values in more than ``max_df``
+    postings rows — the stop-list of every capped postings join."""
     return (
-        inv.groupBy("shingle")
+        postings.groupBy(key)
         .agg(F.count("*").alias("doc_freq"))
         .filter(F.col("doc_freq") > max_df)
     )
 
 
-def _drop_hot(
-    inv: DataFrame, max_df: int, *also: DataFrame
-) -> tuple[DataFrame, ...]:
-    """``inv`` and ``also`` without the shingles hot in ``inv`` (more than
-    ``max_df`` postings); the stop-list is tiny by construction, so each
-    drop is a broadcast anti-join."""
-    hot = F.broadcast(_hot_shingles(inv, max_df).select("shingle"))
-    return tuple(p.join(hot, "shingle", "left_anti") for p in (inv, *also))
+def _drop_hot(key: str, max_df: int, *frames: DataFrame,
+              counted: DataFrame | None = None) -> tuple[DataFrame, ...]:
+    """``frames`` without the ``key`` values hot in ``counted`` (more than
+    ``max_df`` rows; by default all ``frames`` counted together, so a key
+    hot across sides is hot for each); the stop-list is tiny by
+    construction, so each drop is a broadcast anti-join."""
+    if counted is None:
+        counted = reduce(DataFrame.unionAll, [f.select(key) for f in frames])
+    hot = F.broadcast(_hot_keys(counted, key, max_df).select(key))
+    return tuple(f.join(hot, key, "left_anti") for f in frames)
 
 
 def hot_shingles(
@@ -321,7 +344,8 @@ def hot_shingles(
     """-> (shingle, doc_freq) for shingles appearing in more than
     ``max_shingle_df`` documents — the stop-list ``ngram_jaccard_pairs``
     drops, exposed so callers can audit exactly what was excluded."""
-    return _hot_shingles(_shingle_postings(df, id_col, text_col, n)[1], max_shingle_df)
+    postings = _shingle_postings(df, id_col, text_col, n)[1]
+    return _hot_keys(postings, "shingle", max_shingle_df)
 
 
 def ngram_jaccard_pairs(
@@ -349,16 +373,14 @@ def ngram_jaccard_pairs(
     two set sizes, so its payloads are sizes, not shingle arrays."""
     sh, inv = _shingle_postings(df, id_col, text_col, n)
     if max_shingle_df is not None:
-        (inv,) = _drop_hot(inv, max_shingle_df)
+        (inv,) = _drop_hot("shingle", max_shingle_df, inv)
         sizes = inv.groupBy("id").agg(F.count("*").alias("n_sh"))
     else:
         sizes = sh.select("id", "n_sh")
-    pair_inter = (
-        inv.select(F.col("id").alias("a"), "shingle")
-        .join(inv.select(F.col("id").alias("b"), "shingle"), "shingle")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("inter"))
+    pair_inter = _shared_counts(
+        inv.select(F.col("id").alias("a"), "shingle"),
+        inv.select(F.col("id").alias("b"), "shingle"),
+        "shingle", "inter", self_mode=True,
     )
     return _verify_pairs(
         pair_inter, sizes, sizes,
@@ -446,7 +468,8 @@ def _decontam_postings(
         for d, alias in ((train, "train_id"), (eval_df, "eval_id"))
     )
     if max_train_shingle_df is not None:
-        t_inv, e_inv = _drop_hot(t_inv, max_train_shingle_df, e_inv)
+        t_inv, e_inv = _drop_hot("shingle", max_train_shingle_df, t_inv, e_inv,
+                                 counted=t_inv)
     return t_inv, e_inv
 
 

@@ -229,7 +229,8 @@ def pq_topk_join(
 
     if codebooks is None:
         codebooks = train_pq(
-            right, id_col=r_id, emb_col=emb_col, m=m, n_codes=n_codes, seed=seed
+            right, id_col=r_id, emb_col=emb_col, m=m, n_codes=n_codes, seed=seed,
+            rows_hint=rows_hint,
         )
     m = codebooks.shape[0]
     codes_df = encode_pq(right, codebooks, id_col=r_id, emb_col=emb_col)

@@ -31,10 +31,12 @@ gram_len + window - 1).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from deepblocker_spark.operators.bc_registry import tracked_persist
+from deepblocker_spark.operators.dedup import _drop_hot, _hot_keys, _shared_counts
 
 
 def winnowed_fingerprint_arrays(
@@ -181,10 +183,28 @@ def hot_fingerprints(
     ``max_gram_df`` documents — the boilerplate stop-list
     ``exact_substring_pairs`` purges, exposed for auditing."""
     fp = winnowed_fingerprints(df, id_col, text_col, gram_len, window)
-    return (
-        fp.groupBy("gram")
-        .agg(F.count("*").alias("doc_freq"))
-        .filter(F.col("doc_freq") > max_gram_df)
+    return _hot_keys(fp, "gram", max_gram_df)
+
+
+def _substring_pairs(
+    sides: list[tuple[DataFrame, str]],
+    text_col: str,
+    gram_len: int,
+    window: int,
+    max_gram_df: int | None,
+) -> DataFrame:
+    """-> (a, b, n_shared) over one (self) or two (dyadic) ``(frame,
+    id_col)`` sides: each side's fingerprints, the joint hot-gram purge,
+    then the shared-gram count (a from the first side, b from the last)."""
+    fps = [winnowed_fingerprints(d, i, text_col, gram_len, window) for d, i in sides]
+    if len(fps) == 1 or max_gram_df is not None:
+        fps = [tracked_persist(fp, StorageLevel.MEMORY_AND_DISK) for fp in fps]
+    if max_gram_df is not None:
+        fps = _drop_hot("gram", max_gram_df, *fps)
+    return _shared_counts(
+        fps[0].select(F.col("id").alias("a"), "gram"),
+        fps[-1].select(F.col("id").alias("b"), "gram"),
+        "gram", "n_shared", self_mode=len(fps) == 1,
     )
 
 
@@ -216,25 +236,8 @@ def exact_substring_pairs(
     string mins — by far the dominant cost) would otherwise run once per
     join side (2x, or 4x with the purge's frequency agg + anti-join).
     Release with ``bc_registry.release_tracked()`` after the action."""
-    from pyspark import StorageLevel
-
-    fp = winnowed_fingerprints(df, id_col, text_col, gram_len, window)
-    fp = tracked_persist(fp, StorageLevel.MEMORY_AND_DISK)
-    if max_gram_df is not None:
-        hot = (
-            fp.groupBy("gram")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") > max_gram_df)
-            .select("gram")
-        )
-        fp = fp.join(F.broadcast(hot), "gram", "left_anti")
-    l = fp.select(F.col("id").alias("a"), "gram")
-    r = fp.select(F.col("id").alias("b"), "gram")
-    return (
-        l.join(r, "gram")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").cast("bigint").alias("n_shared"))
+    return _substring_pairs(
+        [(df, id_col)], text_col, gram_len, window, max_gram_df
     )
 
 
@@ -260,22 +263,14 @@ def exact_substring_pairs_dyadic(
     picks the broadcast automatically under the size threshold; at equal
     sizes the join degrades to the banded hash join, same as the self
     variant). ``max_gram_df`` purges boilerplate fingerprints by their
-    JOINT document frequency, mirroring key_blocking's dyadic purge."""
-    lf = winnowed_fingerprints(left, l_id, text_col, gram_len, window)
-    rf = winnowed_fingerprints(right, r_id, text_col, gram_len, window)
-    if max_gram_df is not None:
-        both = lf.select("gram").unionAll(rf.select("gram"))
-        hot = (
-            both.groupBy("gram")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") > max_gram_df)
-            .select("gram")
-        )
-        lf = lf.join(F.broadcast(hot), "gram", "left_anti")
-        rf = rf.join(F.broadcast(hot), "gram", "left_anti")
-    return (
-        lf.select(F.col("id").alias("l_id"), "gram")
-        .join(rf.select(F.col("id").alias("r_id"), "gram"), "gram")
-        .groupBy("l_id", "r_id")
-        .agg(F.count("*").cast("bigint").alias("n_shared"))
-    )
+    JOINT document frequency, mirroring key_blocking's dyadic purge.
+
+    Persist rule: a side's fingerprint frame is persisted only when the
+    plan reads it twice, i.e. when ``max_gram_df`` is set (the joint
+    frequency count and the anti-join both read it). Without the purge
+    each side's kernel output feeds the pair join once and nothing is
+    persisted, so the training corpus still streams through one pass.
+    Release with ``bc_registry.release_tracked()`` after the action."""
+    return _substring_pairs(
+        [(left, l_id), (right, r_id)], text_col, gram_len, window, max_gram_df
+    ).toDF("l_id", "r_id", "n_shared")

@@ -80,3 +80,44 @@ def test_scaling_job_runs_each_route(spark, tmp_path, pairing):
     res = bench._scaling_job(spark, path, limit=300, rows_hint=300, pairing=pairing)
     assert res["pairing"] == pairing
     assert res["pairs"] > 0
+
+
+def _record_scaling(monkeypatch, fresh):
+    """tools/record_scaling.py loaded with bench._measure_scaling stubbed:
+    each call returns the next of ``fresh`` (no Spark, no file written)."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "tools", "record_scaling.py")
+    spec = importlib.util.spec_from_file_location("record_scaling", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    blocks = iter(fresh)
+    monkeypatch.setattr(mod.bench, "_measure_scaling", lambda *a, **k: next(blocks))
+    return mod
+
+
+def test_record_scaling_keeps_skipped_block_marked(monkeypatch):
+    mod = _record_scaling(monkeypatch, [{"efficiency": 0.8}])
+    monkeypatch.setenv("SPARK_GRAFT_SKIP_SCALING_EXACT", "1")
+    old_exact = {"efficiency": 0.5, "carried_from_previous_run": True}
+    out = {
+        "scaling": {"efficiency": 0.7, "carried_from_previous_run": True},
+        "scaling_exact": dict(old_exact),
+    }
+    rec = mod.measure(out)
+    # the measured block replaces the old one; the skipped one stays stale
+    assert out == {"scaling": {"efficiency": 0.8}, "scaling_exact": old_exact}
+    assert rec == {"source": "tools/record_scaling.py", "scaling": {"efficiency": 0.8}}
+
+
+def test_record_scaling_records_every_measured_block(monkeypatch):
+    fresh = [{"efficiency": 0.8, "carried_from_previous_run": True},
+             {"efficiency": 0.6}]
+    mod = _record_scaling(monkeypatch, fresh)
+    monkeypatch.delenv("SPARK_GRAFT_SKIP_SCALING_EXACT", raising=False)
+    out = {"scaling_exact": {"efficiency": 0.5, "carried_from_previous_run": True}}
+    rec = mod.measure(out)
+    assert out == {"scaling": {"efficiency": 0.8}, "scaling_exact": {"efficiency": 0.6}}
+    assert rec == {"source": "tools/record_scaling.py", **out}

@@ -7,7 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from deepblocker_spark.operators.ann import lsh_topk, recall_at_k
+from deepblocker_spark.operators.ann import recall_at_k
 from deepblocker_spark.operators.cluster import (
     clusters_from_candidates,
     clusters_to_pairs,
@@ -66,8 +66,8 @@ def test_lsh_recovers_cluster_neighbors(spark):
 def test_lsh_recall_vs_exact_oracle(spark):
     df, _ = _clustered_embeddings(spark)
     exact = exact_topk_join(df, df, k=4, exclude_self=True)
-    approx = lsh_topk(df, k=4, id_col="id", emb_col="embedding", dim=DIM,
-                      n_bands=4, band_bits=6)
+    approx = lsh_candidates(df, k=4, id_col="id", emb_col="embedding", dim=DIM,
+                            n_bands=4, band_bits=6)
     r = recall_at_k(approx, exact).collect()[0]
     assert r["recall_at_k"] >= 0.9
 

@@ -219,26 +219,40 @@ def test_max_block_rows_purges_oversized_filtered_blocks(spark):
             df, ratio=1.0, scheme="CBS", prune="none", max_block_rows=3
         ).collect()
     }
-    # equal to recomputing on the collection with 'hot' removed up-front,
-    # except entity block counts / totals still include 'hot' — CBS ignores
-    # those, so plain CBS counts must match the hot-less recomputation
+    # equal to recomputing on the collection with 'hot' removed up-front
+    # (entity block counts and the total are taken after the purge too)
     want = _python_meta([r for r in EX_ROWS if r[1] != "hot"], 1.0, "CBS")
     assert got == want
 
 
 def test_invalid_args_raise(spark):
-    df = _blocks_df(spark, EX_ROWS)
     import pytest
 
-    with pytest.raises(ValueError):
-        meta_blocking_pairs(df, scheme="nope")
-    with pytest.raises(ValueError):
-        meta_blocking_pairs(df, prune="nope")
+    from deepblocker_spark.operators.metablocking import meta_blocking_pairs_dyadic
+
+    df = _blocks_df(spark, EX_ROWS)
+    sc = spark.sparkContext
+    sc.setJobGroup("meta-blocking-args", "argument checks")
+    try:
+        for call in (
+            lambda: meta_blocking_pairs(df, scheme="nope"),
+            lambda: meta_blocking_pairs(df, prune="nope"),
+            lambda: meta_blocking_pairs_dyadic(df, df, scheme="nope"),
+            lambda: meta_blocking_pairs_dyadic(df, df, prune="nope"),
+        ):
+            with pytest.raises(ValueError):
+                call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # self and dyadic check their arguments before the first Spark job
+    assert not sc.statusTracker().getJobIdsForGroup("meta-blocking-args")
 
 
-def _python_meta_dyadic(rows_l, rows_r, ratio, scheme):
+def _python_meta_dyadic(rows_l, rows_r, ratio, scheme, max_block_rows=None):
     """Independent clean-clean recomputation: union block sizes, per-side
-    filtering, cross-side pairs only."""
+    filtering, the ``max_block_rows`` purge (blocks with more filtered
+    postings than the cap, counted over both sides, leave before the
+    entity counts and the total), cross-side pairs only."""
     from collections import defaultdict
 
     sizes = defaultdict(int)
@@ -254,6 +268,13 @@ def _python_meta_dyadic(rows_l, rows_r, ratio, scheme):
             kept[side].extend(
                 (e, k) for k in keys[: math.ceil(ratio * len(keys))]
             )
+    if max_block_rows is not None:
+        fsize = defaultdict(int)
+        for side in (0, 1):
+            for _, k in kept[side]:
+                fsize[k] += 1
+        for side in (0, 1):
+            kept[side] = [(e, k) for e, k in kept[side] if fsize[k] <= max_block_rows]
     nb = {0: defaultdict(int), 1: defaultdict(int)}
     keys_in_filtered = set()
     posting = {0: defaultdict(set), 1: defaultdict(set)}
@@ -354,3 +375,56 @@ def test_dyadic_pairs_are_cross_side_only(spark):
     got = meta_blocking_pairs_dyadic(ldf, ldf, ratio=1.0, prune="none").collect()
     assert len(got) > 0
     assert any(r["a"] == r["b"] for r in got)  # cross-table identity pairs
+
+
+def _python_wnp_dyadic(unpruned):
+    from collections import defaultdict
+
+    per_node = defaultdict(list)
+    for (a, b), (_, w) in unpruned.items():
+        per_node[(0, a)].append((w, (a, b)))
+        per_node[(1, b)].append((w, (a, b)))
+    keep = set()
+    for edges in per_node.values():
+        mean = sum(w for w, _ in edges) / len(edges)
+        keep.update(e for w, e in edges if w >= mean - 1e-9)
+    return {e: unpruned[e] for e in keep}
+
+
+def test_dyadic_wnp_keeps_edges_above_either_sides_mean(spark):
+    from deepblocker_spark.operators.metablocking import meta_blocking_pairs_dyadic
+
+    ldf = _blocks_df(spark, EX_ROWS)
+    rdf = _blocks_df(spark, RX_ROWS)
+    unpruned = _python_meta_dyadic(EX_ROWS, RX_ROWS, 1.0, "ECBS")
+    want = _python_wnp_dyadic(unpruned)
+    got = {
+        (r["a"], r["b"]): (r["cbs"], r["weight"])
+        for r in meta_blocking_pairs_dyadic(
+            ldf, rdf, ratio=1.0, scheme="ECBS", prune="WNP"
+        ).collect()
+    }
+    assert got == want
+    assert 0 < len(got) < len(unpruned)  # WNP actually pruned something
+
+
+def test_dyadic_max_block_rows_purge_counts_both_sides(spark):
+    from deepblocker_spark.operators.metablocking import meta_blocking_pairs_dyadic
+
+    ldf = _blocks_df(spark, EX_ROWS)
+    rdf = _blocks_df(spark, RX_ROWS)
+    # 'hot' has 4 left + 3 right postings and 'mid' 3 + 2: cap 4 purges both
+    # only when the two sides are counted together ('hot' alone on the left
+    # stays within it), while 'rare' (2 + 1) and 'other' (2 + 1) survive
+    for scheme in ("CBS", "ECBS", "JS"):
+        want = _python_meta_dyadic(EX_ROWS, RX_ROWS, 1.0, scheme, max_block_rows=4)
+        got = {
+            (r["a"], r["b"]): (r["cbs"], r["weight"])
+            for r in meta_blocking_pairs_dyadic(
+                ldf, rdf, ratio=1.0, scheme=scheme, prune="none",
+                max_block_rows=4,
+            ).collect()
+        }
+        assert got == want, scheme
+    assert want and want != _python_meta_dyadic(EX_ROWS, RX_ROWS, 1.0, "JS")
+    assert (2, 2) not in want  # 2-2 shared only 'mid' and 'hot'

@@ -119,6 +119,27 @@ def test_pq_driver_collect_gate_delegates(spark, vec_df):
     assert {(r.l_id, r.r_id, r.rank) for r in d_gated.collect()} == d_direct
 
 
+def test_pq_topk_rows_hint_skips_training_count(spark, vec_df, monkeypatch):
+    """A hinted call below max_driver_code_rows passes the hint on to the
+    codebook training, so no sizing count() runs anywhere in the call."""
+    n = vec_df.count()
+    frame_type = type(vec_df)
+    calls = []
+    real_count = frame_type.count
+
+    def spy(self):
+        calls.append(self)
+        return real_count(self)
+
+    monkeypatch.setattr(frame_type, "count", spy)
+    hinted = pq_topk(vec_df, k=5, m=8, n_codes=64, rows_hint=n)
+    got = {(r.l_id, r.r_id, r.rank) for r in hinted.collect()}
+    assert not calls
+    monkeypatch.undo()
+    plain = pq_topk(vec_df, k=5, m=8, n_codes=64)
+    assert got == {(r.l_id, r.r_id, r.rank) for r in plain.collect()}
+
+
 def test_pq_topk_dyadic_keeps_right_ids(spark, vec_df):
     # the chunked-vs-single-chunk check is test_topk.py's
     # test_chunked_scan_equals_single_chunk[pq]

@@ -142,6 +142,41 @@ def test_dyadic_purge_uses_joint_frequency(spark):
     assert got == {(99, 1099)}
 
 
+def test_dyadic_purge_winnows_each_side_once(spark, monkeypatch):
+    # the purge reads each side's fingerprints twice (joint frequency count,
+    # then the anti-join), so each side is persisted and winnowed once; a
+    # pass-through tally stacked on the kernel counts the rows it emits
+    import deepblocker_spark.operators.substring_dedup as sd
+
+    rng = np.random.Generator(np.random.PCG64(23))
+    boiler = _rand_text(rng, 2 * L)
+    rare = _rand_text(rng, L + W - 1)
+    train = [(i, boiler + _rand_text(rng, 30)) for i in range(12)]
+    train.append((99, _rand_text(rng, 12) + rare))
+    evals = [(1000 + i, _rand_text(rng, 30) + boiler) for i in range(5)]
+    evals.append((1099, rare + _rand_text(rng, 12)))
+    tdf = spark.createDataFrame(train, "doc_id bigint, text string")
+    edf = spark.createDataFrame(evals, "doc_id bigint, text string")
+    once = sum(winnowed_fingerprints(d, gram_len=L, window=W).count() for d in (tdf, edf))
+    emitted = spark.sparkContext.accumulator(0)
+    kernel = sd.winnowed_fingerprints
+
+    def tallied(*args):
+        def tally(batches):
+            for pdf in batches:
+                emitted.add(len(pdf))
+                yield pdf
+
+        fp = kernel(*args)
+        return fp.mapInPandas(tally, fp.schema)
+
+    monkeypatch.setattr(sd, "winnowed_fingerprints", tallied)
+    pairs = exact_substring_pairs_dyadic(tdf, edf, gram_len=L, window=W, max_gram_df=8)
+    # the boilerplate span is in 17 docs (> 8) and purged; the rare one stays
+    assert {(r.l_id, r.r_id) for r in pairs.collect()} == {(99, 1099)}
+    assert emitted.value == once
+
+
 def test_streaming_substring_decontam_parity_with_batch(spark, tmp_path, await_stream):
     """streaming<->batch parity: the same train/eval fixture through
     streaming_substring_decontam must emit exactly the batch

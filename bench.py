@@ -901,6 +901,18 @@ def _single_node_flagship() -> float:
     return round(time.perf_counter() - t0, 3)
 
 
+def _history_record(out: dict) -> dict | None:
+    """The SCALING_HISTORY.jsonl record of a run's artifact ``out``: the
+    scaling blocks this run measured, or None when it measured no
+    ``scaling``. A block carried from the previous BENCH.json (marked
+    ``carried_from_previous_run``) stays out of the record."""
+    fresh = {key: out[key] for key in ("scaling", "scaling_exact")
+             if key in out and not out[key].get("carried_from_previous_run")}
+    if "scaling" not in fresh:
+        return None
+    return {"source": "bench.py", "cpus": CPUS, "sf": SF_DIR, **fresh}
+
+
 def main():
     from deepblocker_spark.session import get_spark
 
@@ -976,13 +988,10 @@ def main():
     # shared-bus host swings 2x with phase — the full recording history is
     # the honest dataset, not whichever phase ran last). Read it next to
     # BASELINE.md's per-recording narrative.
-    if "scaling" in out and not out["scaling"].get("carried_from_previous_run"):
+    rec = _history_record(out)
+    if rec is not None:
         hist_path = os.path.join(os.path.dirname(bench_path),
                                  "SCALING_HISTORY.jsonl")
-        rec = {"source": "bench.py", "cpus": CPUS, "sf": SF_DIR}
-        for key in ("scaling", "scaling_exact"):
-            if key in out:
-                rec[key] = out[key]
         with open(hist_path, "a") as f:
             f.write(json.dumps(rec) + "\n")
 

@@ -249,6 +249,7 @@ def _ivf_pairs(
     assigned: DataFrame,
     k: int,
     id_type,
+    dim: int,
     mask_equal_ids: bool,
     max_cell_rows: int = 5_000,
     emb_dtype: str = "f32",
@@ -276,6 +277,7 @@ def _ivf_pairs(
     from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
     from deepblocker_spark.operators.grouped import (
+        _blob_rows,
         _local_topk,
         group_slices,
         grouped_map_in_pandas,
@@ -301,7 +303,7 @@ def _ivf_pairs(
     dt = np.float16 if emb_dtype == "f16" else np.float32
 
     def vectors(blobs):
-        x = np.frombuffer(b"".join(blobs), dtype=dt).reshape(len(blobs), -1)
+        x = _blob_rows(blobs, dt, dim)
         return normalize_rows(np.nan_to_num(x.astype(np.float64)))
 
     def cell_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -323,8 +325,7 @@ def _ivf_pairs(
             else:
                 books = books_bc.value
                 q_all = vectors(blobs[is_q])
-                i_all = np.frombuffer(b"".join(blobs[~is_q]), dtype=np.uint8)
-                i_all = i_all.reshape(-1, books.shape[0])
+                i_all = _blob_rows(blobs[~is_q], np.uint8, books.shape[0])
                 pos = np.where(is_q, np.cumsum(is_q), np.cumsum(~is_q)) - 1
                 score = lambda qx, codes: _adc_scores(  # noqa: E731
                     _adc_luts(qx, books), codes
@@ -398,7 +399,7 @@ def _ivf_search(
     else:
         assigned = assign(right, r_id, True, False).unionByName(
             assign(left, l_id, False, True))
-    return _ivf_pairs(assigned, k, id_type, mask_equal_ids=left is None,
+    return _ivf_pairs(assigned, k, id_type, cents.shape[1], left is None,
                       max_cell_rows=max_cell_rows, emb_dtype=emb_dtype,
                       books_bc=books_bc)
 

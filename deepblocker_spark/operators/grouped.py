@@ -20,6 +20,9 @@ below: ``_local_topk`` scores one group, ``local_topk_packed`` is their
 fused map-side combiner, and ``topk_per_key`` is the merge. ``_topk_cols``
 is the engine's one argpartition top-k selector, shared with the
 chunk-broadcast scan (operators/topk.py) and the IVF probe assignment.
+``_row_blobs`` / ``_blob_rows`` are the one codec of the binary row
+transport (one little-endian blob per vector or PQ code) that the LSH,
+IVF, PQ, SemDeDup and streaming pair kernels exchange.
 
 At 100 TB this shape is strictly better than applyInPandas: identical
 shuffle volume, identical skew behavior (same hash partitioning), but the
@@ -97,6 +100,13 @@ def _row_blobs(a) -> list:
     raw = a.tobytes()
     stride = a.shape[1] * a.itemsize
     return [raw[i * stride : (i + 1) * stride] for i in range(len(a))]
+
+
+def _blob_rows(blobs, dtype, width: int) -> np.ndarray:
+    """Inverse of ``_row_blobs``: the (len(blobs), width) ``dtype`` matrix
+    of a sequence of row blobs, decoded in one ``np.frombuffer`` (a
+    read-only view of the joined bytes); (0, width) for no rows."""
+    return np.frombuffer(b"".join(blobs), dtype=dtype).reshape(len(blobs), width)
 
 
 def _topk_cols(scores, k: int):

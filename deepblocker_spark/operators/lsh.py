@@ -60,6 +60,7 @@ from pyspark.sql.types import (
 
 from deepblocker_spark.operators.embed import EMBEDDING
 from deepblocker_spark.operators.grouped import (
+    _blob_rows,
     _local_topk,
     _row_blobs,
     group_slices,
@@ -91,45 +92,42 @@ def signature_buckets(
     seed: int = 1234,
     include_emb: bool = False,
     extra_cols: list[str] | None = None,
-    emb_binary: bool = False,
     emb_dtype: str = "f32",
 ) -> DataFrame:
-    """-> DataFrame(id, band int, bucket long[, emb][, extras]): one row per
-    (row, band). bucket = the band's sign bits packed into an int64.
+    """-> DataFrame(id, band int, bucket long[, _emb][, extras]): one row
+    per (row, band). bucket = the band's sign bits packed into an int64.
 
     ``include_emb=True`` carries the embedding through the signature pass so
     the candidate kernels need NO join back to the source table — the
     vector has to travel to every (band, bucket) group anyway, and emitting
     it here replaces a full shuffle join (sigs x source on id) with zero
-    extra stages. The bucket-size pass uses the bare variant (no emb), so
-    nothing pays for columns it doesn't read. ``extra_cols`` passes
-    additional source columns through unchanged (replicated per band) —
-    used by the streaming path to keep the event-time column for
-    watermarking.
+    extra stages. ``extra_cols`` passes additional source columns through
+    unchanged (replicated per band) — used by the streaming path to keep
+    the event-time column for watermarking.
 
-    ``emb_binary=True`` packs the carried embedding as one little-endian
-    float32 blob per row instead of ``array<float>``. Profiling the 240k
-    scaling job showed the JVM's row<->Arrow conversion of ~1.9M LIST
-    columns dominating the exchange stages' CPU (and that CPU inflating
-    ~1.7x under 8-core memory-bus contention); a BinaryType column moves as
-    one memcpy per row, the per-band duplication shares the same immutable
-    bytes objects, and the kernel decodes the whole partition with a single
-    ``np.frombuffer`` — bit-identical f32 payload, same shuffle bytes.
-    Only for numpy-kernel consumers (the batch LSH paths); the streaming
-    path keeps arrays for JVM ``cosine_col``.
+    The carried ``_emb`` is one little-endian float blob per row
+    (``grouped._row_blobs``; decode with ``grouped._blob_rows``), not an
+    ``array<float>``. Profiling the 240k scaling job showed the JVM's
+    row<->Arrow conversion of ~1.9M LIST columns dominating the exchange
+    stages' CPU (and that CPU inflating ~1.7x under 8-core memory-bus
+    contention); a BinaryType column moves as one memcpy per row, the
+    per-band duplication shares the same immutable bytes objects, and the
+    kernel decodes the whole partition with a single ``np.frombuffer`` —
+    bit-identical f32 payload for the engine's ``array<float>`` embeddings
+    (an ``array<double>`` column is rounded to f32), same shuffle bytes.
 
-    ``emb_dtype='f16'`` (binary transport only) additionally quantizes the
-    blob to little-endian float16 — HALF the exchange bytes for the
-    kernel's wide rows, aimed squarely at the measured bottleneck: the
-    bucket-kernel and merge stages are memory-bandwidth-bound (BASELINE.md
-    protocol v5; the STREAM-triad control caps their scaling on a shared
-    bus), and at 100 TB the kernel exchange is the single largest shuffle
-    of the blocking plan. Bucket keys are UNAFFECTED (signs are computed
-    from the full-precision vector before packing), so candidate
-    *generation* is identical; only the in-bucket cosine scores see the
-    ~1e-3 relative quantization error, which can reorder near-ties in the
-    top-K tail (recall property-tested in tests/test_lsh_f16.py). Default
-    stays f32: hash-locked oracle outputs are bit-identical."""
+    ``emb_dtype='f16'`` quantizes the blob to little-endian float16 — HALF
+    the exchange bytes for the kernel's wide rows, aimed squarely at the
+    measured bottleneck: the bucket-kernel and merge stages are
+    memory-bandwidth-bound (BASELINE.md protocol v5; the STREAM-triad
+    control caps their scaling on a shared bus), and at 100 TB the kernel
+    exchange is the single largest shuffle of the blocking plan. Bucket keys
+    are UNAFFECTED (signs are computed from the full-precision vector before
+    packing), so candidate *generation* is identical; only the in-bucket
+    cosine scores see the ~1e-3 relative quantization error, which can
+    reorder near-ties in the top-K tail (recall property-tested in
+    tests/test_lsh_f16.py). Default stays f32: hash-locked oracle outputs
+    are bit-identical."""
     if emb_dtype not in ("f32", "f16"):
         raise ValueError(f"unknown emb_dtype: {emb_dtype!r} (use 'f32' or 'f16')")
     extra_cols = extra_cols or []
@@ -139,8 +137,7 @@ def signature_buckets(
         StructField("bucket", LongType(), False),
     ]
     if include_emb:
-        emb_type = BinaryType() if emb_binary else df.schema[emb_col].dataType
-        fields.append(StructField("_emb", emb_type, True))
+        fields.append(StructField("_emb", BinaryType(), True))
     for c in extra_cols:
         fields.append(StructField(c, df.schema[c].dataType, True))
     out_schema = StructType(fields)
@@ -173,16 +170,13 @@ def signature_buckets(
                 }
             )
             if include_emb:
-                if emb_binary:
-                    # f32: lossless (the engine's EMBEDDING column is
-                    # array<float>); f16: quantized transport, half bytes
-                    xq = x_arr.astype(
-                        np.float16 if emb_dtype == "f16" else np.float32,
-                        copy=False,
-                    )
-                    out["_emb"] = _row_blobs(xq) * nb  # list-repeat shares the bytes
-                else:
-                    out["_emb"] = list(pdf[emb_col]) * nb
+                # f32: lossless (the engine's EMBEDDING column is
+                # array<float>); f16: quantized transport, half bytes
+                xq = x_arr.astype(
+                    np.float16 if emb_dtype == "f16" else np.float32,
+                    copy=False,
+                )
+                out["_emb"] = _row_blobs(xq) * nb  # list-repeat shares the bytes
             for c in extra_cols:
                 out[c] = list(pdf[c]) * nb
             yield out
@@ -235,7 +229,7 @@ def _persisted_sigs(df, id_col, emb_col, dim, n_bands, band_bits, seed,
 
     return tracked_persist(signature_buckets(
         df, id_col, emb_col, dim, n_bands, band_bits, seed, include_emb=True,
-        emb_binary=True, emb_dtype=emb_dtype, extra_cols=extra_cols,
+        extra_cols=extra_cols, emb_dtype=emb_dtype,
     ), StorageLevel.MEMORY_AND_DISK)
 
 
@@ -289,13 +283,7 @@ def _side_matrix(sigs: DataFrame, id_col: str, dim: int, dt) -> tuple:
     """(ids, quantized matrix) of one side, collected from the band-0 slice
     of its persisted signature frame — the embed stage is NOT recomputed."""
     b0 = sigs.filter(F.col("band") == 0).select(id_col, "_emb").toPandas()
-    mat = (
-        np.frombuffer(b"".join(b0["_emb"].to_numpy()), dtype=dt)
-        .reshape(len(b0), -1)
-        if len(b0)
-        else np.zeros((0, dim), dtype=dt)
-    )
-    return b0[id_col].to_numpy(), mat
+    return b0[id_col].to_numpy(), _blob_rows(b0["_emb"].to_numpy(), dt, dim)
 
 
 _KEYS = ["band", "bucket", "salt_l", "salt_r"]
@@ -390,8 +378,7 @@ def _lsh_search(
         ids_all = pdf["_id"].to_numpy()
         is_left = None if self_mode else pdf["_side"].to_numpy() == 0
         if bcs is None:
-            buf = b"".join(pdf["_emb"].to_numpy())
-            x_all = np.frombuffer(buf, dtype=dt).reshape(len(pdf), -1)
+            x_all = _blob_rows(pdf["_emb"].to_numpy(), dt, dim)
         else:
             # per-side gather; the upcast on assign == astype below
             x_all = np.empty((len(pdf), dim))

@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from deepblocker_spark.operators.ann import _ivf_search, _training_sample
-from deepblocker_spark.operators.grouped import _row_blobs
+from deepblocker_spark.operators.grouped import _blob_rows, _row_blobs
 from deepblocker_spark.operators.pairing import VectorPairing
 from deepblocker_spark.operators.bc_registry import (
     tracked_broadcast as _tracked,
@@ -246,8 +246,7 @@ def pq_topk_join(
     drop = np.equal if exclude_self else None
 
     def decode(pdf):
-        codes = np.frombuffer(b"".join(pdf["code"]), dtype=np.uint8)
-        return np.asarray(pdf[r_id].to_list()), codes.reshape(len(pdf), m)
+        return np.asarray(pdf[r_id].to_list()), _blob_rows(pdf["code"], np.uint8, m)
 
     def kernel(lids, q, rids, codes):
         luts = _adc_luts(q, books_bc.value)

@@ -95,6 +95,7 @@ def semantic_dedup(
     )
 
     from deepblocker_spark.operators.grouped import (
+        _blob_rows,
         group_slices,
         grouped_map_in_pandas,
     )
@@ -107,7 +108,7 @@ def semantic_dedup(
         n_cells = _auto_n_cells(n_rows)
     cents = _train_centroids(df, id_col, emb_col, n_cells, seed,
                              rows_hint=n_rows)
-    cents_bc = _tracked(df.sparkSession.sparkContext, cents)
+    cents_bc, dim = _tracked(df.sparkSession.sparkContext, cents), cents.shape[1]
     # one assignment pass; role 0 = index copy. The role-1 query copies are
     # minted from the SAME frame (cache + union) so assignment runs once.
     assigned = tracked_persist(_assign_cells(
@@ -137,8 +138,7 @@ def semantic_dedup(
         splits."""
         outs = []
         roles = pdf["_role"].to_numpy()
-        buf = b"".join(pdf["_emb"].to_numpy())
-        x_all = np.frombuffer(buf, dtype=np.float32).reshape(len(pdf), -1)
+        x_all = _blob_rows(pdf["_emb"].to_numpy(), np.float32, dim)
         x_all = normalize_rows(np.nan_to_num(x_all.astype(np.float64)))
         ids_all = pdf["_id"].to_numpy()
         cells_all = pdf["cell"].to_numpy()

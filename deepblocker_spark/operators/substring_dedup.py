@@ -13,20 +13,22 @@ substring of length >= gram_len + window - 1 select at least one identical
 fingerprint (the shared span contains a full gram-window, and the min of
 identical windows is identical), while only ~2/(window+1) of all grams are
 kept. Selection is content-defined, so it needs no cross-document
-coordination — a pure per-row Column expression, no shuffle until the
-fingerprint equi-join.
+coordination — a per-row kernel, no shuffle until the fingerprint
+equi-join.
 
-Scale shape (the 100 TB plan): fingerprint extraction is whole-stage
-codegen (sequence/transform/slice/array_min — no Python); the only shuffle
-is the groupBy/self-join on the fingerprint string, identical to the
-minhash band join in dedup.minhash_lsh_pairs. Boilerplate spans (license
-headers, generated code) produce hot fingerprints whose postings square in
-the self-join — ``max_gram_df`` drops them with a broadcast anti-join
-before the join, same discipline as ngram_jaccard_pairs'
-``max_shingle_df`` (VERDICT r1 #8); ``hot_fingerprints`` exposes exactly
-what was purged. Lowering selection density for bigger corpora is the
-``window`` knob (guarantee degrades gracefully: min shared-span length is
-gram_len + window - 1).
+Scale shape (the 100 TB plan): fingerprint extraction is one Arrow
+``mapInPandas`` pass (``_winnowed``: a numpy sliding min per document),
+shared by the batch joins and the streaming decontamination operator;
+the only shuffle is the shared-fingerprint count
+(``dedup._shared_counts``, self or dyadic), identical to the minhash band
+join in dedup.minhash_lsh_pairs. Boilerplate spans (license headers,
+generated code) produce hot fingerprints whose postings square in the
+pair join — ``max_gram_df`` drops them with a broadcast anti-join before
+that join (counted over both sides in dyadic mode), same discipline as
+ngram_jaccard_pairs' ``max_shingle_df`` (VERDICT r1 #8);
+``hot_fingerprints`` exposes exactly what was purged. Lowering selection
+density for bigger corpora is the ``window`` knob (guarantee degrades
+gracefully: min shared-span length is gram_len + window - 1).
 """
 
 from __future__ import annotations
@@ -39,66 +41,12 @@ from deepblocker_spark.operators.bc_registry import tracked_persist
 from deepblocker_spark.operators.dedup import _drop_hot, _hot_keys, _shared_counts
 
 
-def winnowed_fingerprint_arrays(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    gram_len: int = 25,
-    window: int = 5,
-    extra_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """-> (id, *extra_cols, grams array<string>): each document's distinct
-    selected winnowing fingerprints as ONE array column — codegen end to
-    end, no Python, stream-legal (pure per-row projection).
-
-    Grams are the ``gram_len``-char substrings at every offset; the
-    selected set is { min(grams[i .. i+window-1]) : every window start i },
-    deduplicated. The gram array is MATERIALIZED as its own projection
-    before the sliding-min pass: a single nested expression would inline
-    the gram-array lambda into every window position (Catalyst does not
-    CSE across lambda bodies), turning O(n*w) selection into O(n^2*L)
-    recomputation per row. Documents shorter than gram_len + window - 1
-    chars are dropped — and BOTH expressions carry their own short-doc
-    ``when`` guard rather than relying on the filter: Catalyst's
-    InferFiltersFromGenerate clones the downstream explode's
-    ``size(...) > 0`` predicate into the source Filter, where the inlined
-    selection can evaluate on unfiltered rows — there sequence() on a
-    negative span DESCENDS and slice(_, 0, w) throws (same hazard class
-    as dedup.token_shingles)."""
-    text = F.col(text_col)
-    empty = F.array().cast("array<string>")
-    grams = F.when(
-        F.length(text) >= gram_len + window - 1,
-        F.transform(
-            F.sequence(F.lit(1), F.length(text) - gram_len + 1),
-            lambda i: text.substr(i, F.lit(gram_len)),
-        ),
-    ).otherwise(empty)
-    staged = df.filter(F.length(text) >= gram_len + window - 1).select(
-        F.col(id_col).alias("id"),
-        *[F.col(c) for c in extra_cols],
-        grams.alias("_g"),
-    )
-    selected = F.when(
-        F.size("_g") >= window,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size("_g") - window + 1),
-                lambda i: F.array_min(F.slice(F.col("_g"), i, window)),
-            )
-        ),
-    ).otherwise(empty)
-    return staged.select(
-        "id", *[F.col(c) for c in extra_cols], selected.alias("grams")
-    )
-
-
 def _winnow_selected(s: str, gram_len: int, window: int) -> "np.ndarray":
     """Distinct winnowing fingerprints of one text (len >= gram_len +
     window - 1): lexicographic min over every ``window`` consecutive
     ``gram_len``-char grams, deduplicated. Python ``str`` comparison is
     code-point order == UTF8String byte order, so the selected set is
-    identical to the Column-expression path's ``array_min``."""
+    identical to SQL's ``array_min`` over the same windows."""
     import numpy as np
 
     grams = np.array(
@@ -111,6 +59,48 @@ def _winnow_selected(s: str, gram_len: int, window: int) -> "np.ndarray":
     return np.unique(m)
 
 
+def _winnowed(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    gram_len: int,
+    window: int,
+    extra_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """-> (id, *extra_cols, grams array<string>): each document's distinct
+    selected winnowing fingerprints (sorted) as ONE array, from an Arrow
+    ``mapInPandas`` kernel — one sliding ``np.minimum`` pass over the
+    per-row gram array. Stateless per row, so it runs on a stream as-is.
+    Documents shorter than gram_len + window - 1 chars are dropped.
+
+    Python, not Catalyst lambdas: ``transform``/``slice``/``array_min``
+    over a materialized gram array holds ~25x the text bytes per row and
+    evaluates the O(n*w) sliding min interpreted, ~8x slower end to end on
+    sf0.1 substring_dup_pairs with the same fingerprints (VERDICT r5 #6).
+    The DuckDB oracle of substring_dup_pairs checks the selection in SQL."""
+    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+
+    text = F.col(text_col)
+    staged = df.filter(F.length(text) >= gram_len + window - 1).select(
+        F.col(id_col).alias("id"), *extra_cols, text.alias("_t")
+    )
+    out_schema = StructType(
+        [StructField("id", df.schema[id_col].dataType, True)]
+        + [df.schema[c] for c in extra_cols]
+        + [StructField("grams", ArrayType(StringType(), False), False)]
+    )
+
+    def run(batches):
+        for pdf in batches:
+            if len(pdf):
+                pdf["grams"] = [
+                    _winnow_selected(s, gram_len, window) for s in pdf.pop("_t")
+                ]
+                yield pdf
+
+    return staged.mapInPandas(run, out_schema)
+
+
 def winnowed_fingerprints(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -119,56 +109,15 @@ def winnowed_fingerprints(
     window: int = 5,
 ) -> DataFrame:
     """-> (id, gram): one row per selected winnowing fingerprint per
-    document (the exploded form of ``winnowed_fingerprint_arrays``), from
-    an Arrow ``mapInPandas`` kernel — one sliding ``np.minimum`` pass over
-    the per-row gram array. The Column-expression formulation
-    (``winnowed_fingerprint_arrays``, still used by the streaming path)
-    materializes the full gram array per row (~25x text bytes of transient
-    row width) and evaluates the O(n*w) sliding-min through interpreted
-    Catalyst lambda expressions; the measured A/B on sf0.1 (round 6) put
-    the kernel ~8x faster end-to-end on substring_dup_pairs with a
-    bit-identical fingerprint set (VERDICT r5 #6). Two tests in
-    tests/test_substring_semdedup.py hold the three formulations equal:
-    ``test_winnow_fingerprints_match_python_twin`` (this kernel vs a
-    pure-Python twin) and
-    ``test_streaming_substring_decontam_parity_with_batch`` (the streaming
-    path's column expressions vs this kernel)."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    text = F.col(text_col)
-    staged = df.filter(F.length(text) >= gram_len + window - 1).select(
-        F.col(id_col).alias("id"), text.alias("_t")
+    document — the exploded output of the winnowing kernel (``_winnowed``,
+    which the streaming decontamination path calls directly). Two tests
+    hold the selection fixed: ``test_winnow_fingerprints_match_python_twin``
+    (this frame vs a pure-Python twin, tests/test_substring_semdedup.py)
+    and ``test_streaming_substring_decontam_parity_with_batch`` (the
+    streaming operator vs the batch dyadic join)."""
+    return _winnowed(df, id_col, text_col, gram_len, window).select(
+        "id", F.explode("grams").alias("gram")
     )
-    out_schema = StructType(
-        [
-            StructField("id", df.schema[id_col].dataType, True),
-            StructField("gram", StringType(), False),
-        ]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            sels = [
-                _winnow_selected(s, gram_len, window) for s in pdf["_t"]
-            ]
-            counts = np.fromiter(
-                (len(x) for x in sels), dtype=np.int64, count=len(sels)
-            )
-            yield pd.DataFrame(
-                {
-                    "id": np.repeat(pdf["id"].to_numpy(), counts),
-                    "gram": np.concatenate(sels)
-                    if counts.sum()
-                    else np.array([], dtype=object),
-                }
-            )
-
-    return staged.mapInPandas(run, out_schema)
 
 
 def hot_fingerprints(

@@ -55,7 +55,7 @@ from deepblocker_spark.operators.bc_registry import (
     tracked_broadcast as _tracked,
 )
 from deepblocker_spark.operators.embed import EMBEDDING
-from deepblocker_spark.operators.grouped import _topk_cols
+from deepblocker_spark.operators.grouped import _blob_rows, _topk_cols
 from deepblocker_spark.operators.pairing import VectorPairing
 
 
@@ -123,6 +123,38 @@ def normalize_rows(x: np.ndarray) -> np.ndarray:
     norms = np.linalg.norm(x, axis=1, keepdims=True)
     np.maximum(norms, 1e-30, out=norms)
     return x / norms
+
+
+def _pair_sims(lmat: np.ndarray, rmat: np.ndarray) -> np.ndarray:
+    """f64 cosine of each row of ``lmat`` with the same row of ``rmat``
+    (both normalized): the scan's exact rescoring of its selected pairs."""
+    return np.einsum("ij,ij->i", lmat, rmat)
+
+
+def _blob_pair_cosine(pairs: DataFrame, dim: int, min_sim: float) -> DataFrame:
+    """Score a frame of joined pairs carrying f32 vector blobs ``_l_emb`` /
+    ``_r_emb`` (``lsh.signature_buckets(include_emb=True)``): one
+    ``mapInPandas`` pass decodes each Arrow batch's blobs, normalizes them
+    as the scan does and rescores row-wise in f64, so a pair's ``sim`` is
+    bit-identical to ``cosine_threshold_join``'s. -> the other columns +
+    ``sim``, pairs below ``min_sim`` dropped. Stateless, so stream-legal."""
+    cols = [c for c in pairs.columns if c not in ("_l_emb", "_r_emb")]
+    schema = StructType(
+        [pairs.schema[c] for c in cols] + [StructField("sim", DoubleType(), False)]
+    )
+
+    def vectors(blobs):
+        x = _blob_rows(blobs.to_numpy(), np.float32, dim)
+        return normalize_rows(np.nan_to_num(x.astype(np.float64)))
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf):
+                lmat, rmat = vectors(pdf.pop("_l_emb")), vectors(pdf.pop("_r_emb"))
+                pdf["sim"] = _pair_sims(lmat, rmat)
+                yield pdf[pdf["sim"].to_numpy() >= min_sim]
+
+    return pairs.mapInPandas(run, schema)
 
 
 def _vector_chunk(pdf: pd.DataFrame, r_id: str, emb_col: str):
@@ -337,7 +369,7 @@ def exact_topk_join(
     def kernel(lids, lmat, rids, rmat):
         blocks = _scored_blocks(_cosine_scorer(lmat, rmat), lids, rids, drop)
         rows, cols, _ = _topk_pairs(blocks, len(lids), k)
-        s = np.einsum("ij,ij->i", lmat[rows], rmat[cols])
+        s = _pair_sims(lmat[rows], rmat[cols])
         return _ranked(lids, rids, rows, cols, s)
 
     chunks = _iter_right_chunks(
@@ -364,7 +396,9 @@ def cosine_threshold_join(
     l_id < r_id (self-join near-duplicate semantics). Note: a crossJoin with
     Column-expression cosine (scoring.cosine_col) computes the same thing,
     but Spark's higher-order array functions evaluate interpreted
-    per-element — the matmul path is ~100x faster at equal output.
+    per-element — the matmul path is ~100x faster at equal output. The
+    streaming index join scores its pairs with this scan's f64 rescoring
+    (``_blob_pair_cosine``), so its sims equal this join's.
     """
     drop = np.greater_equal if upper_only else None
 
@@ -379,7 +413,7 @@ def cosine_threshold_join(
         floor = max(threshold - band, -np.finfo(np.float32).max)
         blocks = _scored_blocks(_cosine_scorer(lmat, rmat), lids, rids, drop)
         rows, cols = _threshold_pairs(blocks, floor)
-        s = np.einsum("ij,ij->i", lmat[rows], rmat[cols])
+        s = _pair_sims(lmat[rows], rmat[cols])
         keep = s >= threshold
         return pd.DataFrame(
             {"l_id": lids[rows[keep]], "r_id": rids[cols[keep]], "sim": s[keep]}

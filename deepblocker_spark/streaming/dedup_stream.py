@@ -12,7 +12,14 @@ of its core hygiene operators:
 
 Both are pure Structured Streaming graphs: readStream -> transform ->
 writeStream, restart-safe via checkpointLocation. Tested against file
-sources with the memory sink (tests/test_streaming.py).
+sources with the memory and parquet sinks
+(tests/test_streaming_multimodal.py, tests/test_stateful_streaming.py).
+
+The stateful operators below add per-key state with timeouts; the
+stream-static joins (incremental blocking, decontamination) run the batch
+operators' own kernels — LSH signatures, the scan's pair cosine, the
+winnowing kernel — so a streamed pair equals its batch twin and this
+module owns no scoring or fingerprint logic.
 """
 
 from __future__ import annotations
@@ -325,12 +332,19 @@ def streaming_block_against_index(
     with the SAME seeded hyperplanes as a static indexed corpus (the planes
     derive from the seed, so both sides' bucket keys are comparable without
     shipping anything) and STREAM-STATIC joined on (band, bucket); joined
-    candidates are exact-cosine scored JVM-side and pairs >= ``min_sim``
-    emitted as (l_id = stream record, r_id = index record, sim, ts), with
-    the same pair found in multiple bands deduped within the watermark
-    horizon. This is the continuous-ingest form of the batch dyadic LSH
-    join: per-microbatch cost is bounded by the new records' bucket
-    membership — the corpus is never rescanned.
+    candidates are exact-cosine scored and pairs >= ``min_sim`` emitted as
+    (l_id = stream record, r_id = index record, sim, ts), with the same
+    pair found in multiple bands deduped within the watermark horizon.
+    This is the continuous-ingest form of the batch dyadic LSH join:
+    per-microbatch cost is bounded by the new records' bucket membership —
+    the corpus is never rescanned.
+
+    Both sides carry the batch LSH transport (one f32 blob per row; an
+    ``array<double>`` embedding is rounded to f32), and the scoring is the
+    batch scan's: ``topk._blob_pair_cosine`` decodes
+    the blobs in one Arrow kernel and rescores each pair in f64, so a
+    streamed pair's ``sim`` equals ``cosine_threshold_join``'s bit for
+    bit.
 
     ``index`` is the static corpus (id + embedding). A stream-static join
     re-evaluates the static side's PLAN every microbatch, so the index
@@ -342,7 +356,7 @@ def streaming_block_against_index(
     ``release_tracked()`` once the query has stopped.
     """
     from deepblocker_spark.operators.lsh import signature_buckets
-    from deepblocker_spark.operators.scoring import cosine_col
+    from deepblocker_spark.operators.topk import _blob_pair_cosine
 
     s = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     s_sigs = signature_buckets(
@@ -354,12 +368,11 @@ def streaming_block_against_index(
         index, id_col=id_col, emb_col=emb_col, dim=dim, n_bands=n_bands,
         band_bits=band_bits, seed=seed, include_emb=True,
     ).withColumnsRenamed({id_col: "r_id", "_emb": "_r_emb"}))
-    joined = s_sigs.join(i_sigs, ["band", "bucket"])
-    scored = (
-        joined.filter(F.col("l_id") != F.col("r_id"))
-        .withColumn("sim", cosine_col(F.col("_l_emb"), F.col("_r_emb")))
-        .filter(F.col("sim") >= min_sim)
-        .select("l_id", "r_id", F.col("sim").cast("double").alias("sim"), ts_col)
+    joined = s_sigs.join(i_sigs, ["band", "bucket"]).filter(
+        F.col("l_id") != F.col("r_id")
+    ).select("l_id", "r_id", "_l_emb", "_r_emb", ts_col)
+    scored = _blob_pair_cosine(joined, dim, min_sim).select(
+        "l_id", "r_id", "sim", ts_col
     )
     return scored.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
         ["l_id", "r_id"]
@@ -469,8 +482,9 @@ def streaming_substring_decontam(
     Stream-legal the same way streaming_bloom_decontam is — NO streaming
     aggregation anywhere:
 
-      * fingerprint selection is a pure per-row codegen projection
-        (``winnowed_fingerprint_arrays``), so it runs on the stream as-is;
+      * fingerprint selection is the batch joins' own Arrow kernel
+        (``substring_dedup._winnowed``, a stateless ``mapInPandas``), so it
+        runs on the stream as-is and selects exactly the batch set;
       * each arriving doc joins the persisted eval fingerprint postings on
         ONE exploded gram (stream-static equi-join, broadcast-sized);
       * ``n_shared`` is ``array_intersect`` of the two docs' CARRIED
@@ -480,19 +494,14 @@ def streaming_substring_decontam(
 
     The eval side is persisted like streaming_bloom_decontam's; release
     via ``bc_registry.release_tracked()`` once the query has stopped."""
-    from deepblocker_spark.operators.substring_dedup import (
-        winnowed_fingerprint_arrays,
-    )
+    from deepblocker_spark.operators.substring_dedup import _winnowed
 
     ev = tracked_persist(
-        winnowed_fingerprint_arrays(eval_df, id_col, text_col, gram_len, window)
-        .select(F.col("id").alias("eval_id"), F.col("grams").alias("_e_fp"))
+        _winnowed(eval_df, id_col, text_col, gram_len, window).toDF("eval_id", "_e_fp")
     )
     e_post = ev.select("eval_id", "_e_fp", F.explode("_e_fp").alias("gram"))
 
-    s = winnowed_fingerprint_arrays(
-        stream, id_col, text_col, gram_len, window, extra_cols=(ts_col,)
-    ).select(
+    s = _winnowed(stream, id_col, text_col, gram_len, window, (ts_col,)).select(
         F.col("id").alias("train_id"),
         F.col(ts_col).cast("timestamp").alias(ts_col),
         F.col("grams").alias("_t_fp"),

@@ -9,14 +9,18 @@ scaling job (_scaling_job) on a small table for each route it takes."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
 import pytest
 
+# the checkout these tests belong to, wherever it is
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _bench():
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, _ROOT)
     import bench
 
     return bench
@@ -52,7 +56,7 @@ def test_rotate_window_planner_consistency():
     """The verification-window planner must parse the live registration
     order, agree with the CORRECTNESS artifacts on never-green queries,
     and keep every never-green query inside the suggested window."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(_ROOT, "tools"))
     import rotate_window as rw
 
     names = rw.registration_order()
@@ -86,10 +90,8 @@ def _record_scaling(monkeypatch, fresh):
     """tools/record_scaling.py loaded with bench._measure_scaling stubbed:
     each call returns the next of ``fresh`` (no Spark, no file written)."""
     import importlib.util
-    import os
 
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                        "tools", "record_scaling.py")
+    path = os.path.join(_ROOT, "tools", "record_scaling.py")
     spec = importlib.util.spec_from_file_location("record_scaling", path)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -121,3 +123,21 @@ def test_record_scaling_records_every_measured_block(monkeypatch):
     rec = mod.measure(out)
     assert out == {"scaling": {"efficiency": 0.8}, "scaling_exact": {"efficiency": 0.6}}
     assert rec == {"source": "tools/record_scaling.py", **out}
+
+
+def test_bench_history_records_only_measured_blocks():
+    # a run that measured `scaling` but skipped `scaling_exact` carries the
+    # old exact block into BENCH.json, marked; the history record leaves
+    # it out, and a run that measured no `scaling` writes no record
+    bench = _bench()
+    old_exact = {"efficiency": 0.5, "carried_from_previous_run": True}
+    rec = bench._history_record({"scaling": {"efficiency": 0.8},
+                                 "scaling_exact": old_exact})
+    assert rec == {"source": "bench.py", "cpus": bench.CPUS, "sf": bench.SF_DIR,
+                   "scaling": {"efficiency": 0.8}}
+    both = {"scaling": {"efficiency": 0.8}, "scaling_exact": {"efficiency": 0.6}}
+    assert bench._history_record(both) == {
+        "source": "bench.py", "cpus": bench.CPUS, "sf": bench.SF_DIR, **both}
+    assert bench._history_record({"scaling": dict(old_exact),
+                                  "scaling_exact": old_exact}) is None
+    assert bench._history_record({}) is None

@@ -79,11 +79,11 @@ def test_f16_blob_is_half_the_bytes(spark):
     df = _emb_df(spark, 50, seed=2)
     s32 = signature_buckets(
         df, dim=DIM, n_bands=2, band_bits=4, seed=3,
-        include_emb=True, emb_binary=True, emb_dtype="f32",
+        include_emb=True, emb_dtype="f32",
     ).select("_emb").first()["_emb"]
     s16 = signature_buckets(
         df, dim=DIM, n_bands=2, band_bits=4, seed=3,
-        include_emb=True, emb_binary=True, emb_dtype="f16",
+        include_emb=True, emb_dtype="f16",
     ).select("_emb").first()["_emb"]
     assert len(s32) == DIM * 4 and len(s16) == DIM * 2
 

@@ -208,6 +208,74 @@ def test_streaming_block_against_index(spark, tmp_path, await_stream):
     assert len(got) == len(pairs)
     sims = {(r["l_id"], r["r_id"]): r["sim"] for _, r in got.iterrows()}
     assert abs(sims[(100, 3)] - 1.0) < 1e-9
+    # scored by the batch scan's Arrow kernel, not a Column-lambda cosine
+    plan = q._jsq.explainInternal(False)
+    assert "MapInPandas" in plan
+    assert "zip_with" not in plan
+
+
+def test_streaming_block_against_index_parity_with_threshold_join(
+    spark, tmp_path, await_stream
+):
+    """streaming<->batch parity: every streamed pair is a
+    cosine_threshold_join pair with the identical f64 sim, and every
+    threshold pair whose two rows share a band bucket (same seeded
+    hyperplanes) is streamed."""
+    import datetime as dt
+
+    import numpy as np
+
+    from deepblocker_spark.operators.lsh import signature_buckets
+    from deepblocker_spark.operators.topk import cosine_threshold_join
+    from deepblocker_spark.streaming.dedup_stream import (
+        streaming_block_against_index,
+    )
+
+    rng = np.random.default_rng(11)
+    dim, opts = 16, dict(n_bands=6, band_bits=3, seed=99)
+    corpus = rng.standard_normal((30, dim)).astype("float32")
+    near = corpus[rng.integers(0, 30, 25)] + 0.4 * rng.standard_normal((25, dim))
+    schema = "id bigint, embedding array<float>"
+    index = spark.createDataFrame(
+        [(i, corpus[i].tolist()) for i in range(30)], schema
+    )
+    t0 = dt.datetime(2024, 1, 1)
+    src = spark.createDataFrame(
+        [(100 + i, v.astype("float32").tolist(), t0) for i, v in enumerate(near)],
+        schema + ", ts timestamp",
+    )
+    in_path = str(tmp_path / "par_in")
+    src.coalesce(1).write.parquet(in_path)
+    q = (
+        streaming_block_against_index(
+            spark.readStream.schema(src.schema).parquet(in_path), index,
+            dim=dim, min_sim=0.3, **opts,
+        )
+        .writeStream.format("memory")
+        .queryName("blk_parity")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt_par"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_stream(q)
+    streamed = {(r.l_id, r.r_id): r.sim for r in spark.sql("select * from blk_parity").collect()}
+
+    rows = src.drop("ts")
+    exact = {
+        (r.l_id, r.r_id): r.sim
+        for r in cosine_threshold_join(rows, index, 0.3, upper_only=False).collect()
+    }
+    sigs = [signature_buckets(d, dim=dim, **opts) for d in (rows, index)]
+    shared = {
+        (r.l, r.r)
+        for r in sigs[0].withColumnRenamed("id", "l")
+        .join(sigs[1].withColumnRenamed("id", "r"), ["band", "bucket"])
+        .select("l", "r").distinct().collect()
+    }
+    assert streamed and set(exact) - shared  # both sides of the gate occur
+    assert {p: exact.get(p) for p in streamed} == streamed
+    assert set(exact) & shared == set(streamed)
 
 
 def test_streaming_block_against_index_restart_dedup_state(spark, tmp_path, await_stream):

@@ -229,6 +229,11 @@ def test_streaming_substring_decontam_parity_with_batch(spark, tmp_path, await_s
     assert stream == batch
     assert all(t != 3 for t, _ in stream)  # clean doc never pairs
     assert len(got) == len(stream)  # one row per pair despite multi-gram joins
+    # fingerprints come from the batch Arrow kernel, not a Column-lambda
+    # sliding min
+    plan = q._jsq.explainInternal(False)
+    assert "MapInPandas" in plan
+    assert "array_min(slice(" not in plan
 
 
 def _twin_table(spark, n=120, dim=16, dup_every=4, seed=3):

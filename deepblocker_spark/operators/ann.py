@@ -285,7 +285,7 @@ def _ivf_pairs(
         topk_per_key,
     )
     from deepblocker_spark.operators.pq import _adc_luts, _adc_scores
-    from deepblocker_spark.operators.topk import normalize_rows
+    from deepblocker_spark.operators.topk import _pair_sims, normalize_rows
 
     assigned = tracked_persist(assigned, StorageLevel.MEMORY_AND_DISK)
     salted = grid_salt_split(assigned, max_cell_rows)
@@ -335,9 +335,15 @@ def _ivf_pairs(
                 i_idx = np.nonzero(~is_q[a:b])[0] + a
                 if not len(q_idx) or not len(i_idx):
                     continue
-                sims = score(q_all[pos[q_idx]], i_all[pos[i_idx]])
-                outs.append(_local_topk(sims, ids_all[q_idx], ids_all[i_idx],
-                                        k, mask_equal_ids))
+                qx, ix = q_all[pos[q_idx]], i_all[pos[i_idx]]
+                # flat: the kept pairs' sims are rescored row-wise, as the
+                # exact scan does — a BLAS block's last bit depends on a
+                # row's position in its group, which follows arrival order
+                rescore = None if books_bc is not None else (
+                    lambda r, c: _pair_sims(qx[r], ix[c]))
+                outs.append(_local_topk(score(qx, ix), ids_all[q_idx],
+                                        ids_all[i_idx], k, mask_equal_ids,
+                                        rescore))
         return local_topk_packed(outs, k)
 
     pairs = grouped_map_in_pandas(

@@ -58,6 +58,14 @@ def grouped_map_in_pandas(
     Memory bound: one partition decoded in one worker (~3x the
     partition's raw bytes); size partitions accordingly (AQE advisory 16m
     keeps this tens of MB).
+
+    ``num_partitions=None`` leaves the exchange width to AQE coalescing.
+    An explicit count is exempt from coalescing: the LSH broadcast-gather
+    kernel passes min(spark.sql.shuffle.partitions, max(defaultParallelism,
+    ceil(kernel_rows * dim * 8 / 64 MiB))) (``lsh._kernel_width``), one
+    task per core, because its narrow rows would otherwise coalesce to a
+    few fat tasks or, uncoalesced, pay one fixed Python-task handshake
+    (~0.25-0.3 s on a 4-core host) per shuffle partition.
     """
     part = (
         df.repartition(*key_cols)
@@ -118,11 +126,13 @@ def _topk_cols(scores, k: int):
     return np.broadcast_to(np.arange(scores.shape[1]), scores.shape).copy()
 
 
-def _local_topk(sims, qids, iids, k: int, mask_equal_ids: bool):
+def _local_topk(sims, qids, iids, k: int, mask_equal_ids: bool, rescore=None):
     """The k best index rows per query row of a (query × index) score
     matrix -> (l_id, r_id, sim) arrays; equal ids are dropped when
     ``mask_equal_ids``. Order within a query is unspecified — callers
-    merge by (sim desc, r_id)."""
+    merge by (sim desc, r_id). ``rescore(rows, cols)``, when given,
+    replaces each kept pair's matrix score (e.g. a row-wise f64 cosine
+    that does not depend on the pair's position in the block)."""
     if mask_equal_ids:
         sims[qids[:, None] == iids[None, :]] = -np.inf
     part = _topk_cols(sims, k)
@@ -130,7 +140,8 @@ def _local_topk(sims, qids, iids, k: int, mask_equal_ids: bool):
     cols = part.ravel()
     s = sims[rows, cols]
     keep = s > -np.inf
-    return qids[rows[keep]], iids[cols[keep]], s[keep]
+    rows, cols = rows[keep], cols[keep]
+    return qids[rows], iids[cols], s[keep] if rescore is None else rescore(rows, cols)
 
 
 def local_topk_packed(parts: list, k: int, min_sim: float | None = None) -> pd.DataFrame:

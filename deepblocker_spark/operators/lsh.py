@@ -288,6 +288,19 @@ def _side_matrix(sigs: DataFrame, id_col: str, dim: int, dt) -> tuple:
 
 _KEYS = ["band", "bucket", "salt_l", "salt_r"]
 
+# Bound on the f64 vector block (kernel rows x dim x 8 bytes) one
+# broadcast-gather kernel task decodes.
+_KERNEL_BYTES = 64 << 20
+
+
+def _kernel_width(spark, kernel_rows: int, dim: int) -> int:
+    """Partitions of the broadcast-gather kernel exchange: one kernel wave
+    per core, widened only to keep each task's f64 block under
+    _KERNEL_BYTES, never above the session's shuffle partitions."""
+    by_bytes = -(-kernel_rows * dim * 8 // _KERNEL_BYTES)
+    return min(int(spark.conf.get("spark.sql.shuffle.partitions")),
+               max(spark.sparkContext.defaultParallelism, by_bytes))
+
 
 def _lsh_search(
     left: DataFrame | None,
@@ -307,11 +320,14 @@ def _lsh_search(
     gather: str,
     gather_max_bytes: int,
     partition_by: str | None = None,
+    rows_hint: int | None = None,
 ) -> DataFrame:
     """The one LSH driver behind ``lsh_candidates`` (``left=None``: self
     mode over ``right``) and ``lsh_candidates_dyadic``. Every argument
     check runs before the first Spark job; both sides must share an id
-    type (the bucket-union frame carries ONE ``_id`` column)."""
+    type (the bucket-union frame carries ONE ``_id`` column).
+    ``rows_hint`` is ``right``'s row count when the caller knows it; only
+    sides without one are counted by the gather gate."""
     if gather not in ("auto", "broadcast", "exchange"):
         raise ValueError(
             f"unknown gather: {gather!r} (use 'auto', 'broadcast' or 'exchange')"
@@ -350,27 +366,29 @@ def _lsh_search(
         for side, (side_sigs, key) in enumerate(zip(sigs, keys))
     ])
 
-    # Broadcast-gather gate (see lsh_candidates): the signature frames are
-    # persisted and materialized, so n_rows = count / n_bands is one cached
-    # count per side.
+    # Broadcast-gather gate (see lsh_candidates): a side's n_rows is its row
+    # hint, else one cached count of its persisted signature frame.
     dt = np.float16 if emb_dtype == "f16" else np.float32
+    hints = [rows_hint] if self_mode else [None, rows_hint]
     use_broadcast = gather == "broadcast" or (gather == "auto" and all(
-        s.count() // max(n_bands, 1) * dim * np.dtype(dt).itemsize
-        <= gather_max_bytes
-        for s in sigs
+        (h if h is not None else s.count() // max(n_bands, 1))
+        * dim * np.dtype(dt).itemsize <= gather_max_bytes
+        for h, s in zip(hints, sigs)
     ))
     bcs = num_partitions = None
     if use_broadcast:
-        bcs = [_tracked(spark.sparkContext, _side_matrix(s, key, dim, dt))
-               for s, key in zip(sigs, keys)]
+        mats = [_side_matrix(s, key, dim, dt) for s, key in zip(sigs, keys)]
+        bcs = [_tracked(spark.sparkContext, m) for m in mats]
         rows = rows.drop("_emb")
-        # The narrow rows shrink the kernel exchange ~6-25x — enough that
-        # AQE's advisory size would coalesce it to a handful of fat
-        # partitions and starve the kernel stage of parallelism (the
-        # kernel's matmul work per row is UNCHANGED by row width). An
-        # explicit partition count keeps the bare repartition exempt from
-        # AQE coalescing at the session's configured width.
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        # One kernel task per core (_kernel_width): every Python task pays
+        # a fixed handshake of ~0.25-0.3 s (4-core host), and at the
+        # session's 32 shuffle partitions the narrow rows left ~25 ms of
+        # work per task — 3.3 s of kernel stage over 8 waves, against
+        # 0.6 s at 4 tasks. The explicit count keeps the bare repartition
+        # out of AQE coalescing.
+        num_partitions = _kernel_width(
+            spark, n_bands * sum(len(ids) for ids, _ in mats), dim
+        )
 
     def bucket_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         """Search over a frame of WHOLE (band, bucket, salt_l, salt_r)
@@ -436,6 +454,7 @@ def lsh_candidates(
     gather: str = "auto",
     gather_max_bytes: int = 64 << 20,
     partition_by: str | None = None,
+    rows_hint: int | None = None,
 ) -> DataFrame:
     """Self-join candidate generation: -> (l_id, r_id, sim, rank), rank<=k
     per l_id, l_id != r_id, deterministic (sim desc, r_id asc) tie-break.
@@ -479,17 +498,30 @@ def lsh_candidates(
       conversion as the exchange kernel — the pair output is
       BIT-IDENTICAL (pytest-gated).
     - ``'auto'`` (default): broadcast when n_rows * dim * itemsize <=
-      ``gather_max_bytes`` (one near-free count on the persisted signature
-      frame), else exchange — the same size-gated pattern as Spark's own
-      broadcast-join threshold and ``exact_topk_join``'s chunked
-      broadcast. At 100 TB auto always lands on exchange; per-worker
-      memory cost of broadcast is one matrix copy per Python worker.
+      ``gather_max_bytes`` (n_rows from ``rows_hint``, else one near-free
+      count on the persisted signature frame), else exchange — the same
+      size-gated pattern as Spark's own broadcast-join threshold and
+      ``exact_topk_join``'s chunked broadcast. At 100 TB auto always lands
+      on exchange; per-worker memory cost of broadcast is one matrix copy
+      per Python worker.
+
+    Kernel width: the exchange path leaves its partition count to AQE
+    coalescing. The broadcast path fixes it at
+    min(spark.sql.shuffle.partitions, max(defaultParallelism,
+    ceil(n_rows * n_bands * dim * 8 / _KERNEL_BYTES))) with
+    ``_KERNEL_BYTES`` = 64 MiB: one task per core, since each Python task
+    pays a fixed handshake that dwarfs its share of the narrow rows,
+    widened only to bound the f64 block a task decodes.
+
+    ``rows_hint`` is ``df``'s row count when the caller knows it (e.g. a
+    checkpoint manifest): the auto gate then runs no count job.
     """
     return _lsh_search(
         None, df, id_col, id_col, emb_col, dim=dim, k=k, n_bands=n_bands,
         band_bits=band_bits, seed=seed, max_bucket_rows=max_bucket_rows,
         min_sim=min_sim, emb_dtype=emb_dtype, gather=gather,
         gather_max_bytes=gather_max_bytes, partition_by=partition_by,
+        rows_hint=rows_hint,
     )
 
 
@@ -509,6 +541,7 @@ def lsh_candidates_dyadic(
     emb_dtype: str = "f32",
     gather: str = "auto",
     gather_max_bytes: int = 64 << 20,
+    rows_hint: int | None = None,
 ) -> DataFrame:
     """Dyadic (left-vs-right) LSH candidate generation — the scale path for
     the reference's two-table blocking: -> (l_id, r_id, sim, rank), the
@@ -525,13 +558,15 @@ def lsh_candidates_dyadic(
 
     ``gather`` has the ``lsh_candidates`` contract, with bit-identical
     output either way: ``'auto'`` broadcasts BOTH sides' quantized
-    matrices when each fits ``gather_max_bytes``. The broadcast path
-    requires per-side-unique ids."""
+    matrices when each fits ``gather_max_bytes``, and the kernel width
+    counts both sides' rows. The broadcast path requires per-side-unique
+    ids. ``rows_hint`` is the INDEX (``right``) side's row count; the
+    gate counts only ``left``."""
     return _lsh_search(
         left, right, l_id, r_id, emb_col, dim=dim, k=k, n_bands=n_bands,
         band_bits=band_bits, seed=seed, max_bucket_rows=max_bucket_rows,
         min_sim=min_sim, emb_dtype=emb_dtype, gather=gather,
-        gather_max_bytes=gather_max_bytes,
+        gather_max_bytes=gather_max_bytes, rows_hint=rows_hint,
     )
 
 
@@ -555,9 +590,10 @@ class LSHVectorPairing(VectorPairing):
                 self.max_bucket_rows, self.min_sim, self.emb_dtype,
                 self.gather, self.gather_max_bytes)
         if left is None:
-            return lsh_candidates(self._right, self._r_id, emb_col, *opts)
+            return lsh_candidates(self._right, self._r_id, emb_col, *opts,
+                                  rows_hint=self._rows)
         return lsh_candidates_dyadic(left, self._right, l_id, self._r_id,
-                                     emb_col, *opts)
+                                     emb_col, *opts, rows_hint=self._rows)
 
     def params(self) -> dict:
         return {"lsh": [self.n_bands, self.band_bits, self.max_bucket_rows,

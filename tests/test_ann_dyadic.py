@@ -18,14 +18,15 @@ from deepblocker_spark.operators.topk import exact_topk_join
 DIM = 16
 
 
-def _clustered(spark, n_clusters, per_cluster, seed, id_start=0):
+def _clustered(spark, n_clusters, per_cluster, seed, id_start=0, dim=DIM,
+               scale=0.05):
     rng = np.random.default_rng(seed)
-    centers = rng.normal(size=(n_clusters, DIM))
+    centers = rng.normal(size=(n_clusters, dim))
     rows, ids = [], []
     i = id_start
     for c in range(n_clusters):
         for _ in range(per_cluster):
-            rows.append((centers[c] + rng.normal(scale=0.05, size=DIM)).astype(np.float32))
+            rows.append((centers[c] + rng.normal(scale=scale, size=dim)).astype(np.float32))
             ids.append(i)
             i += 1
     return spark.createDataFrame(pd.DataFrame({"id": ids, "embedding": rows}))
@@ -142,6 +143,34 @@ def test_dyadic_ivf_mega_cell_grid_split(spark):
     assert sorted(map(tuple, split[key].to_numpy())) == sorted(
         map(tuple, unsplit[key].to_numpy())
     )
+
+
+def test_ivf_flat_sim_independent_of_probe_slot_order(spark, monkeypatch):
+    """A query row's position in its (cell, salt) group follows the order
+    the assignment pass emits its probe slots. Rolling every row's slots
+    by its row index moves rows within the salted cell groups; no bit of
+    the output may move (a BLAS block's last bit depends on a row's
+    position, so the kept pairs are rescored row-wise)."""
+    from deepblocker_spark.operators import grouped
+
+    df = _clustered(spark, 50, 10, seed=2, dim=64, scale=0.3)
+
+    def run():
+        out = ivf_topk(df, k=5, id_col="id", emb_col="embedding", n_cells=8,
+                       nprobe=8, seed=9, max_cell_rows=20).collect()
+        return sorted((r.l_id, r.r_id, r.sim, r.rank) for r in out)
+
+    base = run()
+    topk_cols = grouped._topk_cols
+
+    def rolled(scores, k):
+        cols = topk_cols(scores, k)
+        shift = np.arange(cols.shape[1])[None, :] + np.arange(len(cols))[:, None]
+        return np.take_along_axis(cols, shift % cols.shape[1], axis=1)
+
+    monkeypatch.setattr(grouped, "_topk_cols", rolled)
+    assert len(base) == 2500
+    assert run() == base
 
 
 def test_ivf_join_rejects_mismatched_id_types(spark):

@@ -1,8 +1,11 @@
 """Broadcast-gather LSH kernel — the narrow-exchange variant must produce
 BIT-IDENTICAL pair tables to the carried-vector exchange, across transport
-dtypes, with and without hot-bucket salting, and through the auto gate."""
+dtypes, with and without hot-bucket salting, through the auto gate, and at
+any session shuffle width (its exchange runs one task per core)."""
 
 from __future__ import annotations
+
+import re
 
 import numpy as np
 import pytest
@@ -70,3 +73,45 @@ def test_gather_rejects_unknown_mode(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     # both modes check their arguments before the first Spark job
     assert not sc.statusTracker().getJobIdsForGroup("lsh-gather-check")
+
+
+_KERNEL_EXCHANGE = re.compile(
+    r"hashpartitioning\(band#\w+, bucket#\w+, salt_l#\w+, salt_r#\w+, (\d+)\), "
+    r"REPARTITION_BY_NUM"
+)
+
+
+def test_broadcast_kernel_width_and_bit_identity_across_shuffle_widths(spark):
+    # The session fixture runs 4 shuffle partitions at local[4], where the
+    # kernel width rule and the session width agree; set it at runtime so
+    # the two are told apart.
+    left, right = _frame(spark, n=800, seed=11), _frame(spark, n=600, seed=12)
+    kw = dict(dim=24, k=5, n_bands=4, band_bits=6, seed=3, max_bucket_rows=150,
+              gather="broadcast")
+    searches = {
+        "self": lambda: lsh_candidates(left, id_col="id", **kw),
+        "dyadic": lambda: lsh_candidates_dyadic(left, right, **kw),
+    }
+    cores = spark.sparkContext.defaultParallelism
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    outputs = {}
+    try:
+        for width in (1, 2, 32):
+            spark.conf.set("spark.sql.shuffle.partitions", str(width))
+            for mode, search in searches.items():
+                df = search()
+                rows = df.collect()
+                release_tracked()
+                outputs[mode, width] = sorted(
+                    (r.l_id, r.r_id, r.sim, r.rank) for r in rows
+                )
+                if width == 32:
+                    plan = df._jdf.queryExecution().executedPlan().toString()
+                    final = plan.split("== Initial Plan ==")[0]
+                    assert "isFinalPlan=true" in final
+                    assert _KERNEL_EXCHANGE.findall(final) == [str(cores)]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    for mode in searches:
+        assert outputs[mode, 1]
+        assert outputs[mode, 1] == outputs[mode, 2] == outputs[mode, 32]

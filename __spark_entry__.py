@@ -1250,9 +1250,13 @@ def q_lsh_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with sim >= 0.4, recomputed independently by DuckDB) must be >=
     # 0.95, the regime size must match, and — the filtered-ANN contract —
     # the cross-label pair count must be exactly 0.
-    from pyspark.sql import Window
+    import numpy as np
+    import pandas as pd
 
-    from deepblocker_spark.operators.scoring import cosine_col
+    from deepblocker_spark.operators.grouped import (
+        _dedup_topk, group_slices, grouped_map_in_pandas,
+    )
+    from deepblocker_spark.operators.topk import _pair_sims, normalize_rows
 
     emb = _t(spark, sf_dir, "embeddings")
     approx = lsh_candidates(
@@ -1266,29 +1270,36 @@ def q_lsh_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("_la") != F.col("_lb"))
         .count()
     )
-    a = emb.select("label", F.col("vec_id").alias("l_id"), _emb_double(F.col("embedding")).alias("_ea"))
-    b = emb.select("label", F.col("vec_id").alias("r_id"), _emb_double(F.col("embedding")).alias("_eb"))
-    exact = (
-        a.join(b, "label")
-        .filter(F.col("l_id") != F.col("r_id"))
-        .select("l_id", "r_id", cosine_col(F.col("_ea"), F.col("_eb")).alias("sim"))
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("l_id").orderBy(F.desc("sim"), F.asc("r_id"))
-            ),
-        )
+
+    def label_topk(pdf: pd.DataFrame) -> pd.DataFrame:
+        """The exact reference, one label at a time: an f64 Gram pass
+        selects the pairs within 1e-9 of the 0.4 floor, ``_pair_sims``
+        rescores them row-wise, and the top 5 per l_id by (sim desc,
+        r_id asc) are kept. Ranking only pairs >= 0.4 keeps the same
+        pairs as ranking all of them and then filtering."""
+        ids_all = pdf["vec_id"].to_numpy()
+        vecs = pdf["embedding"].to_numpy()
+        parts = []
+        for a, b in group_slices(pdf, ["label"]):
+            ids = ids_all[a:b]
+            x = normalize_rows(np.nan_to_num(np.stack(vecs[a:b]).astype(np.float64)))
+            gram = x @ x.T
+            gram[ids[:, None] == ids[None, :]] = -np.inf
+            rows, cols = np.nonzero(gram >= 0.4 - 1e-9)
+            sim = _pair_sims(x[rows], x[cols])
+            keep = sim >= 0.4
+            parts.append(pd.DataFrame(
+                {"l_id": ids[rows[keep]], "r_id": ids[cols[keep]], "sim": sim[keep]}
+            ))
+        top = _dedup_topk(pd.concat(parts), 5, "l_id", "r_id", "sim", with_rank=False)
+        return top[["l_id", "r_id"]]
+
+    hi = grouped_map_in_pandas(
+        emb.select("label", "vec_id", "embedding"), ["label"], label_topk,
+        "l_id long, r_id long",
     )
-    hi = exact.filter((F.col("rank") <= 5) & (F.col("sim") >= 0.4))
-    hits = hi.join(approx.select("l_id", "r_id"), ["l_id", "r_id"], "left_semi")
-    return (
-        hits.agg(F.count("*").alias("_hits"))
-        .crossJoin(hi.agg(F.count("*").alias("_n")))
-        .select(
-            (F.col("_hits") >= F.col("_n") * 0.95).cast("bigint").alias("recall_ok"),
-            F.col("_n").cast("bigint").alias("n_highsim_pairs"),
-            F.lit(crossers).cast("bigint").alias("cross_label_pairs"),
-        )
+    return _recall_vs_exact(hi, approx).withColumn(
+        "cross_label_pairs", F.lit(crossers).cast("bigint")
     )
 
 

@@ -10,32 +10,35 @@ import os as _os
 # is imported anywhere in the process.
 _os.environ.setdefault("NUMPY_MADVISE_HUGEPAGE", "0")
 
-from deepblocker_spark.config import BlockerConfig, DEFAULT_CONFIG, TEST_CONFIG
-from deepblocker_spark.pipeline import (
-    DeepBlocker,
-    SparkAverageEmbedding,
-    SparkAutoEncoderEmbedding,
-    SparkCTTEmbedding,
-    SparkHybridEmbedding,
-    SparkSIFEmbedding,
-)
-from deepblocker_spark.operators.ann import IVFVectorPairing
-from deepblocker_spark.operators.pq import PQVectorPairing
-from deepblocker_spark.operators.lsh import LSHVectorPairing
-from deepblocker_spark.operators.topk import ExactTopKVectorPairing
+# Import-light: Spark starts its Python worker daemon as
+# ``python -m deepblocker_spark.worker_daemon``, which runs this file before
+# the daemon module; nothing here may import pyspark. The public names
+# load on first access (PEP 562).
+_EXPORTS = {
+    "BlockerConfig": "config",
+    "DEFAULT_CONFIG": "config",
+    "TEST_CONFIG": "config",
+    "DeepBlocker": "pipeline",
+    "SparkAverageEmbedding": "pipeline",
+    "SparkAutoEncoderEmbedding": "pipeline",
+    "SparkCTTEmbedding": "pipeline",
+    "SparkHybridEmbedding": "pipeline",
+    "SparkSIFEmbedding": "pipeline",
+    "ExactTopKVectorPairing": "operators.topk",
+    "LSHVectorPairing": "operators.lsh",
+    "IVFVectorPairing": "operators.ann",
+    "PQVectorPairing": "operators.pq",
+}
 
-__all__ = [
-    "BlockerConfig",
-    "DEFAULT_CONFIG",
-    "TEST_CONFIG",
-    "DeepBlocker",
-    "SparkAverageEmbedding",
-    "SparkAutoEncoderEmbedding",
-    "SparkCTTEmbedding",
-    "SparkHybridEmbedding",
-    "SparkSIFEmbedding",
-    "ExactTopKVectorPairing",
-    "LSHVectorPairing",
-    "IVFVectorPairing",
-    "PQVectorPairing",
-]
+__all__ = list(_EXPORTS)
+
+
+def __getattr__(name: str):
+    module = _EXPORTS.get(name)
+    if module is None:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    from importlib import import_module
+
+    value = getattr(import_module(f"{__name__}.{module}"), name)
+    globals()[name] = value
+    return value

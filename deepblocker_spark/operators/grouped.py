@@ -64,8 +64,9 @@ def grouped_map_in_pandas(
     kernel passes min(spark.sql.shuffle.partitions, max(defaultParallelism,
     ceil(kernel_rows * dim * 8 / 64 MiB))) (``lsh._kernel_width``), one
     task per core, because its narrow rows would otherwise coalesce to a
-    few fat tasks or, uncoalesced, pay one fixed Python-task handshake
-    (~0.25-0.3 s on a 4-core host) per shuffle partition.
+    few fat tasks or, uncoalesced, pay one fixed Python-task handshake per
+    shuffle partition (an identity ``mapInPandas`` at ``local[4]`` on a
+    4-core host: 0.76-0.80 s over 32 partitions, 0.24-0.27 s over 4).
     """
     part = (
         df.repartition(*key_cols)

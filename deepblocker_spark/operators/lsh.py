@@ -381,11 +381,11 @@ def _lsh_search(
         bcs = [_tracked(spark.sparkContext, m) for m in mats]
         rows = rows.drop("_emb")
         # One kernel task per core (_kernel_width): every Python task pays
-        # a fixed handshake of ~0.25-0.3 s (4-core host), and at the
-        # session's 32 shuffle partitions the narrow rows left ~25 ms of
-        # work per task — 3.3 s of kernel stage over 8 waves, against
-        # 0.6 s at 4 tasks. The explicit count keeps the bare repartition
-        # out of AQE coalescing.
+        # a fixed handshake, and at the session's 32 shuffle partitions
+        # the narrow rows left ~25 ms of work per task. An identity
+        # mapInPandas at local[4] (4-core host, worker_daemon) takes
+        # 0.76-0.80 s over 32 partitions against 0.24-0.27 s over 4. The
+        # explicit count keeps the bare repartition out of AQE coalescing.
         num_partitions = _kernel_width(
             spark, n_bands * sum(len(ids) for ids, _ in mats), dim
         )
@@ -510,8 +510,10 @@ def lsh_candidates(
     min(spark.sql.shuffle.partitions, max(defaultParallelism,
     ceil(n_rows * n_bands * dim * 8 / _KERNEL_BYTES))) with
     ``_KERNEL_BYTES`` = 64 MiB: one task per core, since each Python task
-    pays a fixed handshake that dwarfs its share of the narrow rows,
-    widened only to bound the f64 block a task decodes.
+    pays a fixed handshake that dwarfs its share of the narrow rows (an
+    identity ``mapInPandas`` at ``local[4]``: 0.76-0.80 s over 32
+    partitions, 0.24-0.27 s over 4), widened only to bound the f64 block
+    a task decodes.
 
     ``rows_hint`` is ``df``'s row count when the caller knows it (e.g. a
     checkpoint manifest): the auto gate then runs no count job.

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import os
+import zipfile
 
 import pytest
 
@@ -73,3 +74,29 @@ def test_explicit_settings_override_the_host(conf_of, monkeypatch):
     conf = conf_of(master="local[2]", extra_conf={"spark.driver.memory": "1g"})
     assert conf["master"] == "local[2]"
     assert conf["spark.driver.memory"] == "1g"
+
+
+_DAEMON = "spark.python.daemon.module"
+
+
+def test_local_master_starts_the_engine_daemon(conf_of, monkeypatch):
+    pkg = os.path.dirname(os.path.realpath(session.deepblocker_spark.__file__))
+    monkeypatch.chdir(os.path.dirname(pkg))
+    assert conf_of(master="local[2]")[_DAEMON] == "deepblocker_spark.worker_daemon"
+    assert conf_of(extra_conf={_DAEMON: "pyspark.daemon"})[_DAEMON] == "pyspark.daemon"
+    assert _DAEMON not in conf_of(master="spark://head:7077")
+
+
+def test_packages_workers_cannot_import_keep_pyspark_daemon(conf_of, monkeypatch, tmp_path):
+    archive = tmp_path / "deepblocker_spark.zip"
+    zipfile.ZipFile(archive, "w").close()
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setenv("PYTHONPATH", str(archive))
+    monkeypatch.setattr(session.deepblocker_spark, "__file__",
+                        str(archive / "deepblocker_spark" / "__init__.py"))
+    assert _DAEMON not in conf_of(master="local[2]")
+    # a directory the workers' path does not hold
+    elsewhere = tmp_path / "src" / "deepblocker_spark"
+    elsewhere.mkdir(parents=True)
+    monkeypatch.setattr(session.deepblocker_spark, "__file__", str(elsewhere / "__init__.py"))
+    assert _DAEMON not in conf_of(master="local[2]")
